@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
   * JVM, interleaved (A,B,A,B,…) so shared-host speed drift cancels out of
   * the comparison — cross-JVM single samples on this sandbox swing ±30%
   * from neighbors alone, far wider than most optimization deltas.
-  * `runMain graft.ABOne q160_bucketed_merge /root/testdata/sf0.1 4 \
-  *    spark.graft.write.distribution rebalance none` */
+  * `runMain graft.ABOne q160_bucketed_merge <sf-dir> 4 \
+  *    spark.sql.adaptive.enabled true false` */
 object ABOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)

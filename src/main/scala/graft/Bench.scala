@@ -150,9 +150,8 @@ object Bench {
     val mergeMs = PerfHarness.median(perf.map(_.mergeMs))
     val insertMs = PerfHarness.median(perf.map(_.insertMs))
     val (amortMergeMs, amortInsertMs) = PerfHarness.amortized(spark)
-    // 100-file-delta commit cost: write-job stats collection vs the footer
-    // re-read fallback (the second-pass I/O this round removed)
-    val (commitWjMs, commitFooterMs) = PerfHarness.commitDelta(spark)
+    // 100-file-delta commit cost, bounds collected in the write job
+    val commitWjMs = PerfHarness.commitDelta(spark)
 
     val errJson =
       if (errors.isEmpty) ""
@@ -193,7 +192,6 @@ object Bench {
         "during bench — commits fell back to footer reads")
     val full = fullLine.dropRight(1) +
       s""","commit_100file_writejob_ms":${num(commitWjMs)}""" +
-      s""","commit_100file_footer_ms":${num(commitFooterMs)}""" +
       s""","stats_mailbox_evictions":$evictions""" +
       s""","op_metrics":$ops,"query_op_ms":$queryOps,"perf_iterations":$perfIters}"""
     Files.write(Paths.get("bench.json"), (full + "\n").getBytes(StandardCharsets.UTF_8))

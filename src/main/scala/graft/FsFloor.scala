@@ -9,11 +9,10 @@ import org.apache.spark.sql.SparkSession
   * rename, exists, listStatus, getFileStatus. */
 object FsFloor {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[2]")
+    val spark = graft.hadoop.FastLocalFileSystem.tune(SparkSession.builder())
+      .master("local[2]")
       .config("spark.ui.enabled", "false")
-    if (!sys.env.contains("GRAFT_STOCK_FS"))
-      graft.hadoop.FastLocalFileSystem.tune(builder)
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val base = java.nio.file.Files.createTempDirectory("graft-fsfloor").toString
     val conf = spark.sparkContext.hadoopConfiguration

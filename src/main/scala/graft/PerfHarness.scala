@@ -121,16 +121,14 @@ object PerfHarness {
 
   /** Commit-cost micro-bench for a ~`files`-file append delta: COMMIT
     * wall-time (manifest + stats bookkeeping, via the commitVersion
-    * sensor — the write job itself is excluded) with bounds collected in
-    * the write job vs the footer-read fallback
-    * (`spark.graft.stats.writeJobCollection=false`). This is the 100 TB
-    * commit-path number: a bulk load or compaction adding hundreds of
-    * files must not pay a second I/O pass over them. Returns
-    * (writeJobMs, footerReadMs) medians. */
+    * sensor — the write job itself is excluded; bounds are collected
+    * inside the write job). This is the 100 TB commit-path number: a bulk
+    * load or compaction adding hundreds of files must not pay a second
+    * I/O pass over them. Returns the median. */
   def commitDelta(spark: SparkSession, files: Int = 100,
-      iterations: Int = 3): (Double, Double) = {
+      iterations: Int = 3): Double = {
     import graft.metrics.GraftMetrics
-    def once(writeJob: Boolean): Double = {
+    def once(): Double = {
       val wh = Files.createTempDirectory("graft-perf-commit").toString
       val lake = new GraftLake(spark, wh)
       val df = spark.range(files.toLong * 2000)
@@ -138,22 +136,18 @@ object PerfHarness {
           (col("id") % 97).cast("double").as("v"),
           concat(lit("k"), col("id")).as("k"))
         .repartition(files)
-      if (!writeJob)
-        spark.conf.set("spark.graft.stats.writeJobCollection", "false")
       try {
         val before = GraftMetrics.totalsMs()
           .getOrElse(GraftMetrics.CommitVersion, (0L, 0.0))._2
         lake.append("c", df)
         GraftMetrics.totalsMs()(GraftMetrics.CommitVersion)._2 - before
       } finally {
-        spark.conf.unset("spark.graft.stats.writeJobCollection")
         lake.dropTable("c")
         new java.io.File(wh).delete()
       }
     }
-    once(true); once(false) // discarded warm-ups
-    val samples = (0 until iterations).map(_ => (once(true), once(false)))
-    (median(samples.map(_._1)), median(samples.map(_._2)))
+    once() // discarded warm-up
+    median((0 until iterations).map(_ => once()))
   }
 
   def main(args: Array[String]): Unit = {

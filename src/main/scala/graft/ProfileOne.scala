@@ -135,7 +135,7 @@ object ProfileOne {
               }
             }
           }
-          Thread.sleep(2)
+          Thread.sleep(5)
         } catch { case e: Throwable =>
           println(s"[profile] sampler error: $e"); sampling = false }
       }
@@ -168,7 +168,9 @@ object ProfileOne {
     locally {
       import scala.jdk.CollectionConverters._
       val total = samples.values.asScala.map(_.toInt).sum.max(1)
-      println(s"[profile] driver-sample histogram ($total samples over $sweeps sweeps):")
+      println(s"[profile] driver-sample histogram ($total samples over $sweeps " +
+        "sweeps, one every 5 ms; each sweep is a full-VM thread dump at a " +
+        "safepoint, which slows the timings it profiles):")
       samples.asScala.toSeq.sortBy(-_._2.toInt).take(30).foreach {
         case ((frame, doing), c) =>
           println(f"[profile]   ${c.toInt * 100.0 / total}%5.1f%% [$doing%-14s] $frame")

@@ -86,22 +86,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
     *    [[org.apache.spark.sql.graft.StatsCommitProtocol]], which collects
     *    per-file bounds INSIDE the write job (executor-side footer reads
     *    at task commit) so [[commitVersion]] needs no second I/O pass. */
-  private def withLakeTimestampFormat[T](f: => T): T = {
-    // the protocol swap can be disabled (micro-bench A/B, diagnosis) —
-    // commits then fall back to the footer-read path, same results
-    val statsInWriteJob = spark.conf
-      .getOption("spark.graft.stats.writeJobCollection").forall(_ != "false")
-    val keys = Seq(
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") ++
-      (if (statsInWriteJob) Seq("spark.sql.sources.commitProtocolClass" ->
-        org.apache.spark.sql.graft.StatsCommitProtocol.className) else Nil)
-    val scope = GraftLake.confScope(spark)
-    scope.enter(spark, keys)
-    try f finally scope.exit(spark)
-  }
+  private def withLakeTimestampFormat[T](f: => T): T =
+    GraftLake.lakeWriteConfs(spark)(f)
 
   /** Write-side DISTRIBUTION for staged data writes (the Iceberg
-    * `write.distribution-mode=hash` analog; optimization guide §6: small
+    * hash `distribution-mode` analog; optimization guide §6: small
     * files hurt twice, and §2.4: share one exchange). Without it a
     * partitioned flush writes one file per (map task × touched partition)
     * — a 32-task batch into 16 buckets lands up to 512 near-empty files,
@@ -123,12 +112,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * unpartitioned flush costs more than the small files it saves
     * (the shuffle serializes a medium batch into few tasks), and at
     * scale a map-parallel unpartitioned write already produces
-    * right-sized files. `spark.graft.write.distribution=none` disables
-    * the partitioned clustering too. */
+    * right-sized files. */
   private def distributeForWrite(out: DataFrame, partCols: Seq[String]): DataFrame =
-    if (partCols.isEmpty ||
-        spark.conf.getOption("spark.graft.write.distribution").contains("none"))
-      out
+    if (partCols.isEmpty) out
     else
       // Column params, not names: the hint resolver PARSES string
       // parameters as SQL identifiers, so a partition output column
@@ -1911,10 +1897,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
       // TableMeta instance, so ONE stat call replaces the per-read
       // listing while cross-process commits stay immediately visible
       // (the same freshness a fresh listing gave). Plans only — every
-      // execution still scans parquet. `spark.graft.read.planCache=false`
-      // disables.
-      if (spark.conf.getOption("spark.graft.read.planCache").contains("false"))
-        return build()
+      // execution still scans parquet.
       val key = s"$warehouse/$name"
       val vd = versionsDir(name)
       val mtime =
@@ -3181,13 +3164,12 @@ final class GraftLake(private[graft] val spark: SparkSession,
           org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1))))
       }
     }
+    // the rewrite's scope; None = refused (duplicate PKs, nothing written)
     var manifestDirs: Option[Seq[Path]] = None
-    var refusedDuplicates = false
-    val scoped =
+    val scopedOpt: Option[DataFrame] =
       if (partCols.isEmpty) {
-        if (refuseDuplicates && probeUnique(includeMatched = false).isEmpty) {
-          refusedDuplicates = true; null
-        } else existingDirScan
+        if (refuseDuplicates && probeUnique(includeMatched = false).isEmpty) None
+        else Some(existingDirScan)
       }
       else {
         val batchParts = withPartitionCols(deduped, meta)
@@ -3197,21 +3179,18 @@ final class GraftLake(private[graft] val spark: SparkSession,
         // null-partition tuple from a foreign-layout file routes its rows
         // into the scope via the isNull branch of partitionScope). Refuse
         // mode folds its duplicate check into the SAME probe job.
-        def fullProbeScoped(): DataFrame =
-          if (refuseDuplicates) {
-            probeUnique(includeMatched = true) match {
-              case None => refusedDuplicates = true; null
-              case Some(parts) =>
-                existingDirScan.filter(GraftLake.partitionScope(partCols, parts))
-            }
-          } else {
+        def fullProbeScoped(): Option[DataFrame] =
+          if (refuseDuplicates)
+            probeUnique(includeMatched = true).map(parts =>
+              existingDirScan.filter(GraftLake.partitionScope(partCols, parts)))
+          else {
             val existing = existingDirScan
             val matchedParts = existing
               .select((pks ++ partCols).map(c => col(quoted(c))): _*)
               .join(deduped.select(pks.map(c => col(quoted(c))): _*), pks, "left_semi")
               .select(partCols.map(c => col(quoted(c))): _*).distinct()
             val parts = batchParts.union(matchedParts).distinct().collect()
-            existing.filter(GraftLake.partitionScope(partCols, parts))
+            Some(existing.filter(GraftLake.partitionScope(partCols, parts)))
           }
         // probe-skip soundness needs hash stability: a bucket source
         // column widened before the ensureTable guard means old files
@@ -3220,9 +3199,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
           val partsOpt =
             if (refuseDuplicates) probeUnique(includeMatched = false)
             else Some(batchParts.collect())
-          if (partsOpt.isEmpty) { refusedDuplicates = true; null }
-          else {
-          val parts = partsOpt.get
+          partsOpt.flatMap { parts =>
           // null (and empty-string) partition values render as Hive's
           // DEFAULT partition — not reproducible here, use the dir path
           val noNulls = parts.forall(r => (0 until r.length).forall(i =>
@@ -3336,20 +3313,34 @@ final class GraftLake(private[graft] val spark: SparkSession,
                   val paths = refs.map { case (rel, fn) => s"$dd/$rel/$fn" }
                   val full = StructType(
                     meta.schema.fields.toSeq ++ partFields)
-                  applyDvs(name,
+                  Some(applyDvs(name,
                     manifestScan(paths, statsFor(name, v), full, partCols.size,
                       Some(dd), recomputeWith = Some(meta)),
-                    liveDvs(name), partCols.size)
+                    liveDvs(name), partCols.size))
               }
             case None =>
-              existingDirScan.filter(GraftLake.partitionScope(partCols, parts))
+              Some(existingDirScan.filter(GraftLake.partitionScope(partCols, parts)))
           }
           }
         } else fullProbeScoped()
       }
-    if (refusedDuplicates) false
-    else {
+    scopedOpt match {
+      case None => false
+      case Some(scoped) =>
+        upsertRewrite(name, meta, deduped, scoped, manifestDirs, pkFunctional)
+        true
+    }
+  }
 
+  /** [[upsertLocked]]'s rewrite of the affected scope (`scoped`: the live
+    * rows of the partitions the batch touches; `manifestDirs`: their
+    * directories when the manifest already named them). Runs under the
+    * table's write lock. */
+  private def upsertRewrite(name: String, meta: TableMeta, deduped: DataFrame,
+      scoped: DataFrame, manifestDirs: Option[Seq[Path]],
+      pkFunctional: Boolean): Unit = {
+    val pks = meta.pks
+    val partCols = meta.partitionExprs.map(_.outputName)
     // W2 rewrite with exact MERGE INTO semantics in ONE full-outer join
     // (each side shuffles once on the PK, vs three joins for a
     // untouched/updates/inserts union):
@@ -3468,8 +3459,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
       swapInto(name, stage, new Path(dataDir(name)), partCols.size, affectedDirs)
     commitVersion(name, added, removed, writeStats, op = "upsert",
       changes = changeFiles, assumedLayout = Some(meta.partitions))
-    true
-    }
   }
 
   /** Replace the entire table contents with `df` (must carry exactly the
@@ -6731,51 +6720,13 @@ object GraftLake {
   private val metaCache = new ConcurrentHashMap[String, TableMeta]()
   private val tableLocks = new ConcurrentHashMap[String, Object]()
 
-  /** Process-wide REFERENCE-COUNTED scoping of the lake's write-side
-    * session confs. Session confs are global to a SparkSession, and lake
-    * writes legitimately run concurrently (multi-table writers, the
-    * parallel LSH-index admission) — a plain per-call save/restore lets
-    * one writer's restore fire while another's write is mid-flight, and
-    * worse, a later entrant "saves" the FIRST writer's override as the
-    * previous value and re-installs it forever (observed: a leaked
-    * TIMESTAMP_MICROS silently changed the application's own parquet
-    * output format). The first entrant captures the application's real
-    * values; only the last exit restores them. Concurrent entrants share
-    * the first entrant's values — every lake write wants the same ones
-    * (the bench's protocol-disable toggle is sequential by design). */
-  private final class ConfScope {
-    private var depth = 0
-    private var saved: Seq[(String, Option[String])] = Nil
-    def enter(spark: SparkSession, keys: Seq[(String, String)]): Unit =
-      synchronized {
-        if (depth == 0) {
-          saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-          keys.foreach { case (k, v) => spark.conf.set(k, v) }
-        }
-        depth += 1
-      }
-    def exit(spark: SparkSession): Unit = synchronized {
-      depth -= 1
-      if (depth == 0) {
-        saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-        saved = Nil
-      }
-    }
-  }
-
-  /** One scope per session, weakly held (tests spin up fresh sessions). */
-  private val confScopes =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, ConfScope]())
-  private def confScope(spark: SparkSession): ConfScope =
-    confScopes.synchronized {
-      val existing = confScopes.get(spark)
-      if (existing != null) existing
-      else { val s = new ConfScope; confScopes.put(spark, s); s }
-    }
+  /** The lake's write-side session confs (see [[withLakeTimestampFormat]]),
+    * scoped per session by reference count: lake writes legitimately run
+    * concurrently (multi-table writers, the parallel LSH-index admission). */
+  private val lakeWriteConfs = new graft.ConfScope(Seq(
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    "spark.sql.sources.commitProtocolClass" ->
+      org.apache.spark.sql.graft.StatsCommitProtocol.className))
 
   /** Snapshot-side caches: last committed version and its resolved live
     * file set + delta-chain depth, so the hot commit path reads nothing.

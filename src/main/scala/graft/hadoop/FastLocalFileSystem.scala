@@ -107,11 +107,11 @@ object FastLocalFileSystem {
     "fs.AbstractFileSystem.file.impl" -> classOf[FastLocalFs].getName)
 
   /** Apply [[hadoopConfs]] to a session builder (as `spark.hadoop.*`).
-    * `GRAFT_STOCK_FS=1` in the environment restores stock Hadoop local
-    * FS (A/B lever and safety valve). */
+    * Files written by the stock local FS stay readable: the checksum
+    * wrapper still verifies an existing `.crc` sibling on read and deletes
+    * it when the file is overwritten or renamed. */
   def tune(b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder = {
-    if (!sys.env.contains("GRAFT_STOCK_FS"))
-      hadoopConfs.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
+    hadoopConfs.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
     b
   }
 }

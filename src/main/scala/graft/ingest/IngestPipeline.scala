@@ -303,20 +303,16 @@ object IngestPipeline {
     @transient lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   }
 
-  /** Process-wide REFERENCE-COUNTED scoping of the trigger-side session
-    * confs (same discipline as the lake's write-side ConfScope: the first
-    * entrant saves the application's values, only the last exit restores
-    * them — concurrent pipelines on one session share the overlay).
+  /** The trigger-side session confs, applied around every `processBatch`
+    * by a reference-counted [[graft.ConfScope]] (concurrent pipelines on
+    * one session share the overlay).
     *
     * What it sets, and why: a micro-batch trigger runs ~a dozen small
     * actions over BOUNDED data (`maxOffsetsPerTrigger`), where wall time
     * is per-stage scheduling + AQE replanning latency, not compute — so
     * inside `processBatch` adaptive execution is off and the shuffle
     * fan-out small (measured on the ingest+dedup path: ~25% trigger
-    * latency cut at identical results). Both are knobs, not constants:
-    * `spark.graft.ingest.adaptive` / `spark.graft.ingest.shufflePartitions`
-    * — crank them up for deployments with multi-GB triggers, where
-    * per-trigger data volume stops being overhead-dominated.
+    * latency cut at identical results).
     *
     * SHARED-SESSION caveat: session confs are session-global, so an
     * ad-hoc query submitted WHILE a trigger is in flight also plans with
@@ -329,46 +325,11 @@ object IngestPipeline {
     * it was CREATED on, so the trigger frames arriving in foreachBatch
     * carry the caller's session no matter which session the pipeline
     * holds — an overlay applied to a private session would simply never
-    * reach the plans it exists to shape. The knob belongs where the
+    * reach the plans it exists to shape. The choice belongs where the
     * stream is built. */
-  private final class TriggerScope {
-    private var depth = 0
-    private var saved: Seq[(String, Option[String])] = Nil
-    def enter(spark: SparkSession): Unit = synchronized {
-      if (depth == 0) {
-        val keys = Seq(
-          "spark.sql.adaptive.enabled" ->
-            spark.conf.getOption("spark.graft.ingest.adaptive")
-              .getOrElse("false"),
-          "spark.sql.shuffle.partitions" ->
-            spark.conf.getOption("spark.graft.ingest.shufflePartitions")
-              .getOrElse("8"))
-        saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-        keys.foreach { case (k, v) => spark.conf.set(k, v) }
-      }
-      depth += 1
-    }
-    def exit(spark: SparkSession): Unit = synchronized {
-      depth -= 1
-      if (depth == 0) saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-  }
-  private val triggerScopes =
-    new java.util.WeakHashMap[SparkSession, TriggerScope]()
-  private def triggerScope(spark: SparkSession): TriggerScope =
-    triggerScopes.synchronized {
-      val existing = triggerScopes.get(spark)
-      if (existing != null) existing
-      else { val s = new TriggerScope; triggerScopes.put(spark, s); s }
-    }
-  private[ingest] def withTriggerConfs[T](spark: SparkSession)(f: => T): T = {
-    val s = triggerScope(spark)
-    s.enter(spark)
-    try f finally s.exit(spark)
-  }
+  private[ingest] val triggerConfs = new graft.ConfScope(Seq(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "8"))
 }
 
 /** The streaming ingestion engine: Kafka-shaped source → per-topic format
@@ -421,7 +382,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * from_json's corrupt set is not derivable from the inference
     * profile). */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
-      IngestPipeline.withTriggerConfs(spark) {
+      IngestPipeline.triggerConfs(spark) {
     // foreachBatch serializes batches per query; the landing code reads
     // this for the idempotent-append watermark
     currentBatchId = batchId
@@ -432,9 +393,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // first is one trivial shuffle (a trigger is offset-bounded); batches
     // that already carry enough source partitions (the 100 TB shape,
     // where Kafka partition count IS the parallelism) are left untouched
-    val minFanout = spark.conf.getOption("spark.graft.ingest.minFanout")
-      .map(_.toInt)
-      .getOrElse(math.min(8, spark.sparkContext.defaultParallelism))
+    val minFanout = math.min(8, spark.sparkContext.defaultParallelism)
     // the partition probe costs a physical planning of the batch frame.
     // A first trigger that already carries enough partitions decides NO —
     // but only until the next RE-PROBE (every 16 batches): a stream's

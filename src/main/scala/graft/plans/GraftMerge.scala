@@ -217,12 +217,13 @@ final case class GraftMergeCommand(
       // unmatched row (key absent). A duplicate-key source must therefore
       // leave the fast path: `upsertIfUniquePks` folds that duplicate
       // check into the upsert's own affected-partition probe (one job
-      // answers both — a separate pre-check used to cost a whole action
-      // per statement) and REFUSES a duplicate-key source untouched; the
-      // general rewrite then reproduces both ANSI outcomes exactly —
-      // including persisting duplicate-key INSERTs, because on the
-      // general path PKs are advisory, not a uniqueness constraint
-      // (README "Capability determinations").
+      // answers both) and REFUSES a duplicate-key source untouched. Keys
+      // are compared as they land, after the cast to the table's key
+      // types: keys distinct as written but equal after it are
+      // duplicates. The general rewrite then reproduces both ANSI
+      // outcomes exactly — including persisting duplicate-key INSERTs,
+      // because on the general path PKs are advisory, not a uniqueness
+      // constraint (README "Capability determinations").
       //
       // The projected source is cached for the whole fast path: the
       // probe's aggregation materializes it, and the upsert's own jobs
@@ -234,19 +235,10 @@ final case class GraftMergeCommand(
       case Some(batch) =>
         val src = PlanBridge.ofRows(spark, batch).cache()
         try {
-          // `spark.graft.merge.probeFold=false` restores the separate
-          // pre-check (A/B lever; the folded probe is the default).
           // Sensor contract: mergeSqlUpsertPath counts APPLIED fast-path
           // merges only — a refused probe's time is general-path cost.
           val t0 = System.nanoTime()
-          val applied =
-            if (spark.conf.get("spark.graft.merge.probeFold", "true").toBoolean)
-              lake.upsertIfUniquePks(table, src)
-            else if (!hasDuplicatePks(src, meta.pks)) {
-              lake.upsert(table, src)
-              true
-            } else false
-          if (applied)
+          if (lake.upsertIfUniquePks(table, src))
             graft.metrics.GraftMetrics.op("mergeSqlUpsertPath")
               .record(System.nanoTime() - t0)
           else {

@@ -168,6 +168,37 @@ class MergeSqlSpec extends AnyFunSuite {
     assert(got === Seq((1L, "a"), (2L, "p"), (2L, "q")))
   }
 
+  test("source keys equal only after the cast to the PK type leave the fast path") {
+    import spark.implicits._
+    lake.write("t11c", Seq((1L, "a")).toDF("id", "v"), pks = Seq("id"))
+    val merge =
+      """MERGE INTO gmt.t11c t USING %s s ON t.id = CAST(s.k AS BIGINT)
+        |WHEN MATCHED THEN UPDATE SET v = s.v
+        |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (CAST(s.k AS BIGINT), s.v)"""
+        .stripMargin
+    def src(view: String, rows: (String, String)*): String = {
+      rows.toDF("k", "v").select(col("k").cast("decimal(4,1)").as("k"), col("v"))
+        .createOrReplaceTempView(view)
+      view
+    }
+    def upsertPathCount = graft.metrics.GraftMetrics.snapshot()
+      .getOrElse("mergeSqlUpsertPath.count", 0.0)
+    // control: the statement is upsert-shaped, keys distinct after the cast
+    graft.metrics.GraftMetrics.reset()
+    spark.sql(merge.format(src("m_src11c", ("1.0", "b"), ("3.0", "r"))))
+    assert(upsertPathCount === 1.0, "a cast join key keeps the upsert shape")
+    // 2.2 and 2.7 are distinct DECIMALs but both land as BIGINT 2
+    graft.metrics.GraftMetrics.reset()
+    spark.sql(merge.format(src("m_src11d", ("1.0", "z"), ("2.2", "p"), ("2.7", "q"))))
+    assert(upsertPathCount === 0.0,
+      "keys that collide after the cast must not take the last-wins fast path")
+    // ANSI outcome: key 1 matched once (updated); key 2 unmatched, so both
+    // source rows insert (PKs are advisory on the general path)
+    val got = lake.read("t11c").orderBy("id", "v")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got === Seq((1L, "z"), (2L, "p"), (2L, "q"), (3L, "r")))
+  }
+
   test("star actions: UPDATE SET * / INSERT * take the upsert fast path") {
     import spark.implicits._
     graft.metrics.GraftMetrics.reset()
