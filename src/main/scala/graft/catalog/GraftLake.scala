@@ -7222,7 +7222,10 @@ object GraftLake {
       IntLogicalTypeAnnotation, StringLogicalTypeAnnotation,
       TimestampLogicalTypeAnnotation}
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    // read options over the conf in hand: the one-argument open builds a
+    // fresh Hadoop Configuration (re-parsing the XML defaults) per file
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
     try {
       val acc = scala.collection.mutable.Map[String, Bounds]()
       val dead = scala.collection.mutable.Set[String]()

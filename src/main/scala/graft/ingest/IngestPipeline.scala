@@ -330,6 +330,45 @@ object IngestPipeline {
   private[ingest] val triggerConfs = new graft.ConfScope(Seq(
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.shuffle.partitions" -> "8"))
+
+  /** Write slices for `n` rows: one per `maxRecordsPerFile`, at least one. */
+  private def slicesFor(n: Long): Int =
+    math.max(1L, math.min(Int.MaxValue.toLong,
+      (n + GraftLake.maxRecordsPerFile - 1) / GraftLake.maxRecordsPerFile)).toInt
+
+  /** The dead letters of one batch (or one replay). Every channel that
+    * parks records — JSON/Arrow triage, the corrupt-record channel, the
+    * constraint gate, evolution triage — adds its lazy frame here instead
+    * of writing it, and [[IngestPipeline.landDeadLetters]] lands them all
+    * in one write. The frames derive from cached triage/gate frames, which
+    * are therefore held here and released only after that write: a gate
+    * frame recomputed after index admission could flip `is_dup` in the
+    * parked payload. Thread-safe: a batch's topics park concurrently. */
+  private final class DeadLetters {
+    private val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    private val held = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+
+    /** `records` carries the raw payload (`v`), source `partition`/`offset`,
+      * and either a per-record `error` column or none (then `error`
+      * supplies the constant message). */
+    def park(table: String, records: DataFrame, error: String = null): Unit =
+      frames.add(records.select(col("v").as("value"), col("partition"),
+        col("offset"),
+        (if (records.columns.contains("error")) col("error") else lit(error))
+          .as("error"),
+        lit(table).as("target_table")))
+
+    /** Keep `cached` alive until [[release]]. */
+    def hold(cached: DataFrame): Unit = held.add(cached)
+
+    /** Everything parked so far as one frame; None when nothing was. */
+    def parked: Option[DataFrame] = {
+      import scala.jdk.CollectionConverters._
+      frames.asScala.reduceOption(_ unionByName _)
+    }
+
+    def release(): Unit = held.forEach(df => df.unpersist())
+  }
 }
 
 /** The streaming ingestion engine: Kafka-shaped source → per-topic format
@@ -370,17 +409,30 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
 
   /** Process one micro-batch (also the `foreachBatch` body). The batch is
     * cached for its lifetime — the per-topic fan-out and counters would
-    * otherwise re-read the source once per pass. ONE job yields the topic
-    * fan-out, the batch-size metric, the per-topic wire-format dispatch
-    * AND the per-topic JSON schema inference (per-trigger fixed job count
-    * is streaming flush latency — r8 folded the two format isEmpty probes
-    * into one count, r9 folded that count into the fan-out job, this
-    * folds the per-topic schema-inference pass in too via
-    * [[profileBatch]], leaving the steady-state JSON trigger at TWO jobs
-    * without a DLQ — profile + landing write — and three with one: the
-    * corrupt-record probe must re-check every landing batch, because
-    * from_json's corrupt set is not derivable from the inference
-    * profile). */
+    * otherwise re-read the source once per pass.
+    *
+    * Job count per trigger is streaming flush latency, so the body is
+    * kept short:
+    *  - ONE job ([[profileBatch]]) yields the topic fan-out, the
+    *    batch-size metric, the per-topic wire-format dispatch AND the
+    *    per-topic JSON schema inference;
+    *  - each topic then costs its landing write (plus the triage jobs of
+    *    a conflicting batch);
+    *  - the batch's dead letters, from every topic and channel, land at
+    *    the end in ONE count and ONE `_dlq` append ([[landDeadLetters]]).
+    *    The count doubles as the corrupt-record probe, which must re-check
+    *    every JSON landing (from_json's corrupt set is not derivable from
+    *    the inference profile) — once per batch, not once per topic.
+    * A steady-state JSON trigger is thus profile + one write per topic +
+    * the DLQ count.
+    *
+    * Topics landing in different tables run CONCURRENTLY
+    * ([[org.apache.spark.sql.graft.CapturedTasks.runAll]], at most
+    * `defaultParallelism` at a time), so a trigger's wall is its slowest
+    * table's chain rather than the sum. The call returns (or throws the
+    * first failure) only after every topic has finished, so no write of
+    * this batch commits after it returns; a failed batch writes no dead
+    * letters (its redelivery parks them). */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
       IngestPipeline.triggerConfs(spark) {
     // foreachBatch serializes batches per query; the landing code reads
@@ -416,20 +468,64 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // tagged once for the whole batch — Avro-configured topics just
     // ignore the column
     val cached = spread.withColumn("__ipc", ipcSniff).cache()
+    val dead = new IngestPipeline.DeadLetters
     try {
       val profiled = profileBatch(cached)
       GraftMetrics.recordBatch(profiled.map(_._3).sum)
-      // topics sort so multi-topic batches process in a stable order
-      profiled.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (topic, rows) =>
-        val table = config.tableFor(topic)
-        val records = cached.filter(col("topic") === topic)
-          .select(col("value"), col("partition"), col("offset"), col("__ipc"))
-        val fmtCounts = rows.map(r => r._2 -> r._3).toMap
-        val jsonProfile = rows.find(!_._2).map(_._4)
-        processTopic(topic, table, records, fmtCounts, jsonProfile)
-      }
-    } finally cached.unpersist()
+      // one task per TABLE: topics sharing a table land one after another
+      // in topic order (order holds within each table, not across tables)
+      val tasks = profiled.groupBy(_._1).toSeq.sortBy(_._1)
+        .groupBy { case (topic, _) => config.tableFor(topic) }.toSeq.sortBy(_._1)
+        .map { case (table, topics) => () => topics.foreach { case (topic, rows) =>
+          val records = cached.filter(col("topic") === topic)
+            .select(col("value"), col("partition"), col("offset"), col("__ipc"))
+          val fmtCounts = rows.map(r => r._2 -> r._3).toMap
+          val jsonProfile = rows.find(!_._2).map(_._4)
+          processTopic(topic, table, records, fmtCounts, jsonProfile, dead)
+        } }
+      org.apache.spark.sql.graft.CapturedTasks.runAll(
+        spark, spark.sparkContext.defaultParallelism)(tasks)
+      landDeadLetters(dead)
+    } finally {
+      dead.release()
+      cached.unpersist()
+    }
   }
+
+  /** The exactly-once key a write to `table` lands under when `txnAppId`
+    * is set: `"<txnAppId>:<table>"` at the trigger's batch id normally;
+    * during a DLQ replay the thread-local replay context supplies the DLQ
+    * snapshot id instead (monotonic per target table) under a replay key,
+    * so a crashed-and-re-run replay no-ops rather than duplicating,
+    * without touching the trigger thread's batch id. */
+  private def txnWatermark(table: String): Option[(String, Long)] =
+    config.txnAppId.flatMap { app =>
+      IngestPipeline.replayTxn.get() match {
+        case v if v != null => Some((s"$app:replay:$table", v.longValue))
+        case _ if currentBatchId >= 0 => Some((s"$app:$table", currentBatchId))
+        case _ => None
+      }
+    }
+
+  /** Land a batch's dead letters: ONE count (the DLQ metric, the
+    * emptiness check and the slice count in one job) and ONE append,
+    * coalesced without a shuffle to ceil(n / maxRecordsPerFile) slices.
+    * Under `txnAppId` the append is idempotent like any landing table's,
+    * so a redelivered batch parks its records once. */
+  private def landDeadLetters(dead: IngestPipeline.DeadLetters): Unit =
+    for (dlq <- config.dlqTable; parked <- dead.parked) {
+      val n = parked.count()
+      if (n > 0) {
+        GraftMetrics.dlqRecords.add(n)
+        val out = parked.coalesce(IngestPipeline.slicesFor(n))
+        txnWatermark(dlq) match {
+          case Some((appId, ver)) =>
+            if (!lake.appendIdempotent(dlq, out, appId, ver))
+              GraftMetrics.op("txnSkippedBatches").record(0L)
+          case None => lake.append(dlq, out)
+        }
+      }
+    }
 
   /** What the fan-out job learned about a topic's JSON rows: the unified
     * schema (None = no record parsed), the first unification conflict
@@ -511,22 +607,23 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * Arrow IPC vs JSON (mixed topics supported) — `fmtCounts` came out of
     * the fan-out job, so the dispatch costs no job here. */
   private def processTopic(topic: String, table: String, records: DataFrame,
-      fmtCounts: Map[Boolean, Long],
-      jsonProfile: Option[BatchProfile]): Unit = {
+      fmtCounts: Map[Boolean, Long], jsonProfile: Option[BatchProfile],
+      dead: IngestPipeline.DeadLetters): Unit = {
     if (config.avroSchemas.contains(topic)) {
-      processAvro(topic, table, records)
+      processAvro(topic, table, records, dead)
       return
     }
     if (fmtCounts.getOrElse(true, 0L) > 0)
-      processArrowIpc(topic, table, records.filter(col("__ipc")))
+      processArrowIpc(topic, table, records.filter(col("__ipc")), dead)
     if (fmtCounts.getOrElse(false, 0L) > 0)
       processJson(topic, table, records.filter(!col("__ipc")),
-        fmtCounts(false), jsonProfile)
+        fmtCounts(false), jsonProfile, dead)
   }
 
   // ---- Avro path (S7) ----
 
-  private def processAvro(topic: String, table: String, records: DataFrame): Unit = {
+  private def processAvro(topic: String, table: String, records: DataFrame,
+      dead: IngestPipeline.DeadLetters): Unit = {
     val schemaJson = config.avroSchemas(topic)
     val sparkSchema = AvroDecode.toSparkType(
       AvroDecode.readerSchema(schemaJson)).asInstanceOf[StructType]
@@ -541,7 +638,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       }
     val withOffset = StructType(
       sparkSchema.fields.toSeq :+ StructField("__offset", LongType))
-    writeToLake(table, spark.createDataFrame(rows, withOffset))
+    writeToLake(table, spark.createDataFrame(rows, withOffset), dead)
   }
 
   // ---- JSON path (S3/C2/C3) ----
@@ -581,9 +678,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     val bcMax = spark.conf.getOption("spark.graft.ingest.dedupBroadcastMaxRows")
       .map(_.toLong).getOrElse(5000000L)
     val huge = nRecords >= 0 && nRecords > bcMax
-    val admitSlices = if (!huge) 1
-      else math.min(64L, (nRecords + GraftLake.maxRecordsPerFile - 1) /
-        GraftLake.maxRecordsPerFile).toInt
+    val admitSlices =
+      if (!huge) 1 else math.min(64, IngestPipeline.slicesFor(nRecords))
     val probe = df
       .select(col(dc.idCol), col(dc.textCol).cast("string").as(dc.textCol))
       .dropDuplicates(dc.idCol)
@@ -636,7 +732,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
   }
 
   private def writeToLake(table: String, rawDf: DataFrame,
-      nRecords: Long = -1L): Unit = {
+      dead: IngestPipeline.DeadLetters, nRecords: Long = -1L): Unit = {
     val gated = config.quality.get(table) match {
       case Some(qc) => applyQuality(table, qc, rawDf)
       case None => rawDf
@@ -645,30 +741,18 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       case Some(dc) => applyDedup(table, dc, gated, nRecords)
       case None => (gated, None)
     }
-    val (df, gateDone) = applyConstraintGate(table, deduped)
+    val df = applyConstraintGate(table, deduped, dead)
     val pks = config.pks.getOrElse(table, Nil)
     val preExisted = lake.tableExists(table)
     val upsertPath = preExisted && pks.nonEmpty
     val op = if (upsertPath) GraftMetrics.UpsertWithMergeInto
       else GraftMetrics.SimpleInsert
     val hasOffset = df.columns.contains("__offset")
-    // the watermark: the trigger's batch id normally; during a DLQ
-    // replay the thread-local replay context supplies the DLQ snapshot
-    // id instead (monotonic per target table), so a crashed-and-re-run
-    // replay no-ops rather than duplicating, without touching the
-    // trigger thread's batch id
-    val txnVersion: Option[Long] = IngestPipeline.replayTxn.get() match {
-      case v if v != null => Some(v)
-      case _ if currentBatchId >= 0 => Some(currentBatchId)
-      case _ => None
-    }
     def land(): Unit = GraftMetrics.time(op) {
-      (config.txnAppId, txnVersion) match {
-        case (Some(app), Some(ver)) if !upsertPath =>
+      txnWatermark(table) match {
+        case Some((appId, ver)) if !upsertPath =>
           // exactly-once append: the watermark commits WITH the data, so
           // a redelivered batch (or replay) no-ops (IngestConfig.txnAppId)
-          val appId = if (IngestPipeline.replayTxn.get() != null)
-            s"$app:replay:$table" else s"$app:$table"
           val applied = lake.appendIdempotent(table,
             df.drop((if (hasOffset) Seq("__offset") else Nil): _*),
             appId, ver,
@@ -685,7 +769,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // the pipeline owns policy timing for its tables: standing
     // graft.policy.* hooks stay out of the landing (and its index
     // transaction) and run post-flush below, config-first
-    try graft.catalog.GraftLake.withPoliciesSuppressed { admitIndex match {
+    graft.catalog.GraftLake.withPoliciesSuppressed { admitIndex match {
       case Some(admit) =>
         // index admission and the landing commit are ONE transaction: a
         // flush that fails after admitting rolls the index back too, so
@@ -698,23 +782,23 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         // landing run CONCURRENTLY: all three writes read only
         // checkpointed probe state + the trigger cache, and a streaming
         // flush pays ONE write's latency, not three in sequence. The
-        // admission future is quiesced before any rollback — compensating
-        // a member while its append is mid-flight would race
+        // landing stays on this thread (its policy suppression is
+        // thread-local); the admission task is quiesced before any
+        // rollback — compensating a member while its append is mid-flight
+        // would race
         lake.transactOwned(Seq(table,
             s"${table}_lshidx_docs", s"${table}_lshidx_bands")) {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          val fAdmit = Future(admit())
-          try { land(); Await.result(fAdmit, Duration.Inf) }
+          import org.apache.spark.sql.graft.CapturedTasks
+          val fAdmit = CapturedTasks.submit(spark)(admit())
+          try { land(); CapturedTasks.await(fAdmit) }
           catch {
             case e: Throwable =>
-              scala.util.Try(Await.ready(fAdmit, Duration.Inf))
+              scala.util.Try(CapturedTasks.await(fAdmit))
               throw e
           }
         }
       case None => land()
-    } } finally gateDone() // release the cached gate frame even on failure
+    } }
     // post-flush auto-compaction: the trigger check is O(1) against the
     // commit cache, so polling it every micro-batch costs nothing
     config.autoCompact.get(table).foreach { cc =>
@@ -764,7 +848,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
   }
 
   private def processJson(topic: String, table: String, records: DataFrame,
-      nRecords: Long, profile: Option[BatchProfile]): Unit = {
+      nRecords: Long, profile: Option[BatchProfile],
+      dead: IngestPipeline.DeadLetters): Unit = {
     // NO second cache: `records` projects the batch-level cache, so every
     // triage re-read is an in-memory scan already — a per-batch cache here
     // would just pay a second memory-store write per trigger
@@ -800,7 +885,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         // unparseable. They must not vanish (reference: every record is
         // either landed or reported): DLQ them all, or fail loudly.
         if (nRecords > 0) config.dlqTable match {
-          case Some(dlq) => sendToDlq(dlq, table,
+          case Some(_) => dead.park(table,
             values.select(col("v"), col("partition"), col("offset")),
             "unparseable JSON")
           case None =>
@@ -816,12 +901,12 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         // still conflict with the TABLE schema (cross-topic routing, a
         // fresh cache over an old table): that conflict surfaces as the
         // evolution rejection — triage per record, never crash the stream
-        try landJson(table, values, unified, nRecords)
+        try landJson(table, values, unified, dead, nRecords)
         catch {
           case e: graft.catalog.LandedTypes.SchemaEvolutionException =>
-            triageEvolution(topic, table, values, e)
+            triageEvolution(topic, table, values, e, dead)
         }
-      case Left(_) => triageJson(topic, table, values)
+      case Left(_) => triageJson(topic, table, values, dead)
     }
   }
 
@@ -833,7 +918,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * under their own unified schema (which now evolves cleanly by
     * construction). */
   private def triageEvolution(topic: String, table: String,
-      values: DataFrame, cause: Exception): Unit = {
+      values: DataFrame, cause: Exception,
+      dead: IngestPipeline.DeadLetters): Unit = {
     if (config.dlqTable.isEmpty) throw cause
     val tableSchema = StructType(lake.readMeta(table).schema
       .filterNot(_.name == lake.InsertedAtCol).toSeq)
@@ -853,25 +939,22 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       }
     }
     val tagged = values.withColumn("__err", errorDetail(col("v"))).cache()
-    try {
-      val bad = tagged.filter(col("__err").isNotNull)
-      sendToDlq(config.dlqTable.get, table,
-        bad.select(col("v"), col("partition"), col("offset"),
-          col("__err").as("error")))
-      val good = tagged.filter(col("__err").isNull)
-        .select(col("v"), col("partition"), col("offset"))
-      if (!good.isEmpty) {
-        val unified =
-          try SchemaInference.inferSchemaDistributed(good.select("v").as[String])
-          catch {
-            case e: Exception =>
-              sendToDlq(config.dlqTable.get, table, good,
-                "table-compatible records conflict pairwise: " + e.getMessage)
-              None
-          }
-        unified.foreach(u => landJson(table, good, u))
-      }
-    } finally tagged.unpersist()
+    dead.hold(tagged)
+    dead.park(table, tagged.filter(col("__err").isNotNull)
+      .select(col("v"), col("partition"), col("offset"), col("__err").as("error")))
+    val good = tagged.filter(col("__err").isNull)
+      .select(col("v"), col("partition"), col("offset"))
+    if (!good.isEmpty) {
+      val unified =
+        try SchemaInference.inferSchemaDistributed(good.select("v").as[String])
+        catch {
+          case e: Exception =>
+            dead.park(table, good,
+              "table-compatible records conflict pairwise: " + e.getMessage)
+            None
+        }
+      unified.foreach(u => landJson(table, good, u, dead))
+    }
   }
 
   /** Reference E1: conflict detection via the exception cause chain
@@ -896,15 +979,15 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * reads, fewer manifest entries, less auto-compaction pressure — while
     * a genuinely large trigger keeps one task per target-sized file
     * (parallelism stays proportional to data; `maxRecordsPerFile` still
-    * rolls oversized tasks). The corrupt-record DLQ probe always runs
-    * when a DLQ is configured: from_json's corrupt set is NOT a subset of
-    * what per-record inference found unparseable (inference types an
-    * array by its FIRST element and sniffs timestamps with its own
-    * grammar, so a record can infer cleanly yet fail from_json
-    * conversion) — skipping the probe on a zero-unparseable profile
-    * would silently drop exactly those records. */
+    * rolls oversized tasks). The corrupt records are always parked (and
+    * checked by the batch's DLQ count) when a DLQ is configured:
+    * from_json's corrupt set is NOT a subset of what per-record inference
+    * found unparseable (inference types an array by its FIRST element and
+    * sniffs timestamps with its own grammar, so a record can infer cleanly
+    * yet fail from_json conversion) — skipping them on a zero-unparseable
+    * profile would silently drop exactly those records. */
   private def landJson(table: String, values: DataFrame, schema: StructType,
-      nRecords: Long = -1L): Unit = {
+      dead: IngestPipeline.DeadLetters, nRecords: Long = -1L): Unit = {
     // corrupt-record channel: from_json yields an all-null struct for
     // malformed input, so a dedicated corrupt column is the reliable signal
     val corrupt = "_graft_corrupt"
@@ -922,15 +1005,14 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // onto `slices` cores; the shuffle moves only already-parsed rows of
     // one trigger, and the parse keeps the batch's full parallelism
     val good = if (nRecords < 0) good0 // triage subset: size unknown, land as-is
-      else good0.repartition(math.max(1L, math.min(Int.MaxValue.toLong,
-        (nRecords + GraftLake.maxRecordsPerFile - 1) /
-          GraftLake.maxRecordsPerFile)).toInt)
-    writeToLake(table, good, nRecords)
-    config.dlqTable.foreach { dlq =>
-      val bad = parsed.filter(col("__corrupt").isNotNull || col("__parsed").isNull)
-      if (!bad.isEmpty) sendToDlq(dlq, table, bad
+      else good0.repartition(IngestPipeline.slicesFor(nRecords))
+    writeToLake(table, good, dead, nRecords)
+    // parked whether or not anything is corrupt: the batch's one DLQ
+    // count is the emptiness check
+    if (config.dlqTable.isDefined)
+      dead.park(table, parsed
+        .filter(col("__corrupt").isNotNull || col("__parsed").isNull)
         .select(col("v"), col("partition"), col("offset")), "unparseable JSON")
-    }
   }
 
   /** Reference E2 per-record DLQ triage: on a batch-level schema conflict,
@@ -942,7 +1024,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * SinkRecordToArrowConverterTest.java:518-537) — the rest are re-batched
     * and landed. With no DLQ configured the batch fails with
     * `partition@offset` samples (DucklakeSinkTask.java:643-667). */
-  private def triageJson(topic: String, table: String, values: DataFrame): Unit = {
+  private def triageJson(topic: String, table: String, values: DataFrame,
+      dead: IngestPipeline.DeadLetters): Unit = {
     if (config.dlqTable.isEmpty) {
       val samples = values.orderBy(col("partition"), col("offset"))
         .select(col("partition"), col("offset")).limit(5).collect()
@@ -987,47 +1070,44 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       }
     }
     val tagged = values.withColumn("__err", errorDetail(col("v"))).cache()
-    try {
-      val bad = tagged.filter(col("__err").isNotNull)
-      sendToDlq(config.dlqTable.get, table,
-        bad.select(col("v"), col("partition"), col("offset"),
-          col("__err").as("error")))
-      val good = tagged.filter(col("__err").isNull)
-        .select(col("v"), col("partition"), col("offset"))
-      if (!good.isEmpty) {
-        // "good" records each unify with the seed, but may still conflict
-        // pairwise (two records adding the same NEW field with different
-        // types). In that case land under the seed schema alone — every
-        // good record parses under it; the conflicting new fields are
-        // dropped for this batch rather than poisoning the stream. An
-        // EMPTY seed (first record was uninferrable) can't play that
-        // role: re-seed from the lowest-offset good record so the
-        // survivors still land, and as a last resort DLQ them — a triage
-        // pass must never silently drop records.
-        val unified =
-          try SchemaInference.inferSchemaDistributed(good.select("v").as[String])
-            .map(s => schemaCache.unifiedFor(topic, Seq(s)))
-            .getOrElse(seed)
-          catch {
-            case e: Throwable if causeChainHasSchemaConflict(e) =>
-              if (seed.nonEmpty) seed
-              else {
-                val inferrable = udf { (v: String) =>
-                  SchemaInference.inferFromJson(v).isDefined
-                }
-                good.filter(inferrable(col("v")))
-                  .orderBy(col("partition"), col("offset"))
-                  .select("v").as[String].take(1).headOption
-                  .flatMap(SchemaInference.inferFromJson)
-                  .getOrElse(StructType(Nil))
+    dead.hold(tagged)
+    dead.park(table, tagged.filter(col("__err").isNotNull)
+      .select(col("v"), col("partition"), col("offset"), col("__err").as("error")))
+    val good = tagged.filter(col("__err").isNull)
+      .select(col("v"), col("partition"), col("offset"))
+    if (!good.isEmpty) {
+      // "good" records each unify with the seed, but may still conflict
+      // pairwise (two records adding the same NEW field with different
+      // types). In that case land under the seed schema alone — every
+      // good record parses under it; the conflicting new fields are
+      // dropped for this batch rather than poisoning the stream. An
+      // EMPTY seed (first record was uninferrable) can't play that
+      // role: re-seed from the lowest-offset good record so the
+      // survivors still land, and as a last resort DLQ them — a triage
+      // pass must never silently drop records.
+      val unified =
+        try SchemaInference.inferSchemaDistributed(good.select("v").as[String])
+          .map(s => schemaCache.unifiedFor(topic, Seq(s)))
+          .getOrElse(seed)
+        catch {
+          case e: Throwable if causeChainHasSchemaConflict(e) =>
+            if (seed.nonEmpty) seed
+            else {
+              val inferrable = udf { (v: String) =>
+                SchemaInference.inferFromJson(v).isDefined
               }
-          }
-        if (unified.nonEmpty) landJson(table, good, unified)
-        else sendToDlq(config.dlqTable.get, table, good,
-          "pairwise schema conflict and no resolvable seed schema for topic '" +
-            topic + "'")
-      }
-    } finally tagged.unpersist()
+              good.filter(inferrable(col("v")))
+                .orderBy(col("partition"), col("offset"))
+                .select("v").as[String].take(1).headOption
+                .flatMap(SchemaInference.inferFromJson)
+                .getOrElse(StructType(Nil))
+            }
+        }
+      if (unified.nonEmpty) landJson(table, good, unified, dead)
+      else dead.park(table, good,
+        "pairwise schema conflict and no resolvable seed schema for topic '" +
+          topic + "'")
+    }
   }
 
   /** CHECK-constraint gate (the reference's per-record triage shape, E2):
@@ -1040,61 +1120,45 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * forever. With no DLQ configured, or a constraint referencing a
     * column this batch doesn't carry, the gate steps aside and the write
     * path's enforcement aborts loudly. */
-  private def applyConstraintGate(table: String,
-      df: DataFrame): (DataFrame, () => Unit) = {
-    val pass = (df, () => ())
-    if (config.dlqTable.isEmpty || !lake.tableExists(table)) return pass
+  private def applyConstraintGate(table: String, df: DataFrame,
+      dead: IngestPipeline.DeadLetters): DataFrame = {
+    if (config.dlqTable.isEmpty || !lake.tableExists(table)) return df
     val cs = lake.constraints(table)
-    if (cs.isEmpty) return pass
+    if (cs.isEmpty) return df
     val checks = cs.map { case (n, text) =>
       n -> coalesce(expr(text), lit(true))
     }
     val resolvable =
       try { df.select(checks.map(_._2): _*).queryExecution.analyzed; true }
       catch { case _: Exception => false }
-    if (!resolvable) return pass
+    if (!resolvable) return df
     // concat_ws skips nulls: the column lists exactly the violated names.
-    // The tagged frame is CACHED and released by the caller after the
-    // landing write — the DLQ split and the write must not re-run the
-    // quality/dedup lineage, and the job count per trigger stays fixed
-    // (sendToDlq's own count doubles as the emptiness check)
+    // The tagged frame is CACHED and held until the batch's dead letters
+    // land — the DLQ split and the write must not re-run the quality/dedup
+    // lineage, and the job count per trigger stays fixed (the batch's one
+    // DLQ count doubles as the emptiness check)
     val violName = concat_ws(", ", checks.map { case (n, c) =>
       when(!c, lit(n))
     }: _*)
     val tagged = df.withColumn("__viol", violName).cache()
+    dead.hold(tagged)
     val bad = tagged.filter(col("__viol") =!= "")
     val hasOffset = df.columns.contains("__offset")
     val payloadCols = df.columns.filterNot(_ == "__offset").toSeq
-    sendToDlq(config.dlqTable.get, table,
+    dead.park(table,
       bad.select(
         to_json(struct(payloadCols.map(col): _*)).as("v"),
         lit(-1).as("partition"),
         (if (hasOffset) col("__offset") else lit(-1L)).as("offset"),
         concat(lit("CHECK constraint violation: "), col("__viol"))
           .as("error")))
-    (tagged.filter(col("__viol") === "").drop("__viol"),
-      () => { tagged.unpersist(); () })
-  }
-
-  /** Land bad records in the DLQ table. `records` carries the raw payload
-    * (`v`), source `partition`/`offset`, and either a per-record `error`
-    * column or none (then `error` supplies the constant message). */
-  private def sendToDlq(dlq: String, table: String, records: DataFrame,
-      error: String = null): Unit = {
-    val n = records.count()
-    if (n == 0) return
-    GraftMetrics.dlqRecords.add(n)
-    val withErr =
-      if (records.columns.contains("error")) records
-      else records.withColumn("error", lit(error))
-    lake.append(dlq, withErr
-      .select(col("v").as("value"), col("partition"), col("offset"), col("error"))
-      .withColumn("target_table", lit(table)))
+    tagged.filter(col("__viol") === "").drop("__viol")
   }
 
   // ---- Arrow IPC path (S4/S6) ----
 
-  private def processArrowIpc(topic: String, table: String, records: DataFrame): Unit = {
+  private def processArrowIpc(topic: String, table: String, records: DataFrame,
+      dead: IngestPipeline.DeadLetters): Unit = {
     // Pass 1: unify record schemas (schema-only header decode). A schema
     // conflict OR an undecodable record routes the batch to per-record
     // triage, same as the JSON path — a single corrupt payload must not
@@ -1106,18 +1170,19 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       .distinct().collect()
     val schemas = tried.collect { case Right(s) => s }
     if (tried.isEmpty) return
-    if (tried.exists(_.isLeft)) { triageArrow(topic, table, records); return }
+    if (tried.exists(_.isLeft)) { triageArrow(topic, table, records, dead); return }
     val unified =
       try Some(schemaCache.unifiedFor(topic, schemas.toSeq))
       catch {
         case e: Throwable if causeChainHasSchemaConflict(e) =>
-          triageArrow(topic, table, records); None
+          triageArrow(topic, table, records, dead); None
       }
-    unified.foreach(u => landArrow(table, records, u))
+    unified.foreach(u => landArrow(table, records, u, dead))
   }
 
   /** Pass 2: decode + conform rows to the unified schema, land. */
-  private def landArrow(table: String, records: DataFrame, unified: StructType): Unit = {
+  private def landArrow(table: String, records: DataFrame, unified: StructType,
+      dead: IngestPipeline.DeadLetters): Unit = {
     val bytesRdd: RDD[(Array[Byte], Long)] = records
       .select(col("value"), col("offset")).as[(Array[Byte], Long)].rdd
     val unifiedJson = unified.json
@@ -1131,7 +1196,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       }
     }
     val withOffset = StructType(unified.fields.toSeq :+ StructField("__offset", LongType))
-    writeToLake(table, spark.createDataFrame(rows, withOffset))
+    writeToLake(table, spark.createDataFrame(rows, withOffset), dead)
   }
 
   /** Reference E2 triage for the Arrow path: each record's schema is
@@ -1139,7 +1204,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * else the lowest-offset record's); incompatible or undecodable records
     * land in the DLQ with enriched per-field errors (payload base64'd into
     * the DLQ value column), the rest re-batch and land. */
-  private def triageArrow(topic: String, table: String, records: DataFrame): Unit = {
+  private def triageArrow(topic: String, table: String, records: DataFrame,
+      dead: IngestPipeline.DeadLetters): Unit = {
     if (config.dlqTable.isEmpty) {
       val samples = records.orderBy(col("partition"), col("offset"))
         .select(col("partition"), col("offset")).limit(5).collect()
@@ -1185,40 +1251,38 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       }
     }
     val tagged = records.withColumn("__err", errorDetail(col("value"))).cache()
-    try {
-      val bad = tagged.filter(col("__err").isNotNull)
-      sendToDlq(config.dlqTable.get, table,
-        bad.select(base64(col("value")).as("v"), col("partition"), col("offset"),
-          col("__err").as("error")))
-      val good = tagged.filter(col("__err").isNull)
-      if (!good.isEmpty) {
-        val goodSchemas = good.select(col("value")).as[Array[Byte]].rdd
-          .map(ArrowIpc.decodeSchema).distinct().collect()
-        // good records each unify with the seed, but can conflict pairwise
-        // (same NEW field, different types) — land under the seed alone
-        // then. An EMPTY seed (first record undecodable) can't play that
-        // role: re-seed deterministically from the lowest-offset good
-        // record, and as a last resort DLQ the survivors — a triage pass
-        // must never silently drop records.
-        val unified =
-          try schemaCache.unifiedFor(topic, goodSchemas.toSeq)
-          catch {
-            case e: Throwable if causeChainHasSchemaConflict(e) =>
-              if (seed.nonEmpty) seed
-              else {
-                val firstGood = good.orderBy(col("partition"), col("offset"))
-                  .select("value").as[Array[Byte]].head()
-                try ArrowIpc.decodeSchema(firstGood)
-                catch { case _: Exception => StructType(Nil) }
-              }
-          }
-        if (unified.nonEmpty) landArrow(table, good, unified)
-        else sendToDlq(config.dlqTable.get, table,
-          good.select(base64(col("value")).as("v"), col("partition"), col("offset")),
-          "pairwise schema conflict and no resolvable seed schema for topic '" +
-            topic + "'")
-      }
-    } finally tagged.unpersist()
+    dead.hold(tagged)
+    dead.park(table, tagged.filter(col("__err").isNotNull)
+      .select(base64(col("value")).as("v"), col("partition"), col("offset"),
+        col("__err").as("error")))
+    val good = tagged.filter(col("__err").isNull)
+    if (!good.isEmpty) {
+      val goodSchemas = good.select(col("value")).as[Array[Byte]].rdd
+        .map(ArrowIpc.decodeSchema).distinct().collect()
+      // good records each unify with the seed, but can conflict pairwise
+      // (same NEW field, different types) — land under the seed alone
+      // then. An EMPTY seed (first record undecodable) can't play that
+      // role: re-seed deterministically from the lowest-offset good
+      // record, and as a last resort DLQ the survivors — a triage pass
+      // must never silently drop records.
+      val unified =
+        try schemaCache.unifiedFor(topic, goodSchemas.toSeq)
+        catch {
+          case e: Throwable if causeChainHasSchemaConflict(e) =>
+            if (seed.nonEmpty) seed
+            else {
+              val firstGood = good.orderBy(col("partition"), col("offset"))
+                .select("value").as[Array[Byte]].head()
+              try ArrowIpc.decodeSchema(firstGood)
+              catch { case _: Exception => StructType(Nil) }
+            }
+        }
+      if (unified.nonEmpty) landArrow(table, good, unified, dead)
+      else dead.park(table,
+        good.select(base64(col("value")).as("v"), col("partition"), col("offset")),
+        "pairwise schema conflict and no resolvable seed schema for topic '" +
+          topic + "'")
+    }
   }
 
   // ---- streaming assembly ----
@@ -1296,9 +1360,16 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       // no-ops on re-run rather than duplicating.
       IngestPipeline.replayTxn.set(java.lang.Long.valueOf(pre))
       // jsonProfile = None: the replay path takes processJson's fallback
-      // inference — replay is not a hot path
-      try processTopic(topic, config.tableFor(topic), tagged, fmtCounts, None)
-      finally IngestPipeline.replayTxn.remove()
+      // inference — replay is not a hot path. Fresh failures land before
+      // the post-replay version is read below
+      val dead = new IngestPipeline.DeadLetters
+      try {
+        processTopic(topic, config.tableFor(topic), tagged, fmtCounts, None, dead)
+        landDeadLetters(dead)
+      } finally {
+        IngestPipeline.replayTxn.remove()
+        dead.release()
+      }
       val post = lake.versions(dlq).last
       val fresh = lake.readAppendsBetween(dlq, pre, post)
       val still = fresh.count()

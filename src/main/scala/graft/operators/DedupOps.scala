@@ -553,18 +553,15 @@ object DedupOps {
           // a streaming trigger pays ONE append's latency, not two in
           // sequence. Both read only the checkpointed dup set + the
           // caller's batch, so neither depends on the other's commit.
-          // BOTH futures are awaited before any rethrow — an orphaned
-          // in-flight append could otherwise commit AFTER the caller's
-          // transaction rollback, leaving aborted band keys live in the
-          // index (a redelivered doc would then self-flag as a dup)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          val fDocs = Future(lake.append(s"${prefix}_docs", docsFrame))
-          val fBands = Future(lake.append(s"${prefix}_bands", bandsFrame))
-          val rDocs = scala.util.Try(Await.result(fDocs, Duration.Inf))
-          val rBands = scala.util.Try(Await.result(fBands, Duration.Inf))
-          rDocs.get; rBands.get
+          // BOTH tasks finish before any rethrow — an orphaned in-flight
+          // append could otherwise commit AFTER the caller's transaction
+          // rollback, leaving aborted band keys live in the index (a
+          // redelivered doc would then self-flag as a dup). Their jobs
+          // carry the caller's job group and local properties
+          org.apache.spark.sql.graft.CapturedTasks.runAll(
+            docsFrom.sparkSession, 2)(Seq(
+            () => lake.append(s"${prefix}_docs", docsFrame),
+            () => lake.append(s"${prefix}_bands", bandsFrame)))
         } else {
           // sequential: the staged caller runs this inside a transact
           // whose member locks are held by THIS thread

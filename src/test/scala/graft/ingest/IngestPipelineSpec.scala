@@ -691,12 +691,17 @@ class IngestPipelineSpec extends AnyFunSuite {
       warehouse = Files.createTempDirectory("graft-txn").toString,
       txnAppId = Some("q1")))
     p.processBatch(batchOf("d" -> """{"id":1,"v":"a"}"""), 0)
-    p.processBatch(batchOf("d" -> """{"id":2,"v":"b"}"""), 1)
+    // batch 1 carries a poison record: it parks in the DLQ
+    val batch1 = batchOf("d" -> """{"id":2,"v":"b"}""", "d" -> "{{{not json")
+    p.processBatch(batch1, 1)
     assert(p.lake.read("d").count() === 2)
+    assert(p.lake.read("_dlq").count() === 1)
     // the restart-replay case: same batchId delivered again
-    p.processBatch(batchOf("d" -> """{"id":2,"v":"b"}"""), 1)
+    p.processBatch(batch1, 1)
     assert(p.lake.read("d").count() === 2,
       "a redelivered batchId must not duplicate rows")
+    assert(p.lake.read("_dlq").count() === 1,
+      "a redelivered batchId must not duplicate dead letters")
     assert(graft.metrics.GraftMetrics.op("txnSkippedBatches").count.sum() >= 1)
     // progress continues after the replay
     p.processBatch(batchOf("d" -> """{"id":3,"v":"c"}"""), 2)
@@ -707,6 +712,31 @@ class IngestPipelineSpec extends AnyFunSuite {
       warehouse = p.lake.warehouseDir, txnAppId = Some("q1")))
     p2.processBatch(batchOf("d" -> """{"id":3,"v":"c"}"""), 2)
     assert(p2.lake.read("d").count() === 3)
+  }
+
+  test("a failing topic fails the batch only after the other topics finished") {
+    graft.catalog.GraftLake.invalidateCaches()
+    val p = new IngestPipeline(spark, IngestConfig(
+      warehouse = Files.createTempDirectory("graft-contain").toString,
+      dlqTable = None))
+    val healthy = (1 to 4).map(i => s"ok$i")
+    p.processBatch(batchOf(("bad" -> """{"a":1}""") +:
+      healthy.map(t => t -> """{"a":1}"""): _*), 0)
+    // "bad" conflicts with no DLQ configured (throws after one job); the
+    // healthy topics each land a larger batch
+    val batch = batchOf(
+      ("bad" -> """{"a":2}""") +: ("bad" -> """{"a":"2024-03-01T12:00:00Z"}""") +:
+        healthy.flatMap(t => (1 to 200).map(i => t -> s"""{"a":$i,"s":"r$i"}""")): _*)
+    val e = intercept[Exception](p.processBatch(batch, 1))
+    assert(e.getMessage.contains("no DLQ configured"), e.getMessage)
+    val tables = "bad" +: healthy
+    val atReturn = tables.map(t => t -> p.lake.versions(t)).toMap
+    healthy.foreach(t => assert(p.lake.read(t).count() === 201,
+      s"$t must have landed before the batch failed"))
+    Thread.sleep(1500)
+    tables.foreach(t => assert(p.lake.versions(t) === atReturn(t),
+      s"$t gained a version after processBatch returned"))
+    assert(p.lake.read("bad").count() === 1)
   }
 
   test("bloom maintenance: the sidecar stays current with every flush") {
