@@ -125,14 +125,8 @@ object ShingleExpression {
       copy(child = c)
   }
 
-  def register(spark: SparkSession): Unit = {
-    for (k <- 2 to 5) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_shingles_$k", exprs => WordShingles(exprs.head, k), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_topgram_$k", exprs => TopShingleCount(exprs.head, k), "built-in")
-    }
-  }
+  def register(spark: SparkSession): Unit =
+    graft.plans.GraftExtensions.register(spark, this)
 
   /** Distinct word k-shingles of a token-array column (null when the doc
     * has fewer than k tokens); [[register]] the session first. */

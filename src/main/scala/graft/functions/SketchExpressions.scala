@@ -160,12 +160,8 @@ object SketchExpressions {
       copy(child = c)
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSignature(exprs.head, 64), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash64(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    graft.plans.GraftExtensions.register(spark, this)
 
   def minHash(c: Column): Column = call_function("graft_minhash", c)
   def simHash64(c: Column): Column = call_function("graft_simhash", c)

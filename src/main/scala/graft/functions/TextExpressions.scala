@@ -185,18 +185,8 @@ object TextExpressions {
       copy(c)
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_count_in", exprs => CountInSet(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NormalizeNfc(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfkc", exprs => NormalizeNfkc(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_casefold", exprs => CaseFold(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    graft.plans.GraftExtensions.register(spark, this)
 
   /** Rolling-hash fingerprint as a Column; [[register]] the session first. */
   def rollingHash(c: Column): Column = call_function("graft_rolling_hash", c)

@@ -163,14 +163,8 @@ object VectorFunctions {
     * keeps the Column↔Expression bridge internal, so the public route to a
     * custom Catalyst expression is the function registry +
     * `call_function`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine_similarity",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    graft.plans.GraftExtensions.register(spark, this)
 
   /** Dot product as a Column (codegen'd Catalyst expression). */
   def dotProduct(a: Column, b: Column): Column = {

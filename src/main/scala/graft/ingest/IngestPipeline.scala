@@ -6,10 +6,12 @@ import graft.catalog.GraftLake
 import graft.metrics.GraftMetrics
 import graft.schema.{SchemaInference, SchemaUnify}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Engine configuration (reference: connect/DucklakeSinkConfig.java).
   *
@@ -300,8 +302,97 @@ object IngestPipeline {
   private final class SeedHolder(json: String) extends Serializable {
     @transient lazy val schema: StructType =
       DataType.fromJson(json).asInstanceOf[StructType]
-    @transient lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   }
+
+  /** One wire format as per-record triage sees it. A triage frame holds
+    * the payload in column `v`: a JSON string or Arrow IPC bytes. The
+    * record-level members run on executors inside the triage UDF; the
+    * frame-level ones size and land the survivors on the driver.
+    * `conflict` opens the no-DLQ failure message. */
+  private sealed abstract class Wire[T](val conflict: String) extends Serializable {
+    /** The record's schema: None = no schema to check (uninferrable
+      * JSON, which the corrupt-record channel parks); Left = the record's
+      * error (an undecodable Arrow payload). */
+    def schemaOf(v: T): Either[String, Option[StructType]]
+    /** Renders a field of the record (whose schema is `s`) for the
+      * per-field error; parses the record once for all its fields. */
+    def sampler(v: T, s: StructType): String => String
+    /** The DLQ `value` column of payload `v`, and its inverse. */
+    def toDlq(v: Column): Column
+    def fromDlq(value: Column): Column
+    /** The schemas the survivors' landing unifies; throws on a pairwise
+      * conflict. */
+    def goodSchemas(good: DataFrame): Seq[StructType]
+    def land(p: IngestPipeline, table: String, good: DataFrame,
+      schema: StructType, dead: DeadLetters): Unit
+  }
+
+  private object JsonWire extends Wire[String]("Schema conflict") {
+    private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def schemaOf(v: String): Either[String, Option[StructType]] =
+      Right(SchemaInference.inferFromJson(v))
+    def sampler(v: String, s: StructType): String => String = {
+      val node = try mapper.readTree(v) catch { case _: Exception => null }
+      name => Option(node).flatMap(n => Option(n.get(name)))
+        .map(_.toString.take(64)).getOrElse("?")
+    }
+    def toDlq(v: Column): Column = v
+    def fromDlq(value: Column): Column = value.cast("binary")
+    def goodSchemas(good: DataFrame): Seq[StructType] =
+      SchemaInference.inferSchemaDistributed(good.select("v").as(Encoders.STRING)).toSeq
+    def land(p: IngestPipeline, table: String, good: DataFrame,
+        schema: StructType, dead: DeadLetters): Unit = p.landJson(table, good, schema, dead)
+  }
+
+  private object ArrowWire extends Wire[Array[Byte]]("Arrow schema conflict") {
+    def schemaOf(v: Array[Byte]): Either[String, Option[StructType]] =
+      try Right(Some(ArrowIpc.decodeSchema(v)))
+      catch {
+        case e: Exception => Left("undecodable Arrow IPC: " +
+          Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(120))
+      }
+    def sampler(v: Array[Byte], s: StructType): String => String = {
+      val row = try ArrowIpc.decode(v)._2.headOption catch { case _: Exception => None }
+      name => row.map(r => String.valueOf(r.get(s.fieldIndex(name))).take(64))
+        .getOrElse("?")
+    }
+    def toDlq(v: Column): Column = base64(v)
+    def fromDlq(value: Column): Column = try_to_binary(value, lit("base64"))
+    def goodSchemas(good: DataFrame): Seq[StructType] =
+      good.select("v").as(Encoders.BINARY).rdd
+        .map(ArrowIpc.decodeSchema).distinct().collect().toSeq
+    def land(p: IngestPipeline, table: String, good: DataFrame,
+        schema: StructType, dead: DeadLetters): Unit = p.landArrow(table, good, schema, dead)
+  }
+
+  /** Triage's verdict on one record against the seed schema: null = the
+    * record stays in the batch; else its error — for a conflict, each
+    * offending field with both types and the record's own value
+    * (reference ArrowSchemaMerge.java:76-87,
+    * SinkRecordToArrowConverterTest.java:518-537). */
+  private def recordError[T](wire: Wire[T], seed: StructType, v: T): String =
+    wire.schemaOf(v) match {
+      case Left(error) => error
+      case Right(None) => null
+      case Right(Some(s)) =>
+        try { SchemaUnify.unify(Seq(seed, s)); null }
+        catch {
+          case outer: Exception =>
+            val sample = wire.sampler(v, s)
+            val perField = s.fields.toSeq.flatMap { f =>
+              seed.fields.find(_.name == f.name).flatMap { sf =>
+                try { SchemaUnify.unifyTypes(f.name, Seq(sf.dataType, f.dataType)); None }
+                catch {
+                  case _: Exception =>
+                    Some(s"field '${f.name}': topic type ${sf.dataType.simpleString} " +
+                      s"vs record type ${f.dataType.simpleString} (sample: ${sample(f.name)})")
+                }
+              }
+            }
+            "Cannot unify incompatible types with topic schema: " +
+              (if (perField.isEmpty) outer.getMessage else perField.mkString("; "))
+        }
+    }
 
   /** The trigger-side session confs, applied around every `processBatch`
     * by a reference-counted [[graft.ConfScope]] (concurrent pipelines on
@@ -360,6 +451,20 @@ object IngestPipeline {
 
     /** Keep `cached` alive until [[release]]. */
     def hold(cached: DataFrame): Unit = held.add(cached)
+
+    /** Tag each record of `values` (v, partition, offset) with `error`,
+      * park the records it flags — payload rendered by `toDlq` — and
+      * return the rest as (v, partition, offset). The tagged frame is
+      * cached and held until the batch's dead letters land, so the split
+      * evaluates `error` once per record. */
+    def split(table: String, values: DataFrame, error: Column,
+        toDlq: Column => Column = identity): DataFrame = {
+      val tagged = values.withColumn("__err", error).cache()
+      hold(tagged)
+      park(table, tagged.filter(col("__err").isNotNull).select(toDlq(col("v")).as("v"),
+        col("partition"), col("offset"), col("__err").as("error")))
+      tagged.filter(col("__err").isNull).select(col("v"), col("partition"), col("offset"))
+    }
 
     /** Everything parked so far as one frame; None when nothing was. */
     def parked: Option[DataFrame] = {
@@ -467,21 +572,19 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     val spread = if (needsSpread) batch.repartition(minFanout) else batch
     // tagged once for the whole batch — Avro-configured topics just
     // ignore the column
-    val cached = spread.withColumn("__ipc", ipcSniff).cache()
+    val cached = spread.withColumn("__ipc", ipcSniff(col("value"))).cache()
     val dead = new IngestPipeline.DeadLetters
     try {
       val profiled = profileBatch(cached)
-      GraftMetrics.recordBatch(profiled.map(_._3).sum)
+      GraftMetrics.recordBatch(profiled.valuesIterator.flatMap(_.valuesIterator).map(_._1).sum)
       // one task per TABLE: topics sharing a table land one after another
       // in topic order (order holds within each table, not across tables)
-      val tasks = profiled.groupBy(_._1).toSeq.sortBy(_._1)
+      val tasks = profiled.toSeq.sortBy(_._1)
         .groupBy { case (topic, _) => config.tableFor(topic) }.toSeq.sortBy(_._1)
-        .map { case (table, topics) => () => topics.foreach { case (topic, rows) =>
+        .map { case (table, topics) => () => topics.foreach { case (topic, profiles) =>
           val records = cached.filter(col("topic") === topic)
             .select(col("value"), col("partition"), col("offset"), col("__ipc"))
-          val fmtCounts = rows.map(r => r._2 -> r._3).toMap
-          val jsonProfile = rows.find(!_._2).map(_._4)
-          processTopic(topic, table, records, fmtCounts, jsonProfile, dead)
+          processTopic(topic, table, records, profiles, dead)
         } }
       org.apache.spark.sql.graft.CapturedTasks.runAll(
         spark, spark.sparkContext.defaultParallelism)(tasks)
@@ -534,13 +637,13 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
   private case class BatchProfile(schemaJson: Option[String],
     conflict: Option[String], unparseable: Long)
 
-
-  /** ONE pass over the cached batch computing, per (topic, wire format):
-    * record count, unified JSON schema, first unification conflict and
-    * unparseable count. An RDD `treeAggregate` rather than a Catalyst
-    * aggregate on purpose: a typed-imperative aggregate would kick the
-    * whole stage — including the format sniff and the cache-populating
-    * scan — out of whole-stage codegen, and the per-trigger fixed cost is
+  /** ONE pass over the cached batch computing, per topic and wire format
+    * (keyed by the IPC sniff tag): record count, unified JSON schema,
+    * first unification conflict and unparseable count. An RDD
+    * `treeAggregate` rather than a Catalyst aggregate on purpose: a
+    * typed-imperative aggregate would kick the whole stage — including
+    * the format sniff and the cache-populating scan — out of whole-stage
+    * codegen, and the per-trigger fixed cost is
     * exactly what this fights. Schemas cross the wire once per partition
     * tree level, never data; a conflict freezes the state and comes back
     * as DATA (triage is per record anyway), never as a task failure. A
@@ -548,7 +651,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * per-record path treated it. Avro-configured topics skip inference —
     * their reader schema is config, not inferred. */
   private def profileBatch(
-      cached: DataFrame): Array[(String, Boolean, Long, BatchProfile)] = {
+      cached: DataFrame): Map[String, Map[Boolean, (Long, BatchProfile)]] = {
     val rows = cached.select(col("topic"), col("__ipc"),
       col("value").cast("string").as("__v"))
     // plain aggregate, not treeAggregate: only schema-sized states reach
@@ -584,41 +687,39 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         }
         a
       })
-    agg.toArray.map { case ((topic, ipc), st) =>
-      (topic, ipc, st.n, BatchProfile(
+    agg.toSeq.groupBy(_._1._1).map { case (topic, states) =>
+      topic -> states.map { case ((_, ipc), st) => ipc -> (st.n, BatchProfile(
         if (st.schema.isEmpty) None else Some(st.schema.json),
-        Option(st.conflict), st.unparseable))
+        Option(st.conflict), st.unparseable)) }.toMap
     }
   }
 
-  /** Native codegen'd wire-format sniff (same contract as
+  /** Native codegen'd wire-format sniff of payload `v` (same contract as
     * ArrowIpc.looksLikeIpc): the 0xFFFFFFFF continuation marker in the
     * first 4 bytes + 8-byte minimum. coalesce(false) keeps null payloads
     * on the JSON path, matching the former UDF's null => false. */
-  private def ipcSniff: org.apache.spark.sql.Column =
+  private def ipcSniff(v: Column): Column =
     coalesce(
-      length(col("value")) >= 8 &&
-        substring(col("value"), 1, 4) === lit(Array[Byte](-1, -1, -1, -1)),
+      length(v) >= 8 && substring(v, 1, 4) === lit(Array[Byte](-1, -1, -1, -1)),
       lit(false))
 
   /** Dispatch one topic's records by wire format and land them. Topics with
     * a configured Avro reader schema are schemaful (Connect-converter
     * analog); otherwise records dispatch on the batch-level sniff tag as
-    * Arrow IPC vs JSON (mixed topics supported) — `fmtCounts` came out of
-    * the fan-out job, so the dispatch costs no job here. */
+    * Arrow IPC vs JSON (mixed topics supported) — `profiles` (record count
+    * and profile per sniff tag) came out of the profile job, so the
+    * dispatch costs no job here. */
   private def processTopic(topic: String, table: String, records: DataFrame,
-      fmtCounts: Map[Boolean, Long], jsonProfile: Option[BatchProfile],
-      dead: IngestPipeline.DeadLetters): Unit = {
-    if (config.avroSchemas.contains(topic)) {
-      processAvro(topic, table, records, dead)
-      return
+      profiles: Map[Boolean, (Long, BatchProfile)],
+      dead: IngestPipeline.DeadLetters): Unit =
+    if (config.avroSchemas.contains(topic)) processAvro(topic, table, records, dead)
+    else {
+      if (profiles.contains(true))
+        processArrowIpc(topic, table, records.filter(col("__ipc")), dead)
+      profiles.get(false).foreach { case (n, profile) =>
+        processJson(topic, table, records.filter(!col("__ipc")), n, profile, dead)
+      }
     }
-    if (fmtCounts.getOrElse(true, 0L) > 0)
-      processArrowIpc(topic, table, records.filter(col("__ipc")), dead)
-    if (fmtCounts.getOrElse(false, 0L) > 0)
-      processJson(topic, table, records.filter(!col("__ipc")),
-        fmtCounts(false), jsonProfile, dead)
-  }
 
   // ---- Avro path (S7) ----
 
@@ -848,54 +949,30 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
   }
 
   private def processJson(topic: String, table: String, records: DataFrame,
-      nRecords: Long, profile: Option[BatchProfile],
+      nRecords: Long, profile: BatchProfile,
       dead: IngestPipeline.DeadLetters): Unit = {
     // NO second cache: `records` projects the batch-level cache, so every
     // triage re-read is an in-memory scan already — a per-batch cache here
     // would just pay a second memory-store write per trigger
     val values = records
       .select(col("value").cast("string").as("v"), col("partition"), col("offset"))
-    // the batch's schema came out of the fan-out job ([[BatchProfile]]) —
+    // the batch's schema came out of the profile job ([[BatchProfile]]) —
     // no per-topic inference job. Conflicts arrived as DATA (the
     // aggregator never throws), so only the cached-topic-schema merge can
-    // still throw here; either way the batch routes to per-record triage
-    val inferred: Either[Throwable, Option[StructType]] = profile match {
-      case Some(p) if p.conflict.isDefined =>
-        Left(new SchemaUnify.GraftSchemaException(p.conflict.get))
-      case Some(p) =>
-        try Right(p.schemaJson
-          .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[StructType])
-          .map(s => schemaCache.unifiedFor(topic, Seq(s))))
-        catch { case e: SchemaUnify.GraftSchemaException => Left(e) }
-      case None =>
-        // defensive fallback (a caller outside processBatch): the classic
-        // separate inference pass
-        try Right(SchemaInference.inferSchemaDistributed(values.select("v").as[String])
-          .map(s => schemaCache.unifiedFor(topic, Seq(s))))
-        catch {
-          case e: org.apache.spark.SparkException
-              if causeChainHasSchemaConflict(e) => Left(e)
-          case e: SchemaUnify.GraftSchemaException => Left(e)
-        }
-    }
+    // still throw here; either way (Left) the batch routes to per-record
+    // triage
+    val inferred: Either[String, Option[StructType]] =
+      try profile.conflict.toLeft(profile.schemaJson.map(j => schemaCache.unifiedFor(
+        topic, Seq(DataType.fromJson(j).asInstanceOf[StructType]))))
+      catch { case e: SchemaUnify.GraftSchemaException => Left(e.getMessage) }
     inferred match {
       case Right(None) =>
         // NO record in the batch yielded a schema — every one is
         // unparseable. They must not vanish (reference: every record is
         // either landed or reported): DLQ them all, or fail loudly.
-        if (nRecords > 0) config.dlqTable match {
-          case Some(_) => dead.park(table,
-            values.select(col("v"), col("partition"), col("offset")),
-            "unparseable JSON")
-          case None =>
-            val samples = values.orderBy(col("partition"), col("offset"))
-              .select(col("partition"), col("offset")).limit(5).collect()
-              .map(r => s"${r.getInt(0)}@${r.getLong(1)}").mkString(", ")
-            throw new SchemaUnify.GraftSchemaException(
-              s"No record in topic '$topic' batch parses as JSON and no " +
-                s"DLQ configured; sample records (partition@offset): $samples")
-        }
+        if (config.dlqTable.isEmpty)
+          failNoDlq(values, s"No record in topic '$topic' batch parses as JSON")
+        dead.park(table, values, "unparseable JSON")
       case Right(Some(unified)) =>
         // the batch unified INTERNALLY and with the topic cache, but can
         // still conflict with the TABLE schema (cross-topic routing, a
@@ -904,9 +981,9 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         try landJson(table, values, unified, dead, nRecords)
         catch {
           case e: graft.catalog.LandedTypes.SchemaEvolutionException =>
-            triageEvolution(topic, table, values, e, dead)
+            triageEvolution(table, values, e, dead)
         }
-      case Left(_) => triageJson(topic, table, values, dead)
+      case Left(_) => triage(IngestPipeline.JsonWire, topic, table, values, dead)
     }
   }
 
@@ -917,9 +994,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * incompatible records park with the evolution reason, the rest land
     * under their own unified schema (which now evolves cleanly by
     * construction). */
-  private def triageEvolution(topic: String, table: String,
-      values: DataFrame, cause: Exception,
-      dead: IngestPipeline.DeadLetters): Unit = {
+  private def triageEvolution(table: String, values: DataFrame,
+      cause: Exception, dead: IngestPipeline.DeadLetters): Unit = {
     if (config.dlqTable.isEmpty) throw cause
     val tableSchema = StructType(lake.readMeta(table).schema
       .filterNot(_.name == lake.InsertedAtCol).toSeq)
@@ -938,15 +1014,10 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
           }
       }
     }
-    val tagged = values.withColumn("__err", errorDetail(col("v"))).cache()
-    dead.hold(tagged)
-    dead.park(table, tagged.filter(col("__err").isNotNull)
-      .select(col("v"), col("partition"), col("offset"), col("__err").as("error")))
-    val good = tagged.filter(col("__err").isNull)
-      .select(col("v"), col("partition"), col("offset"))
+    val good = dead.split(table, values, errorDetail(col("v")))
     if (!good.isEmpty) {
       val unified =
-        try SchemaInference.inferSchemaDistributed(good.select("v").as[String])
+        try IngestPipeline.JsonWire.goodSchemas(good).headOption
         catch {
           case e: Exception =>
             dead.park(table, good,
@@ -1015,99 +1086,65 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         .select(col("v"), col("partition"), col("offset")), "unparseable JSON")
   }
 
-  /** Reference E2 per-record DLQ triage: on a batch-level schema conflict,
-    * each record is retried solo against a deterministic target schema (the
-    * cached topic schema, else the schema of the lowest-offset record);
-    * records whose schema cannot unify go to the DLQ — with a per-record
-    * error naming the offending field(s), both types, and the record's own
-    * sample value (reference ArrowSchemaMerge.java:76-87,
-    * SinkRecordToArrowConverterTest.java:518-537) — the rest are re-batched
-    * and landed. With no DLQ configured the batch fails with
-    * `partition@offset` samples (DucklakeSinkTask.java:643-667). */
-  private def triageJson(topic: String, table: String, values: DataFrame,
-      dead: IngestPipeline.DeadLetters): Unit = {
-    if (config.dlqTable.isEmpty) {
-      val samples = values.orderBy(col("partition"), col("offset"))
-        .select(col("partition"), col("offset")).limit(5).collect()
-        .map(r => s"${r.getInt(0)}@${r.getLong(1)}").mkString(", ")
-      throw new SchemaUnify.GraftSchemaException(
-        s"Schema conflict in topic '$topic' and no DLQ configured; " +
-          s"sample records (partition@offset): $samples")
-    }
-    val seed: StructType = schemaCache.get(topic).getOrElse {
-      val first = values.orderBy(col("partition"), col("offset"))
-        .select("v").as[String].head()
-      SchemaInference.inferFromJson(first).getOrElse(StructType(Nil))
-    }
+  /** Reference E2 per-record DLQ triage, one algorithm for every wire
+    * format: on a batch-level schema conflict (or an undecodable Arrow
+    * payload), each record is retried solo against a deterministic seed
+    * schema (the cached topic schema, else the lowest-offset record's);
+    * records that cannot unify with it go to the DLQ with a per-record
+    * error ([[IngestPipeline.recordError]]), the rest are re-batched and
+    * landed. With no DLQ configured the batch fails instead. */
+  private def triage[T: TypeTag](wire: IngestPipeline.Wire[T], topic: String,
+      table: String, values: DataFrame, dead: IngestPipeline.DeadLetters): Unit = {
+    if (config.dlqTable.isEmpty) failNoDlq(values, s"${wire.conflict} in topic '$topic'")
+    val seed = schemaCache.get(topic).getOrElse(firstSchema(wire, values))
     val holder = new IngestPipeline.SeedHolder(seed.json)
-    // null = compatible; else the enriched per-record error message
-    val errorDetail = udf { (v: String) =>
-      SchemaInference.inferFromJson(v) match {
-        case None => null: String
-        case Some(s) =>
-          val seedT = holder.schema
-          try { SchemaUnify.unify(Seq(seedT, s)); null: String }
-          catch {
-            case outer: Exception =>
-              val node =
-                try holder.mapper.readTree(v)
-                catch { case _: Exception => null }
-              val perField = s.fields.toSeq.flatMap { f =>
-                seedT.fields.find(_.name == f.name).flatMap { sf =>
-                  try { SchemaUnify.unifyTypes(f.name, Seq(sf.dataType, f.dataType)); None }
-                  catch {
-                    case _: Exception =>
-                      val sample = Option(node).flatMap(n => Option(n.get(f.name)))
-                        .map(_.toString.take(64)).getOrElse("?")
-                      Some(s"field '${f.name}': topic type ${sf.dataType.simpleString} " +
-                        s"vs record type ${f.dataType.simpleString} (sample: $sample)")
-                  }
-                }
-              }
-              "Cannot unify incompatible types with topic schema: " +
-                (if (perField.isEmpty) outer.getMessage else perField.mkString("; "))
-          }
-      }
-    }
-    val tagged = values.withColumn("__err", errorDetail(col("v"))).cache()
-    dead.hold(tagged)
-    dead.park(table, tagged.filter(col("__err").isNotNull)
-      .select(col("v"), col("partition"), col("offset"), col("__err").as("error")))
-    val good = tagged.filter(col("__err").isNull)
-      .select(col("v"), col("partition"), col("offset"))
+    val good = dead.split(table, values,
+      udf((v: T) => IngestPipeline.recordError(wire, holder.schema, v)).apply(col("v")),
+      wire.toDlq)
     if (!good.isEmpty) {
       // "good" records each unify with the seed, but may still conflict
       // pairwise (two records adding the same NEW field with different
       // types). In that case land under the seed schema alone — every
-      // good record parses under it; the conflicting new fields are
+      // good record conforms to it; the conflicting new fields are
       // dropped for this batch rather than poisoning the stream. An
-      // EMPTY seed (first record was uninferrable) can't play that
-      // role: re-seed from the lowest-offset good record so the
-      // survivors still land, and as a last resort DLQ them — a triage
-      // pass must never silently drop records.
+      // EMPTY seed (the lowest-offset record had no schema) can't play
+      // that role: re-seed from the lowest-offset good record that has
+      // one, and as a last resort DLQ the survivors — a triage pass must
+      // never silently drop records.
       val unified =
-        try SchemaInference.inferSchemaDistributed(good.select("v").as[String])
-          .map(s => schemaCache.unifiedFor(topic, Seq(s)))
-          .getOrElse(seed)
-        catch {
+        try {
+          val schemas = wire.goodSchemas(good)
+          if (schemas.isEmpty) seed else schemaCache.unifiedFor(topic, schemas)
+        } catch {
           case e: Throwable if causeChainHasSchemaConflict(e) =>
             if (seed.nonEmpty) seed
-            else {
-              val inferrable = udf { (v: String) =>
-                SchemaInference.inferFromJson(v).isDefined
-              }
-              good.filter(inferrable(col("v")))
-                .orderBy(col("partition"), col("offset"))
-                .select("v").as[String].take(1).headOption
-                .flatMap(SchemaInference.inferFromJson)
-                .getOrElse(StructType(Nil))
-            }
+            else firstSchema(wire, good.filter(
+              udf((v: T) => wire.schemaOf(v).exists(_.isDefined)).apply(col("v"))))
         }
-      if (unified.nonEmpty) landJson(table, good, unified, dead)
-      else dead.park(table, good,
-        "pairwise schema conflict and no resolvable seed schema for topic '" +
-          topic + "'")
+      if (unified.nonEmpty) wire.land(this, table, good, unified, dead)
+      else dead.park(table,
+        good.select(wire.toDlq(col("v")).as("v"), col("partition"), col("offset")),
+        s"pairwise schema conflict and no resolvable seed schema for topic '$topic'")
     }
+  }
+
+  /** Schema of the lowest-offset record in `values`; empty when that
+    * record has none. */
+  private def firstSchema[T](wire: IngestPipeline.Wire[T],
+      values: DataFrame): StructType =
+    values.orderBy(col("partition"), col("offset")).select("v").take(1).headOption
+      .flatMap(r => wire.schemaOf(r.getAs[T](0)).toOption.flatten)
+      .getOrElse(StructType(Nil))
+
+  /** Fail a batch whose bad records have no DLQ to go to
+    * (DucklakeSinkTask.java:643-667): `what`, then up to five
+    * `partition@offset` samples of `records`. */
+  private def failNoDlq(records: DataFrame, what: String): Nothing = {
+    val samples = records.orderBy(col("partition"), col("offset"))
+      .select(col("partition"), col("offset")).limit(5).collect()
+      .map(r => s"${r.getInt(0)}@${r.getLong(1)}").mkString(", ")
+    throw new SchemaUnify.GraftSchemaException(
+      s"$what and no DLQ configured; sample records (partition@offset): $samples")
   }
 
   /** CHECK-constraint gate (the reference's per-record triage shape, E2):
@@ -1159,32 +1196,33 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
 
   private def processArrowIpc(topic: String, table: String, records: DataFrame,
       dead: IngestPipeline.DeadLetters): Unit = {
+    val values = records.select(col("value").as("v"), col("partition"), col("offset"))
     // Pass 1: unify record schemas (schema-only header decode). A schema
     // conflict OR an undecodable record routes the batch to per-record
     // triage, same as the JSON path — a single corrupt payload must not
     // become a poison pill that fails the stream on every retry.
-    val tried = records.select(col("value")).as[Array[Byte]].rdd
+    val tried = values.select(col("v")).as[Array[Byte]].rdd
       .map(b =>
         try Right(ArrowIpc.decodeSchema(b))
         catch { case e: Exception => Left(e.getClass.getName) })
       .distinct().collect()
-    val schemas = tried.collect { case Right(s) => s }
-    if (tried.isEmpty) return
-    if (tried.exists(_.isLeft)) { triageArrow(topic, table, records, dead); return }
     val unified =
-      try Some(schemaCache.unifiedFor(topic, schemas.toSeq))
-      catch {
-        case e: Throwable if causeChainHasSchemaConflict(e) =>
-          triageArrow(topic, table, records, dead); None
-      }
-    unified.foreach(u => landArrow(table, records, u, dead))
+      if (tried.exists(_.isLeft)) None
+      else
+        try Some(schemaCache.unifiedFor(topic, tried.collect { case Right(s) => s }.toSeq))
+        catch { case e: Throwable if causeChainHasSchemaConflict(e) => None }
+    unified match {
+      case Some(u) => landArrow(table, values, u, dead)
+      case None => triage(IngestPipeline.ArrowWire, topic, table, values, dead)
+    }
   }
 
-  /** Pass 2: decode + conform rows to the unified schema, land. */
-  private def landArrow(table: String, records: DataFrame, unified: StructType,
+  /** Pass 2: decode + conform rows (payload `v`) to the unified schema,
+    * land. */
+  private def landArrow(table: String, values: DataFrame, unified: StructType,
       dead: IngestPipeline.DeadLetters): Unit = {
-    val bytesRdd: RDD[(Array[Byte], Long)] = records
-      .select(col("value"), col("offset")).as[(Array[Byte], Long)].rdd
+    val bytesRdd: RDD[(Array[Byte], Long)] = values
+      .select(col("v"), col("offset")).as[(Array[Byte], Long)].rdd
     val unifiedJson = unified.json
     val rows: RDD[Row] = bytesRdd.mapPartitions { it =>
       val target = DataType.fromJson(unifiedJson).asInstanceOf[StructType]
@@ -1197,92 +1235,6 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     }
     val withOffset = StructType(unified.fields.toSeq :+ StructField("__offset", LongType))
     writeToLake(table, spark.createDataFrame(rows, withOffset), dead)
-  }
-
-  /** Reference E2 triage for the Arrow path: each record's schema is
-    * retried solo against the deterministic seed (cached topic schema,
-    * else the lowest-offset record's); incompatible or undecodable records
-    * land in the DLQ with enriched per-field errors (payload base64'd into
-    * the DLQ value column), the rest re-batch and land. */
-  private def triageArrow(topic: String, table: String, records: DataFrame,
-      dead: IngestPipeline.DeadLetters): Unit = {
-    if (config.dlqTable.isEmpty) {
-      val samples = records.orderBy(col("partition"), col("offset"))
-        .select(col("partition"), col("offset")).limit(5).collect()
-        .map(r => s"${r.getInt(0)}@${r.getLong(1)}").mkString(", ")
-      throw new SchemaUnify.GraftSchemaException(
-        s"Arrow schema conflict in topic '$topic' and no DLQ configured; " +
-          s"sample records (partition@offset): $samples")
-    }
-    val seed: StructType = schemaCache.get(topic).getOrElse {
-      val first = records.orderBy(col("partition"), col("offset"))
-        .select("value").as[Array[Byte]].head()
-      try ArrowIpc.decodeSchema(first) catch { case _: Exception => StructType(Nil) }
-    }
-    val holder = new IngestPipeline.SeedHolder(seed.json)
-    val errorDetail = udf { (v: Array[Byte]) =>
-      try {
-        val s = ArrowIpc.decodeSchema(v)
-        val seedT = holder.schema
-        try { SchemaUnify.unify(Seq(seedT, s)); null: String }
-        catch {
-          case outer: Exception =>
-            val sampleRow =
-              try ArrowIpc.decode(v)._2.headOption catch { case _: Exception => None }
-            val perField = s.fields.toSeq.flatMap { f =>
-              seedT.fields.find(_.name == f.name).flatMap { sf =>
-                try { SchemaUnify.unifyTypes(f.name, Seq(sf.dataType, f.dataType)); None }
-                catch {
-                  case _: Exception =>
-                    val sample = sampleRow
-                      .map(r => String.valueOf(r.get(s.fieldIndex(f.name))).take(64))
-                      .getOrElse("?")
-                    Some(s"field '${f.name}': topic type ${sf.dataType.simpleString} " +
-                      s"vs record type ${f.dataType.simpleString} (sample: $sample)")
-                }
-              }
-            }
-            "Cannot unify incompatible types with topic schema: " +
-              (if (perField.isEmpty) outer.getMessage else perField.mkString("; "))
-        }
-      } catch {
-        case e: Exception => "undecodable Arrow IPC: " +
-          Option(e.getMessage).getOrElse(e.getClass.getSimpleName).take(120)
-      }
-    }
-    val tagged = records.withColumn("__err", errorDetail(col("value"))).cache()
-    dead.hold(tagged)
-    dead.park(table, tagged.filter(col("__err").isNotNull)
-      .select(base64(col("value")).as("v"), col("partition"), col("offset"),
-        col("__err").as("error")))
-    val good = tagged.filter(col("__err").isNull)
-    if (!good.isEmpty) {
-      val goodSchemas = good.select(col("value")).as[Array[Byte]].rdd
-        .map(ArrowIpc.decodeSchema).distinct().collect()
-      // good records each unify with the seed, but can conflict pairwise
-      // (same NEW field, different types) — land under the seed alone
-      // then. An EMPTY seed (first record undecodable) can't play that
-      // role: re-seed deterministically from the lowest-offset good
-      // record, and as a last resort DLQ the survivors — a triage pass
-      // must never silently drop records.
-      val unified =
-        try schemaCache.unifiedFor(topic, goodSchemas.toSeq)
-        catch {
-          case e: Throwable if causeChainHasSchemaConflict(e) =>
-            if (seed.nonEmpty) seed
-            else {
-              val firstGood = good.orderBy(col("partition"), col("offset"))
-                .select("value").as[Array[Byte]].head()
-              try ArrowIpc.decodeSchema(firstGood)
-              catch { case _: Exception => StructType(Nil) }
-            }
-        }
-      if (unified.nonEmpty) landArrow(table, good, unified, dead)
-      else dead.park(table,
-        good.select(base64(col("value")).as("v"), col("partition"), col("offset")),
-        "pairwise schema conflict and no resolvable seed schema for topic '" +
-          topic + "'")
-    }
   }
 
   // ---- streaming assembly ----
@@ -1341,15 +1293,21 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     val all = lake.readVersion(dlq, pre)
     val mine = all.filter(col("target_table") === parkedAs).cache()
     try {
-      val n = mine.count()
+      // the parked payloads back on the wire. Arrow triage parked its
+      // payload base64'd: a value that decodes as base64 to an IPC
+      // payload is one (JSON text cannot start with '/', so never decodes
+      // to the 0xFFFFFFFF marker); anything else is JSON text. The decode
+      // is a `try_`: the plan may evaluate it on every row
+      val arrow = IngestPipeline.ArrowWire.fromDlq(col("value"))
+      val batch = mine.select(lit(topic).as("topic"), col("partition"), col("offset"),
+        when(ipcSniff(arrow), arrow)
+          .otherwise(IngestPipeline.JsonWire.fromDlq(col("value"))).as("value"))
+      val tagged = batch.withColumn("__ipc", ipcSniff(col("value")))
+      // the replay is a trigger over the parked rows: ONE profile job
+      // yields its record count, wire-format dispatch and JSON schema
+      val profiles = profileBatch(tagged).getOrElse(topic, Map.empty)
+      val n = profiles.valuesIterator.map(_._1).sum
       if (n == 0) return (0L, 0L)
-      // replay is not a hot path: one extra count job for the format
-      // dispatch is fine here
-      val tagged = mine.select(
-        col("value").cast("binary").as("value"),
-        col("partition"), col("offset")).withColumn("__ipc", ipcSniff)
-      val fmtCounts = tagged.groupBy(col("__ipc")).count().collect()
-        .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
       // replays must not land under the TRIGGER watermark: the batch id
       // that parked these rows DID commit its clean rows, so
       // appendIdempotent at that id silently no-ops the whole replay.
@@ -1359,12 +1317,10 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       // so a replay that crashed between landing and the DLQ rewrite
       // no-ops on re-run rather than duplicating.
       IngestPipeline.replayTxn.set(java.lang.Long.valueOf(pre))
-      // jsonProfile = None: the replay path takes processJson's fallback
-      // inference — replay is not a hot path. Fresh failures land before
-      // the post-replay version is read below
+      // fresh failures land before the post-replay version is read below
       val dead = new IngestPipeline.DeadLetters
       try {
-        processTopic(topic, config.tableFor(topic), tagged, fmtCounts, None, dead)
+        processTopic(topic, config.tableFor(topic), tagged, profiles, dead)
         landDeadLetters(dead)
       } finally {
         IngestPipeline.replayTxn.remove()

@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.functions.{ShingleExpression, SketchExpressions, TextExpressions, VectorFunctions}
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -45,29 +45,57 @@ final class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private def fn(name: String, usage: String,
+  /** `owner` is the module that defines the expression; it names the
+    * function's class in `DESCRIBE FUNCTION` and selects it in
+    * [[register]]. */
+  private def fn(owner: AnyRef, name: String, usage: String,
       builder: Seq[Expression] => Expression) =
     (FunctionIdentifier(name),
-      new ExpressionInfo("graft", null, name, usage, ""),
+      new ExpressionInfo(owner.getClass.getName, null, name, usage, ""),
       builder)
 
   /** (identifier, info, builder) triples for the engine's native
-    * functions — shared by the extension injection; sessions without the
-    * extensions can still use the per-session `register()` helpers. */
+    * functions — the one list, injected by the extensions and registered
+    * per session by [[register]]. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
-    fn("graft_cosine_similarity",
+    fn(VectorFunctions, "graft_cosine_similarity",
       "cosine similarity of two float/double array columns",
       exprs => VectorFunctions.CosineSimilarity(exprs(0), exprs(1))),
-    fn("graft_minhash", "64-hash MinHash signature of a string array",
+    fn(VectorFunctions, "graft_dot_product",
+      "dot product of two float/double array columns",
+      exprs => VectorFunctions.DotProduct(exprs(0), exprs(1))),
+    fn(SketchExpressions, "graft_minhash", "64-hash MinHash signature of a string array",
       exprs => SketchExpressions.MinHashSignature(exprs.head, 64)),
-    fn("graft_simhash", "64-bit SimHash of a token array",
+    fn(SketchExpressions, "graft_simhash", "64-bit SimHash of a token array",
       exprs => SketchExpressions.SimHash64(exprs.head)),
-    fn("graft_rolling_hash", "polynomial rolling-hash fingerprint of a string",
-      exprs => TextExpressions.RollingHash(exprs.head))) ++
-    (2 to 5).map(k => fn(s"graft_shingles_$k", s"distinct word $k-shingles",
+    fn(TextExpressions, "graft_rolling_hash",
+      "polynomial rolling-hash fingerprint of a string",
+      exprs => TextExpressions.RollingHash(exprs.head)),
+    fn(TextExpressions, "graft_count_in",
+      "count of array elements contained in a constant string array",
+      exprs => TextExpressions.CountInSet(exprs(0), exprs(1))),
+    fn(TextExpressions, "graft_nfc", "Unicode NFC normalization of a string",
+      exprs => TextExpressions.NormalizeNfc(exprs.head)),
+    fn(TextExpressions, "graft_nfkc", "Unicode NFKC normalization of a string",
+      exprs => TextExpressions.NormalizeNfkc(exprs.head)),
+    fn(TextExpressions, "graft_casefold", "full Unicode case folding of a string",
+      exprs => TextExpressions.CaseFold(exprs.head))) ++
+    (2 to 5).map(k => fn(ShingleExpression, s"graft_shingles_$k",
+      s"distinct word $k-shingles",
       exprs => ShingleExpression.WordShingles(exprs.head, k))) ++
-    (2 to 5).map(k => fn(s"graft_topgram_$k",
+    (2 to 5).map(k => fn(ShingleExpression, s"graft_topgram_$k",
       s"occurrence count of the most frequent word $k-gram",
       exprs => ShingleExpression.TopShingleCount(exprs.head, k)))
+
+  /** Register the functions of `owners` (every function when empty) on
+    * `spark`'s session registry — for sessions built without the
+    * extensions. Idempotent. */
+  def register(spark: SparkSession, owners: AnyRef*): Unit = {
+    val classes = owners.map(_.getClass.getName).toSet
+    functions.foreach { case (id, info, builder) =>
+      if (classes.isEmpty || classes(info.getClassName))
+        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
+  }
 }

@@ -35,4 +35,20 @@ class GraftSessionSpec extends AnyFunSuite {
     gs.refresh()
     assert(gs.sql("SELECT count(*) FROM extra").head().getLong(0) === 1L)
   }
+
+  test("refresh reports a table with a corrupted manifest and registers the others") {
+    catalog.GraftLake.invalidateCaches()
+    val wh = Files.createTempDirectory("graft-session").toString
+    val lake = new catalog.GraftLake(spark, wh)
+    lake.write("fine", Seq((1, "a")).toDF("id", "v"))
+    lake.write("broken", Seq((2, "b")).toDF("id", "v"))
+    val v = lake.versions("broken").last
+    val mf = new java.io.File(s"$wh/broken/_versions/v$v.json")
+    Files.write(mf.toPath, "{not json".getBytes("UTF-8"))
+    new java.io.File(mf.getParent, s".v$v.json.crc").delete()
+    catalog.GraftLake.invalidateCaches()
+    val gs = new GraftSession(spark, new catalog.GraftLake(spark, wh))
+    assert(gs.refresh() === Seq("broken"))
+    assert(gs.sql("SELECT count(*) FROM fine").head().getLong(0) === 1L)
+  }
 }

@@ -87,6 +87,29 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     assert(p.lake.read("barrow").count() === 5)
   }
 
+  test("a JSON-only DLQ replay runs its profile instead of a dispatch job and a fallback inference") {
+    val wh = Files.createTempDirectory("graft-budget").toString
+    graft.catalog.GraftLake.invalidateCaches()
+    // misrouted: rj2 lands in rj1's table, where its records conflict
+    val p1 = new IngestPipeline(spark, IngestConfig(wh, topic2table = Map("rj2" -> "rj1")))
+    p1.processBatch(batchOf((1 to 3).map(i => "rj1" -> json(s"""{"id":$i,"a":$i}""")): _*), 0)
+    p1.processBatch(batchOf((1 to 3).map(i =>
+      "rj2" -> json(s"""{"id":$i,"a":"2024-03-0${i}T12:00:00Z"}""")): _*), 1)
+    assert(p1.lake.read("_dlq").count() === 3)
+    val p2 = new IngestPipeline(spark, IngestConfig(wh, topic2table = Map("rj2" -> "rj2_t")))
+    var result = (0L, 0L)
+    val groups = jobGroupsOf("budget-replay") {
+      result = p2.replayDlq("rj2", fromTable = Some("rj1"))
+    }
+    info(s"${groups.size} jobs")
+    assert(result === ((3L, 0L)))
+    assert(p2.lake.read("rj2_t").count() === 3)
+    assert(groups.forall(_ == "budget-replay"), groups)
+    // 7 jobs; a replay that counted, dispatched on a separate groupBy
+    // count and inferred its JSON schema in a second pass ran 12
+    assert(groups.size <= 7, s"${groups.size} jobs for one replay (budget 7)")
+  }
+
   test("dedup admission jobs carry the flush's job group, not a stale one") {
     val p = pipeline(wh => IngestConfig(wh,
       dedup = Map("bd" -> DedupConfig("doc_id", "text"))))

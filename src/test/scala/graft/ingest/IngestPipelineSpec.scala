@@ -172,6 +172,62 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(r.getLong(2) === 1L)
   }
 
+  /** (id: int64, x: `t`) Arrow IPC payload of one row. */
+  private def ipcIdX(id: Long, t: DataType, x: Any): Array[Byte] =
+    ArrowIpc.encode(StructType(Seq(StructField("id", LongType), StructField("x", t))),
+      Seq(Row(id, x)))
+
+  /** The IPC continuation marker followed by a body no decoder accepts. */
+  private val undecodableIpc = Array[Byte](-1, -1, -1, -1) ++ "garbage!".getBytes("UTF-8")
+
+  private def arrowBatch(topic: String, payloads: Array[Byte]*) =
+    payloads.zipWithIndex.map { case (b, i) => (topic, 0, i.toLong, b) }
+      .toDF("topic", "partition", "offset", "value")
+
+  test("Arrow schema conflict with no DLQ fails the batch with partition@offset samples") {
+    graft.catalog.GraftLake.invalidateCaches()
+    val p = new IngestPipeline(spark, IngestConfig(
+      warehouse = Files.createTempDirectory("graft-ingest").toString,
+      dlqTable = None))
+    val e = intercept[Exception] {
+      p.processBatch(arrowBatch("anc",
+        ipcIdX(1L, LongType, 5L), ipcIdX(2L, StringType, "oops")), 0)
+    }
+    assert(e.getMessage.contains("Arrow schema conflict in topic 'anc' and no DLQ configured"),
+      s"message was: ${e.getMessage}")
+    assert(e.getMessage.contains("sample records (partition@offset): 0@0, 0@1"))
+  }
+
+  test("undecodable Arrow payload parks with its error; decodable rows land") {
+    val p = newPipeline()
+    p.processBatch(arrowBatch("aun",
+      ipcIdX(1L, LongType, 5L), undecodableIpc, ipcIdX(3L, LongType, 7L)), 0)
+    assert(p.lake.read("aun").select("id").collect().map(_.getLong(0)).toSet
+      === Set(1L, 3L))
+    val r = p.lake.read("_dlq").select("error", "value", "offset").collect()
+    assert(r.length === 1)
+    assert(r(0).getString(0).startsWith("undecodable Arrow IPC"), r(0).getString(0))
+    assert(java.util.Base64.getMimeDecoder.decode(r(0).getString(1))
+      .sameElements(undecodableIpc))
+    assert(r(0).getLong(2) === 1L)
+  }
+
+  test("Arrow empty-seed triage: pairwise-conflicting survivors re-seed or park, never vanish") {
+    val p = newPipeline()
+    // the lowest-offset record is undecodable (empty seed); the others
+    // each fit the empty seed but conflict with one another
+    p.processBatch(arrowBatch("aes",
+      undecodableIpc, ipcIdX(1L, StringType, "s"), ipcIdX(2L, LongType, 7L)), 0)
+    val landed = if (p.lake.tableExists("aes")) p.lake.read("aes").count() else 0L
+    val errors = p.lake.read("_dlq").select("error").collect().map(_.getString(0))
+    assert(landed + errors.length === 3,
+      s"all 3 records must be accounted for (landed=$landed dlq=${errors.length})")
+    assert(errors.exists(_.startsWith("undecodable Arrow IPC")))
+    // re-seeded from the lowest-offset decodable record (x: string), the
+    // long-typed survivor conforms to it and lands too
+    assert(landed === 2, s"re-seeded records should land (landed=$landed)")
+  }
+
   test("mixed-format topic: Arrow IPC and JSON records both land") {
     val p = newPipeline()
     val ipcBytes = makeIpc(Seq((10L, "ivan"), (11L, "irma")))
@@ -466,6 +522,30 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(p2.lake.read("rp2_t").count() === 1, "replayed record lands")
     assert(p2.lake.read("_dlq").count() === 0, "replayed original leaves the DLQ")
     assert(p2.lake.read("rp1").count() === 1, "other table untouched")
+  }
+
+  test("DLQ replay: misrouted Arrow records land after a routing fix") {
+    graft.catalog.GraftLake.invalidateCaches()
+    val wh = Files.createTempDirectory("graft-replay").toString
+    // misconfiguration: rpa2 routed into rpa1's table; its second record
+    // conflicts with the first and parks base64-encoded
+    val p1 = new IngestPipeline(spark, IngestConfig(warehouse = wh,
+      topic2table = Map("rpa2" -> "rpa1")))
+    p1.processBatch(arrowBatch("rpa1", ipcIdX(1L, StringType, "a")), 0)
+    p1.processBatch(arrowBatch("rpa2",
+      ipcIdX(2L, StringType, "b"), ipcIdX(3L, LongType, 9L)), 1)
+    assert(p1.lake.read("rpa1").count() === 2)
+    assert(p1.lake.read("_dlq").count() === 1)
+    // the fix: rpa2 routes to its own table; replay the parked record
+    val p2 = new IngestPipeline(spark, IngestConfig(warehouse = wh,
+      topic2table = Map("rpa2" -> "rpa2_t")))
+    val (replayed, still) = p2.replayDlq("rpa2", fromTable = Some("rpa1"))
+    assert((replayed, still) === ((1L, 0L)))
+    val landed = p2.lake.read("rpa2_t").select("id", "x").collect()
+    assert(landed.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((3L, 9L)),
+      "the replayed Arrow record lands decoded")
+    assert(p2.lake.read("_dlq").count() === 0, "replayed original leaves the DLQ")
+    assert(p2.lake.read("rpa1").count() === 2, "other table untouched")
   }
 
   test("DLQ replay: still-failing rows stay parked; other tables' rows survive") {

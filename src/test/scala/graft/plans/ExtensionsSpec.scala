@@ -19,4 +19,17 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(r.getInt(2) === 2)
     assert(r.getInt(4) === 64)
   }
+
+  test("every engine function resolves in an extensions-only session") {
+    val fresh = SparkTestSession.spark.newSession()
+    val r = fresh.sql(
+      """SELECT graft_dot_product(array(1.0D), array(2.0D)) AS d,
+        |       graft_count_in(array('a', 'b', 'a'), array('a')) AS n,
+        |       graft_nfkc(graft_nfc('ﬁ')) AS fi,
+        |       graft_casefold('ABC') AS f""".stripMargin).head()
+    assert(r.getDouble(0) === 2.0)
+    assert(r.getInt(1) === 2)
+    assert(r.getString(2) === "fi")
+    assert(r.getString(3) === "abc")
+  }
 }
