@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.ingest.{IngestConfig, IngestPipeline}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable end-to-end assembly (the reference's EndToEndIntegrationTest
@@ -15,14 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object GraftDemo {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.hadoop.FastLocalFileSystem.tune(SparkSession.builder())
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.localBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val warehouse = Files.createTempDirectory("graft-demo-wh").toString

@@ -149,27 +149,4 @@ object PerfHarness {
     once() // discarded warm-up
     median((0 until iterations).map(_ => once()))
   }
-
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.hadoop.FastLocalFileSystem.tune(SparkSession.builder())
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val results = run(spark)
-    println("scenario,pct,iter,merge_ms,insert_ms")
-    results.foreach(r =>
-      println(f"conflict,${r.conflictPct},${r.iter},${r.mergeMs}%.1f,${r.insertMs}%.1f"))
-    results.groupBy(_.conflictPct).toSeq.sortBy(_._1).foreach { case (pct, rs) =>
-      println(f"median,$pct,-,${median(rs.map(_.mergeMs))}%.1f,${median(rs.map(_.insertMs))}%.1f")
-    }
-    val (am, ai) = amortized(spark)
-    println(f"amortized_1m_per10k,10,-,$am%.1f,$ai%.1f")
-    spark.stop()
-  }
 }

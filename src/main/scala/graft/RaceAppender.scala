@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Child-process half of the scale bench's MULTI-WRITER race
@@ -50,13 +49,7 @@ object RaceAppender {
     val writerId = args(2)
     val nBatches = args(3).toInt
     val rowsPerBatch = args(4).toLong
-    val spark = graft.hadoop.FastLocalFileSystem.tune(SparkSession.builder())
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.localBuilder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val lake = new graft.catalog.GraftLake(spark, wh)
     var appended = 0L

@@ -79,14 +79,8 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val smallDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val bigDir = if (args.length > 1) args(1) else "/tmp/graft-sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.hadoop.FastLocalFileSystem.tune(SparkSession.builder())
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.localBuilder()
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

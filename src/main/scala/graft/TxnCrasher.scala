@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Crash-injection helper for the cross-process transaction spec: starts
   * a DURABLE multi-table transaction against an existing warehouse,
   * commits to member `ta`, then HALTS the JVM before touching `tb` —
@@ -13,12 +11,7 @@ import org.apache.spark.sql.SparkSession
 object TxnCrasher {
   def main(args: Array[String]): Unit = {
     val wh = args(0)
-    val spark = graft.hadoop.FastLocalFileSystem.tune(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.localBuilder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val lake = new graft.catalog.GraftLake(spark, wh)
     lake.transactDurable(Seq("ta", "tb")) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Suspension-injection helper for the cross-process HEARTBEAT spec: a
   * coordinator that is ALIVE but stops renewing its lease — it starts a
   * durable transaction with heartbeats disabled, lands a partial commit
@@ -15,11 +13,7 @@ import org.apache.spark.sql.SparkSession
 object TxnSuspender {
   def main(args: Array[String]): Unit = {
     val wh = args(0)
-    val spark = graft.hadoop.FastLocalFileSystem.tune(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.localBuilder(4)
       .config("spark.graft.txn.heartbeatMs", "3600000") // never beats
       // journal as a FOREIGN host: same-host live coordinators are
       // protected by pid liveness (a GC-paused local driver must not be

@@ -14,7 +14,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * SHELLING OUT to `chmod` whenever the native hadoop library is absent
   * (`RawLocalFileSystem.setPermission` → `Shell.execCommand`): one fork
   * per `mkdirs` level and one per created file. Measured on this sandbox
-  * (FsFloor): `fs.mkdirs` 10–13 ms and `fs.create` 5–12 ms versus 0.5 /
+  * (`Perf fsfloor`): `fs.mkdirs` 10–13 ms and `fs.create` 5–12 ms versus 0.5 /
   * 0.1 ms for the equivalent `java.nio` calls — a ~25× tax on every
   * metadata write, version commit, staged file and parquet output. A
   * full bench pays it thousands of times (createTable alone: 132 calls ×

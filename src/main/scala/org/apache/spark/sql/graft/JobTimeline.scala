@@ -1,0 +1,63 @@
+package org.apache.spark.sql.graft
+
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.util.CallSite
+
+/** The Spark jobs a piece of driver work started, as the listener bus
+  * reported them: the one job trace that the dev tool `graft.perf.Perf`
+  * and the job-budget specs read. Bridged here because draining the bus
+  * (`listenerBus`) is `private[spark]`. */
+object JobTimeline {
+
+  /** One job: id, job group, task count per stage, start and end (epoch
+    * ms; no end for a job still running when the work returned) and the
+    * engine frame that submitted it. */
+  final case class Job(id: Int, group: Option[String], tasks: Seq[Int],
+      startMs: Long, endMs: Option[Long], site: String) {
+    def stages: Int = tasks.size
+    def durationMs: Option[Long] = endMs.map(_ - startMs)
+  }
+
+  /** Runs `body` and returns its result with every job started meanwhile,
+    * in id order. The listener bus delivers events asynchronously; it is
+    * drained before the listener detaches, so every job that ended inside
+    * `body` carries its end time. */
+  def record[T](sc: SparkContext)(body: => T): (T, Seq[Job]) = {
+    val jobs = new ConcurrentHashMap[Int, Job]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, Job(e.jobId,
+          Option(e.properties).flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_GROUP_ID))),
+          e.stageInfos.map(_.numTasks), e.time, None, site(e)))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.computeIfPresent(e.jobId, (_, j) => j.copy(endMs = Some(e.time)))
+    }
+    sc.addSparkListener(listener)
+    val result =
+      try body
+      finally try sc.listenerBus.waitUntilEmpty() finally sc.removeSparkListener(listener)
+    (result, jobs.values.asScala.toSeq.sortBy(_.id))
+  }
+
+  /** Whether a stack frame is engine code: `graft.*`, but neither this
+    * trace nor the `graft.perf` tool that reads it. */
+  def isEngineFrame(frame: String): Boolean =
+    frame.contains("graft.") && !frame.contains("graft.perf.") &&
+      !frame.contains("JobTimeline")
+
+  /** The first engine frame of the submitting thread's call site (carried
+    * through SQL execution threads), else of the last stage's, else that
+    * stage's name. */
+  private def site(e: SparkListenerJobStart): String = {
+    val fromProps = Option(e.properties)
+      .flatMap(p => Option(p.getProperty(CallSite.LONG_FORM))).toSeq.flatMap(_.split('\n'))
+    val fromStage = e.stageInfos.lastOption.toSeq.flatMap(_.details.split('\n'))
+    (fromProps ++ fromStage).find(isEngineFrame)
+      .getOrElse(e.stageInfos.lastOption.map(_.name).getOrElse("?")).trim
+  }
+}

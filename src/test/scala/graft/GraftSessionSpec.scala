@@ -51,4 +51,13 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(gs.refresh() === Seq("broken"))
     assert(gs.sql("SELECT count(*) FROM fine").head().getLong(0) === 1L)
   }
+
+  test("a file-scheme warehouse warns when its Hadoop conf keeps the forking local FS") {
+    val stock = new org.apache.hadoop.conf.Configuration()
+    assert(GraftSession.forkingLocalFs("/tmp/wh", stock).exists(_.contains("forks")))
+    assert(GraftSession.forkingLocalFs("file:///tmp/wh", stock).isDefined)
+    assert(GraftSession.forkingLocalFs("s3a://bucket/wh", stock).isEmpty)
+    val tuned = spark.sparkContext.hadoopConfiguration
+    assert(GraftSession.forkingLocalFs("/tmp/wh", tuned).isEmpty)
+  }
 }

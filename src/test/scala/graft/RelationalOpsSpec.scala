@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = graft.hadoop.FastLocalFileSystem.tune(SparkSession.builder())
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.localBuilder(8).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

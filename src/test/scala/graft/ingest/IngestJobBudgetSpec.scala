@@ -3,16 +3,18 @@ package graft.ingest
 import java.nio.file.Files
 
 import graft.SparkTestSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.catalog.{GraftCatalog, GraftLake}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.JobTimeline
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Job budget of one ingest flush. Job counts do not vary with host
-  * noise, so a regression in the length of `processBatch`'s action chain
-  * fails here instead of hiding in wall-time spread. Every job a flush
-  * starts — on the caller's thread or on the tasks that land its topics
-  * and admit into its dedup index — must carry the caller's job group. */
+/** Job budget of one ingest flush and of the SQL write statements. Job
+  * counts do not vary with host noise, so a regression in the length of
+  * `processBatch`'s or a statement's action chain fails here instead of
+  * hiding in wall-time spread. Every job a flush starts — on the caller's
+  * thread or on the tasks that land its topics and admit into its dedup
+  * index — must carry the caller's job group. */
 class IngestJobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -38,20 +40,9 @@ class IngestJobBudgetSpec extends AnyFunSuite {
   /** Runs `body` under `group` and returns the group of every job it
     * started. */
   private def jobGroupsOf(group: String)(body: => Unit): Seq[String] = {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "ingest job budget")
-      try body finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    groups.asScala.toSeq
+    spark.sparkContext.setJobGroup(group, "ingest job budget")
+    try JobTimeline.record(spark.sparkContext)(body)._2.map(_.group.orNull)
+    finally spark.sparkContext.clearJobGroup()
   }
 
   private val jsonTopics = (0 until 4).map(i => s"bj$i")
@@ -122,5 +113,57 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     val second = jobGroupsOf("dedup-b") { p.processBatch(docs(5 to 8), 1) }
     assert(second.nonEmpty && second.forall(_ == "dedup-b"), second)
     assert(p.lake.read("bd_lshidx_docs").count() === 8)
+  }
+
+  private lazy val sqlLake = {
+    val wh = Files.createTempDirectory("graft-budget-sql").toString
+    spark.conf.set("spark.sql.catalog.gjb", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gjb.warehouse", wh)
+    new GraftLake(spark, wh)
+  }
+
+  private def customers(ids: Seq[Int], segment: Int => String, bump: Double): DataFrame =
+    ids.map(i => (i.toLong, s"c$i", segment(i), i * 1.5 + bump))
+      .toDF("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
+
+  test("a SQL MERGE into a partitioned PK table (q59 shape) runs 13 jobs in the caller's group") {
+    sqlLake.write("cust", customers(1 to 40, i => s"SEG${i % 4}", 0),
+      partitions = Seq("c_mktsegment"), pks = Seq("c_custkey"))
+    customers((3 to 60 by 3), i => if (i % 2 == 0) "MOVED" else s"SEG${i % 4}", 10)
+      .createOrReplaceTempView("budget_merge_src")
+    val groups = jobGroupsOf("budget-merge") {
+      spark.sql(
+        """MERGE INTO gjb.cust t USING budget_merge_src s
+          |ON t.c_custkey = s.c_custkey
+          |WHEN MATCHED THEN UPDATE SET
+          |  c_name = s.c_name, c_mktsegment = s.c_mktsegment, c_acctbal = s.c_acctbal
+          |WHEN NOT MATCHED THEN INSERT (c_custkey, c_name, c_mktsegment, c_acctbal)
+          |  VALUES (s.c_custkey, s.c_name, s.c_mktsegment, s.c_acctbal)""".stripMargin)
+    }
+    info(s"${groups.size} jobs")
+    assert(groups.forall(_ == "budget-merge"), groups)
+    assert(groups.size === 13)
+    assert(sqlLake.read("cust").count() === 40 + 7)
+    assert(sqlLake.read("cust").filter("c_mktsegment = 'MOVED'").count() === 10)
+  }
+
+  test("a SQL INSERT into an expression-partitioned table (q61 shape) runs 2 jobs in the caller's group") {
+    spark.sql(
+      """CREATE TABLE gjb.ord_ins
+        |(o_orderkey BIGINT, o_orderdate TIMESTAMP, o_totalprice DOUBLE)
+        |TBLPROPERTIES ('partitions' = 'year(o_orderdate)')""".stripMargin)
+    def orders(keys: Range) = keys.map(k =>
+      (k.toLong, java.sql.Timestamp.valueOf(s"${1992 + k % 7}-03-01 00:00:00"), k * 2.5))
+      .toDF("o_orderkey", "o_orderdate", "o_totalprice")
+    orders(1 to 50).createOrReplaceTempView("budget_ins_b1")
+    orders(51 to 100).createOrReplaceTempView("budget_ins_b2")
+    spark.sql("INSERT INTO gjb.ord_ins (o_orderkey, o_orderdate, o_totalprice) SELECT * FROM budget_ins_b1")
+    val groups = jobGroupsOf("budget-insert") {
+      spark.sql("INSERT INTO gjb.ord_ins (o_orderkey, o_orderdate, o_totalprice) SELECT * FROM budget_ins_b2")
+    }
+    info(s"${groups.size} jobs")
+    assert(groups.forall(_ == "budget-insert"), groups)
+    assert(groups.size === 2)
+    assert(sqlLake.read("ord_ins").count() === 100)
   }
 }
