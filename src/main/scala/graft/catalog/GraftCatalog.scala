@@ -304,8 +304,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
                 val system = GraftLake.partitionFields(meta).map(_.name) :+ "_inserted_at"
                 val userDf = data.drop(system.filter(data.columns.contains): _*)
                 if (overwrite)
-                  lake.overwriteContents(tableName, userDf.withColumn("_inserted_at",
-                    org.apache.spark.sql.functions.current_timestamp()))
+                  lake.overwriteContents(tableName,
+                    userDf.withColumn("_inserted_at", InsertStamp.now()))
                 else lake.append(tableName, userDf)
               }
             }

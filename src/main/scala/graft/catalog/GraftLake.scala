@@ -1244,7 +1244,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
   /** Rename-only retirement of live files into `_history/` (the rewrite
     * protocol's layout, so time travel / restore / vacuum see nothing
     * new). All-or-nothing: any failure renames the already-moved files
-    * back and returns false — the caller picks its own fallback. */
+    * back and returns false — the caller picks its own fallback. A file
+    * that cannot be renamed back is STRANDED: the manifest still lists it
+    * but `data/` no longer holds it, so no fallback is safe and the
+    * retirement fails with a message naming every stranded file. */
   private def retireRefs(name: String, refs: Seq[(String, String)]): Boolean = {
     val dd = new Path(dataDir(name))
     val hd = historyDir(name)
@@ -1262,9 +1265,18 @@ final class GraftLake(private[graft] val spark: SparkSession,
       }
       true
     } catch {
-      case _: Exception =>
-        moved.foreach(ref =>
-          try f.rename(at(hd, ref), at(dd, ref)) catch { case _: Exception => () })
+      case scala.util.control.NonFatal(e) =>
+        val stranded = moved.filterNot(ref =>
+          try f.rename(at(hd, ref), at(dd, ref))
+          catch { case scala.util.control.NonFatal(_) => false })
+        if (stranded.nonEmpty)
+          throw new IllegalStateException(
+            s"'$name': retiring ${refs.size} file(s) into $hd failed, and " +
+              s"${stranded.size} of them could not be renamed back: " +
+              stranded.map(at(hd, _)).mkString(", ") + ". The manifest " +
+              s"still lists them, so reads of '$name' fail: rename them " +
+              s"back under $dd, or run repairTable(\"$name\") to commit " +
+              "their removal", e)
         false
     }
   }
@@ -2994,7 +3006,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
       else batch
     val (meta, _) = ensureTable(name, batchP.schema, partitions, pks)
     val conformed = conformBatch(batchP, meta)
-      .withColumn(InsertedAtCol, current_timestamp())
+      .withColumn(InsertedAtCol, InsertStamp.now())
     val out = withPartitionCols(enforceConstraints(meta, conformed), meta)
     writeLock(name) {
       val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
@@ -3359,14 +3371,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
       pks.map(c => col(quoted(c))) ++
         dataCols.map(c => col(quoted(c)).as(s"$bPrefix$c")) :+
         lit(true).as(bPresent): _*)
-    // change capture freezes the insert timestamp driver-side so the
-    // table write and the change-file write (two jobs) stamp IDENTICAL
-    // `_inserted_at` values; without capture the per-job evaluation of
-    // current_timestamp() stays (one job — nothing to disagree with)
+    // one stamp for the whole statement: under change capture the table
+    // write and the change-file write (two jobs) stamp IDENTICAL
+    // `_inserted_at` values
     val cdf = meta.cdfEnabled
-    val nowExpr =
-      if (cdf) lit(java.sql.Timestamp.from(java.time.Instant.now()))
-      else current_timestamp()
+    val nowExpr = InsertStamp.now()
     // Under change capture the SAME full-outer join feeds two write jobs
     // (the change files and the rewritten table). Caching it was measured
     // a net LOSS on trigger-sized flushes (interleaved A/B: q168 6.3 s
@@ -3526,7 +3535,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
         (projected0, writeChangeFiles(name, meta, c))
       case None if meta.cdfEnabled =>
         val deduped = dedupLastWins(projected0)
-        val frozen = lit(java.sql.Timestamp.from(java.time.Instant.now()))
+        val frozen = InsertStamp.now()
         def freeze(d: DataFrame): DataFrame =
           if (meta.schema.fieldNames.contains(InsertedAtCol))
             d.withColumn(InsertedAtCol, frozen)
@@ -7369,7 +7378,13 @@ object GraftLake {
       }
       acc.toMap
     } finally reader.close()
-  } catch { case _: Throwable => Map.empty } // stats are advisory, never fatal
+  } catch {
+    // stats are advisory: a file without bounds is kept by every pruner
+    case scala.util.control.NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"no footer stats for $p (the file will not be pruned): $e")
+      Map.empty
+  }
 
   /** A full manifest checkpoint lands every this-many commits; between
     * checkpoints manifests are O(delta) `{base, add, remove}` records, so

@@ -405,13 +405,26 @@ object IngestPipeline {
     * fan-out small (measured on the ingest+dedup path: ~25% trigger
     * latency cut at identical results).
     *
+    * For the same reason the trigger runs INTERPRETED: no whole-stage
+    * codegen, and every projection, predicate and ordering built by the
+    * interpreted factory. Every epoch plans fresh, and a MERGE flush
+    * needs more generated classes than Spark's codegen cache holds
+    * (`spark.sql.codegen.cache.maxEntries`, 100, a static conf): with
+    * codegen the cache evicts each class before the next flush asks for
+    * it again, and Janino recompiles them every flush. Interpreted, a
+    * repeated flush compiles no class (`IngestJobBudgetSpec`), and on
+    * the ingest bench (seed 1, 4-core host, 10 interleaved pairs) an
+    * `upsert_curation` drain spends 35 % less CPU per record
+    * (`json_append`: 13 %). Statements outside a trigger keep codegen.
+    *
     * SHARED-SESSION caveat: session confs are session-global, so an
     * ad-hoc query submitted WHILE a trigger is in flight also plans with
-    * AQE off and the small fan-out. In deployments that mix interactive
-    * work and ingest on one application, build the SOURCE STREAM on its
-    * own `spark.newSession()` (separate conf, shared catalog + context)
-    * and hand that session's pipeline to [[IngestPipeline.start]] — the
-    * overlay then never touches the interactive session. This cannot be
+    * AQE off, the small fan-out and no codegen. In deployments that mix
+    * interactive work and ingest on one application, build the SOURCE
+    * STREAM on its own `spark.newSession()` (separate conf, shared
+    * catalog + context) and hand that session's pipeline to
+    * [[IngestPipeline.start]] — the overlay then never touches the
+    * interactive session. This cannot be
     * the pipeline's silent default: a DataFrame plans under the session
     * it was CREATED on, so the trigger frames arriving in foreachBatch
     * carry the caller's session no matter which session the pipeline
@@ -420,7 +433,18 @@ object IngestPipeline {
     * stream is built. */
   private[ingest] val triggerConfs = new graft.ConfScope(Seq(
     "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.shuffle.partitions" -> "8"))
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
+  /** Native codegen'd wire-format sniff of payload `v` (same contract as
+    * ArrowIpc.looksLikeIpc): the 0xFFFFFFFF continuation marker in the
+    * first 4 bytes + 8-byte minimum. coalesce(false) keeps null payloads
+    * on the JSON path, matching the former UDF's null => false. */
+  private[graft] def ipcSniff(v: Column): Column =
+    coalesce(
+      length(v) >= 8 && substring(v, 1, 4) === lit(Array[Byte](-1, -1, -1, -1)),
+      lit(false))
 
   /** Write slices for `n` rows: one per `maxRecordsPerFile`, at least one. */
   private def slicesFor(n: Long): Int =
@@ -572,7 +596,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     val spread = if (needsSpread) batch.repartition(minFanout) else batch
     // tagged once for the whole batch — Avro-configured topics just
     // ignore the column
-    val cached = spread.withColumn("__ipc", ipcSniff(col("value"))).cache()
+    val cached = spread.withColumn("__ipc", IngestPipeline.ipcSniff(col("value"))).cache()
     val dead = new IngestPipeline.DeadLetters
     try {
       val profiled = profileBatch(cached)
@@ -693,15 +717,6 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         Option(st.conflict), st.unparseable)) }.toMap
     }
   }
-
-  /** Native codegen'd wire-format sniff of payload `v` (same contract as
-    * ArrowIpc.looksLikeIpc): the 0xFFFFFFFF continuation marker in the
-    * first 4 bytes + 8-byte minimum. coalesce(false) keeps null payloads
-    * on the JSON path, matching the former UDF's null => false. */
-  private def ipcSniff(v: Column): Column =
-    coalesce(
-      length(v) >= 8 && substring(v, 1, 4) === lit(Array[Byte](-1, -1, -1, -1)),
-      lit(false))
 
   /** Dispatch one topic's records by wire format and land them. Topics with
     * a configured Avro reader schema are schemaful (Connect-converter
@@ -1300,9 +1315,9 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       // is a `try_`: the plan may evaluate it on every row
       val arrow = IngestPipeline.ArrowWire.fromDlq(col("value"))
       val batch = mine.select(lit(topic).as("topic"), col("partition"), col("offset"),
-        when(ipcSniff(arrow), arrow)
+        when(IngestPipeline.ipcSniff(arrow), arrow)
           .otherwise(IngestPipeline.JsonWire.fromDlq(col("value"))).as("value"))
-      val tagged = batch.withColumn("__ipc", ipcSniff(col("value")))
+      val tagged = batch.withColumn("__ipc", IngestPipeline.ipcSniff(col("value")))
       // the replay is a trigger over the parked rows: ONE profile job
       // yields its record count, wire-format dispatch and JSON schema
       val profiles = profileBatch(tagged).getOrElse(topic, Map.empty)

@@ -12,7 +12,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.JobTimeline
+import org.apache.spark.sql.graft.{CodegenCompiles, JobTimeline}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Dev entry point: one subcommand per measurement, all on one local
@@ -67,26 +67,34 @@ object Perf {
     * variant untimed, so JVM start, codegen and class loading stay out of
     * the samples; then `iters` rounds over the variants, interleaved so
     * that host drift cancels out of an A/B. `measure` wraps each timed
-    * run; `report` gets the round, variant, row count and seconds. */
+    * run; `report` gets the round, variant, row count, seconds and the
+    * classes Janino compiled during the run. */
   private def timedRuns(spark: SparkSession, query: String, sfDir: String, iters: Int,
       variants: Seq[String] = Seq(""), setVariant: String => Unit = _ => (),
       measure: (() => Long) => Long = _())(
-      report: (Int, String, Long, Double) => Unit): Unit = {
+      report: (Int, String, Long, Double, CodegenCompiles.Compiles) => Unit): Unit = {
     val run = () => SparkEntry.queries(query)(spark, sfDir).count()
     variants.foreach { v => setVariant(v); run() }
     for (i <- 0 until iters; v <- variants) {
       setVariant(v)
       val t0 = System.nanoTime()
-      val rows = measure(run)
-      report(i, v, rows, (System.nanoTime() - t0) / 1e9)
+      val (rows, compiles) = CodegenCompiles.during(measure(run))
+      report(i, v, rows, (System.nanoTime() - t0) / 1e9, compiles)
     }
   }
 
+  private def compiled(c: CodegenCompiles.Compiles): String =
+    f"compiles=${c.count} (${c.ms}%.0f ms)"
+
   /** Plan and execution cost of one query, without sbt and JVM startup. */
-  private def time(spark: SparkSession, args: IndexedSeq[String]): Unit =
-    timedRuns(spark, args(0), args(1), args.lift(2).fold(3)(_.toInt)) { (i, _, rows, s) =>
-      println(f"[timeone] iter=$i ${args(0)}%s rows=$rows time=$s%.3f s")
+  private def time(spark: SparkSession, args: IndexedSeq[String]): Unit = {
+    var total = CodegenCompiles.Compiles(0, 0)
+    timedRuns(spark, args(0), args(1), args.lift(2).fold(3)(_.toInt)) { (i, _, rows, s, c) =>
+      println(f"[timeone] iter=$i ${args(0)}%s rows=$rows time=$s%.3f s ${compiled(c)}")
+      total += c
     }
+    println(s"[timeone] timed runs ${compiled(total)}")
+  }
 
   /** A/B of one session conf on one query inside one JVM. Single samples
     * across JVMs swing about ±30 % with the neighbours on a shared host,
@@ -94,15 +102,18 @@ object Perf {
   private def ab(spark: SparkSession, args: IndexedSeq[String]): Unit = {
     val Seq(query, sfDir, iters, key, a, b) = args.take(6)
     val times = mutable.Map[String, List[Double]]().withDefaultValue(Nil)
+    val compiles = mutable.Map[String, CodegenCompiles.Compiles]()
+      .withDefaultValue(CodegenCompiles.Compiles(0, 0))
     timedRuns(spark, query, sfDir, iters.toInt, Seq(a, b), spark.conf.set(key, _)) {
-      (i, v, rows, s) =>
-        println(f"[ab] iter=$i $key=$v%-12s rows=$rows time=$s%.3f s")
+      (i, v, rows, s, c) =>
+        println(f"[ab] iter=$i $key=$v%-12s rows=$rows time=$s%.3f s ${compiled(c)}")
         times(v) = s :: times(v)
+        compiles(v) += c
     }
     Seq(a, b).foreach { v =>
       val ts = times(v).sorted
       println(f"[ab] SUMMARY $key=$v%-12s min=${ts.head}%.3f " +
-        f"median=${ts(ts.size / 2)}%.3f n=${ts.size}")
+        f"median=${ts(ts.size / 2)}%.3f n=${ts.size} ${compiled(compiles(v))}")
     }
   }
 
@@ -213,8 +224,8 @@ object Perf {
         JobTimeline.record(spark.sparkContext)(sampled(profileKey)(run()))
       jobs = js; samples = counts; sweeps = n
       rows
-    }) { (_, _, rows, s) =>
-      println(f"[profile] $query%s rows=$rows time=$s%.3f s jobs=${jobs.size}")
+    }) { (_, _, rows, s, c) =>
+      println(f"[profile] $query%s rows=$rows time=$s%.3f s jobs=${jobs.size} ${compiled(c)}")
     }
     jobs.foreach { j =>
       // at = start offset: the space BETWEEN one job's end and the next

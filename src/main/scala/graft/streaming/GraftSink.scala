@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SQLContext}
 import org.apache.spark.sql.execution.streaming.Sink
-import org.apache.spark.sql.functions.current_timestamp
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.catalog.GraftLake
+import graft.catalog.{GraftLake, InsertStamp}
 
 /** `graft` — a Structured-Streaming SINK into a lake table, the write
   * half of the streaming story ([[GraftCdfSourceProvider]] is the read
@@ -142,7 +141,7 @@ final class GraftSink(lake: GraftLake, table: String, appId: String,
           lake.write(table, df, partitions, pks)
         else
           lake.overwriteContents(table,
-            df.withColumn("_inserted_at", current_timestamp()))
+            df.withColumn("_inserted_at", InsertStamp.now()))
     }
   }
 

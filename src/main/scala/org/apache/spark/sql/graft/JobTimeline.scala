@@ -5,7 +5,10 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.util.CallSite
 
 /** The Spark jobs a piece of driver work started, as the listener bus
@@ -29,11 +32,19 @@ object JobTimeline {
     * `body` carries its end time. */
   def record[T](sc: SparkContext)(body: => T): (T, Seq[Job]) = {
     val jobs = new ConcurrentHashMap[Int, Job]()
+    // SQL execution id → (root execution id, call site); an execution
+    // starts before its jobs, and the bus delivers in order
+    val executions = new ConcurrentHashMap[Long, (Long, String)]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executions.put(s.executionId, (s.rootExecutionId.getOrElse(s.executionId), s.details))
+        case _ => ()
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.put(e.jobId, Job(e.jobId,
           Option(e.properties).flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_GROUP_ID))),
-          e.stageInfos.map(_.numTasks), e.time, None, site(e)))
+          e.stageInfos.map(_.numTasks), e.time, None, site(e, executions)))
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.computeIfPresent(e.jobId, (_, j) => j.copy(endMs = Some(e.time)))
     }
@@ -51,13 +62,23 @@ object JobTimeline {
       !frame.contains("JobTimeline")
 
   /** The first engine frame of the submitting thread's call site (carried
-    * through SQL execution threads), else of the last stage's, else that
-    * stage's name. */
-  private def site(e: SparkListenerJobStart): String = {
+    * through SQL execution threads), else of the last stage's, else of the
+    * call sites of the job's SQL execution and of that execution's root,
+    * else the last stage's name. The execution's call site names the
+    * engine frame of a job that Spark submitted from its own threads: a
+    * broadcast, or a stage that adaptive execution materializes. */
+  private def site(e: SparkListenerJobStart,
+      executions: java.util.Map[Long, (Long, String)]): String = {
     val fromProps = Option(e.properties)
       .flatMap(p => Option(p.getProperty(CallSite.LONG_FORM))).toSeq.flatMap(_.split('\n'))
     val fromStage = e.stageInfos.lastOption.toSeq.flatMap(_.details.split('\n'))
-    (fromProps ++ fromStage).find(isEngineFrame)
+    def fromExecution = Option(e.properties)
+      .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      .flatMap(id => Option(executions.get(id.toLong))).toSeq
+      .flatMap { case (root, details) =>
+        details +: Option(executions.get(root)).map(_._2).toSeq
+      }.flatMap(_.split('\n'))
+    (fromProps.iterator ++ fromStage ++ fromExecution).find(isEngineFrame)
       .getOrElse(e.stageInfos.lastOption.map(_.name).getOrElse("?")).trim
   }
 }

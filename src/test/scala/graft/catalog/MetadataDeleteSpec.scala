@@ -316,4 +316,49 @@ class MetadataDeleteSpec extends AnyFunSuite {
       assert(lake.liveDvs("t").isEmpty && lake.dataFiles("t").isEmpty)
     } finally spark.conf.unset("spark.graft.delete.mode")
   }
+
+  test("a retirement that strands a file fails naming it and repairTable") {
+    val wh = Files.createTempDirectory("graft-mdfault").toString
+    GraftLake.invalidateCaches()
+    val lake = new GraftLake(spark, wh)
+    lake.write("p", (1 to 30).map(i => (i, s"s${i % 3}")).toDF("id", "seg")
+      .repartition(1), partitions = Seq("seg"))
+    spark.sparkContext.hadoopConfiguration.set("fs.graftfault.impl",
+      classOf[HistoryRenameFaultFs].getName)
+    // the same table through a filesystem whose second rename into or
+    // out of _history/ fails: the first file moves, the second does not,
+    // and the first cannot move back
+    val faulty = new GraftLake(spark, s"graftfault://$wh")
+    HistoryRenameFaultFs.allowed.set(1)
+    val e = try intercept[IllegalStateException](faulty.truncate("p"))
+      finally HistoryRenameFaultFs.allowed.set(Int.MaxValue)
+    val history = new java.io.File(s"$wh/p/_history")
+    val stranded = Files.walk(history.toPath).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+    assert(stranded.size === 1)
+    assert(e.getMessage.contains(new java.io.File(stranded.head).getName), e.getMessage)
+    assert(e.getMessage.contains("repairTable(\"p\")"), e.getMessage)
+    // the remedy the message names: the table reads again, without the
+    // stranded file's rows
+    GraftLake.invalidateCaches()
+    val strandedRows = spark.read.parquet(stranded.head).count()
+    lake.repairTable("p")
+    assert(lake.read("p").count() === 30 - strandedRows)
+  }
+}
+
+/** The local filesystem under the `graftfault` scheme. A rename into or
+  * out of `_history/` fails once [[HistoryRenameFaultFs.allowed]] of them
+  * have succeeded. */
+class HistoryRenameFaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftfault:///")
+  override def getScheme: String = "graftfault"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (s"$src $dst".contains("/_history/") &&
+        HistoryRenameFaultFs.allowed.getAndDecrement() <= 0) false
+    else super.rename(src, dst)
+}
+
+object HistoryRenameFaultFs {
+  val allowed = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.SparkTestSession
 import graft.catalog.{GraftCatalog, GraftLake}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.graft.JobTimeline
+import org.apache.spark.sql.graft.{CodegenCompiles, JobTimeline}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,7 +45,20 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     finally spark.sparkContext.clearJobGroup()
   }
 
+  /** The classes Janino compiled while `body` ran. */
+  private def compilesOf(body: => Unit): Long = CodegenCompiles.during(body)._2.count
+
   private val jsonTopics = (0 until 4).map(i => s"bj$i")
+
+  /** Each JSON topic: clean records `ids`, one malformed record and one
+    * record whose `a` conflicts with the topic's numeric type; the Arrow
+    * topic: records `arrowIds`. */
+  private def fiveTopicBatch(ids: Range, arrowIds: Seq[Long]): DataFrame =
+    batchOf(jsonTopics.flatMap(t =>
+      ids.map(i => t -> json(s"""{"id":$i,"a":$i,"name":"m$i"}""")) ++ Seq(
+        t -> json("{{{not json"),
+        t -> json("""{"id":99,"a":"2024-03-01T12:00:00Z","name":"x"}"""))) :+
+      ("barrow" -> ipc(arrowIds)): _*)
 
   test("a 5-topic flush with malformed and conflicting records stays within 17 jobs and one DLQ commit") {
     val p = pipeline()
@@ -55,13 +68,7 @@ class IngestJobBudgetSpec extends AnyFunSuite {
       ("barrow" -> ipc(Seq(1L, 2L))): _*), 0)
     val dlqVersions =
       if (p.lake.tableExists("_dlq")) p.lake.versions("_dlq").size else 0
-    // each JSON topic: clean records, one malformed record and one record
-    // whose `a` conflicts with the topic's numeric type
-    val measured = batchOf(jsonTopics.flatMap(t =>
-      (10 to 14).map(i => t -> json(s"""{"id":$i,"a":$i,"name":"m$i"}""")) ++ Seq(
-        t -> json("{{{not json"),
-        t -> json("""{"id":99,"a":"2024-03-01T12:00:00Z","name":"x"}"""))) :+
-      ("barrow" -> ipc(Seq(3L, 4L, 5L))): _*)
+    val measured = fiveTopicBatch(10 to 14, Seq(3L, 4L, 5L))
     val groups = jobGroupsOf("budget-flush") { p.processBatch(measured, 1) }
     info(s"${groups.size} jobs")
     assert(groups.nonEmpty)
@@ -76,6 +83,43 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     assert(parked.count(_.getString(1) == "unparseable JSON") === 4)
     jsonTopics.foreach(t => assert(p.lake.read(t).count() === 8, t))
     assert(p.lake.read("barrow").count() === 5)
+  }
+
+  // A trigger runs interpreted: a flush of a shape the pipeline has seen
+  // compiles nothing. With codegen, Spark's codegen cache (100 entries)
+  // evicts a flush's classes before the next flush asks again, so every
+  // flush would compile them anew.
+  test("a second identical 5-topic flush compiles no class") {
+    val p = pipeline()
+    p.processBatch(fiveTopicBatch(1 to 5, Seq(1L, 2L, 3L)), 0)
+    p.processBatch(fiveTopicBatch(10 to 14, Seq(4L, 5L, 6L)), 1)
+    val compiles = compilesOf(p.processBatch(fiveTopicBatch(20 to 24, Seq(7L, 8L, 9L)), 2))
+    info(s"$compiles classes compiled")
+    assert(compiles === 0)
+    jsonTopics.foreach(t => assert(p.lake.read(t).count() === 15, t))
+  }
+
+  test("a second identical upsert-plus-dedup flush compiles no class") {
+    val p = pipeline(wh => IngestConfig(wh,
+      pks = Map("bu" -> Seq("id")), partitions = Map("bu" -> Seq("bucket(8, id)")),
+      dedup = Map("bdd" -> DedupConfig("doc_id", "text"))))
+    // flush n: ids 5n .. 5n+9, half of them updates of flush n-1; docs
+    // 10n .. 10n+4, one of them a copy of an earlier doc
+    def flush(n: Int): Unit = p.processBatch(batchOf(
+      ((5 * n) until (5 * n + 10)).map(i =>
+        "bu" -> json(s"""{"id":$i,"v":$n,"name":"u$i-$n"}""")) ++
+        (0 until 5).map(j => "bdd" -> json(
+          s"""{"doc_id":${10 * n + j},"text":"${
+            if (j == 0 && n > 0) "doc number 1 says something new 1"
+            else s"doc number ${10 * n + j} says something new ${10 * n + j}"}"}""")): _*), n)
+    flush(0)
+    flush(1)
+    val compiles = compilesOf(flush(2))
+    info(s"$compiles classes compiled")
+    assert(compiles === 0)
+    assert(p.lake.read("bu").count() === 20)
+    assert(p.lake.read("bu").filter("v = 2").count() === 10)
+    assert(p.lake.read("bdd_lshidx_docs").count() > 0)
   }
 
   test("a JSON-only DLQ replay runs its profile instead of a dispatch job and a fallback inference") {
@@ -165,5 +209,29 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     assert(groups.forall(_ == "budget-insert"), groups)
     assert(groups.size === 2)
     assert(sqlLake.read("ord_ins").count() === 100)
+  }
+
+  // `_inserted_at` reaches the generated code through the class's
+  // references, not as a literal, so each INSERT does not compile its
+  // write stage anew. The source is a range: a local relation would be
+  // projected on the driver, never in generated code.
+  test("a second identical SQL INSERT (q61 shape) compiles no class") {
+    val lake = sqlLake // registers the gjb catalog
+    spark.sql(
+      """CREATE TABLE gjb.ord_stamp
+        |(o_orderkey BIGINT, o_orderdate TIMESTAMP, o_totalprice DOUBLE)
+        |TBLPROPERTIES ('partitions' = 'year(o_orderdate)')""".stripMargin)
+    spark.range(1, 51).selectExpr("id AS o_orderkey",
+      "make_timestamp(1992 + id % 7, 3, 1, 0, 0, 0) AS o_orderdate",
+      "CAST(id * 2.5 AS DOUBLE) AS o_totalprice")
+      .createOrReplaceTempView("budget_stamp_b")
+    def insert(): Unit = spark.sql(
+      "INSERT INTO gjb.ord_stamp (o_orderkey, o_orderdate, o_totalprice) SELECT * FROM budget_stamp_b")
+    insert()
+    val compiles = compilesOf(insert())
+    info(s"$compiles classes compiled")
+    assert(compiles === 0)
+    val stamps = lake.read("ord_stamp").groupBy("_inserted_at").count().collect()
+    assert(stamps.map(_.getLong(1)).sorted.toSeq === Seq(50L, 50L))
   }
 }
