@@ -57,11 +57,12 @@ object ScaleBench {
                                 // planned files track the probed buckets
                                 // (2 of 16), never the table; expected
                                 // near-flat at 10×
-    "q168_stream_cdc_rewrites", // CDC THROUGH REWRITES: upsert + COW
-                                // update/delete windows stream via their
-                                // write-time change files — per-epoch
-                                // cost is O(changed rows), and the
-                                // capture itself is change-sized
+    "q168_stream_cdc_rewrites", // CDC THROUGH REWRITES: an upsert window
+                                // streams via its write-time change
+                                // files, DV update/delete windows via
+                                // their DV entries — per-epoch cost is
+                                // O(changed rows), and the capture
+                                // itself is change-sized
     "q166_stream_replicate", // lake→lake streaming replication: builds
                              // its lake fresh each run (no memo), so the
                              // ratio measures the FULL stream lifecycle —

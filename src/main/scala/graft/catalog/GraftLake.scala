@@ -974,26 +974,31 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
   }
 
-  /** The shared (file key, row position) LEFT ANTI join every DV-masking
-    * consumer uses — one place owns the key derivation and join shape.
-    * Both metadata derivations land in ONE projection directly over the
-    * scan (hidden `_metadata` does not resolve through arbitrary stacked
-    * plans). `broadcastDv` gates the hint: callers differ on the
-    * entry-count source (the per-table cache for live reads, an uncached
-    * count for change-feed windows whose subset must not evict it). */
-  private def dvAntiJoinFrames(df: DataFrame, dv: DataFrame, partDepth: Int,
-      broadcastDv: Boolean): DataFrame = {
-    val keyC = "__graft_dv_key"
-    val posC = "__graft_dv_pos"
-    val keyed = df.withColumns(Map(
+  /** The DV key columns of a scan: manifest file key ([[keyC]]) and
+    * file-local row position ([[posC]]). Both metadata derivations land in
+    * ONE projection directly over the scan (hidden `_metadata` does not
+    * resolve through arbitrary stacked plans). */
+  private def withDvKeys(df: DataFrame, partDepth: Int): DataFrame =
+    df.withColumns(Map(
       keyC -> GraftLake.dvKeyColumn(partDepth),
       posC -> col("_metadata.row_index")))
+
+  /** The shared (file key, row position) LEFT ANTI join every DV-masking
+    * consumer uses, over a [[withDvKeys]] frame; the key columns stay.
+    * `broadcastDv` gates the hint: callers differ on the entry-count
+    * source (the per-table cache for live reads, an uncached count for
+    * change-feed windows whose subset must not evict it). */
+  private def dvAntiJoin(keyed: DataFrame, dv: DataFrame,
+      broadcastDv: Boolean): DataFrame = {
     val dvSide = if (broadcastDv) broadcast(dv) else dv
     keyed.join(dvSide,
-        keyed(keyC) === dv("file_key") && keyed(posC) === dv("pos"),
-        "left_anti")
-      .drop(keyC, posC)
+      keyed(keyC) === dv("file_key") && keyed(posC) === dv("pos"), "left_anti")
   }
+
+  /** [[dvAntiJoin]] over an unkeyed scan, key columns dropped. */
+  private def dvAntiJoinFrames(df: DataFrame, dv: DataFrame, partDepth: Int,
+      broadcastDv: Boolean): DataFrame =
+    dvAntiJoin(withDvKeys(df, partDepth), dv, broadcastDv).drop(keyC, posC)
 
   /** The union of DV files as a (file_key, pos) frame. */
   private def dvFrame(name: String, dvs: Seq[String]): DataFrame =
@@ -1021,23 +1026,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
   }
 
-  /** Merge-on-read DELETE: rows matching `predicate` (NULL keeps the row,
-    * SQL DELETE semantics) are masked by a deletion vector — (file key,
-    * row position) pairs written as a parquet sidecar under `_dv/` and
-    * committed to the manifest — WITHOUT rewriting a single data file.
-    * The 100 TB contract: a DELETE touching 0.001 % of rows costs one
-    * column-pruned scan + a tiny sidecar write, not a copy-on-write of
-    * every affected 1 GB file (that is [[GraftDeleteCommand]]'s
-    * partition-scoped COW path, still available; reference analog:
-    * DuckLake DELETE, which DuckDB executes as its own positional delete
-    * files). Reads apply DVs as a broadcast anti-join; [[compact]],
-    * [[materializeDeletes]] or any full rewrite folds them back in.
-    * When the live DV entry count exceeds
-    * `spark.graft.dv.maxEntries` (default 1M — the broadcast-safety
-    * bound), the affected files are rewritten eagerly instead
-    * ([[materializeDeletes]]), so DV probes stay map-side forever.
-    * Returns the number of rows deleted (already-deleted rows never
-    * re-enter a DV: the hit scan itself reads through the live DVs). */
+  /** DV key/position column names of [[withDvKeys]] frames. */
   private val keyC = "__graft_dv_key"
   private val posC = "__graft_dv_pos"
 
@@ -1077,17 +1066,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }.isEmpty
     if (!fileBacked) return None
     val dvs0 = liveDvs(name)
-    val keyed = base.withColumns(Map(
-      keyC -> GraftLake.dvKeyColumn(partDepth),
-      posC -> col("_metadata.row_index")))
+    val keyed = withDvKeys(base, partDepth)
     val masked =
       if (dvs0.isEmpty) keyed
-      else {
-        val dv = dvFrame(name, dvs0)
-        keyed.join(broadcast(dv),
-          keyed(keyC) === dv("file_key") && keyed(posC) === dv("pos"),
-          "left_anti")
-      }
+      else dvAntiJoin(keyed, dvFrame(name, dvs0), broadcastDv = true)
     // LOGICAL view out: the callers filter user predicates and evaluate
     // user assignments against this frame ([[keyC]]/[[posC]] untouched)
     Some(toLogical(meta.schema, masked))
@@ -1116,7 +1098,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * never disagree on which files a predicate covers. Logical names
     * resolve against the logical schema (renames ride the
     * logical→physical map); Columns wrapping catalyst expressions (the
-    * SQL DML rewrites hand conditions over via `byNameColumn`) don't
+    * SQL DML hands its conditions over via `byNameColumn`) don't
     * lower through the ColumnNode walk, so they re-resolve against an
     * empty frame, fold the analyzer's literal casts, and lower the
     * catalyst tree instead. Null-test leaves are stripped for tables
@@ -1310,17 +1292,25 @@ final class GraftLake(private[graft] val spark: SparkSession,
     commitVersion(name, Nil, files, op = "truncate", dvRemoved = dvs)
   }
 
-  /** The metadata-only DELETE fast path ALONE (no scan fallback):
-    * `Some(deleted)` when the proof applied — including a provable
-    * no-match `Some(0)`, which commits nothing — `None` otherwise. For
-    * callers that own their own fallback (the SQL copy-on-write rewrite):
-    * a provable whole-file drop is strictly better than a partition
-    * rewrite regardless of the configured DML mode. */
-  private[graft] def deleteWhereMetadataOnly(name: String,
-      predicate: Column): Option[Long] = writeLock(name) {
-    metadataDeleteLocked(name, readMeta(name), predicate)
-  }
-
+  /** DELETE: rows matching `predicate` (NULL keeps the row, SQL DELETE
+    * semantics) leave the table by the cheapest route the hit set allows:
+    *  - files the manifest bounds prove all-matching drop metadata-only
+    *    ([[metadataDeleteLocked]]);
+    *  - otherwise a deletion vector masks the hits — (file key, row
+    *    position) pairs written as a parquet sidecar under `_dv/` and
+    *    committed to the manifest — WITHOUT rewriting a single data file.
+    *    A DELETE touching 0.001 % of rows costs one column-pruned scan +
+    *    a tiny sidecar write (reference analog: DuckLake DELETE, which
+    *    DuckDB executes as its own positional delete files);
+    *  - a hit set that would take the live DV entry count past
+    *    `spark.graft.dv.maxEntries` (default 1M — the broadcast-safety
+    *    bound) folds copy-on-write instead ([[rewriteWhere]]), so DV
+    *    probes stay map-side forever.
+    * Reads apply DVs as a broadcast probe; [[compact]],
+    * [[materializeDeletes]] or any full rewrite folds them back in. SQL
+    * `DELETE FROM` runs here too. Returns the number of rows deleted
+    * (already-deleted rows never re-enter a DV: the hit scan itself reads
+    * through the live DVs). */
   def deleteWhere(name: String, predicate: Column): Long = writeLock(name) {
     val meta = readMeta(name)
     metadataDeleteLocked(name, meta, predicate) match {
@@ -1357,7 +1347,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
         // committed — every read until materialization would anti-join
         // (and force-broadcast) it. Fold the delete copy-on-write
         // instead, scoped to the partitions that actually hold hits.
-        cowDeleteLocked(name, meta, predicate, stage)
+        rewriteWhere(name, live, coalesce(predicate, lit(false)), Map.empty)
         return deleted
       }
       val dd = dvDir(name)
@@ -1375,53 +1365,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
     } finally f.delete(stage, true)
   }
 
-  /** Copy-on-write fallback for a DELETE whose hit set exceeds the DV
-    * entry budget: rewrites ONLY the partitions holding hits (discovered
-    * from the staged hit keys — bounded by the partition count, not the
-    * hit count), folding both the predicate and any pre-existing DVs into
-    * the surviving data. Pre-existing DV entries for untouched partitions
-    * stay live; a full (unpartitioned) rewrite clears every DV. */
-  private def cowDeleteLocked(name: String, meta: TableMeta,
-      predicate: Column, stage: Path): Unit = {
-    val partDepth = meta.partitionExprs.size
-    val dvs0 = liveDvs(name)
-    val keepRow = !coalesce(predicate, lit(false))
-    val hit = coalesce(predicate, lit(false))
-    val ct = GraftLake.ChangeTypeCol
-    if (partDepth == 0) {
-      val live = toLogical(meta.schema,
-        applyDvs(name, readInternal(name, meta), dvs0, 0))
-      replaceScoped(name, live.filter(keepRow), Nil, clearDvs = true,
-        changes = Some(live.filter(hit).withColumn(ct, lit("delete"))))
-    } else {
-      val rels = spark.read.schema(GraftLake.dvSchema).parquet(stage.toString)
-        .select(substring_index(col("file_key"), "/", partDepth).as("rel"))
-        .distinct().collect().map(_.getString(0)).toSeq
-      val dirs = rels.map(r => s"${dataDir(name)}/$r")
-      val keyC = "__graft_dv_key"
-      val posC = "__graft_dv_pos"
-      // one projection over the scan for both metadata derivations, then
-      // scope + DV anti-join on those materialized columns (the same
-      // shape as materializeDeletesLocked)
-      val keyed = readInternal(name, meta).withColumns(Map(
-        keyC -> GraftLake.dvKeyColumn(partDepth),
-        posC -> col("_metadata.row_index")))
-      val scoped = keyed.filter(
-        substring_index(col(keyC), "/", partDepth).isin(rels: _*))
-      val masked =
-        if (dvs0.isEmpty) scoped
-        else {
-          val dv = dvFrame(name, dvs0)
-          scoped.join(broadcast(dv),
-            scoped(keyC) === dv("file_key") && scoped(posC) === dv("pos"),
-            "left_anti")
-        }
-      val scopedLive = toLogical(meta.schema, masked).drop(keyC, posC)
-      replaceScoped(name, scopedLive.filter(keepRow), dirs,
-        changes = Some(scopedLive.filter(hit).withColumn(ct, lit("delete"))))
-    }
-  }
-
   private def dvMaxEntries: Long = spark.conf
     .getOption("spark.graft.dv.maxEntries").map(_.toLong).getOrElse(1000000L)
 
@@ -1432,36 +1375,22 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * same version, so no read can observe the delete without the
     * re-insert). The 100 TB contract mirrors [[deleteWhere]]: a
     * selective UPDATE costs one manifest-pruned scan + hit-sized writes,
-    * not a partition rewrite (that is the SQL COW path, still default).
+    * not a partition rewrite. SQL `UPDATE` runs here too.
     * All assignment right-hand sides evaluate against the OLD row
     * (simultaneous-assignment semantics) and cast to the column's landed
     * type; `_inserted_at` is preserved (W5). An update that moves rows
     * across partitions just lands the new rows in their new partitions —
     * the DV masks the old copies in place. Hit sets above
-    * `spark.graft.dv.maxEntries` fold copy-on-write, scoped to the
-    * source ∪ destination partitions. Returns the rows updated. */
+    * `spark.graft.dv.maxEntries` fold copy-on-write ([[rewriteWhere]]),
+    * scoped to the source ∪ destination partitions. Returns the rows
+    * updated. */
   def updateWhere(name: String, predicate: Column,
       assignments: Map[String, Column]): Long = writeLock(name) {
     val meta = readMeta(name)
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
     // assignments address LOGICAL names and evaluate against the logical
     // live view; the staged postimages convert back to physical at write
-    val logicalFields = GraftLake.logicalSchema(meta.schema)
-    val byLower = assignments.map { case (k, v) =>
-      val field = logicalFields.fields.find(_.name.equalsIgnoreCase(k))
-        .getOrElse(throw new IllegalArgumentException(
-          s"table '$name' has no column '$k'"))
-      require(!field.name.equalsIgnoreCase(InsertedAtCol),
-        s"'$InsertedAtCol' is engine-managed and cannot be assigned")
-      field.name.toLowerCase -> v.cast(field.dataType)
-    }
-    def applyAssigns(df: DataFrame): DataFrame =
-      df.select(logicalFields.fieldNames.toSeq.map { n =>
-        byLower.get(n.toLowerCase) match {
-          case Some(v) => v.as(n)
-          case None => col(quoted(n)).as(n)
-        }
-      }: _*)
+    val byField = landedAssignments(name, meta, assignments)
     val live = liveKeyedScanLocked(name, meta).getOrElse(return 0L)
     val hits = live.filter(coalesce(predicate, lit(false)))
     val stage = new Path(s"${tableDir(name)}/.updstage-${UUID.randomUUID()}")
@@ -1480,14 +1409,14 @@ final class GraftLake(private[graft] val spark: SparkSession,
       val updated = hitDf.count() // footer row counts only
       if (updated == 0L) return 0L
       if (dvEntryCountCached(name, liveDvs(name)) + updated > dvMaxEntries) {
-        cowUpdateLocked(name, meta, predicate, byLower)
+        rewriteWhere(name, live, coalesce(predicate, lit(false)), assignments)
         return updated
       }
       // 1) re-insert the updated rows through the normal append machinery
       //    (stats collected by the commit protocol, partition dirs
       //    re-derived from the NEW values)
       val out = withPartitionCols(enforceConstraints(meta,
-        toPhysical(meta.schema, applyAssigns(hitDf))), meta)
+        toPhysical(meta.schema, assign(meta, hitDf, byField))), meta)
       val dataStage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
       val added = try {
         val writer = distributeForWrite(out, meta).write.mode(SaveMode.Overwrite)
@@ -1539,62 +1468,68 @@ final class GraftLake(private[graft] val spark: SparkSession,
       .collect().map(r => new Path(r.getString(0)).getParent.toString)
       .toSeq.distinct
 
-  /** Copy-on-write fallback for an UPDATE whose hit set exceeds the DV
-    * entry budget: rewrites the source ∪ destination partitions (an
-    * update of a partition-source column relocates rows) with the
-    * conditional assignment applied, folding pre-existing DVs in. */
-  private def cowUpdateLocked(name: String, meta: TableMeta,
-      predicate: Column, byLower: Map[String, Column]): Unit = {
+  /** The one partition-scoped copy-on-write rewrite, behind DELETE
+    * (`assignments` empty) and UPDATE: the fold of an oversized
+    * [[deleteWhere]]/[[updateWhere]] hit set, and SQL DML whose condition
+    * carries a subquery. `live` is the table's live rows (DV-masked,
+    * logical names, generated partition columns included) and `hit` is
+    * TRUE exactly on the affected rows. Only the partitions holding hits
+    * are rewritten, plus the partitions an UPDATE moves rows into (the
+    * swap must keep their existing rows); pre-existing DV entries of
+    * untouched partitions stay live. An unpartitioned table replaces its
+    * whole file set and clears every DV (`live` reads through them). The
+    * hit rows are the commit's change rows (CDF-enabled tables). */
+  private[graft] def rewriteWhere(name: String, live: DataFrame, hit: Column,
+      assignments: Map[String, Column]): Unit = writeLock(name) {
+    val meta = readMeta(name)
+    val byField = landedAssignments(name, meta, assignments)
     val partCols = meta.partitionExprs.map(_.outputName)
-    val hit = coalesce(predicate, lit(false))
-    // LOGICAL view: `predicate`, `byLower` and the assignment right-hand
-    // sides all address logical names (replaceScoped converts back)
-    val masked = toLogical(meta.schema,
-      applyDvs(name, readInternal(name, meta), liveDvs(name),
-        partCols.size))
-    val logicalFields = GraftLake.logicalSchema(meta.schema)
-    def applyAssigns(df: DataFrame): DataFrame =
-      df.select(logicalFields.fieldNames.toSeq.map { n =>
-        byLower.get(n.toLowerCase) match {
-          case Some(v) => v.as(n)
-          case None => col(quoted(n)).as(n)
-        }
-      }: _*)
-    def updCols(df: DataFrame): DataFrame =
-      df.select(logicalFields.fieldNames.toSeq.map { n =>
-        byLower.get(n.toLowerCase) match {
-          case Some(v) => when(hit, v).otherwise(col(quoted(n))).as(n)
-          case None => col(quoted(n)).as(n)
-        }
-      }: _*)
+    def rewritten(df: DataFrame): DataFrame =
+      if (byField.isEmpty) df.filter(!hit)
+      else assign(meta, df, byField.map { case (k, v) =>
+        k -> when(hit, v).otherwise(col(quoted(k))) })
+    val matching = live.filter(hit)
+    val post = assign(meta, matching, byField)
     val ct = GraftLake.ChangeTypeCol
-    def changesOf(matching: DataFrame): DataFrame = {
-      // project away the generated partition columns the internal scan
-      // carries — change rows hold exactly the table's columns
-      val pre = matching
-        .select(logicalFields.fieldNames.map(n => col(quoted(n))).toSeq: _*)
-      pre.withColumn(ct, lit("update_preimage")).unionByName(
-        applyAssigns(matching).withColumn(ct, lit("update_postimage")))
-    }
+    val changes = Some(
+      if (byField.isEmpty) matching.withColumn(ct, lit("delete"))
+      else assign(meta, matching, Map.empty).withColumn(ct, lit("update_preimage"))
+        .unionByName(post.withColumn(ct, lit("update_postimage"))))
     if (partCols.isEmpty) {
-      replaceScoped(name, updCols(masked), Nil, clearDvs = true,
-        changes = Some(changesOf(masked.filter(hit))))
+      if (!matching.isEmpty)
+        replaceScoped(name, rewritten(live), Nil, clearDvs = true, changes = changes)
     } else {
-      val matching = masked.filter(hit)
-      val srcParts = matching
-        .select(partCols.map(c => col(quoted(c))): _*).distinct()
-      val destParts = withPartitionCols(applyAssigns(matching), meta)
-        .select(partCols.map(c => col(quoted(c))): _*).distinct()
-      val parts = srcParts.union(destParts).distinct().collect()
-      if (parts.isEmpty) return
-      val scoped = masked.filter(GraftLake.partitionScope(partCols, parts))
-      // dirs from the DV-free scan: input_file_name over `scoped` (which
-      // carries the DV anti-join when DVs are live) has two file sources
-      val dirs = partitionDirsFor(name, partCols, parts)
-      replaceScoped(name, updCols(scoped), dirs,
-        changes = Some(changesOf(matching)))
+      def partsOf(df: DataFrame) = df.select(partCols.map(c => col(quoted(c))): _*)
+      val moved = if (byField.isEmpty) Nil else Seq(partsOf(withPartitionCols(post, meta)))
+      val parts = (partsOf(matching) +: moved).reduce(_ union _).distinct().collect()
+      if (parts.nonEmpty)
+        replaceScoped(name,
+          rewritten(live.filter(GraftLake.partitionScope(partCols, parts))),
+          partitionDirsFor(name, partCols, parts), changes = changes)
     }
   }
+
+  /** UPDATE assignments keyed by the LOGICAL column name they resolve to
+    * (case-insensitively), each cast to its column's landed type. */
+  private def landedAssignments(name: String, meta: TableMeta,
+      assignments: Map[String, Column]): Map[String, Column] = {
+    val logicalFields = GraftLake.logicalSchema(meta.schema)
+    assignments.map { case (k, v) =>
+      val field = logicalFields.fields.find(_.name.equalsIgnoreCase(k))
+        .getOrElse(throw new IllegalArgumentException(
+          s"table '$name' has no column '$k'"))
+      require(!field.name.equalsIgnoreCase(InsertedAtCol),
+        s"'$InsertedAtCol' is engine-managed and cannot be assigned")
+      field.name -> v.cast(field.dataType)
+    }
+  }
+
+  /** `df` on the table's logical columns, each column of `byField`
+    * taking its value. */
+  private def assign(meta: TableMeta, df: DataFrame,
+      byField: Map[String, Column]): DataFrame =
+    df.select(GraftLake.logicalSchema(meta.schema).fieldNames.toSeq.map(n =>
+      byField.getOrElse(n, col(quoted(n))).as(n)): _*)
 
   // ---- per-file bloom skipping index ----
 
@@ -1865,19 +1800,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
         return
       }
       val dirs = rels.map(r => s"${dataDir(name)}/$r")
-      val keyC = "__graft_dv_key"
-      val posC = "__graft_dv_pos"
-      // one projection over the scan for BOTH metadata derivations, then
-      // scope + anti-join on those materialized columns
-      val keyed = readInternal(name, meta).withColumns(Map(
-        keyC -> GraftLake.dvKeyColumn(partDepth),
-        posC -> col("_metadata.row_index")))
-      val scoped = keyed.filter(
+      // scope + anti-join on the materialized key columns
+      val scoped = withDvKeys(readInternal(name, meta), partDepth).filter(
         substring_index(col(keyC), "/", partDepth).isin(rels: _*))
-      val dv = dvFrame(name, dvs)
-      val survivors = scoped.join(broadcast(dv),
-          scoped(keyC) === dv("file_key") && scoped(posC) === dv("pos"),
-          "left_anti")
+      val survivors = dvAntiJoin(scoped, dvFrame(name, dvs), broadcastDv = true)
         .drop(keyC, posC)
       replaceScoped(name, survivors, dirs, clearDvs = true)
     }
@@ -3684,7 +3610,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * covered — a partition whose rows all vanish has no staged leaf but
     * must still be cleared). Unpartitioned tables replace the whole file
     * set, so `survivors` must then be the full remaining table.
-    * Engine-internal support for the SQL DELETE/UPDATE rewrites.
+    * Engine-internal support for [[rewriteWhere]], MERGE and replication.
     *
     * `changes`: the rewrite's row-level change rows (table columns +
     * `_change_type`), published as write-time change files in the same
@@ -6351,12 +6277,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
       val idx = k.lastIndexOf('/')
       if (idx < 0) ("", k) else (k.substring(0, idx), k.substring(idx + 1))
     })
-    val keyC = "__graft_cf_key"
-    val posC = "__graft_cf_pos"
-    val keyed = spark.read.schema(schema).parquet(paths: _*)
-      .withColumns(Map(
-        keyC -> GraftLake.dvKeyColumn(partDepth),
-        posC -> col("_metadata.row_index")))
+    val keyed = withDvKeys(spark.read.schema(schema).parquet(paths: _*), partDepth)
     // the UNCACHED count: the per-table cache slot holds the LIVE DV
     // set's count, and a feed window's subset must not evict it (an
     // incremental consumer would force a recount on every live read)

@@ -410,7 +410,7 @@ object AnalyticsOps {
           clearDvs = true) // full file-set replace: every DV entry is inert
       else {
         // scope the rewrite to partitions that actually hold deleted keys
-        // (same shape as the SQL DELETE rewrite): survivors of those
+        // (same shape as GraftLake.rewriteWhere): survivors of those
         // partitions replace them; the rest of the table is untouched.
         // read() drops the derived __p_* columns, so recompute them the
         // way every write path does

@@ -194,8 +194,9 @@ object MergeSqlOps {
       .orderBy(col("y"))
   }
 
-  /** SQL DELETE on a partitioned table (partition-scoped copy-on-write
-    * rewrite — only partitions holding matching rows are touched). */
+  /** SQL DELETE on a partitioned table: the engine's `deleteWhere` route
+    * (a deletion vector over the partial hit set; no data file is
+    * rewritten). */
   val q62DeleteSql = QueryDef(
     "q62_delete_sql",
     """WITH h AS (SELECT max(o_orderkey) / 2 AS v FROM orders),
@@ -218,9 +219,10 @@ object MergeSqlOps {
       .orderBy(col("o_orderkey"))
   }
 
-  /** SQL UPDATE that relocates rows across partitions (the updated
-    * partition-source column moves matching rows into the 'MOVED'
-    * partition; old-row semantics for the arithmetic RHS). */
+  /** SQL UPDATE that relocates rows across partitions through the
+    * engine's `updateWhere` route (the updated partition-source column
+    * lands matching rows in the 'MOVED' partition while a deletion vector
+    * masks the old copies; old-row semantics for the arithmetic RHS). */
   val q63UpdateSql = QueryDef(
     "q63_update_sql",
     """WITH h AS (SELECT max(o_orderkey) / 2 AS v FROM orders),

@@ -431,16 +431,18 @@ object PipelineOps {
   }
 
   /** q168: CDC THROUGH REWRITE-CLASS COMMITS — the change feed streams a
-    * MERGE/upsert window, a copy-on-write UPDATE and a copy-on-write
-    * DELETE exactly, because the table has write-time change capture on
-    * (`graft.enableChangeDataFeed`): each rewriting commit publishes its
-    * row-level change set under `_changes/` in the same manifest commit
-    * (the Delta `_change_data` mechanism), and the `feed=cdf` source
-    * reads those files verbatim — O(changed rows) per epoch, where
-    * round-11 semantics failed fast on the reference's CORE workload
-    * (PK upsert, DucklakeWriterMergeTest.java:119-148). Commit ids are
-    * deterministic (v0 seed, v1 upsert, v2 COW update, v3 COW delete),
-    * which lets plain SQL reproduce the whole feed for the oracle. */
+    * MERGE/upsert window, a SQL UPDATE and a SQL DELETE exactly. The
+    * upsert rewrites files, and the table has write-time change capture
+    * on (`graft.enableChangeDataFeed`): the commit publishes its row-level
+    * change set under `_changes/` in the same manifest commit (the Delta
+    * `_change_data` mechanism), and the `feed=cdf` source reads those
+    * files verbatim — O(changed rows) per epoch, where round-11 semantics
+    * failed fast on the reference's CORE workload (PK upsert,
+    * DucklakeWriterMergeTest.java:119-148). The UPDATE and DELETE take
+    * the engine's deletion-vector route, whose commits the feed
+    * attributes from their DV entries and added files. Commit ids are
+    * deterministic (v0 seed, v1 upsert, v2 update, v3 delete), which lets
+    * plain SQL reproduce the whole feed for the oracle. */
   val q168StreamCdcRewrites = QueryDef(
     "q168_stream_cdc_rewrites",
     """WITH base AS (SELECT o_orderkey AS id, o_orderstatus AS st,
@@ -457,7 +459,7 @@ object PipelineOps {
     val base = Tables.orders(s, dir).filter(col("o_orderkey") % 8 === 4)
       .select(col("o_orderkey").as("id"), col("o_orderstatus").as("st"),
         round(col("o_totalprice"), 2).as("price"))
-    // catalog registration: the COW UPDATE/DELETE run as literal SQL
+    // catalog registration: the UPDATE/DELETE run as literal SQL
     val catKey = "spark.sql.catalog.gcdc"
     if (s.conf.getOption(s"$catKey.warehouse").isEmpty) {
       s.conf.set(catKey, classOf[graft.catalog.GraftCatalog].getName)
@@ -485,10 +487,11 @@ object PipelineOps {
       lake.upsert("cdc_rw",
         base.filter(col("id") % 32 === 4).withColumn("st", lit("UU"))
           .unionByName(base.filter(col("id") % 16 === 12)))
-      // v2 — copy-on-write UPDATE (no merge-on-read mode set)
+      // v2 — UPDATE: a deletion vector masks the old rows, the new ones
+      // append, one commit
       s.sql("UPDATE gcdc.cdc_rw SET price = price + 10 WHERE id % 32 = 20")
-      // v3 — copy-on-write DELETE (interleaved keys: not provable
-      // metadata-only, so the rewrite path with change capture runs)
+      // v3 — DELETE (interleaved keys: not provable metadata-only, so a
+      // deletion vector masks the hits)
       s.sql("DELETE FROM gcdc.cdc_rw WHERE id % 32 = 12")
       q.processAllAvailable()
     } finally q.stop()

@@ -2,21 +2,20 @@ package graft.plans
 
 import graft.catalog.GraftLake
 
-import org.apache.hadoop.fs.Path
-
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression}
+import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, LogicalPlan}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
-import org.apache.spark.sql.internal.SQLConf
 
-/** SQL `DELETE FROM` over a graft table: partition-scoped copy-on-write.
-  * Affected partitions are discovered from the rows matching the
-  * condition; only those partitions are rewritten (survivors staged +
-  * directory swap). Unpartitioned tables rewrite the whole file set —
-  * same degradation as the engine upsert, documented there. */
+/** SQL `DELETE FROM` over a graft table: [[GraftLake.deleteWhere]], which
+  * drops provable files metadata-only, masks a partial hit set with a
+  * deletion vector, and folds an oversized one copy-on-write. A condition
+  * carrying a subquery (IN/EXISTS/scalar) rewrites copy-on-write over the
+  * target plan instead ([[GraftLake.rewriteWhere]]): `byNameColumn` only
+  * retargets top-level attribute references, so a resolved subquery would
+  * carry stale attribute ids into the engine scan's re-resolution. */
 final case class GraftDeleteCommand(
     warehouse: String,
     table: String,
@@ -28,69 +27,20 @@ final case class GraftDeleteCommand(
   override def run(spark: SparkSession): Seq[Row] = {
     val cond = shielded.expr
     val lake = new GraftLake(spark, warehouse)
-    // merge-on-read mode: write a deletion vector instead of rewriting
-    // files — `SET spark.graft.delete.mode=merge-on-read` (Delta's
-    // deletion-vector switch, same trade: no COW, reads anti-join).
-    // Subquery conditions (IN/EXISTS/scalar) fall back to copy-on-write:
-    // byNameColumn only retargets top-level attribute references, so a
-    // resolved subquery plan would carry stale attribute ids into
-    // deleteWhere's re-resolution — the COW path below re-analyzes the
-    // whole target plan and handles them correctly.
-    val hasSubquery = cond.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression])
-    if (!hasSubquery && spark.conf.getOption("spark.graft.delete.mode")
-        .contains("merge-on-read")) {
-      // deleteWhere runs the metadata-only proof internally before its
-      // DV path — no separate probe, the proof runs exactly once
-      lake.deleteWhere(table, PlanBridge.byNameColumn(cond))
-      return Seq.empty
-    }
-    // default copy-on-write: a provable whole-file drop (metadata-only
-    // commit, no scan, no DV, no rewrite) is strictly better — probe it
-    // first; the retention shape (`DELETE WHERE date < X` on partitioned
-    // data) must not pay a rewrite just because no mode was configured
-    if (!hasSubquery && lake.deleteWhereMetadataOnly(
-        table, PlanBridge.byNameColumn(cond)).isDefined)
-      return Seq.empty
-    val meta = lake.readMeta(table)
-    val tdf = PlanBridge.ofRows(spark, target)
-    // DELETE removes rows where the condition IS TRUE; null-valued
-    // conditions keep the row
-    val hit = coalesce(PlanBridge.column(cond), lit(false))
-    val partCols = meta.partitionExprs.map(_.outputName)
-    // write-time change capture (CDF-enabled tables): the deleted rows
-    // are the hit set the command already computes — published by
-    // replaceScoped in the same commit
-    def deleted(df: org.apache.spark.sql.DataFrame) = Some(df.filter(hit)
-      .withColumn(GraftLake.ChangeTypeCol, lit("delete")))
-    if (partCols.isEmpty) {
-      // no-op guard: a condition matching nothing must not trigger a
-      // full-table rewrite (the partitioned branch early-exits via scope)
-      // clearDvs: the whole file set is replaced (tdf reads THROUGH any
-      // live DVs), so every DV entry is inert — dropping them restores
-      // the plain pruned DSv2 scan instead of pinning the DV plan forever
-      if (!tdf.filter(hit).isEmpty)
-        lake.replaceScoped(table, tdf.filter(!hit), Nil, clearDvs = true,
-          changes = deleted(tdf))
-    } else {
-      GraftDml.scope(tdf, tdf.filter(hit), partCols) match {
-        case None => () // nothing matches — no partition touched
-        case Some((scoped, parts)) =>
-          lake.replaceScoped(table, scoped.filter(!hit),
-            lake.partitionDirsFor(table, partCols, parts),
-            changes = deleted(scoped))
-      }
-    }
+    if (GraftDml.hasSubquery(Seq(cond)))
+      lake.rewriteWhere(table, PlanBridge.ofRows(spark, target),
+        GraftDml.hit(Some(cond)), Map.empty)
+    else lake.deleteWhere(table, PlanBridge.byNameColumn(cond))
     Seq.empty
   }
 }
 
-/** SQL `UPDATE` over a graft table: partition-scoped copy-on-write. All
-  * assignment right-hand sides evaluate against the OLD row
-  * (simultaneous-assignment semantics). Scope = partitions holding
-  * matching rows ∪ partitions the updated rows move into (an update of a
-  * partition-source column relocates rows; the destination partitions
-  * must be rewritten too so the staged swap keeps their existing rows). */
+/** SQL `UPDATE` over a graft table: [[GraftLake.updateWhere]], which masks
+  * the old rows with a deletion vector and appends the updated ones in one
+  * commit, or folds an oversized hit set copy-on-write. All assignment
+  * right-hand sides evaluate against the OLD row (simultaneous-assignment
+  * semantics). A subquery in the condition or an assignment rewrites
+  * copy-on-write over the target plan, as for DELETE above. */
 final case class GraftUpdateCommand(
     warehouse: String,
     table: String,
@@ -104,82 +54,20 @@ final case class GraftUpdateCommand(
     val assignments = shieldedAssigns.assigns
     val cond = shieldedCond.map(_.expr)
     val lake = new GraftLake(spark, warehouse)
-    // merge-on-read mode: mask the old rows with a deletion vector and
-    // re-insert the updated rows in one commit instead of rewriting
-    // partitions — `SET spark.graft.update.mode=merge-on-read`. Subquery
-    // conditions/assignments fall back to copy-on-write (byNameColumn
-    // only retargets top-level attribute references; same reasoning as
-    // the DELETE command above).
-    val hasSubquery = (cond.toSeq ++ assignments.map(_.value)).exists(_.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression]))
-    if (!hasSubquery && spark.conf.getOption("spark.graft.update.mode")
-        .contains("merge-on-read")) {
-      val assignByName = assignments.map {
-        case Assignment(k: Attribute, v) =>
-          if (k.name.startsWith("__p_")) throw new UnsupportedOperationException(
-            s"UPDATE of generated partition column '${k.name}' — update the source column instead")
-          k.name -> PlanBridge.byNameColumn(v)
-        case Assignment(k, _) => throw new UnsupportedOperationException(
-          s"UPDATE with nested-field assignment '${k.sql}' is not supported")
-      }.toMap
-      lake.updateWhere(table,
-        cond.map(PlanBridge.byNameColumn).getOrElse(lit(true)), assignByName)
-      return Seq.empty
-    }
-    val meta = lake.readMeta(table)
-    val tdf = PlanBridge.ofRows(spark, target)
-    val hit = cond.map(c => coalesce(PlanBridge.column(c), lit(false)))
-      .getOrElse(lit(true))
-    val assignByName: Map[String, Column] = assignments.map {
+    def byName(value: Expression => Column): Map[String, Column] = assignments.map {
       case Assignment(k: Attribute, v) =>
         if (k.name.startsWith("__p_")) throw new UnsupportedOperationException(
           s"UPDATE of generated partition column '${k.name}' — update the source column instead")
-        val dt = GraftLake.logicalSchema(meta.schema).fields.find(_.name.equalsIgnoreCase(k.name))
-          .map(_.dataType).getOrElse(k.dataType)
-        val castV = if (PlanBridge.sameType(v.dataType, dt)) v
-          else Cast(v, dt, Option(SQLConf.get.sessionLocalTimeZone))
-        k.name.toLowerCase -> PlanBridge.column(castV)
+        k.name -> value(v)
       case Assignment(k, _) => throw new UnsupportedOperationException(
         s"UPDATE with nested-field assignment '${k.sql}' is not supported")
     }.toMap
-    def updatedCols(df: DataFrame): DataFrame =
-      df.select(GraftLake.logicalSchema(meta.schema).fieldNames.toSeq.map { n =>
-        assignByName.get(n.toLowerCase) match {
-          case Some(v) => when(hit, v).otherwise(col(GraftLake.quoted(n))).as(n)
-          case None => col(GraftLake.quoted(n))
-        }
-      }: _*)
-    val partCols = meta.partitionExprs.map(_.outputName)
-    // write-time change capture (CDF-enabled tables): the matching rows
-    // are the preimages, their updated projection the postimages —
-    // published by replaceScoped in the same commit
-    def changesOf(matching: DataFrame): Option[DataFrame] = {
-      val ct = GraftLake.ChangeTypeCol
-      val pre = matching.select(GraftLake.logicalSchema(meta.schema)
-        .fieldNames.toSeq.map(n => col(GraftLake.quoted(n))): _*)
-      Some(pre.withColumn(ct, lit("update_preimage")).unionByName(
-        updatedCols(matching).withColumn(ct, lit("update_postimage"))))
-    }
-    if (partCols.isEmpty) {
-      // clearDvs: full file-set replace, same reasoning as DELETE above
-      if (!tdf.filter(hit).isEmpty)
-        lake.replaceScoped(table, updatedCols(tdf), Nil, clearDvs = true,
-          changes = changesOf(tdf.filter(hit)))
-    } else {
-      val matching = tdf.filter(hit)
-      val srcParts = matching
-        .select(partCols.map(c => col(GraftLake.quoted(c))): _*).distinct()
-      // destination partitions: recompute partition expressions over the
-      // updated column values of the matching rows
-      val destParts = lake.withPartitionCols(updatedCols(matching), meta)
-        .select(partCols.map(c => col(GraftLake.quoted(c))): _*).distinct()
-      val parts = srcParts.union(destParts).distinct().collect()
-      if (parts.isEmpty) return Seq.empty
-      val scoped = tdf.filter(GraftLake.partitionScope(partCols, parts))
-      lake.replaceScoped(table, updatedCols(scoped),
-        lake.partitionDirsFor(table, partCols, parts),
-        changes = changesOf(matching))
-    }
+    if (GraftDml.hasSubquery(cond.toSeq ++ assignments.map(_.value)))
+      lake.rewriteWhere(table, PlanBridge.ofRows(spark, target),
+        GraftDml.hit(cond), byName(PlanBridge.column))
+    else lake.updateWhere(table,
+      cond.map(PlanBridge.byNameColumn).getOrElse(lit(true)),
+      byName(PlanBridge.byNameColumn))
     Seq.empty
   }
 }
@@ -198,17 +86,11 @@ private[plans] object GraftDml {
   final case class Shielded(expr: Expression)
   final case class ShieldedAssignments(assigns: Seq[Assignment])
 
-  /** Scope a partitioned rewrite to the partitions containing `matching`
-    * rows: returns (scoped target rows, the matching partition-value
-    * rows), or None when nothing matches. Callers resolve the value rows
-    * to directories via [[GraftLake.partitionDirsFor]] — a DV-free scan,
-    * because `input_file_name` over a DV-masked target plan (two file
-    * sources) is rejected by Spark. */
-  def scope(tdf: DataFrame, matching: DataFrame, partCols: Seq[String])
-      : Option[(DataFrame, Array[Row])] = {
-    val parts = matching
-      .select(partCols.map(c => col(GraftLake.quoted(c))): _*).distinct().collect()
-    if (parts.isEmpty) None
-    else Some((tdf.filter(GraftLake.partitionScope(partCols, parts)), parts))
-  }
+  def hasSubquery(es: Seq[Expression]): Boolean =
+    es.exists(_.exists(_.isInstanceOf[SubqueryExpression]))
+
+  /** The rows a DML statement touches: those whose condition IS TRUE (a
+    * null-valued condition keeps the row); every row without one. */
+  def hit(cond: Option[Expression]): Column =
+    cond.map(c => coalesce(PlanBridge.column(c), lit(false))).getOrElse(lit(true))
 }

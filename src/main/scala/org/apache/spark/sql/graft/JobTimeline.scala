@@ -56,10 +56,11 @@ object JobTimeline {
   }
 
   /** Whether a stack frame is engine code: `graft.*`, but neither this
-    * trace nor the `graft.perf` tool that reads it. */
+    * trace (frames of `JobTimeline$` and its nested classes) nor the
+    * `graft.perf` tool that reads it. */
   def isEngineFrame(frame: String): Boolean =
     frame.contains("graft.") && !frame.contains("graft.perf.") &&
-      !frame.contains("JobTimeline")
+      !frame.contains(getClass.getName)
 
   /** The first engine frame of the submitting thread's call site (carried
     * through SQL execution threads), else of the last stage's, else of the

@@ -79,8 +79,10 @@ object PlanBridge {
   /** Re-target a RESOLVED predicate at a different DataFrame by column
     * NAME: every bound AttributeReference becomes an UnresolvedAttribute,
     * so the returned Column re-resolves against whatever frame it is
-    * applied to (the SQL merge-on-read DELETE hands its condition to the
-    * engine's own scan this way). */
+    * applied to (SQL `DELETE`/`UPDATE` hand their conditions and
+    * assignments to the engine's own scan this way). A resolved subquery
+    * is not retargeted: its plan keeps the attribute ids it was bound
+    * to. */
   def byNameColumn(e: Expression): Column = column(e.transform {
     case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
       org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(a.name)

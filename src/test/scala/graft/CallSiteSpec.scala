@@ -15,6 +15,16 @@ class CallSiteSpec extends AnyFunSuite {
   private def unnamed(jobs: Seq[JobTimeline.Job]): Seq[JobTimeline.Job] =
     jobs.filterNot(j => JobTimeline.isEngineFrame(j.site))
 
+  test("isEngineFrame drops only JobTimeline's own frames, not a caller named like it") {
+    assert(JobTimeline.isEngineFrame(
+      "graft.catalog.JobTimelineProbe.run(JobTimelineProbe.scala:12)"))
+    assert(!JobTimeline.isEngineFrame(
+      "org.apache.spark.sql.graft.JobTimeline$.record(JobTimeline.scala:52)"))
+    assert(!JobTimeline.isEngineFrame(
+      "org.apache.spark.sql.graft.JobTimeline$$anon$1.onJobStart(JobTimeline.scala:45)"))
+    assert(!JobTimeline.isEngineFrame("graft.perf.Perf$.main(Perf.scala:30)"))
+  }
+
   test("a broadcast-exchange job names the engine frame of its SQL execution") {
     val small = (1 to 10).map(i => (i.toLong, s"n$i")).toDF("id", "name")
     val (n, jobs) = JobTimeline.record(spark.sparkContext) {

@@ -166,14 +166,11 @@ class DeletionVectorSpec extends AnyFunSuite {
       // aggregate through the DV plan
       assert(spark.sql("SELECT count(*) FROM dvcat.t").head().getLong(0) === 2)
       // SQL merge-on-read DELETE
-      spark.conf.set("spark.graft.delete.mode", "merge-on-read")
-      try {
-        val files = lake.dataFiles("t").sorted
-        spark.sql("DELETE FROM dvcat.t WHERE id = 3")
-        assert(lake.dataFiles("t").sorted === files, "MOR SQL delete: no rewrite")
-        assert(spark.sql("SELECT id FROM dvcat.t").collect()
-          .map(_.getInt(0)).toSeq === Seq(1))
-      } finally spark.conf.unset("spark.graft.delete.mode")
+      val files = lake.dataFiles("t").sorted
+      spark.sql("DELETE FROM dvcat.t WHERE id = 3")
+      assert(lake.dataFiles("t").sorted === files, "MOR SQL delete: no rewrite")
+      assert(spark.sql("SELECT id FROM dvcat.t").collect()
+        .map(_.getInt(0)).toSeq === Seq(1))
       // copy-on-write SQL DELETE on a DV-carrying table must not resurrect
       spark.sql("DELETE FROM dvcat.t WHERE id = 1")
       assert(spark.sql("SELECT count(*) FROM dvcat.t").head().getLong(0) === 0)
@@ -256,19 +253,17 @@ class DeletionVectorSpec extends AnyFunSuite {
       assert(spark.sql(
         "SELECT id FROM dvw.u WHERE id IN (SELECT id FROM dvw.t) ORDER BY id")
         .collect().map(_.getInt(0)).toSeq === Seq(3))
-      // merge-on-read DELETE whose condition carries a subquery: falls
-      // back to copy-on-write (byName retargeting can't carry a resolved
-      // subquery), same results
-      spark.conf.set("spark.graft.delete.mode", "merge-on-read")
-      try {
-        spark.sql("DELETE FROM dvw.u WHERE id IN (SELECT id FROM dvw.t)")
-        assert(spark.sql("SELECT id FROM dvw.u ORDER BY id").collect()
-          .map(_.getInt(0)).toSeq === Seq(2, 4))
-      } finally spark.conf.unset("spark.graft.delete.mode")
-      // copy-on-write SQL DELETE is a full file-set replace on an
-      // unpartitioned table: it must CLEAR the now-inert DV entries,
-      // restoring the plain pruned DSv2 scan
-      spark.sql("DELETE FROM dvw.t WHERE id = 9")
+      // a DELETE whose condition carries a subquery rewrites copy-on-write
+      // (byName retargeting can't carry a resolved subquery), same results
+      spark.sql("DELETE FROM dvw.u WHERE id IN (SELECT id FROM dvw.t)")
+      assert(spark.sql("SELECT id FROM dvw.u ORDER BY id").collect()
+        .map(_.getInt(0)).toSeq === Seq(2, 4))
+      // copy-on-write SQL DELETE (the fold, forced by a zero DV budget) is
+      // a full file-set replace on an unpartitioned table: it must CLEAR
+      // the now-inert DV entries, restoring the plain pruned DSv2 scan
+      spark.conf.set("spark.graft.dv.maxEntries", "0")
+      try spark.sql("DELETE FROM dvw.t WHERE id = 9")
+      finally spark.conf.unset("spark.graft.dv.maxEntries")
       assert(lake.liveDvs("t").isEmpty,
         "full-table COW rewrite must clear inert DV entries")
       assert(spark.sql("SELECT id FROM dvw.t ORDER BY id").collect()
@@ -432,7 +427,6 @@ class DeletionVectorSpec extends AnyFunSuite {
     val wh = lake.warehouseDir
     spark.conf.set("spark.sql.catalog.dvu", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.dvu.warehouse", wh)
-    spark.conf.set("spark.graft.update.mode", "merge-on-read")
     try {
       lake.write("t", Seq((1, 10), (2, 20), (3, 30)).toDF("id", "n"))
       val files = lake.dataFiles("t").toSet
@@ -446,7 +440,6 @@ class DeletionVectorSpec extends AnyFunSuite {
       assert(rows(lake.read("t"), "id", "n") ===
         Set(Seq(1, 0), Seq(2, 40), Seq(3, 60)))
     } finally {
-      spark.conf.unset("spark.graft.update.mode")
       spark.conf.unset("spark.sql.catalog.dvu")
       spark.conf.unset("spark.sql.catalog.dvu.warehouse")
     }

@@ -197,10 +197,13 @@ class MetadataDeleteSpec extends AnyFunSuite {
     lake.write("p", (1 to 10).map(i => (i, i % 2)).toDF("id", "seg")
       .repartition(1), partitions = Seq("seg"))
     assert(lake.deleteWhere("p", col("id") === 3) === 1L) // a live DV
-    // partition-scoped COW DELETE of everything: % is unprovable (no
-    // metadata drop) and the partitioned COW path keeps clearDvs=false,
-    // leaving the table file-less with the sidecar STRANDED live
-    spark.sql(s"DELETE FROM $cat.p WHERE id % 1 = 0")
+    // partition-scoped COW DELETE of everything (the fold, forced by a
+    // zero DV budget): % is unprovable (no metadata drop) and the
+    // partitioned COW path keeps clearDvs=false, leaving the table
+    // file-less with the sidecar STRANDED live
+    spark.conf.set("spark.graft.dv.maxEntries", "0")
+    try spark.sql(s"DELETE FROM $cat.p WHERE id % 1 = 0")
+    finally spark.conf.unset("spark.graft.dv.maxEntries")
     assert(lake.dataFiles("p").isEmpty)
     assert(lake.liveDvs("p").nonEmpty,
       "scenario setup: the partition-scoped rewrite strands the inert DV")
@@ -226,10 +229,12 @@ class MetadataDeleteSpec extends AnyFunSuite {
     lake.write("p", (1 to 8).map(i => (i, i % 2, i * 10)).toDF("id", "seg", "n")
       .repartition(1), partitions = Seq("seg"))
     assert(lake.deleteWhere("p", col("id") === 2) === 1L) // live DV
-    // the partition-dir resolution must come from a DV-FREE scan:
-    // input_file_name over the DV-masked target plan (two file sources)
-    // used to throw MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION here
-    spark.sql(s"UPDATE $cat.p SET n = n + 1 WHERE id % 2 = 1")
+    // a subquery condition takes the SQL COW rewrite over the DV-masked
+    // target plan; the partition-dir resolution must come from a DV-FREE
+    // scan: input_file_name over the DV-masked target plan (two file
+    // sources) used to throw MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION here
+    spark.sql(s"UPDATE $cat.p SET n = n + 1 WHERE id % 2 = 1 AND " +
+      "id IN (SELECT id FROM range(1, 9))")
     val rows = spark.sql(s"SELECT id, n FROM $cat.p ORDER BY id").collect()
       .map(r => (r.getInt(0), r.getInt(1)))
     assert(rows.toSeq === Seq((1, 11), (3, 31), (4, 40), (5, 51), (6, 60),
@@ -295,8 +300,8 @@ class MetadataDeleteSpec extends AnyFunSuite {
     val wh = Files.createTempDirectory("graft-mdcat").toString
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    // deliberately NO spark.graft.delete.mode: the copy-on-write default
-    // must still probe the metadata-only drop before rewriting anything
+    // SQL DELETE takes the engine's route: the metadata-only drop is
+    // probed before any scan, DV or rewrite
     val lake = new GraftLake(spark, wh)
     lake.append("t", (1 to 60).map(i => (i, i)).toDF("id", "n").repartition(1))
     lake.append("t", (61 to 120).map(i => (i, i)).toDF("id", "n").repartition(1))
@@ -309,12 +314,9 @@ class MetadataDeleteSpec extends AnyFunSuite {
     assert(lake.history("t").collect().last.getString(2) === "delete",
       "a remove-only delete commit, not a replace-scoped rewrite")
     assert(spark.sql(s"SELECT count(*) FROM $cat.t").head().getLong(0) === 60L)
-    // the merge-on-read route still fast-paths too
-    spark.conf.set("spark.graft.delete.mode", "merge-on-read")
-    try {
-      spark.sql(s"DELETE FROM $cat.t WHERE id > 60")
-      assert(lake.liveDvs("t").isEmpty && lake.dataFiles("t").isEmpty)
-    } finally spark.conf.unset("spark.graft.delete.mode")
+    // a second provable DELETE fast-paths too
+    spark.sql(s"DELETE FROM $cat.t WHERE id > 60")
+    assert(lake.liveDvs("t").isEmpty && lake.dataFiles("t").isEmpty)
   }
 
   test("a retirement that strands a file fails naming it and repairTable") {

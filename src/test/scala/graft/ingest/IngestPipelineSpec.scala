@@ -13,13 +13,17 @@ class IngestPipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  // streaming tests wait in processAllAvailable for the next trigger; the
+  // default 60 s ProcessingTime interval would idle each of them
+  private val ShortTriggerMs = 100L
+
   private def newPipeline(
       pks: Map[String, Seq[String]] = Map.empty,
       partitions: Map[String, Seq[String]] = Map.empty): IngestPipeline = {
     graft.catalog.GraftLake.invalidateCaches()
     new IngestPipeline(spark, IngestConfig(
       warehouse = Files.createTempDirectory("graft-ingest").toString,
-      pks = pks, partitions = partitions))
+      pks = pks, partitions = partitions, triggerMs = ShortTriggerMs))
   }
 
   private def batchOf(records: (String, String)*) =
@@ -591,7 +595,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     new IngestPipeline(spark, IngestConfig(
       warehouse = Files.createTempDirectory("graft-dedup").toString,
       dedup = Map("d" -> DedupConfig("doc_id", "text", threshold = 0.8,
-        dropDups = dropDups))))
+        dropDups = dropDups)), triggerMs = ShortTriggerMs))
   }
 
   private def doc(id: Int, text: String) = s"""{"doc_id":$id,"text":"$text"}"""

@@ -25,7 +25,7 @@ class KafkaSourceSpec extends AnyFunSuite {
   private def newPipeline(maxOffsets: Option[Long] = None): IngestPipeline =
     new IngestPipeline(spark, IngestConfig(
       warehouse = Files.createTempDirectory("graft-kafka").toString,
-      maxOffsetsPerTrigger = maxOffsets))
+      maxOffsetsPerTrigger = maxOffsets, triggerMs = 100L))
 
   test("kafkaSource resolves the kafka format (fails here only on the missing connector)") {
     assume(!connectorPresent, "connector present — covered by the e2e test")

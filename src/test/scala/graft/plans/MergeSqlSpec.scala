@@ -279,7 +279,10 @@ class MergeSqlSpec extends AnyFunSuite {
       .listFiles()).map(_.map(_.getName).toSet).getOrElse(Set.empty[String])
     val beforeA = files("A"); val beforeB = files("B")
     assert(beforeA.nonEmpty && beforeB.nonEmpty)
-    spark.sql("DELETE FROM gmt.d1 WHERE x < 8 AND seg <> 'B'")
+    // the copy-on-write fold, forced by a zero DV budget
+    spark.conf.set("spark.graft.dv.maxEntries", "0")
+    try spark.sql("DELETE FROM gmt.d1 WHERE x < 8 AND seg <> 'B'")
+    finally spark.conf.unset("spark.graft.dv.maxEntries")
     val got = lake.read("d1").orderBy("id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got === Seq((2L, "A"), (3L, "B"), (4L, "C")))
