@@ -1033,10 +1033,13 @@ final class GraftLake(private[graft] val spark: SparkSession,
   /** The live rows of `name` through a manifest-pruned scan, with the DV
     * key/position metadata columns ([[keyC]]/[[posC]]) attached and any
     * live deletion vectors already anti-joined away — the shared front
-    * half of every merge-on-read DML. None when the table is not
-    * file-backed (nothing to mask positionally). */
-  private def liveKeyedScanLocked(name: String, meta: TableMeta)
-      : Option[DataFrame] = {
+    * half of every merge-on-read DML. `keep` narrows the manifest's
+    * (rel dir, file name) set the scan plans (a table without commits
+    * reads whole, so a caller needing an exact file set still filters
+    * on [[keyC]]). None when the table is not file-backed (nothing to
+    * mask positionally). */
+  private def liveKeyedScanLocked(name: String, meta: TableMeta,
+      keep: ((String, String)) => Boolean = _ => true): Option[DataFrame] = {
     val partDepth = meta.partitionExprs.size
     // manifest-driven pruning scan when the table has commits: a
     // selective MoR DML on a 100 TB table plans only the files whose
@@ -1051,7 +1054,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
         val files =
           if (cached != null && cached._1 == v) cached._2
           else resolveManifest(name, v)._2
-        val paths = files.map { case (rel, fn) =>
+        val paths = files.filter(keep).map { case (rel, fn) =>
           if (rel.isEmpty) s"${dataDir(name)}/$fn"
           else s"${dataDir(name)}/$rel/$fn"
         }
@@ -1197,11 +1200,13 @@ final class GraftLake(private[graft] val spark: SparkSession,
           .groupBy(col("file_key"))
           .agg(count(lit(1)).as("n"), collect_set(col("__dv")).as("srcs"))
           .collect()
+        // DV keys are URI-encoded, manifest keys are not (decodeKey)
         val m = perFile.iterator
-          .filter(r => dropKeys.contains(r.getString(0)))
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
+          .map(r => (GraftLake.decodeKey(r.getString(0)), r))
+          .filter(kr => dropKeys.contains(kr._1))
+          .map(kr => kr._1 -> kr._2.getLong(1)).toMap
         val pinned = perFile.iterator
-          .filter(r => liveKeys.contains(r.getString(0)))
+          .filter(r => liveKeys.contains(GraftLake.decodeKey(r.getString(0))))
           .flatMap(_.getSeq[String](2)).toSet
         (m, dvs0.filterNot(pinned))
       }
@@ -1312,57 +1317,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * (already-deleted rows never re-enter a DV: the hit scan itself reads
     * through the live DVs). */
   def deleteWhere(name: String, predicate: Column): Long = writeLock(name) {
-    val meta = readMeta(name)
-    metadataDeleteLocked(name, meta, predicate) match {
-      case Some(n) => return n
-      case None => ()
-    }
-    val live = liveKeyedScanLocked(name, meta).getOrElse(return 0L)
-    val dvs0 = liveDvs(name)
-    val hits = live.filter(coalesce(predicate, lit(false)))
-      .select(col(keyC).as("file_key"), col(posC).as("pos"))
-    val stage = new Path(s"${tableDir(name)}/.dvstage-${UUID.randomUUID()}")
-    val f = fs(stage)
-    try {
-      // REBALANCE (not repartition(1)): AQE coalesces the staged sidecar
-      // to one file for the typical tiny hit set, while an unexpectedly
-      // huge hit set keeps write parallelism instead of funneling through
-      // a single task — and the scan keeps its full parallelism either
-      // way (coalesce(1) would collapse it into one task). AQE-off
-      // sessions skip the (then-unresolvable) hint and keep the scan's
-      // own partitioning: a few more tiny sidecar files, same contents.
-      val staged =
-        if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
-          hits.hint("rebalance")
-        else hits
-      staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      // discard any stats the session-wide commit protocol collected for
-      // the sidecar (DV files carry no prunable table columns)
-      org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
-      val deleted = spark.read.schema(GraftLake.dvSchema)
-        .parquet(stage.toString).count() // footer row counts only
-      if (deleted == 0L) return 0L
-      if (dvEntryCountCached(name, dvs0) + deleted > dvMaxEntries) {
-        // OVERSIZED hit set: an above-bound DV set must never be
-        // committed — every read until materialization would anti-join
-        // (and force-broadcast) it. Fold the delete copy-on-write
-        // instead, scoped to the partitions that actually hold hits.
-        rewriteWhere(name, live, coalesce(predicate, lit(false)), Map.empty)
-        return deleted
-      }
-      val dd = dvDir(name)
-      f.mkdirs(dd)
-      val names = f.listStatus(stage).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map { s =>
-          val n = s"dv-${UUID.randomUUID()}.parquet"
-          renameOrFail(f, s.getPath, new Path(dd, n))
-          n
-        }
-      commitVersion(name, Nil, Nil, op = "delete", dvAdded = names,
-        assumedLayout = Some(meta.partitions))
-      deleted
-    } finally f.delete(stage, true)
+    metadataDeleteLocked(name, readMeta(name), predicate)
+      .getOrElse(mergeOnReadLocked(name, predicate, Map.empty))
   }
 
   private def dvMaxEntries: Long = spark.conf
@@ -1381,76 +1337,113 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * type; `_inserted_at` is preserved (W5). An update that moves rows
     * across partitions just lands the new rows in their new partitions —
     * the DV masks the old copies in place. Hit sets above
-    * `spark.graft.dv.maxEntries` fold copy-on-write ([[rewriteWhere]]),
-    * scoped to the source ∪ destination partitions. Returns the rows
-    * updated. */
+    * `spark.graft.dv.maxEntries` fold copy-on-write ([[rewriteWhere]]).
+    * Returns the rows updated. */
   def updateWhere(name: String, predicate: Column,
-      assignments: Map[String, Column]): Long = writeLock(name) {
-    val meta = readMeta(name)
+      assignments: Map[String, Column]): Long = {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
+    writeLock(name) { mergeOnReadLocked(name, predicate, assignments) }
+  }
+
+  /** The body of [[deleteWhere]] (`assignments` empty) and
+    * [[updateWhere]]. The hit keys — (file key, row position) of every
+    * live row `predicate` holds TRUE on — are staged once, DV-shaped;
+    * their footer count picks the route. Past `spark.graft.dv.maxEntries`
+    * the statement folds copy-on-write ([[rewriteWhere]]) and the stage,
+    * two narrow columns, is dropped. Otherwise the staged files ARE the
+    * DV sidecar, and an UPDATE first re-inserts the hit rows with the
+    * assignments applied, read back from only the files that hold them
+    * and matched to the staged keys (the predicate is not evaluated a
+    * second time). */
+  private def mergeOnReadLocked(name: String, predicate: Column,
+      assignments: Map[String, Column]): Long = {
+    val meta = readMeta(name)
     // assignments address LOGICAL names and evaluate against the logical
-    // live view; the staged postimages convert back to physical at write
+    // live view; the re-inserted rows convert back to physical at write
     val byField = landedAssignments(name, meta, assignments)
     val live = liveKeyedScanLocked(name, meta).getOrElse(return 0L)
-    val hits = live.filter(coalesce(predicate, lit(false)))
-    val stage = new Path(s"${tableDir(name)}/.updstage-${UUID.randomUUID()}")
+    val hit = coalesce(predicate, lit(false))
+    val stage = new Path(s"${tableDir(name)}/.dvstage-${UUID.randomUUID()}")
     val f = fs(stage)
     try {
-      // stage the FULL hit rows once: the pruned scan runs a single time,
-      // and both the DV sidecar and the re-insert derive from this
-      // hit-sized copy (same rebalance reasoning as deleteWhere)
+      // REBALANCE (not repartition(1)): AQE coalesces the staged sidecar
+      // to one file for the typical tiny hit set, while an unexpectedly
+      // huge hit set keeps write parallelism instead of funneling through
+      // a single task — and the scan keeps its full parallelism either
+      // way (coalesce(1) would collapse it into one task). AQE-off
+      // sessions skip the (then-unresolvable) hint and keep the scan's
+      // own partitioning: a few more tiny sidecar files, same contents.
+      val hits = live.filter(hit)
+        .select(col(keyC).as("file_key"), col(posC).as("pos"))
       val staged =
         if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
           hits.hint("rebalance")
         else hits
       staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      // discard any stats the session-wide commit protocol collected for
+      // the sidecar (DV files carry no prunable table columns)
       org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
-      val hitDf = spark.read.parquet(stage.toString)
-      val updated = hitDf.count() // footer row counts only
-      if (updated == 0L) return 0L
-      if (dvEntryCountCached(name, liveDvs(name)) + updated > dvMaxEntries) {
-        rewriteWhere(name, live, coalesce(predicate, lit(false)), assignments)
-        return updated
+      val keys = spark.read.schema(GraftLake.dvSchema).parquet(stage.toString)
+      val n = keys.count() // footer row counts only
+      if (n == 0L) return 0L
+      if (dvEntryCountCached(name, liveDvs(name)) + n > dvMaxEntries) {
+        // OVERSIZED hit set: an above-bound DV set must never be
+        // committed — every read until materialization would anti-join
+        // (and force-broadcast) it
+        rewriteWhere(name, hit, assignments)
+        return n
       }
-      // 1) re-insert the updated rows through the normal append machinery
-      //    (stats collected by the commit protocol, partition dirs
-      //    re-derived from the NEW values)
-      val out = withPartitionCols(enforceConstraints(meta,
-        toPhysical(meta.schema, assign(meta, hitDf, byField))), meta)
-      val dataStage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
-      val added = try {
-        val writer = distributeForWrite(out, meta).write.mode(SaveMode.Overwrite)
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-        val parted =
-          if (meta.partitions.nonEmpty)
-            writer.partitionBy(meta.partitionExprs.map(_.outputName): _*)
-          else writer
-        withLakeTimestampFormat { parted.parquet(dataStage.toString) }
-        val writeStats =
-          org.apache.spark.sql.graft.StatsCommitProtocol.drain(dataStage)
-        (mergeStageInto(dataStage, new Path(dataDir(name))), writeStats)
-      } finally fs(dataStage).delete(dataStage, true)
-      // 2) DV sidecar masking the old positions, from the same staged hits
+      val (added, addedStats) =
+        if (byField.isEmpty) (Nil, Map.empty[String, Map[String, GraftLake.Bounds]])
+        else reinsertLocked(name, meta, keys, byField)
       val dd = dvDir(name)
       f.mkdirs(dd)
-      val dvStage = new Path(s"${tableDir(name)}/.dvstage-${UUID.randomUUID()}")
-      val dvNames = try {
-        hitDf.select(col(keyC).as("file_key"), col(posC).as("pos"))
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(dvStage.toString)
-        org.apache.spark.sql.graft.StatsCommitProtocol.drain(dvStage)
-        fs(dvStage).listStatus(dvStage).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map { s =>
-            val n = s"dv-${UUID.randomUUID()}.parquet"
-            renameOrFail(f, s.getPath, new Path(dd, n))
-            n
-          }
-      } finally fs(dvStage).delete(dvStage, true)
-      // 3) ONE commit: adds + DV in the same version
-      commitVersion(name, added._1, Nil, added._2, op = "update",
+      val dvNames = f.listStatus(stage).toSeq
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .map { s =>
+          val dv = s"dv-${UUID.randomUUID()}.parquet"
+          renameOrFail(f, s.getPath, new Path(dd, dv))
+          dv
+        }
+      // ONE commit: the DV and an UPDATE's re-insert in the same version
+      commitVersion(name, added, Nil, addedStats,
+        op = if (byField.isEmpty) "delete" else "update",
         dvAdded = dvNames, assumedLayout = Some(meta.partitions))
-      updated
+      n
     } finally f.delete(stage, true)
+  }
+
+  /** An UPDATE's new rows: the live rows at the staged `keys`, with
+    * `byField` applied, landed through the normal append machinery (stats
+    * collected by the commit protocol, partition dirs derived from the
+    * NEW values) but not committed. Returns the commit's add-delta and
+    * its stats. */
+  private def reinsertLocked(name: String, meta: TableMeta, keys: DataFrame,
+      byField: Map[String, Column])
+      : (Seq[(String, String)], Map[String, Map[String, GraftLake.Bounds]]) = {
+    val hitFiles = keys.select("file_key").distinct().collect()
+      .map(r => GraftLake.decodeKey(r.getString(0))).toSet
+    // the scan plans only the files holding hits; the semi-join on the
+    // DV keys picks the exact rows
+    val rows = liveKeyedScanLocked(name, meta,
+      ref => hitFiles(GraftLake.fileKey(ref))).get
+    val hitRows = rows.join(keys,
+      rows(keyC) === keys("file_key") && rows(posC) === keys("pos"), "left_semi")
+    val out = withPartitionCols(enforceConstraints(meta,
+      toPhysical(meta.schema, assign(meta, hitRows, byField))), meta)
+    val dataStage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
+    try {
+      val writer = distributeForWrite(out, meta).write.mode(SaveMode.Overwrite)
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+      val parted =
+        if (meta.partitions.nonEmpty)
+          writer.partitionBy(meta.partitionExprs.map(_.outputName): _*)
+        else writer
+      withLakeTimestampFormat { parted.parquet(dataStage.toString) }
+      val writeStats =
+        org.apache.spark.sql.graft.StatsCommitProtocol.drain(dataStage)
+      (mergeStageInto(dataStage, new Path(dataDir(name))), writeStats)
+    } finally fs(dataStage).delete(dataStage, true)
   }
 
   /** Partition directories holding the given partition-value rows — via a
@@ -1468,44 +1461,65 @@ final class GraftLake(private[graft] val spark: SparkSession,
       .collect().map(r => new Path(r.getString(0)).getParent.toString)
       .toSeq.distinct
 
-  /** The one partition-scoped copy-on-write rewrite, behind DELETE
-    * (`assignments` empty) and UPDATE: the fold of an oversized
-    * [[deleteWhere]]/[[updateWhere]] hit set, and SQL DML whose condition
-    * carries a subquery. `live` is the table's live rows (DV-masked,
-    * logical names, generated partition columns included) and `hit` is
-    * TRUE exactly on the affected rows. Only the partitions holding hits
-    * are rewritten, plus the partitions an UPDATE moves rows into (the
-    * swap must keep their existing rows); pre-existing DV entries of
-    * untouched partitions stay live. An unpartitioned table replaces its
-    * whole file set and clears every DV (`live` reads through them). The
-    * hit rows are the commit's change rows (CDF-enabled tables). */
-  private[graft] def rewriteWhere(name: String, live: DataFrame, hit: Column,
-      assignments: Map[String, Column]): Unit = writeLock(name) {
+  /** The one scoped copy-on-write rewrite, behind DELETE (`assignments`
+    * empty) and UPDATE: the fold of an oversized [[deleteWhere]] or
+    * [[updateWhere]] hit set, and SQL DML whose condition carries a
+    * subquery. `hit` (TRUE exactly on the affected rows) and the
+    * assignments resolve against the table's live rows — DV-masked,
+    * logical names, generated partition columns and the DV key columns
+    * included — after `bind`: the identity for the engine's own
+    * predicates, an attribute re-binding for SQL, whose resolved
+    * subqueries cannot be retargeted by name.
+    *
+    * The scope is PHYSICAL: every directory holding a hit is rewritten
+    * whole (all its live rows, whatever layout wrote them), and the
+    * result lands beside the files already in its destination
+    * directories. So an UPDATE that moves rows adds them to their new
+    * partitions without rewriting those, and a directory of a layout
+    * still mid-migration (REBUCKET, partition evolution), which holds
+    * rows of several current partitions, never loses the rows the hits
+    * do not touch. Pre-existing DV entries of untouched directories stay
+    * live. An unpartitioned table replaces its whole file set and clears
+    * every DV. The hit rows are the commit's change rows (CDF-enabled
+    * tables). */
+  private[graft] def rewriteWhere(name: String, hit: Column,
+      assignments: Map[String, Column],
+      bind: DataFrame => DataFrame = identity): Unit = writeLock(name) {
     val meta = readMeta(name)
     val byField = landedAssignments(name, meta, assignments)
-    val partCols = meta.partitionExprs.map(_.outputName)
-    def rewritten(df: DataFrame): DataFrame =
-      if (byField.isEmpty) df.filter(!hit)
-      else assign(meta, df, byField.map { case (k, v) =>
-        k -> when(hit, v).otherwise(col(quoted(k))) })
-    val matching = live.filter(hit)
-    val post = assign(meta, matching, byField)
-    val ct = GraftLake.ChangeTypeCol
-    val changes = Some(
-      if (byField.isEmpty) matching.withColumn(ct, lit("delete"))
-      else assign(meta, matching, Map.empty).withColumn(ct, lit("update_preimage"))
-        .unionByName(post.withColumn(ct, lit("update_postimage"))))
-    if (partCols.isEmpty) {
-      if (!matching.isEmpty)
-        replaceScoped(name, rewritten(live), Nil, clearDvs = true, changes = changes)
+    val depth = meta.partitionExprs.size
+    def rewrite(live: DataFrame, dirs: Seq[String]): Unit = {
+      val matching = live.filter(hit)
+      val ct = GraftLake.ChangeTypeCol
+      val changes =
+        if (byField.isEmpty) matching.withColumn(ct, lit("delete"))
+        else assign(meta, matching, Map.empty).withColumn(ct, lit("update_preimage"))
+          .unionByName(assign(meta, matching, byField)
+            .withColumn(ct, lit("update_postimage")))
+      val survivors =
+        if (byField.isEmpty) live.filter(!hit)
+        else assign(meta, live, byField.map { case (k, v) =>
+          k -> when(hit, v).otherwise(col(quoted(k))) })
+      replaceScoped(name, survivors, dirs.map(d => s"${dataDir(name)}/$d"),
+        clearDvs = depth == 0, changes = Some(changes))
+    }
+    val live = bind(liveKeyedScanLocked(name, meta).getOrElse(return))
+    if (depth == 0) {
+      if (!live.filter(hit).isEmpty) rewrite(live, Nil)
     } else {
-      def partsOf(df: DataFrame) = df.select(partCols.map(c => col(quoted(c))): _*)
-      val moved = if (byField.isEmpty) Nil else Seq(partsOf(withPartitionCols(post, meta)))
-      val parts = (partsOf(matching) +: moved).reduce(_ union _).distinct().collect()
-      if (parts.nonEmpty)
-        replaceScoped(name,
-          rewritten(live.filter(GraftLake.partitionScope(partCols, parts))),
-          partitionDirsFor(name, partCols, parts), changes = changes)
+      // the partition directory of each row, as its DV key spells it
+      val dirOf = substring_index(col(keyC), "/", depth)
+      val keyDirs = live.filter(hit).select(dirOf).distinct().collect()
+        .map(_.getString(0)).toSeq
+      if (keyDirs.nonEmpty) {
+        // DV keys are URI-encoded (`_metadata.file_path`); manifest refs
+        // and directories are not
+        val dirs = keyDirs.map(GraftLake.decodeKey)
+        val inScope = dirs.toSet
+        val scoped = bind(liveKeyedScanLocked(name, meta,
+          ref => inScope(ref._1)).get).filter(dirOf.isin(keyDirs: _*))
+        rewrite(scoped, dirs)
+      }
     }
   }
 
@@ -1790,19 +1804,20 @@ final class GraftLake(private[graft] val spark: SparkSession,
     } else {
       // partition rels that still hold live DV'd files (stale entries for
       // already-retired files are dropped with the DV clear)
-      val rels = dvFrame(name, dvs).select("file_key").distinct()
+      // (DV keys spell them URI-encoded, directories decoded)
+      val keyRels = dvFrame(name, dvs).select("file_key").distinct()
         .collect().map(_.getString(0)).toSeq
-        .filter(liveKeys.contains)
+        .filter(k => liveKeys.contains(GraftLake.decodeKey(k)))
         .map(k => k.substring(0, k.lastIndexOf('/')))
         .distinct
-      if (rels.isEmpty) {
+      if (keyRels.isEmpty) {
         commitVersion(name, Nil, Nil, op = "dv-clear", dvRemoved = dvs)
         return
       }
-      val dirs = rels.map(r => s"${dataDir(name)}/$r")
+      val dirs = keyRels.map(r => s"${dataDir(name)}/${GraftLake.decodeKey(r)}")
       // scope + anti-join on the materialized key columns
       val scoped = withDvKeys(readInternal(name, meta), partDepth).filter(
-        substring_index(col(keyC), "/", partDepth).isin(rels: _*))
+        substring_index(col(keyC), "/", partDepth).isin(keyRels: _*))
       val survivors = dvAntiJoin(scoped, dvFrame(name, dvs), broadcastDv = true)
         .drop(keyC, posC)
       replaceScoped(name, survivors, dirs, clearDvs = true)
@@ -3611,6 +3626,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * must still be cleared). Unpartitioned tables replace the whole file
     * set, so `survivors` must then be the full remaining table.
     * Engine-internal support for [[rewriteWhere]], MERGE and replication.
+    * `survivors` are exactly the rows of `affectedDirs`: a survivor that
+    * lands in a directory outside them (an UPDATE moving a row into an
+    * untouched partition, an old-layout row re-homed mid-REBUCKET) joins
+    * the files already there instead of replacing them.
     *
     * `changes`: the rewrite's row-level change rows (table columns +
     * `_change_type`), published as write-time change files in the same
@@ -3638,7 +3657,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
     val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
     val (added, removed) = swapInto(name, stage, new Path(dataDir(name)),
-      partCols.size, affectedDirs.map(new Path(_)))
+      partCols.size, affectedDirs.map(new Path(_)), replaceLeaves = false)
     commitVersion(name, added, removed, writeStats, op = "replace-scoped",
       dvRemoved = if (clearDvs) liveDvs(name) else Nil,
       changes = changeFiles, assumedLayout = Some(meta.partitions))
@@ -4244,7 +4263,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
       .select(input_file_name().as("f"), col("file_key"))
       .distinct().collect()
       .groupBy(r => new Path(r.getString(0)).getName)
-      .view.mapValues(_.exists(r => liveKeys.contains(r.getString(1))))
+      .view.mapValues(_.exists(r =>
+        liveKeys.contains(GraftLake.decodeKey(r.getString(1)))))
       .toMap
     val inert = dvs0.filter(d => byFile.get(d).contains(false))
     if (inert.nonEmpty) writeLock(name) {
@@ -4386,7 +4406,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
           !spark.read.schema(GraftLake.dvSchema)
             .parquet(churned.toSeq.map(d => s"$ddv/$d"): _*)
             .select("file_key").distinct().collect()
-            .exists(r => groupKeys.contains(r.getString(0)))
+            .exists(r => groupKeys.contains(GraftLake.decodeKey(r.getString(0))))
         } catch { case scala.util.control.NonFatal(_) => false }
       }
       val ok = (vNow == v0 || {
@@ -6122,8 +6142,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
       liveKeys: Set[String]): Map[String, Long] =
     if (dvs.isEmpty) Map.empty
     else dvFrame(name, dvs).groupBy(col("file_key")).count().collect()
-      .filter(r => liveKeys.contains(r.getString(0)))
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+      .map(r => GraftLake.decodeKey(r.getString(0)) -> r.getLong(1))
+      .filter(kn => liveKeys.contains(kn._1)).toMap
 
   def rowCountFromStats(name: String): Option[Long] = {
     if (rowCountShadowed(readMeta(name))) return None
@@ -6273,7 +6293,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // touch (metadata-scale), never per deleted row
     val keys = dv.select(col("file_key")).distinct().collect()
       .map(_.getString(0)).toSeq.sorted
-    val paths = resolveRefPaths(name, keys.map { k =>
+    val paths = resolveRefPaths(name, keys.map(GraftLake.decodeKey).map { k =>
       val idx = k.lastIndexOf('/')
       if (idx < 0) ("", k) else (k.substring(0, idx), k.substring(idx + 1))
     })
@@ -6445,11 +6465,16 @@ final class GraftLake(private[graft] val spark: SparkSession,
   /** Move staged output into the data dir: partitioned tables swap the
     * partition directories present in the stage AND delete `affectedDirs`
     * that produced no stage output (a rewrite can empty a partition);
-    * unpartitioned tables swap the whole file set. Best-effort atomicity
-    * (directory renames), mirroring a commit-protocol boundary. Returns
-    * the commit delta: ((rel, name) files added, files retired). */
+    * unpartitioned tables swap the whole file set. `replaceLeaves =
+    * false` (every [[replaceScoped]]) retires only `affectedDirs` and adds
+    * the staged files beside whatever their destination directories still
+    * hold; the upsert rewrite, whose scope covers every partition its
+    * output lands in, swaps the leaf directories whole. Best-effort
+    * atomicity (directory renames), mirroring a commit-protocol boundary.
+    * Returns the commit delta: ((rel, name) files added, files retired). */
   private def swapInto(name: String, stage: Path, target: Path, partDepth: Int,
-      affectedDirs: Seq[Path] = Nil): (Seq[(String, String)], Seq[(String, String)]) = {
+      affectedDirs: Seq[Path] = Nil, replaceLeaves: Boolean = true)
+      : (Seq[(String, String)], Seq[(String, String)]) = {
     val f = fs(target)
     val added = Seq.newBuilder[(String, String)]
     val removed = Seq.newBuilder[(String, String)]
@@ -6478,7 +6503,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
         // the stage has nothing to put in their place
         affectedDirs.foreach(d => removed ++= retire(name, target, d))
         val stageUri = f.makeQualified(stage).toUri
-        leaves(stage, partDepth).foreach { leaf =>
+        if (!replaceLeaves) added ++= mergeStageInto(stage, target)
+        else leaves(stage, partDepth).foreach { leaf =>
           val rel = stageUri.relativize(f.makeQualified(leaf).toUri)
             .getPath.stripSuffix("/")
           val dest = new Path(target, rel)
@@ -6758,6 +6784,13 @@ object GraftLake {
   /** Manifest key of a (rel, name) file identity. */
   private[catalog] def fileKey(ref: (String, String)): String =
     if (ref._1.isEmpty) ref._2 else s"${ref._1}/${ref._2}"
+
+  /** A [[dvKeyColumn]] value (or a directory prefix of one) as the
+    * manifest spells it: Spark renders `_metadata.file_path` URI-encoded,
+    * so a partition value with a space or an escaped character differs
+    * from its directory name until decoded. */
+  private[catalog] def decodeKey(key: String): String =
+    new Path(new java.net.URI(key)).toString
 
   /** Manifest file key of an absolute path: its last `partDepth + 1`
     * '/'-segments (partition dirs + file name) — the same segment-based

@@ -409,8 +409,8 @@ object AnalyticsOps {
         lake.replaceScoped(table, replica.join(dels, pks, "left_anti"), Nil,
           clearDvs = true) // full file-set replace: every DV entry is inert
       else {
-        // scope the rewrite to partitions that actually hold deleted keys
-        // (same shape as GraftLake.rewriteWhere): survivors of those
+        // scope the rewrite to partitions that actually hold deleted keys:
+        // survivors of those
         // partitions replace them; the rest of the table is untouched.
         // read() drops the derived __p_* columns, so recompute them the
         // way every write path does

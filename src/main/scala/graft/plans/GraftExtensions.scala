@@ -18,8 +18,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Injected rules:
   *  - [[RewriteGraftMerge]] — literal `MERGE INTO` (the reference's
   *    headline operator, ingestor/DucklakeWriter.java:151-168), plus
-  *    `UPDATE` and `DELETE FROM`, all routed into the engine's
-  *    partition-scoped copy-on-write rewrites.
+  *    `UPDATE` and `DELETE FROM`, all routed into the engine (MERGE
+  *    into its merge paths, DML into `deleteWhere`/`updateWhere`).
   */
 final class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

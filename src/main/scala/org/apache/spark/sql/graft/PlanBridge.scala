@@ -88,6 +88,29 @@ object PlanBridge {
       org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(a.name)
   })
 
+  /** `df` with the columns named like `output` re-bound to its attribute
+    * ids (names matched case-insensitively, each cast to its attribute's
+    * type); `df`'s other columns follow unchanged. An expression resolved
+    * against `output` — subqueries and their outer references included —
+    * then evaluates over `df` as over the plan it was resolved against:
+    * SQL `DELETE`/`UPDATE` hand a subquery condition to the engine's own
+    * scan this way, where [[byNameColumn]] cannot. */
+  def rebind(output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Cast}
+    val plan = planOf(df)
+    def named(n: String) = plan.output.find(_.name.equalsIgnoreCase(n))
+    val bound = output.map { a =>
+      val src = named(a.name).getOrElse(throw new GraftAnalysisException(
+        s"column '${a.name}' is missing from the frame it is re-bound to"))
+      val v = if (src.dataType.sameType(a.dataType)) src else Cast(src, a.dataType)
+      Alias(v, a.name)(exprId = a.exprId, qualifier = a.qualifier)
+    }
+    val rest = plan.output.filterNot(s => output.exists(_.name.equalsIgnoreCase(s.name)))
+    ofRows(df.sparkSession, org.apache.spark.sql.catalyst.plans.logical.Project(
+      bound ++ rest, plan))
+  }
+
   /** Hive partition-path escaping — byte-identical to what Spark's own
     * partition writer produces for string values (ExternalCatalogUtils). */
   def escapePartitionValue(s: String): String =

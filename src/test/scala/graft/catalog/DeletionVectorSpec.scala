@@ -171,8 +171,12 @@ class DeletionVectorSpec extends AnyFunSuite {
       assert(lake.dataFiles("t").sorted === files, "MOR SQL delete: no rewrite")
       assert(spark.sql("SELECT id FROM dvcat.t").collect()
         .map(_.getInt(0)).toSeq === Seq(1))
-      // copy-on-write SQL DELETE on a DV-carrying table must not resurrect
-      spark.sql("DELETE FROM dvcat.t WHERE id = 1")
+      // a copy-on-write SQL DELETE on a DV-carrying table must not
+      // resurrect: a zero DV budget sends it down the fold
+      spark.conf.set("spark.graft.dv.maxEntries", "0")
+      try spark.sql("DELETE FROM dvcat.t WHERE id = 1")
+      finally spark.conf.unset("spark.graft.dv.maxEntries")
+      assert(lake.liveDvs("t").isEmpty, "the fold rewrote the file set")
       assert(spark.sql("SELECT count(*) FROM dvcat.t").head().getLong(0) === 0)
     } finally {
       spark.conf.unset("spark.sql.catalog.dvcat")
@@ -272,6 +276,44 @@ class DeletionVectorSpec extends AnyFunSuite {
       spark.conf.unset("spark.sql.catalog.dvw")
       spark.conf.unset("spark.sql.catalog.dvw.warehouse")
     }
+  }
+
+  test("partition values that URI-encode: DV keys resolve against the manifest") {
+    // DV keys come from `_metadata.file_path`, URI-encoded ("b%20c");
+    // manifest keys and directories are not ("b c"). Every consumer that
+    // meets the two must decode, or it misses the DV'd files
+    val lake = newLake()
+    val segs = Seq("a", "b c", "d/e%f")
+    lake.write("t", (0 until 90).map(i => (i, segs(i % 3), s"v$i"))
+      .toDF("id", "seg", "s"), partitions = Seq("seg"))
+    lake.setTableProperty("t", TableMeta.CdfEnabledKey, "true")
+    val v0 = lake.versions("t").last
+    // sorted, not a set: a resurrected row shows as a duplicate id
+    def ids() = lake.read("t").select("id").collect().map(_.getInt(0)).toSeq.sorted
+    assert(lake.deleteWhere("t", col("id") % 5 === 0) === 18)
+    assert(lake.liveDvs("t").nonEmpty, "a partial hit set takes the DV route")
+    var expected = (0 until 90).filterNot(_ % 5 == 0)
+    assert(ids() === expected)
+    // the change feed reads the DV'd rows back from the files they name
+    assert(lake.tableChanges("t", v0, lake.versions("t").last)
+      .filter(col("_change_type") === "delete").count() === 18)
+    // the DV update re-inserts from the files holding its hits
+    assert(lake.updateWhere("t", col("seg") === "d/e%f" && col("id") < 30,
+      Map("s" -> lit("U"))) === 8)
+    assert(ids() === expected)
+    assert(lake.read("t").filter(col("s") === "U").count() === 8)
+    // dropping one partition metadata-only keeps the other partitions'
+    // DVs live, the update's sidecar (only "d/e%f" entries) included
+    val dvs = lake.liveDvs("t").size
+    lake.deleteWhere("t", col("seg") === "b c")
+    assert(lake.liveDvs("t").size === dvs, "no DV written, none dropped")
+    expected = expected.filterNot(_ % 3 == 1)
+    assert(ids() === expected)
+    // materializing folds the DVs into the data, never drops them
+    lake.materializeDeletes("t")
+    assert(lake.liveDvs("t").isEmpty)
+    assert(ids() === expected)
+    assert(lake.read("t").filter(col("s") === "U").count() === 8)
   }
 
   test("oversized DELETE folds copy-on-write, scoped to hit partitions") {

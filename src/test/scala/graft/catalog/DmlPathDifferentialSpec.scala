@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the copy-on-write rewrite of a subquery condition. On the same random
   * batches all three must leave equal table rows and publish equal change
   * rows, on an unpartitioned, a `bucket(8, id)` and a value-partitioned
-  * table, with null-valued conditions and an UPDATE that moves rows across
+  * table (values with a space, a slash and a percent sign), with
+  * null-valued conditions and an UPDATE that moves rows across
   * partitions. */
 class DmlPathDifferentialSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -20,7 +21,8 @@ class DmlPathDifferentialSpec extends AnyFunSuite {
   private def batch(seed: Long, from: Int, n: Int): DataFrame = {
     val r = new scala.util.Random(seed * 31 + from)
     (from until from + n).map { id =>
-      (id, Seq("a", "b", "c")(r.nextInt(3)),
+      // partition values a directory name must escape or encode
+      (id, Seq("a", "b c", "d/e%f")(r.nextInt(3)),
         if (r.nextInt(5) == 0) None else Some(r.nextInt(100)), s"v$id")
     }.toDF("id", "seg", "x", "s").repartition(2)
   }

@@ -162,6 +162,65 @@ class RebucketSpec extends AnyFunSuite {
     assert(after.filter(col("v") === "UPD").count() === 200)
   }
 
+  test("MID-SPLIT copy-on-write DML keeps the rows its hits share a directory with") {
+    // an unmigrated bucket(8) directory holds rows of TWO bucket(16)
+    // partitions; a copy-on-write DELETE/UPDATE whose hits all fall in
+    // one of them rewrites that directory whole, so the rows of the other
+    // partition must survive (engine folds, a SQL subquery rewrite and
+    // materializeDeletes), and so must the rows appended since the flip
+    // into the directories the rewritten rows move to
+    val lake = newLake()
+    val rows = (0 until 400).map(i => (i.toLong, s"v$i"))
+    lake.write("t", rows.toDF("id", "v"),
+      partitions = Seq("bucket(8, id)"), pks = Seq("id"))
+    var calls = 0
+    lake.rebucketBeforeCommitHook = () =>
+      { calls += 1; if (calls == 2) throw new RuntimeException("freeze") }
+    try intercept[RuntimeException](lake.rebucket("t", 16))
+    finally lake.rebucketBeforeCommitHook = () => ()
+    val appended = (400 until 440).map(i => (i.toLong, s"n$i"))
+    lake.append("t", appended.toDF("id", "v"))
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
+    def bucket16(id: Long): Int = GraftLake.pmod(Murmur3Hash(Seq(Literal(id,
+      org.apache.spark.sql.types.LongType)), 42).eval(null).asInstanceOf[Int], 16)
+    val foreign = lake.dataFiles("t").map(new org.apache.hadoop.fs.Path(_).getParent.getName)
+      .filter(_.startsWith("__p_bucket_8_id=")).map(_.split('=')(1).toInt).distinct.sorted
+    assert(foreign.size >= 4, s"four unmigrated directories, got $foreign")
+    // the ids of the upper new bucket (k + 8) of each unmigrated old bucket k
+    val Seq(del, upd, sql, dv) = foreign.take(4).map(k =>
+      rows.map(_._1).filter(bucket16(_) == k + 8))
+    assert(Seq(del, upd, sql, dv).forall(_.nonEmpty))
+    assert(lake.deleteWhere("t", col("id").isin(dv: _*)) === dv.size)
+    assert(lake.liveDvs("t").nonEmpty)
+    lake.materializeDeletes("t")
+    spark.conf.set("spark.graft.dv.maxEntries", "0")
+    spark.conf.set("spark.sql.catalog.grbkfold", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.grbkfold.warehouse", lake.warehouseDir)
+    try {
+      assert(lake.deleteWhere("t", col("id").isin(del: _*)) === del.size)
+      assert(lake.updateWhere("t", col("id").isin(upd: _*),
+        Map("v" -> lit("UPD"))) === upd.size)
+      sql.toDF("id").createOrReplaceTempView("rbk_sql_ids")
+      spark.sql("DELETE FROM grbkfold.t WHERE id IN (SELECT id FROM rbk_sql_ids)")
+    } finally {
+      spark.conf.unset("spark.graft.dv.maxEntries")
+      spark.conf.unset("spark.sql.catalog.grbkfold")
+      spark.conf.unset("spark.sql.catalog.grbkfold.warehouse")
+    }
+    assert(lake.liveDvs("t").isEmpty, "every statement folded copy-on-write")
+    val expected = (rows ++ appended)
+      .filterNot(r => del.contains(r._1) || sql.contains(r._1) || dv.contains(r._1))
+      .map(r => if (upd.contains(r._1)) (r._1, "UPD") else r).toSet
+    def contents() = lake.read("t").select("id", "v").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(contents().size === expected.size, "no row lost or duplicated")
+    assert(contents().toSet === expected)
+    // resume: the migration finishes over the rewritten state
+    lake.rebucket("t", 16)
+    assert(bucketDirs(lake, "t") === Set("__p_bucket_16_id"))
+    assert(contents().toSet === expected)
+  }
+
   test("rebucket COMPLETES while a second JVM streams appends (two real processes)") {
     GraftLake.invalidateCaches()
     val wh = Files.createTempDirectory("graft-rbk2p").toString

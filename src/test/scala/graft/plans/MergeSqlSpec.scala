@@ -519,4 +519,19 @@ class MergeSqlSpec extends AnyFunSuite {
           |WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin)
     }
   }
+
+  test("general-form MERGE moving matched rows into an untouched partition keeps its rows") {
+    import spark.implicits._
+    // the scope is the matched partition ('a'); the moved row lands in
+    // 'b', whose existing row must stay beside it
+    lake.write("tmv", Seq((1L, "a", "x"), (2L, "a", "y"), (3L, "b", "z"))
+      .toDF("id", "seg", "v"), partitions = Seq("seg"), pks = Seq("id"))
+    Seq((1L, true)).toDF("id", "flag").createOrReplaceTempView("m_srcmv")
+    spark.sql(
+      """MERGE INTO gmt.tmv t USING m_srcmv s ON t.id = s.id
+        |WHEN MATCHED AND s.flag THEN UPDATE SET seg = 'b'""".stripMargin)
+    assert(lake.read("tmv").select("id", "seg").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet ===
+      Set((1L, "b"), (2L, "a"), (3L, "b")))
+  }
 }
