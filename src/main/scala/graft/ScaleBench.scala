@@ -57,10 +57,9 @@ object ScaleBench {
                                 // planned files track the probed buckets
                                 // (2 of 16), never the table; expected
                                 // near-flat at 10×
-    "q168_stream_cdc_rewrites", // CDC THROUGH REWRITES: an upsert window
-                                // streams via its write-time change
-                                // files, DV update/delete windows via
-                                // their DV entries — per-epoch cost is
+    "q168_stream_cdc_rewrites", // CDC THROUGH REWRITES: upsert and DV
+                                // update/delete windows stream via their
+                                // write-time change files — per-epoch cost is
                                 // O(changed rows), and the capture
                                 // itself is change-sized
     "q166_stream_replicate", // lake→lake streaming replication: builds
@@ -134,14 +133,6 @@ object ScaleBench {
     spark.stop()
   }
 
-  /** Steady-state MERGE per-flush cost on a PK-BUCKETED layout at two data
-    * scales, with the batch FIXED and the bucket SIZE fixed (bucket count
-    * grows with the table — the layout policy a 100 TB deployment uses):
-    * flush cost ≈ touched-buckets × bucket-size ≤ batch × bucket-size, a
-    * bound that does not move when the table grows 10×. This is the
-    * round-11 contract: per-flush merge cost tracks the BATCH, never the
-    * table. (The registered q160 shows the complementary axis: its batch
-    * scales WITH the table, so its cold ratio tracks data volume.) */
   /** First `n` keys above `from` whose `bucket(nb, key)` value is 0 — the
     * exact murmur3 the write path evaluates (LongType, seed 42), so a
     * batch of these keys lands WHOLLY in one bucket: the skewed-flush
@@ -158,6 +149,17 @@ object ScaleBench {
     out.result()
   }
 
+  /** Steady-state MERGE per-flush cost on a PK-BUCKETED layout at two data
+    * scales, with the batch FIXED and the bucket SIZE fixed (bucket count
+    * grows with the table — the layout policy a 100 TB deployment uses).
+    * The upsert is merge-on-read: a flush WRITES its batch and one
+    * deletion vector, whatever the bucket size, and READS only the key
+    * columns of the buckets its keys hash into (≤ batch × bucket-size
+    * rows), a bound that does not move when the table grows 10×. Per-flush
+    * merge cost tracks the BATCH, never the table; the rows a flush masks
+    * are paid back by compaction, not by the flush. (The registered q160
+    * shows the complementary axis: its batch scales WITH the table, so its
+    * cold ratio tracks data volume.) */
   private def bucketedMergeFlush(spark: SparkSession, smallDir: String,
       bigDir: String): String = {
     import org.apache.spark.sql.functions._
@@ -191,9 +193,9 @@ object ScaleBench {
         total += (System.nanoTime() - t0) / 1e6
       }
       // SKEWED worst case: every key of the batch hashes into ONE bucket
-      // (all inserts above the key domain) — per-flush cost is bounded by
-      // a single bucket's rewrite, the bound that holds when a pathological
-      // batch concentrates instead of spreading
+      // (all inserts above the key domain) — the probe reads a single
+      // bucket, the bound that holds when a pathological batch
+      // concentrates instead of spreading
       var skewTotal = 0.0
       for (f <- 1 to flushes) {
         val keys = keysInBucketZero(nb, maxK + f * 10000000L, batchRows)
@@ -230,8 +232,8 @@ object ScaleBench {
     * bucket ~100× oversized — the state a fixed-at-creation layout decays
     * into as data grows), run `OPTIMIZE … REBUCKET TO` the right count,
     * and compare the fixed-batch per-flush cost. The contract metric is
-    * ROWS READ per flush (task input metrics): per-flush work ≈
-    * touched-buckets × bucket-size, which the rebucket shrinks ~an order
+    * ROWS READ per flush (task input metrics): the merge probe reads ≈
+    * touched-buckets × bucket-size rows, which the rebucket shrinks ~an order
     * of magnitude — at 100 TB the data term IS the cost. Wall time is
     * reported too but at local toy scale it is fixed-overhead-dominated
     * (a ~100-task job costs seconds regardless of 75k vs 1.5M rows), so

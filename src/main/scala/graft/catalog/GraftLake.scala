@@ -24,8 +24,9 @@ final case class TableMeta(
     props: Map[String, String] = Map.empty) {
   def partitionExprs: Seq[PartitionExpr] = PartitionExpr.parseList(partitions)
 
-  /** Change-data-feed capture: when set, every rewrite-class commit
-    * (upsert/MERGE, copy-on-write UPDATE/DELETE) WRITES its row-level
+  /** Change-data-feed capture: when set, every row-changing commit that
+    * is not a plain append (upsert/MERGE, deletion-vector and
+    * copy-on-write UPDATE/DELETE) WRITES its row-level
     * changes as parquet sidecars under `_changes/` in the same commit —
     * the Delta `_change_data` mechanism — so [[GraftLake.tableChanges]]
     * and the `graft-cdf` streaming source attribute those windows exactly
@@ -51,19 +52,18 @@ object TableMeta {
   *  - `_inserted_at TIMESTAMP` injected into every table, set at insert
   *    time, never modified by a merge-update (DucklakeWriter.java:146-148,
   *    205-214);
-  *  - upsert = per-batch PK dedup (last wins) + MERGE INTO rewrite
-  *    (DucklakeWriter.java:98-187); executed only when the table
+  *  - upsert = per-batch PK dedup (last wins) + MERGE INTO
+  *    (DucklakeWriter.java:98-187), stored as DuckLake stores it: a
+  *    deletion vector plus new data files; executed only when the table
   *    pre-existed AND PKs are configured, else plain append
   *    (DucklakeWriter.java:89-95);
   *  - nested types land as JSON strings ([[LandedTypes]]).
   *
-  * Scale design (100 TB): the merge rewrite never touches the whole table —
-  * affected partitions are discovered with a column-pruned scan of (pk,
-  * partition) columns semi-joined against the batch keys, and only those
-  * partitions are rewritten via staged write + directory swap. Unpartitioned
-  * tables degrade to full rewrite (documented; partition your 100 TB
-  * tables). All joins/dedups are shuffle-on-PK; the batch side of the
-  * `_inserted_at` resolution join is the (small) incoming batch.
+  * Scale design (100 TB): the merge never rewrites a data file — a
+  * column-pruned scan of the files that can hold a batch key, semi-joined
+  * against the broadcast batch keys, finds the rows a deletion vector
+  * masks, and the batch lands as new files beside them. The batch side of
+  * the `_inserted_at` resolution join is the (small) incoming batch.
   */
 final class GraftLake(private[graft] val spark: SparkSession,
     warehouse: String) {
@@ -1013,7 +1013,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
 
   /** [[dvEntryCount]] memoized per table on the exact DV file set, so the
     * broadcast-safety check in [[applyDvs]] costs a footer-count job only
-    * once per committed DV state, not once per read. */
+    * once per committed DV state, not once per read ([[noteDvCommit]]
+    * carries it across this process's own DV commits). */
   private def dvEntryCountCached(name: String, dvs: Seq[String]): Long = {
     if (dvs.isEmpty) return 0L
     val key = s"$warehouse/$name"
@@ -1026,6 +1027,12 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
   }
 
+  /** After a commit that added `n` DV entries to a live set of `before`
+    * entries: the new set holds `before + n` (a hit scan reads through the
+    * live DVs, so no entry repeats a masked position). */
+  private def noteDvCommit(name: String, before: Long, n: Long): Unit =
+    dvCountCache.put(s"$warehouse/$name", (liveDvs(name), before + n))
+
   /** DV key/position column names of [[withDvKeys]] frames. */
   private val keyC = "__graft_dv_key"
   private val posC = "__graft_dv_pos"
@@ -1036,10 +1043,14 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * half of every merge-on-read DML. `keep` narrows the manifest's
     * (rel dir, file name) set the scan plans (a table without commits
     * reads whole, so a caller needing an exact file set still filters
-    * on [[keyC]]). None when the table is not file-backed (nothing to
-    * mask positionally). */
+    * on [[keyC]]); `within`, a lowered predicate the caller's rows
+    * satisfy, further drops the files the read path's bucket pruner
+    * proves hold none of them. None when the table is not file-backed
+    * (nothing to mask positionally). */
   private def liveKeyedScanLocked(name: String, meta: TableMeta,
-      keep: ((String, String)) => Boolean = _ => true): Option[DataFrame] = {
+      keep: ((String, String)) => Boolean = _ => true,
+      within: Option[org.apache.spark.sql.graft.PlanBridge.SimplePred] = None)
+      : Option[DataFrame] = {
     val partDepth = meta.partitionExprs.size
     // manifest-driven pruning scan when the table has commits: a
     // selective MoR DML on a 100 TB table plans only the files whose
@@ -1054,7 +1065,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
         val files =
           if (cached != null && cached._1 == v) cached._2
           else resolveManifest(name, v)._2
-        val paths = files.filter(keep).map { case (rel, fn) =>
+        val bucketK = within.flatMap(bucketPrunerAt(name, v, meta, _))
+        val paths = files.filter(ref => keep(ref) &&
+            bucketK.forall(_(GraftLake.fileKey(ref)))).map { case (rel, fn) =>
           if (rel.isEmpty) s"${dataDir(name)}/$fn"
           else s"${dataDir(name)}/$rel/$fn"
         }
@@ -1284,7 +1297,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // no live files = already empty. Any remaining DV sidecars are inert
     // (their files are gone) but still pin the anti-join read plan and
     // count against the dvMaxEntries budget — clear them under the
-    // feed-transparent "dv-clear" op (logicalNoOps) rather than a
+    // feed-transparent "dv-clear" op (LogicalNoOps) rather than a
     // remove-nothing "truncate" commit the feed could not attribute.
     if (files.isEmpty) {
       if (dvs.nonEmpty)
@@ -1354,7 +1367,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * DV sidecar, and an UPDATE first re-inserts the hit rows with the
     * assignments applied, read back from only the files that hold them
     * and matched to the staged keys (the predicate is not evaluated a
-    * second time). */
+    * second time). On a CDF-enabled table the same hit rows are the
+    * commit's change rows (`delete`, or `update_preimage` and
+    * `update_postimage`), written before the commit that references
+    * them. */
   private def mergeOnReadLocked(name: String, predicate: Column,
       assignments: Map[String, Column]): Long = {
     val meta = readMeta(name)
@@ -1364,90 +1380,64 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val live = liveKeyedScanLocked(name, meta).getOrElse(return 0L)
     val hit = coalesce(predicate, lit(false))
     val stage = new Path(s"${tableDir(name)}/.dvstage-${UUID.randomUUID()}")
-    val f = fs(stage)
     try {
-      // REBALANCE (not repartition(1)): AQE coalesces the staged sidecar
-      // to one file for the typical tiny hit set, while an unexpectedly
-      // huge hit set keeps write parallelism instead of funneling through
-      // a single task — and the scan keeps its full parallelism either
-      // way (coalesce(1) would collapse it into one task). AQE-off
-      // sessions skip the (then-unresolvable) hint and keep the scan's
-      // own partitioning: a few more tiny sidecar files, same contents.
-      val hits = live.filter(hit)
-        .select(col(keyC).as("file_key"), col(posC).as("pos"))
-      val staged =
-        if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
-          hits.hint("rebalance")
-        else hits
-      staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      // discard any stats the session-wide commit protocol collected for
-      // the sidecar (DV files carry no prunable table columns)
-      org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
-      val keys = spark.read.schema(GraftLake.dvSchema).parquet(stage.toString)
-      val n = keys.count() // footer row counts only
+      val n = stageDvKeys(live.filter(hit), stage)
       if (n == 0L) return 0L
-      if (dvEntryCountCached(name, liveDvs(name)) + n > dvMaxEntries) {
+      val before = dvEntryCountCached(name, liveDvs(name))
+      if (before + n > dvMaxEntries) {
         // OVERSIZED hit set: an above-bound DV set must never be
         // committed — every read until materialization would anti-join
         // (and force-broadcast) it
         rewriteWhere(name, hit, assignments)
         return n
       }
+      val hitRows =
+        if (byField.isEmpty && !meta.cdfEnabled) None
+        else Some(rowsAtDvKeysLocked(name, meta,
+          spark.read.schema(GraftLake.dvSchema).parquet(stage.toString)))
+      val changeFiles =
+        if (!meta.cdfEnabled) Nil
+        else {
+          val ct = GraftLake.ChangeTypeCol
+          val old = assign(meta, hitRows.get, Map.empty)
+          writeChangeFiles(name, meta,
+            if (byField.isEmpty) old.withColumn(ct, lit("delete"))
+            else old.withColumn(ct, lit("update_preimage"))
+              .unionByName(assign(meta, hitRows.get, byField)
+                .withColumn(ct, lit("update_postimage"))))
+        }
       val (added, addedStats) =
         if (byField.isEmpty) (Nil, Map.empty[String, Map[String, GraftLake.Bounds]])
-        else reinsertLocked(name, meta, keys, byField)
-      val dd = dvDir(name)
-      f.mkdirs(dd)
-      val dvNames = f.listStatus(stage).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map { s =>
-          val dv = s"dv-${UUID.randomUUID()}.parquet"
-          renameOrFail(f, s.getPath, new Path(dd, dv))
-          dv
-        }
+        else stageRowsLocked(name, meta, withPartitionCols(enforceConstraints(meta,
+          toPhysical(meta.schema, assign(meta, hitRows.get, byField))), meta))
       // ONE commit: the DV and an UPDATE's re-insert in the same version
       commitVersion(name, added, Nil, addedStats,
         op = if (byField.isEmpty) "delete" else "update",
-        dvAdded = dvNames, assumedLayout = Some(meta.partitions))
+        dvAdded = publishDvStage(name, stage), changes = changeFiles,
+        assumedLayout = Some(meta.partitions))
+      noteDvCommit(name, before, n)
       n
-    } finally f.delete(stage, true)
+    } finally fs(stage).delete(stage, true)
   }
 
-  /** An UPDATE's new rows: the live rows at the staged `keys`, with
-    * `byField` applied, landed through the normal append machinery (stats
-    * collected by the commit protocol, partition dirs derived from the
-    * NEW values) but not committed. Returns the commit's add-delta and
-    * its stats. */
-  private def reinsertLocked(name: String, meta: TableMeta, keys: DataFrame,
-      byField: Map[String, Column])
-      : (Seq[(String, String)], Map[String, Map[String, GraftLake.Bounds]]) = {
-    val hitFiles = keys.select("file_key").distinct().collect()
-      .map(r => GraftLake.decodeKey(r.getString(0))).toSet
-    // the scan plans only the files holding hits; the semi-join on the
-    // DV keys picks the exact rows
+  /** The live rows (logical view, DV key columns attached) at the staged
+    * DV `keys`: the scan plans only the files holding them, and the
+    * semi-join on the keys picks the exact rows. */
+  private def rowsAtDvKeysLocked(name: String, meta: TableMeta,
+      keys: DataFrame): DataFrame = {
+    // per-partition distinct, no exchange: one job
+    val hitFiles = keys.select("file_key").rdd
+      .mapPartitions(_.map(_.getString(0)).toSet.iterator).collect()
+      .map(GraftLake.decodeKey).toSet
     val rows = liveKeyedScanLocked(name, meta,
       ref => hitFiles(GraftLake.fileKey(ref))).get
-    val hitRows = rows.join(keys,
+    rows.join(keys,
       rows(keyC) === keys("file_key") && rows(posC) === keys("pos"), "left_semi")
-    val out = withPartitionCols(enforceConstraints(meta,
-      toPhysical(meta.schema, assign(meta, hitRows, byField))), meta)
-    val dataStage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
-    try {
-      val writer = distributeForWrite(out, meta).write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-      val parted =
-        if (meta.partitions.nonEmpty)
-          writer.partitionBy(meta.partitionExprs.map(_.outputName): _*)
-        else writer
-      withLakeTimestampFormat { parted.parquet(dataStage.toString) }
-      val writeStats =
-        org.apache.spark.sql.graft.StatsCommitProtocol.drain(dataStage)
-      (mergeStageInto(dataStage, new Path(dataDir(name))), writeStats)
-    } finally fs(dataStage).delete(dataStage, true)
   }
 
   /** Partition directories holding the given partition-value rows — via a
-    * DV-FREE internal scan's `input_file_name`. Every partition-scoped
+    * DV-FREE internal scan's `input_file_name`, decoded (it is
+    * URI-encoded; directories are not). Every partition-scoped
     * rewrite needs this instead of probing its own (possibly DV-masked)
     * frame: the DV anti-join plan has TWO file sources, which
     * `input_file_name` rejects outright — and the dirs must include files
@@ -1458,7 +1448,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     readInternal(name, readMeta(name))
       .filter(GraftLake.partitionScope(partCols, parts))
       .select(input_file_name().as("f")).distinct()
-      .collect().map(r => new Path(r.getString(0)).getParent.toString)
+      .collect().map(r => new Path(new java.net.URI(r.getString(0))).getParent.toString)
       .toSeq.distinct
 
   /** The one scoped copy-on-write rewrite, behind DELETE (`assignments`
@@ -1800,7 +1790,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     if (partDepth == 0) {
       val survivors = applyDvs(name, readInternal(name, meta), dvs, 0)
         .select(meta.schema.fieldNames.map(n => col(quoted(n))): _*)
-      replaceScoped(name, survivors, Nil, clearDvs = true)
+      replaceScoped(name, survivors, Nil, clearDvs = true, op = "materialize")
     } else {
       // partition rels that still hold live DV'd files (stale entries for
       // already-retired files are dropped with the DV clear)
@@ -1820,7 +1810,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
         substring_index(col(keyC), "/", partDepth).isin(keyRels: _*))
       val survivors = dvAntiJoin(scoped, dvFrame(name, dvs), broadcastDv = true)
         .drop(keyC, posC)
-      replaceScoped(name, survivors, dirs, clearDvs = true)
+      replaceScoped(name, survivors, dirs, clearDvs = true, op = "materialize")
     }
   }
 
@@ -2097,8 +2087,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * committed write lands whole part files (staged rename, never
     * in-place mutation), so Spark's file-stream source tails the data
     * directory and emits each file's rows exactly once. The same
-    * append-only contract as [[readAppendsBetween]]: after an
-    * upsert/rewrite the survivors land in NEW files and would re-emit —
+    * append-only contract as [[readAppendsBetween]]: after a rewrite
+    * the survivors land in NEW files and would re-emit, and an upsert's
+    * masked rows would stay emitted —
     * stream from ingest logs, diff snapshots on merged tables. */
   def readStream(name: String): DataFrame = {
     val meta = readMeta(name)
@@ -2950,38 +2941,33 @@ final class GraftLake(private[graft] val spark: SparkSession,
       .withColumn(InsertedAtCol, InsertStamp.now())
     val out = withPartitionCols(enforceConstraints(meta, conformed), meta)
     writeLock(name) {
-      val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
-      try {
-        val writer = distributeForWrite(out, meta).write
-          .mode(SaveMode.Overwrite)
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-        val parted =
-          if (meta.partitions.nonEmpty)
-            writer.partitionBy(meta.partitionExprs.map(_.outputName): _*)
-          else writer
-        withLakeTimestampFormat { parted.parquet(stage.toString) }
-        val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
-        val added = mergeStageInto(stage, new Path(dataDir(name)))
-        commitVersion(name, added, Nil, writeStats, op = "append", txn = txn,
-          assumedLayout = Some(meta.partitions))
-      } finally fs(stage).delete(stage, true)
+      val (added, writeStats) = stageRowsLocked(name, meta, out)
+      commitVersion(name, added, Nil, writeStats, op = "append", txn = txn,
+        assumedLayout = Some(meta.partitions))
     }
   }
 
-  private def conformBatch(batch: DataFrame, meta: TableMeta): DataFrame = {
-    val dataSchema = StructType(meta.schema.filterNot(_.name == InsertedAtCol))
-    LandedTypes.conform(LandedTypes.toLanded(batch), dataSchema)
+  /** `batch` cast to the table's landed data columns; the columns named in
+    * `keep` pass through behind them. */
+  private def conformBatch(batch: DataFrame, meta: TableMeta,
+      keep: Seq[String] = Nil): DataFrame = {
+    val landed = LandedTypes.toLanded(batch)
+    LandedTypes.conform(landed, StructType(
+      meta.schema.filterNot(_.name == InsertedAtCol) ++
+        landed.schema.filter(f => keep.contains(f.name))))
   }
 
-  /** MERGE path (W2/W4/W5): batch PK-dedup last-wins, affected-partition
-    * discovery, anti-join + union rewrite of affected partitions only,
-    * `_inserted_at` preserved on update / set on insert.
-    *
-    * NOTE a batch that changes a partition-source column relocates rows, so
-    * both the old and new partitions count as affected — a merge that
-    * rewrites its own partition key forfeits pruning by construction and
-    * degrades toward a full copy-on-write. Partition by a stable key that
-    * merges never update (see README "Scale design notes"). */
+  /** MERGE path (W2/W4/W5), merge-on-read: the batch is PK-deduped
+    * last-wins, the live rows holding a batch key are masked by ONE
+    * deletion vector, and the batch lands beside them as new files — all
+    * in one manifest commit, so no read sees the mask without the rows.
+    * `_inserted_at` is preserved on update (each matched target row keeps
+    * its own) and set on insert. No existing data file is rewritten or
+    * moved: a flush writes its batch and one DV whatever the table size,
+    * and a row that moves partition needs no scope (the DV masks its old
+    * position wherever it lives). A live DV entry count past
+    * `spark.graft.dv.maxEntries` folds the table's DVs back into its files
+    * ([[materializeDeletes]]) right after the commit. */
   def upsert(name: String, batch: DataFrame, ordering: Seq[Column] = Nil): Unit = {
     upsertLocked(name, batch, ordering)
     runStandingPolicies(name)
@@ -2989,12 +2975,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
 
   /** [[upsert]] that REFUSES a batch with duplicate primary keys instead of
     * deduping it last-wins: returns false (table untouched) so the caller
-    * can route to ANSI general-merge semantics. The duplicate detection is
-    * FOLDED into the upsert's own affected-partition probe — one job
-    * answers both questions where the separate pre-check the SQL MERGE
-    * path used to run cost a whole extra action per statement — and a
-    * proven-unique batch also skips the last-wins dedup window (one fewer
-    * shuffle in the rewrite plan). */
+    * can route to ANSI general-merge semantics. Keys compare as they land,
+    * after the cast to the table's key types. A proven-unique batch also
+    * skips the last-wins dedup window. */
   def upsertIfUniquePks(name: String, batch: DataFrame): Boolean = {
     val applied = upsertLocked(name, batch, Nil, refuseDuplicates = true)
     if (applied) runStandingPolicies(name)
@@ -3009,406 +2992,167 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val meta = readMeta(name)
     require(meta.pks.nonEmpty, s"upsert on '$name' requires configured PKs")
     val pks = meta.pks
-    val partCols = meta.partitionExprs.map(_.outputName)
+    val pkCols = pks.map(c => col(quoted(c)))
     val batchP = toPhysical(meta.schema, batch)
-
-    // W4: dedup duplicate PKs within the batch — last wins. Runs on the raw
-    // batch so ordering-only columns (e.g. Kafka offset) are usable even
-    // though they are not landed. Under `refuseDuplicates` the window is
-    // SKIPPED: the probe below proves uniqueness first (or refuses), so the
-    // rewrite plan sheds the row_number shuffle entirely.
-    val order = if (ordering.nonEmpty) ordering.map(_.desc)
-      else Seq(monotonically_increasing_id().desc)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pks.map(c => col(quoted(c))): _*).orderBy(order: _*)
-    val deduped = enforceConstraints(meta, conformBatch(
-      if (refuseDuplicates) batchP
-      else batchP.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn"),
-      meta))
-    // Affected partitions: where batch rows land + where matching PKs live.
-    // The PK-location probe reads only (pk, partition) columns — parquet
-    // column pruning keeps this cheap at scale.
-    //
-    // PK-FUNCTIONAL layouts skip the probe entirely: when every partition
-    // expression reads only primary-key columns (`bucket(n, pk)`, raw pk,
-    // year(pk_date), …), a row matching a batch key computes the SAME
-    // partition values as the batch row itself — matchedParts ⊆ batchParts
-    // by construction, and the probe (the one job here whose cost scales
-    // with the TABLE: a column-pruned but still full-table scan per flush)
-    // is provably redundant. Exclusions where "computes the SAME partition
-    // value" does not follow from join equality: float/double sources
-    // (0.0/-0.0 and NaN are join-equal yet hash/render differently), and
-    // year/month/day over a TIMESTAMP source (they evaluate in the SESSION
-    // time zone — a later session with a different zone would compute a
-    // different partition for the same key, miss the stored row and
-    // duplicate the PK; over a DATE source they are zone-free and stay
-    // eligible). Raw and bucket() are value-functional.
-    val pkFunctional = meta.partitionExprs.nonEmpty &&
-      meta.partitionExprs.forall { e =>
-        val tzSafe = e match {
-          case _: PartitionExpr.Raw | _: PartitionExpr.Bucket => true
-          case _ => // year/month/day: zone-free only over DATE sources
-            meta.schema.find(_.name.equalsIgnoreCase(e.column))
-              .exists(_.dataType == DateType)
-        }
-        tzSafe && e.sourceColumns.forall { sc =>
-          pks.exists(_.equalsIgnoreCase(sc)) &&
-            (meta.schema.find(_.name.equalsIgnoreCase(sc)).map(_.dataType) match {
-              case Some(FloatType) | Some(DoubleType) => false
-              case _ => true
-            })
-        }
-      }
-    // Manifest-planned fast path: a PK-functional flush whose partition
-    // values render deterministically (int/long partition fields, Hive-
-    // escaped strings — the exact encodings Spark's writer produces)
-    // derives BOTH the scoped scan AND the affected directories straight
-    // from the MANIFEST: zero data-directory listings, zero
-    // affected-dir discovery jobs per flush. At 100 TB a per-flush
-    // directory listing (millions of files) would dwarf the data work;
-    // the manifest filter is O(live files) of in-memory string matches
-    // against the rendered bucket rel-paths. Nulls or non-renderable
-    // partition types fall back to the directory path.
-    val partFields = GraftLake.partitionFields(meta)
-    val renderable = pkFunctional && partFields.forall(f =>
-      f.dataType == IntegerType || f.dataType == LongType ||
-        f.dataType == StringType)
-    // the directory-based live view, built ONLY on the paths that need it
-    // (constructing it eagerly would pay the data-dir listing per flush)
-    def existingDirScan: DataFrame =
-      applyDvs(name, readInternal(name, meta), liveDvs(name), partCols.size)
-    // the refuse-mode probe (None = duplicate PKs, refuse the batch): folds
-    // the duplicate detection the SQL MERGE path used to run as a SEPARATE
-    // pre-action into the upsert's own affected-partition discovery — per-PK
-    // counts and the row's partition values come out of ONE aggregation.
-    // `first(partCol)` is exact when the batch is dup-free (one row per
-    // group); on a duplicate the whole result is discarded anyway (the
-    // caller re-routes to the general merge). `includeMatched` adds the
-    // where-matching-keys-LIVE leg (the non-PK-functional layouts' probe)
-    // to the same job. Unpartitioned tables have no partition probe to fold
-    // into and pay the plain one-job count check.
-    val dupC = "__graft_dup_c"
-    def probeUnique(includeMatched: Boolean): Option[Array[org.apache.spark.sql.Row]] = {
-      if (partCols.isEmpty) {
-        val dups = deduped.groupBy(pks.map(c => col(quoted(c))): _*)
-          .count().filter(col("count") > 1).limit(1).count() > 0
-        if (dups) None else Some(Array.empty)
-      } else {
-        val g = withPartitionCols(deduped, meta)
-          .groupBy(pks.map(c => col(quoted(c))): _*)
-          .agg(count(lit(1)).as(dupC),
-            partCols.map(c => first(col(quoted(c))).as(c)): _*)
-        val batchLeg = g.groupBy(partCols.map(c => col(quoted(c))): _*)
-          .agg(max(col(dupC)).as(dupC))
-        val legs = if (!includeMatched) batchLeg else {
-          val matchedLeg = existingDirScan
-            .select((pks ++ partCols).map(c => col(quoted(c))): _*)
-            .join(deduped.select(pks.map(c => col(quoted(c))): _*), pks, "left_semi")
-            .select(partCols.map(c => col(quoted(c))): _*).distinct()
-            .withColumn(dupC, lit(1L))
-          batchLeg.unionByName(matchedLeg)
-            .groupBy(partCols.map(c => col(quoted(c))): _*)
-            .agg(max(col(dupC)).as(dupC))
-        }
-        val rows = legs.collect()
-        if (rows.exists(r => r.getLong(r.length - 1) > 1)) None
-        else Some(rows.map(r =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1))))
-      }
-    }
-    // the rewrite's scope; None = refused (duplicate PKs, nothing written)
-    var manifestDirs: Option[Seq[Path]] = None
-    val scopedOpt: Option[DataFrame] =
-      if (partCols.isEmpty) {
-        if (refuseDuplicates && probeUnique(includeMatched = false).isEmpty) None
-        else Some(existingDirScan)
-      }
+    // W4: dedup duplicate PKs within the batch — last wins — on the keys
+    // as they land (after the conform cast), ordered by `ordering` (e.g.
+    // the Kafka offset, not landed: it rides through the conform as a
+    // hidden column) or arrival order. Under `refuseDuplicates` the window
+    // is skipped: the check below proves uniqueness first (or refuses).
+    val deduped = enforceConstraints(meta,
+      if (refuseDuplicates) conformBatch(batchP, meta)
       else {
-        val batchParts = withPartitionCols(deduped, meta)
-          .select(partCols.map(c => col(quoted(c))): _*).distinct()
-        // the always-correct scope: PK-probe the table for where matching
-        // keys LIVE (layout-agnostic — values come from the data, and a
-        // null-partition tuple from a foreign-layout file routes its rows
-        // into the scope via the isNull branch of partitionScope). Refuse
-        // mode folds its duplicate check into the SAME probe job.
-        def fullProbeScoped(): Option[DataFrame] =
-          if (refuseDuplicates)
-            probeUnique(includeMatched = true).map(parts =>
-              existingDirScan.filter(GraftLake.partitionScope(partCols, parts)))
-          else {
-            val existing = existingDirScan
-            val matchedParts = existing
-              .select((pks ++ partCols).map(c => col(quoted(c))): _*)
-              .join(deduped.select(pks.map(c => col(quoted(c))): _*), pks, "left_semi")
-              .select(partCols.map(c => col(quoted(c))): _*).distinct()
-            val parts = batchParts.union(matchedParts).distinct().collect()
-            Some(existing.filter(GraftLake.partitionScope(partCols, parts)))
-          }
-        // probe-skip soundness needs hash stability: a bucket source
-        // column widened before the ensureTable guard means old files
-        // hashed under the old type — only the probe can find them
-        if (pkFunctional && bucketSourceTypesStable(name, meta)) {
-          val partsOpt =
-            if (refuseDuplicates) probeUnique(includeMatched = false)
-            else Some(batchParts.collect())
-          partsOpt.flatMap { parts =>
-          // null (and empty-string) partition values render as Hive's
-          // DEFAULT partition — not reproducible here, use the dir path
-          val noNulls = parts.forall(r => (0 until r.length).forall(i =>
-            !r.isNullAt(i) && (r.get(i) match {
-              case s: String => s.nonEmpty
-              case _ => true
-            })))
-          (if (renderable && noNulls) latestVersion(name) else None) match {
-            case Some(v) =>
-              // BOTH halves of the Hive fragment escape: Spark's writer
-              // escapes the column NAME too (a column named `a:b` writes
-              // `__p_a%3Ab=...`) — an unescaped name would silently match
-              // nothing and land duplicates as pure inserts
-              val wanted: Set[String] = parts.map(r =>
-                partCols.zipWithIndex.map { case (c, i) =>
-                  org.apache.spark.sql.graft.PlanBridge.escapePartitionValue(c) +
-                    "=" + GraftLake.renderPartitionValue(r.get(i))
-                }.mkString("/")).toSet
-              // reuse the commit path's live-set cache — a steady-state
-              // flush must not re-fold the manifest delta chain per trigger
-              val key = s"$warehouse/$name"
-              val cachedLive = liveSetCache.get(key)
-              val live =
-                if (cachedLive != null && cachedLive._1 == v) cachedLive._2
-                else resolveManifest(name, v)._2
-              // a live file either CONFORMS to the current layout (its rel
-              // dirs carry the layout's own `__p_…=` prefixes — the bucket
-              // count is part of the name) and matches against `wanted`,
-              // or it sits under a FOREIGN bucket count (mid-incremental-
-              // REBUCKET): its bucket component self-describes its k, and
-              // the batch's wanted set is re-rendered under that k — the
-              // key→bucket map is exact on BOTH sides of a split, so the
-              // flush stays manifest-planned (rows read ∝ touched buckets)
-              // through the whole migration. Anything unparseable falls to
-              // the probe path, which finds and re-homes rows anywhere.
-              val prefixes = GraftLake.layoutPrefixes(meta)
-              def conforms(rel: String): Boolean =
-                GraftLake.relConforms(rel, prefixes)
-              val (confRefs, foreignRefs) =
-                live.partition(ref => conforms(ref._1))
-              val esc = org.apache.spark.sql.graft.PlanBridge
-                .escapePartitionValue(_)
-              val bucketExprs = meta.partitionExprs.zipWithIndex
-                .collect { case (bb: PartitionExpr.Bucket, i) => (bb, i) }
-              val keptForeign: Option[Seq[(String, String)]] =
-                if (foreignRefs.isEmpty) Some(Nil)
-                else if (bucketExprs.size != 1 ||
-                    // a repair-adopted stray at the wrong depth is not a
-                    // layout — keep the promise that anything unparseable
-                    // falls to the probe, never an index crash
-                    foreignRefs.exists(_._1.split('/').length !=
-                      meta.partitionExprs.size)) None
-                else {
-                  val (bb, bi) = bucketExprs.head
-                  // a foreign rel may differ from the current layout ONLY
-                  // in its bucket count: during a non-bucket
-                  // evolvePartitions (year(d)->month(d) beside an
-                  // unchanged bucket expr) the bucket dir still parses
-                  // (k == current n) and effMeta == meta, but wantedK is
-                  // rendered under the NEW layout — old-layout files would
-                  // silently miss the match set and their matched PKs
-                  // re-insert as duplicates. Any non-bucket divergence
-                  // must route through the probe path instead.
-                  val nonBucketDiverges = foreignRefs.exists { ref =>
-                    val segs = ref._1.split('/')
-                    prefixes.indices.exists(i =>
-                      i != bi && !segs(i).startsWith(prefixes(i)))
-                  }
-                  if (nonBucketDiverges) None
-                  else {
-                  val escPrefix = esc("__p_bucket_")
-                  val colsSuffix = esc(s"_${bb.columns.mkString("_")}")
-                  def parseK(dirName: String): Option[Int] =
-                    if (dirName.startsWith(escPrefix) &&
-                        dirName.endsWith(colsSuffix)) {
-                      val mid = dirName.substring(escPrefix.length,
-                        dirName.length - colsSuffix.length)
-                      scala.util.Try(mid.toInt).toOption.filter(_ > 0)
-                    } else None
-                  val byName = foreignRefs.groupBy(
-                    _._1.split('/')(bi).takeWhile(_ != '='))
-                  val resolved = byName.toSeq.map { case (dirName, refs) =>
-                    parseK(dirName).map { k =>
-                      val effMeta = meta.copy(partitions = meta.partitions
-                        .updated(bi, s"bucket($k, ${bb.columns.mkString(", ")})"))
-                      val effPartCols =
-                        effMeta.partitionExprs.map(_.outputName)
-                      val effParts = withPartitionCols(deduped, effMeta)
-                        .select(effPartCols.map(c => col(quoted(c))): _*)
-                        .distinct().collect()
-                      val wantedK: Set[String] = effParts.map(r =>
-                        effPartCols.zipWithIndex.map { case (c, i) =>
-                          esc(c) + "=" +
-                            GraftLake.renderPartitionValue(r.get(i))
-                        }.mkString("/")).toSet
-                      refs.filter(ref => wantedK.contains(ref._1))
-                    }
-                  }
-                  if (resolved.exists(_.isEmpty)) None
-                  else Some(resolved.flatMap(_.get))
-                  }
-                }
-              keptForeign match {
-                case None => fullProbeScoped()
-                case Some(fk) =>
-                  val refs =
-                    confRefs.filter(ref => wanted.contains(ref._1)) ++ fk
-                  val dd = dataDir(name)
-                  manifestDirs = Some(
-                    refs.map(_._1).distinct.map(rel => new Path(s"$dd/$rel")))
-                  val paths = refs.map { case (rel, fn) => s"$dd/$rel/$fn" }
-                  val full = StructType(
-                    meta.schema.fields.toSeq ++ partFields)
-                  Some(applyDvs(name,
-                    manifestScan(paths, statsFor(name, v), full, partCols.size,
-                      Some(dd), recomputeWith = Some(meta)),
-                    liveDvs(name), partCols.size))
-              }
-            case None =>
-              Some(existingDirScan.filter(GraftLake.partitionScope(partCols, parts)))
-          }
-          }
-        } else fullProbeScoped()
+        val ord = (if (ordering.nonEmpty) ordering
+          else Seq(monotonically_increasing_id())).zipWithIndex
+          .map { case (c, i) => s"__graft_ord_$i" -> c }
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(pkCols: _*)
+          .orderBy(ord.map(o => col(o._1).desc): _*)
+        conformBatch(batchP.withColumns(ord.toMap), meta, keep = ord.map(_._1))
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn" +: ord.map(_._1): _*)
+      })
+    // the batch's landed keys: up to KeyProbeCap of them on the driver,
+    // where they feed the probe as a local relation and, up to
+    // BucketHashCap, pick the files that can hold one (bucket pruning); a
+    // larger batch probes against its own keys
+    val keys = conformBatch(batchP, meta).select(pkCols: _*)
+    val keyRows = keys.coalesce(1).limit(GraftLake.KeyProbeCap + 1).collect()
+    val small = keyRows.length <= GraftLake.KeyProbeCap
+    val distinctKeys = keyRows.distinctBy(GraftLake.groupingKey)
+    if (refuseDuplicates && (
+        if (small) distinctKeys.length != keyRows.length
+        else !keys.groupBy(pkCols: _*).count()
+          .filter(col("count") > 1).limit(1).isEmpty)) return false
+    val keyFrame =
+      if (small) broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(distinctKeys: _*), keys.schema))
+      else keys
+    val within =
+      if (distinctKeys.length > GraftLake.BucketHashCap) None
+      else scala.util.Try {
+        val zone = spark.conf.get("spark.sql.session.timeZone",
+          java.time.ZoneId.systemDefault().getId)
+        distinctKeys.map(r => pks.indices.map(i => pkCols(i) === lit(r.get(i)))
+          .reduce(_ && _)).reduceOption(_ || _)
+          .map(org.apache.spark.sql.graft.PlanBridge.simplePredicate(_, meta.schema, zone))
+      }.toOption.flatten // a key value without a literal form prunes nothing
+    // the live rows holding a batch key, column-pruned by their consumers
+    // and semi-joined map-side against the batch keys
+    val matched = liveKeyedScanLocked(name, meta, within = within)
+      .map(live => toPhysical(meta.schema, live).join(keyFrame, pks, "left_semi"))
+    val nowExpr = InsertStamp.now()
+    val dvStage = new Path(s"${tableDir(name)}/.dvstage-${UUID.randomUUID()}")
+    val f = fs(dvStage)
+    try {
+      // the hit set is batch-bounded: one sidecar file in any session
+      val n = matched.map(stageDvKeys(_, dvStage, oneFile = true)).getOrElse(0L)
+      val tIns = "__graft_t_inserted_at"
+      val fields = meta.schema.fieldNames.map(c => col(quoted(c))).toSeq
+      // the batch rows, each with the `_inserted_at` of the target row it
+      // matched (`tIns`, null for an insert): one output row per matched
+      // target row, so a duplicate target PK becomes one copy of the
+      // batch winner per target row, each keeping that row's own stamp
+      val rows = (
+        if (n == 0L) deduped.withColumn(tIns, lit(null).cast(TimestampType))
+        else {
+          val stamps = matched.get.select(pkCols :+ col(InsertedAtCol).as(tIns): _*)
+          deduped.join(if (small) broadcast(stamps) else stamps, pks, "left_outer")
+        })
+        .withColumn(InsertedAtCol, coalesce(col(tIns), nowExpr))
+        .select(fields :+ col(tIns): _*)
+      // CHANGE CAPTURE: the matched rows are the preimages, the batch rows
+      // the postimages (matched) and inserts — written before the commit
+      // that references them
+      val changeFiles =
+        if (!meta.cdfEnabled) Nil
+        else {
+          val ct = GraftLake.ChangeTypeCol
+          val post = rows.withColumn(ct, when(col(tIns).isNull, lit("insert"))
+            .otherwise(lit("update_postimage"))).drop(tIns)
+          writeChangeFiles(name, meta,
+            if (n == 0L) post
+            else matched.get.select(fields: _*)
+              .withColumn(ct, lit("update_preimage")).unionByName(post))
+        }
+      val (added, addedStats) = stageRowsLocked(name, meta,
+        withPartitionCols(rows.drop(tIns), meta))
+      val dvNames = if (n == 0L) Nil else publishDvStage(name, dvStage)
+      val before = if (n == 0L) 0L else dvEntryCountCached(name, liveDvs(name))
+      commitVersion(name, added, Nil, addedStats, op = "upsert",
+        dvAdded = dvNames, changes = changeFiles,
+        assumedLayout = Some(meta.partitions))
+      if (n > 0L) {
+        noteDvCommit(name, before, n)
+        if (before + n > dvMaxEntries) materializeDeletesLocked(name)
       }
-    scopedOpt match {
-      case None => false
-      case Some(scoped) =>
-        upsertRewrite(name, meta, deduped, scoped, manifestDirs, pkFunctional)
-        true
-    }
+      true
+    } finally f.delete(dvStage, true)
   }
 
-  /** [[upsertLocked]]'s rewrite of the affected scope (`scoped`: the live
-    * rows of the partitions the batch touches; `manifestDirs`: their
-    * directories when the manifest already named them). Runs under the
-    * table's write lock. */
-  private def upsertRewrite(name: String, meta: TableMeta, deduped: DataFrame,
-      scoped: DataFrame, manifestDirs: Option[Seq[Path]],
-      pkFunctional: Boolean): Unit = {
-    val pks = meta.pks
-    val partCols = meta.partitionExprs.map(_.outputName)
-    // W2 rewrite with exact MERGE INTO semantics in ONE full-outer join
-    // (each side shuffles once on the PK, vs three joins for a
-    // untouched/updates/inserts union):
-    //  - both sides matched → update in place: batch data columns, the
-    //    target row's own _inserted_at (duplicate-PK target rows each
-    //    become a copy of the unique batch winner);
-    //  - target only → untouched;
-    //  - batch only → insert with a fresh _inserted_at.
-    val dataCols = meta.schema.fieldNames
-      .filterNot(n => pks.contains(n) || n == InsertedAtCol)
-    // reserved __graft_b_ prefix + quoted() throughout: user column names
-    // with backticks or underscore prefixes must not break or collide
-    val bPrefix = "__graft_b_"
-    val bPresent = "__graft_b_present__"
-    val bRenamed = deduped.select(
-      pks.map(c => col(quoted(c))) ++
-        dataCols.map(c => col(quoted(c)).as(s"$bPrefix$c")) :+
-        lit(true).as(bPresent): _*)
-    // one stamp for the whole statement: under change capture the table
-    // write and the change-file write (two jobs) stamp IDENTICAL
-    // `_inserted_at` values
-    val cdf = meta.cdfEnabled
-    val nowExpr = InsertStamp.now()
-    // Under change capture the SAME full-outer join feeds two write jobs
-    // (the change files and the rewritten table). Caching it was measured
-    // a net LOSS on trigger-sized flushes (interleaved A/B: q168 6.3 s
-    // cached vs 4.1 s recomputed — the block-manager round trip costs
-    // more than re-running a batch-bounded join), so both writes evaluate
-    // the join independently; they share one lazy frame for plan hygiene.
-    val tPresent = "__graft_t_present__"
-    val joinedBase = {
-      val left = if (cdf) scoped.withColumn(tPresent, lit(true)) else scoped
-      left.join(bRenamed, pks, "full_outer")
-    }
-    val merged = joinedBase
-      .select(meta.schema.fieldNames.map {
-        case n if pks.contains(n) => col(quoted(n))
-        case n if n == InsertedAtCol =>
-          coalesce(col(InsertedAtCol), nowExpr).as(InsertedAtCol)
-        case n =>
-          when(col(bPresent).isNotNull, col(quoted(s"$bPrefix$n")))
-            .otherwise(col(quoted(n))).as(n)
-      }: _*)
-    val result0 = withPartitionCols(merged, meta)
-    // bucketed (PK-functional) layouts can touch HUNDREDS of partitions per
-    // flush; written straight off the join's PK-hash partitioning, every
-    // write task would emit a sliver file into every touched bucket
-    // (tasks × buckets tiny files per flush — steady compaction debt).
-    // One extra shuffle on the partition values (rows ∝ touched buckets,
-    // never the table) clusters each bucket into one task → one
-    // right-sized file per touched bucket per flush. Non-PK-functional
-    // layouts keep their existing plan (few partitions; no regression).
-    val result = if (pkFunctional)
-      result0.repartition(partCols.map(c => col(quoted(c))): _*)
-    else result0
-
-    // Directories of the affected partitions BEFORE the rewrite: a
-    // partition that ends up empty (its only rows moved elsewhere) has no
-    // stage leaf, but its old files must still be deleted or a stale copy
-    // survives the merge. The manifest path already knows them (rendered
-    // rel-dirs — zero jobs); the directory path derives them with
-    // input_file_name() through the PRUNED scan (DataFrame.inputFiles
-    // would list every partition of the relation and delete data) and is
-    // encoding-robust (no hand-built partition names).
-    val affectedDirs: Seq[Path] = manifestDirs.getOrElse {
-      if (partCols.isEmpty) Nil
-      else scoped.select(input_file_name().as("f")).distinct()
-        .collect().map(r => new Path(r.getString(0)).getParent)
-        .toSeq.distinct
-    }
-
-    // CHANGE CAPTURE (cdf-enabled tables): the batch-keyed slice of the
-    // shared merge join — matched keys become
-    // update_preimage/update_postimage pairs, batch-only keys inserts —
-    // published under _changes/ BEFORE the swap retires the old files.
-    // Cost: one extra join sized by (touched partitions ∪ batch), never
-    // the table; zero when capture is off. The change set is the commit's
-    // COMPLETE attribution (the rewritten data files mix carried-over and
-    // new rows, so the file delta alone cannot).
-    val changeFiles: Seq[String] =
-      if (!cdf) Nil
-      else {
-        val ct = GraftLake.ChangeTypeCol
-        val j = joinedBase.filter(col(bPresent).isNotNull)
-        def oldCols = meta.schema.fieldNames.map(n => col(quoted(n)))
-        def newCols(insert: Boolean) = meta.schema.fieldNames.map {
-          case n if pks.contains(n) => col(quoted(n))
-          case n if n == InsertedAtCol =>
-            (if (insert) nowExpr else col(InsertedAtCol)).as(InsertedAtCol)
-          case n => col(quoted(s"$bPrefix$n")).as(n)
-        }
-        val matched = j.filter(col(tPresent).isNotNull)
-        val pre = matched.select(oldCols: _*)
-          .withColumn(ct, lit("update_preimage"))
-        val post = matched.select(newCols(insert = false): _*)
-          .withColumn(ct, lit("update_postimage"))
-        val ins = j.filter(col(tPresent).isNull)
-          .select(newCols(insert = true): _*)
-          .withColumn(ct, lit("insert"))
-        writeChangeFiles(name, meta, pre.unionByName(post).unionByName(ins))
-      }
-
-    // Stage + swap (Spark cannot overwrite a path it is reading from).
-    val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
-    val writer = distributeForWrite(result, partCols).write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+  /** Stage the (file key, row position) of every row of `rows` (a
+    * [[liveKeyedScanLocked]] frame) as a DV sidecar under `stage`;
+    * returns their count, from the footer row counts the commit protocol
+    * collected (a count job only where it collected none). `oneFile`, for
+    * a hit set bounded by a batch, shuffles it into one file. Otherwise
+    * REBALANCE, not repartition(1): AQE coalesces the typical tiny hit set
+    * to one file, while an unexpectedly huge one keeps write parallelism —
+    * and the scan keeps its own parallelism either way. AQE-off sessions
+    * skip the (then-unresolvable) hint: a few more tiny sidecar files,
+    * same contents. */
+  private def stageDvKeys(rows: DataFrame, stage: Path,
+      oneFile: Boolean = false): Long = {
+    val hits = rows.select(col(keyC).as("file_key"), col(posC).as("pos"))
+    val staged =
+      if (oneFile) hits.repartition(1)
+      else if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
+        hits.hint("rebalance")
+      else hits
     withLakeTimestampFormat {
-      (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-        .parquet(stage.toString)
+      staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
     }
-    val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
-    val (added, removed) =
-      swapInto(name, stage, new Path(dataDir(name)), partCols.size, affectedDirs)
-    commitVersion(name, added, removed, writeStats, op = "upsert",
-      changes = changeFiles, assumedLayout = Some(meta.partitions))
+    val stats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
+    val files = fs(stage).listStatus(stage).toSeq.map(_.getPath.getName)
+      .filter(_.endsWith(".parquet"))
+    val counts = files.map(stats.get(_).flatMap(_.get(GraftLake.RowCountKey)))
+    if (counts.forall(_.isDefined)) counts.flatten.collect {
+      case GraftLake.NumBounds(n, _) => n.toLong
+    }.sum
+    else spark.read.schema(GraftLake.dvSchema).parquet(stage.toString).count()
+  }
+
+  /** Move a [[stageDvKeys]] stage's files under `_dv/`; returns their
+    * names for the commit's `dvAdded`. */
+  private def publishDvStage(name: String, stage: Path): Seq[String] = {
+    val f = fs(stage)
+    val dd = dvDir(name)
+    f.mkdirs(dd)
+    f.listStatus(stage).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map { s =>
+        val dv = s"dv-${UUID.randomUUID()}.parquet"
+        renameOrFail(f, s.getPath, new Path(dd, dv))
+        dv
+      }
+  }
+
+  /** Land `out` (physical columns, partition columns attached) through
+    * the append machinery — stats collected by the commit protocol,
+    * partition dirs derived from the row values — without committing.
+    * Returns the commit's add-delta and its stats. */
+  private def stageRowsLocked(name: String, meta: TableMeta, out: DataFrame)
+      : (Seq[(String, String)], Map[String, Map[String, GraftLake.Bounds]]) = {
+    val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
+    try {
+      val writer = distributeForWrite(out, meta).write.mode(SaveMode.Overwrite)
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+      val parted =
+        if (meta.partitions.nonEmpty)
+          writer.partitionBy(meta.partitionExprs.map(_.outputName): _*)
+        else writer
+      withLakeTimestampFormat { parted.parquet(stage.toString) }
+      val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
+      (mergeStageInto(stage, new Path(dataDir(name))), writeStats)
+    } finally fs(stage).delete(stage, true)
   }
 
   /** Replace the entire table contents with `df` (must carry exactly the
@@ -3416,7 +3160,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * write + directory swap; partition columns are recomputed from the new
     * row values. Used by the general-form SQL MERGE rewrite, which is an
     * explicit whole-table copy-on-write (the upsert-shaped form routes
-    * through [[upsert]]'s affected-partition path instead).
+    * through [[upsert]] instead).
     *
     * `changes`: as on [[replaceScoped]] — a caller that can attribute the
     * overwrite row-by-row (the general MERGE can) passes its change rows
@@ -3638,7 +3382,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * capture costs one change-sized write, never a second table scan. */
   private[graft] def replaceScoped(name: String, survivors: DataFrame,
       affectedDirs: Seq[String], clearDvs: Boolean = false,
-      changes: Option[DataFrame] = None): Unit = writeLock(name) {
+      changes: Option[DataFrame] = None,
+      op: String = "replace-scoped"): Unit = writeLock(name) {
     val meta = readMeta(name)
     val partCols = meta.partitionExprs.map(_.outputName)
     val out = withPartitionCols(
@@ -3657,8 +3402,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
     val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
     val (added, removed) = swapInto(name, stage, new Path(dataDir(name)),
-      partCols.size, affectedDirs.map(new Path(_)), replaceLeaves = false)
-    commitVersion(name, added, removed, writeStats, op = "replace-scoped",
+      partCols.size, affectedDirs.map(new Path(_)))
+    commitVersion(name, added, removed, writeStats, op = op,
       dvRemoved = if (clearDvs) liveDvs(name) else Nil,
       changes = changeFiles, assumedLayout = Some(meta.partitions))
   }
@@ -4702,7 +4447,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
     require(shallowInfo(name).isEmpty,
       s"table '$name' is a SHALLOW clone (read-only reference) — run " +
         "materializeClone first to make it writable")
-    val appendOnly = removed.isEmpty && dvAdded.isEmpty && dvRemoved.isEmpty
+    // an upsert never retries: a match-less one computed its inserts
+    // against a state a concurrent commit may have given the same keys
+    val appendOnly = removed.isEmpty && dvAdded.isEmpty && dvRemoved.isEmpty &&
+      op != "upsert"
     var attempt = 0
     var done = false
     // pure appends COMMUTE, and every collision means another writer made
@@ -5594,8 +5342,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * by unique part-file name, read under the newer snapshot's schema) —
     * the incremental-consumption primitive. EXACT change capture for
     * append-only tables (each commit's new files hold exactly its new
-    * rows); after an upsert/rewrite it is file-level, not row-level: the
-    * rewrite's survivor rows reappear alongside the actual changes — consumers
+    * rows); after an upsert or a rewrite it is file-level, not row-level:
+    * a rewrite's survivor rows reappear alongside the actual changes, and
+    * an upsert's masked rows never show as gone — consumers
     * of merged tables should diff snapshots by key instead. */
   def readAppendsBetween(name: String, fromVersion: Long,
       toVersion: Long): DataFrame = {
@@ -5681,7 +5430,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * rows, each merge-on-read commit's new deletion-vector entries are
     * its `delete` rows (a MoR UPDATE yields its preimages as deletes and
     * its postimages as inserts), and physically-churning but logically
-    * no-op commits (`compact`, `zorder`, `dv-clear`) contribute nothing.
+    * no-op commits (`compact`, `zorder`, `dv-clear`, `materialize`)
+    * contribute nothing.
     * Output: the table's columns at `toVersion` plus `_change_type`
     * ('insert' | 'delete') and `_commit_version`.
     *
@@ -5694,8 +5444,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * consumer follow a 100 TB table whose per-commit delta is megabytes.
     * A merge-on-read UPDATE commit pairs into
     * 'update_preimage' (its new DV entries) / 'update_postimage' (its
-    * added files). Rewrite-class commits (overwrite, upsert, COW
-    * update/delete, restore, repair) are attributable ONLY when the
+    * added files). Rewrite-class commits (overwrite, COW update/delete,
+    * restore, repair) and upserts with matches (their added files mix
+    * updated and inserted rows) are attributable ONLY when the
     * commit carries WRITE-TIME CHANGE FILES ([[TableMeta.cdfEnabled]] —
     * the commit's manifest then references its complete row-level change
     * set under `_changes/`, read verbatim, O(changed rows)); otherwise
@@ -5717,7 +5468,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val outSchema = StructType(toSchema.fields.toSeq ++ Seq(
       StructField(GraftLake.ChangeTypeCol, StringType, nullable = false),
       StructField(GraftLake.CommitVersionCol, LongType, nullable = false)))
-    val logicalNoOps = Set("compact", "zorder", "dv-clear", "rebucket")
     // O(delta) per commit: delta manifests carry their own add/remove and
     // dvAdd/dvRemove, so the walk never re-materializes the live set
     // except at full-checkpoint manifests (every checkpointInterval
@@ -5754,15 +5504,19 @@ final class GraftLake(private[graft] val spark: SparkSession,
       // emission below anti-joins the PRE-commit DV state regardless.
       val metadataDelete = removedAny && added.isEmpty && dvAdded.isEmpty &&
         (m.op == "delete" || m.op == "truncate")
+      // an upsert's added files mix updated and inserted rows: without
+      // change files only a match-less one (no DV) is attributable
+      val unpairedUpsert = m.op == "upsert" && dvAdded.nonEmpty
       if (m.changes.nonEmpty) {
         // write-time change files are the commit's AUTHORITATIVE,
         // complete row-level change set — read them verbatim and ignore
-        // the file delta (an upsert's added files mix rewritten-old and
-        // new rows; only the change files attribute them)
+        // the file delta (a rewrite's added files mix carried-over and
+        // new rows, an upsert's updated and inserted ones; only the change
+        // files attribute them)
         pieces += changeFileRows(name, m.changes, toSchema)
           .withColumn(GraftLake.CommitVersionCol, lit(v))
-      } else if (!logicalNoOps(m.op)) {
-        require(metadataDelete || (!removedAny && !dvRemovedAny),
+      } else if (!GraftLake.LogicalNoOps(m.op)) {
+        require(metadataDelete || (!removedAny && !dvRemovedAny && !unpairedUpsert),
           s"tableChanges on '$name': commit v$v ('${m.op}') rewrites files " +
             "or clears deletion vectors — row-level attribution through a " +
             "rewrite is not metadata-derivable; enable the change feed " +
@@ -5830,7 +5584,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * same `LogicalRelation(relation, isStreaming = true)` construction
     * Spark's own FileStreamSource uses). Unlike the file-tailing
     * [[readStream]], version-offset batches survive REWRITES:
-    * content-preserving commits (`compact`, `zorder`, `dv-clear`)
+    * content-preserving commits (`compact`, `zorder`, `dv-clear`,
+    * `materialize`)
     * contribute nothing — their files are rearrangements of rows already
     * emitted — and row-changing commits (upsert matches, COW/MoR
     * update/delete, truncate, restore) FAIL FAST by default (row
@@ -5935,7 +5690,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
         advertised.getOrElse(GraftLake.logicalSchema(meta.schema)),
         s"graft-cdf stream on '$name': offset v$fromVersion was expired " +
           "by expireSnapshots — restart the stream from a retained version")
-    val logicalNoOps = Set("compact", "zorder", "dv-clear", "rebucket")
     val out = Seq.newBuilder[(String, String)]
     if (bootstrap) // the backfill snapshot: the one necessarily-full read
       out ++= resolveManifest(name, window.head)._2
@@ -5977,7 +5731,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
           (full.toSet -- prevDvs).toSeq.sorted
         case None => m.dvAdd.sorted.toSeq
       }
-      if (logicalNoOps(m.op)) () // content-preserving rearrangement
+      if (GraftLake.LogicalNoOps(m.op)) () // content-preserving rearrangement
       else if (removed.isEmpty && dvAdded.isEmpty) out ++= added
       else if (onRewrite == "skip") () // documented at-least-once gap
       else refusal = Some(
@@ -6462,27 +6216,17 @@ final class GraftLake(private[graft] val spark: SparkSession,
     if (f.exists(hd)) vacuum(hd)
   }
 
-  /** Move staged output into the data dir: partitioned tables swap the
-    * partition directories present in the stage AND delete `affectedDirs`
-    * that produced no stage output (a rewrite can empty a partition);
-    * unpartitioned tables swap the whole file set. `replaceLeaves =
-    * false` (every [[replaceScoped]]) retires only `affectedDirs` and adds
-    * the staged files beside whatever their destination directories still
-    * hold; the upsert rewrite, whose scope covers every partition its
-    * output lands in, swaps the leaf directories whole. Best-effort
-    * atomicity (directory renames), mirroring a commit-protocol boundary.
-    * Returns the commit delta: ((rel, name) files added, files retired). */
+  /** Move staged output into the data dir: partitioned tables retire
+    * `affectedDirs` whole (a rewrite can empty a partition) and add the
+    * staged files beside whatever their destination directories still
+    * hold; unpartitioned tables swap the whole file set. Best-effort
+    * atomicity (renames), mirroring a commit-protocol boundary. Returns
+    * the commit delta: ((rel, name) files added, files retired). */
   private def swapInto(name: String, stage: Path, target: Path, partDepth: Int,
-      affectedDirs: Seq[Path] = Nil, replaceLeaves: Boolean = true)
-      : (Seq[(String, String)], Seq[(String, String)]) = {
+      affectedDirs: Seq[Path]): (Seq[(String, String)], Seq[(String, String)]) = {
     val f = fs(target)
     val added = Seq.newBuilder[(String, String)]
     val removed = Seq.newBuilder[(String, String)]
-    def leaves(p: Path, depth: Int): Seq[Path] =
-      if (depth == 0) Seq(p)
-      else f.listStatus(p).toSeq
-        .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
-        .flatMap(s => leaves(s.getPath, depth - 1))
     try {
       if (partDepth == 0) {
         // replace all data files (replaced ones retire into _history)
@@ -6499,23 +6243,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
             added += (("", s.getPath.getName))
           }
       } else {
-        // emptied partitions first: their old contents must go even though
-        // the stage has nothing to put in their place
         affectedDirs.foreach(d => removed ++= retire(name, target, d))
-        val stageUri = f.makeQualified(stage).toUri
-        if (!replaceLeaves) added ++= mergeStageInto(stage, target)
-        else leaves(stage, partDepth).foreach { leaf =>
-          val rel = stageUri.relativize(f.makeQualified(leaf).toUri)
-            .getPath.stripSuffix("/")
-          val dest = new Path(target, rel)
-          removed ++= retire(name, target, dest)
-          f.listStatus(leaf).foreach { s =>
-            if (s.getPath.getName.endsWith(".parquet"))
-              added += ((rel, s.getPath.getName))
-          }
-          f.mkdirs(dest.getParent)
-          renameOrFail(f, leaf, dest)
-        }
+        added ++= mergeStageInto(stage, target)
       }
       (added.result(), removed.result())
     } finally f.delete(stage, true)
@@ -6525,6 +6254,31 @@ final class GraftLake(private[graft] val spark: SparkSession,
 }
 
 object GraftLake {
+  /** The most batch keys an upsert collects to the driver, where they
+    * join its probe as a local relation. */
+  private[catalog] val KeyProbeCap = 4096
+
+  /** The most equality candidates [[bucketHashesFor]] hashes by default;
+    * past it a predicate prunes no bucket. */
+  private[catalog] val BucketHashCap = 256
+
+  /** A key row as a value that compares like Spark's grouping does:
+    * binary by content, NaN equal to NaN, -0.0 equal to 0.0. */
+  private[catalog] def groupingKey(r: org.apache.spark.sql.Row): Seq[Any] =
+    r.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case d: Double if d.isNaN => Double.NaN.toString
+      case d: Double if d == 0.0 => 0.0
+      case x: Float if x.isNaN => Float.NaN.toString
+      case x: Float if x == 0.0f => 0.0f
+      case v => v
+    }
+
+  /** Commit ops that rearrange rows without changing them: the change
+    * feed and the appends stream skip them. */
+  private[catalog] val LogicalNoOps =
+    Set("compact", "zorder", "dv-clear", "rebucket", "materialize")
+
   /** Change-feed metadata columns ([[GraftLake.tableChanges]]). */
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
@@ -6772,15 +6526,6 @@ object GraftLake {
     substring_index(col("_metadata.file_path"), "/", -(partDepth + 1))
   }
 
-  /** Hive-dir rendering of a partition VALUE — must byte-match what
-    * Spark's writer produced: ints/longs plain decimal, strings
-    * Hive-path-escaped. Callers restrict themselves to these types. */
-  private[catalog] def renderPartitionValue(v: Any): String = v match {
-    case s: String =>
-      org.apache.spark.sql.graft.PlanBridge.escapePartitionValue(s)
-    case other => String.valueOf(other)
-  }
-
   /** Manifest key of a (rel, name) file identity. */
   private[catalog] def fileKey(ref: (String, String)): String =
     if (ref._1.isEmpty) ref._2 else s"${ref._1}/${ref._2}"
@@ -6939,7 +6684,7 @@ object GraftLake {
       b: PartitionExpr.Bucket,
       pred: org.apache.spark.sql.graft.PlanBridge.SimplePred,
       fieldType: String => Option[DataType],
-      cap: Int = 256): Option[Set[Int]] = {
+      cap: Int = BucketHashCap): Option[Set[Int]] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
     val dts: Seq[DataType] = b.columns.map(c => fieldType(c) match {
       case Some(t) => t
@@ -6974,7 +6719,7 @@ object GraftLake {
       b: PartitionExpr.Bucket,
       pred: org.apache.spark.sql.graft.PlanBridge.SimplePred,
       fieldType: String => Option[DataType],
-      cap: Int = 256): Option[Set[Int]] =
+      cap: Int = BucketHashCap): Option[Set[Int]] =
     bucketHashesFor(b, pred, fieldType, cap).map(_.map(pmod(_, b.n)))
 
   /** Compile a lowered (physical-keyed) predicate into a partition-DIRECTORY
@@ -7381,7 +7126,7 @@ object GraftLake {
   /** ≈ reference file.size.bytes flush cap, expressed in records. */
   val maxRecordsPerFile = 5000000
 
-  /** Affected-partition count above which the upsert scope predicate
+  /** Affected-partition count above which a merge scope predicate
     * switches from the exact per-tuple OR-chain to per-column isin sets. */
   val maxExactPartitionPredicates = 64
 

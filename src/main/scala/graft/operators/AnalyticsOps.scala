@@ -193,8 +193,8 @@ object AnalyticsOps {
     * + inserts together.
     *
     * Scale shape: current-version rows join the (typically much smaller)
-    * update batch — broadcast when small; the lake upsert then rewrites
-    * only affected partitions. Change detection is null-safe (`<=>`), so
+    * update batch — broadcast when small; the lake upsert then masks the
+    * closed rows and appends the batch. Change detection is null-safe (`<=>`), so
     * a tracked NULL→NULL is not a change. */
   def scd2Apply(lake: graft.catalog.GraftLake, table: String,
       updates: DataFrame, key: String, tracked: Seq[String],
@@ -717,12 +717,22 @@ object AnalyticsOps {
     * made the old physical-leaf count return 0 — turning a
     * `pruned < all` contract vacuous. The pushed-filter file pruning
     * happens in V2ScanRelationPushDown, so the optimized plan's
-    * `DataSourceV2ScanRelation` carries the exact planned file set. */
+    * `DataSourceV2ScanRelation` carries the exact planned file set. A
+    * table with live deletion vectors is read through the engine's v1
+    * scan instead, which prunes as its file index lists: those scans are
+    * counted off the physical plan (before AQE wraps it), by listing
+    * their index under the scan's own pushed filters — the DV sidecar
+    * scan under `_dv/` excluded. */
   private def scannedFiles(df: org.apache.spark.sql.DataFrame): Int =
     df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
         r.scan.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
           .fileIndex.inputFiles.length
+    }.sum + df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if !f.relation.location.rootPaths.exists(_.toString.contains("/_dv")) =>
+        f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
+          .map(_.files.size).sum
     }.sum
 
   /** Per-JVM memo of q164's catalog registration (q106 pattern: one

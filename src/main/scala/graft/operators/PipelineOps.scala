@@ -431,16 +431,15 @@ object PipelineOps {
   }
 
   /** q168: CDC THROUGH REWRITE-CLASS COMMITS — the change feed streams a
-    * MERGE/upsert window, a SQL UPDATE and a SQL DELETE exactly. The
-    * upsert rewrites files, and the table has write-time change capture
-    * on (`graft.enableChangeDataFeed`): the commit publishes its row-level
+    * MERGE/upsert window, a SQL UPDATE and a SQL DELETE exactly. All
+    * three commit a deletion vector (the upsert and the UPDATE beside
+    * their new rows), and the table has write-time change capture on
+    * (`graft.enableChangeDataFeed`): each commit publishes its row-level
     * change set under `_changes/` in the same manifest commit (the Delta
     * `_change_data` mechanism), and the `feed=cdf` source reads those
     * files verbatim — O(changed rows) per epoch, where round-11 semantics
     * failed fast on the reference's CORE workload (PK upsert,
-    * DucklakeWriterMergeTest.java:119-148). The UPDATE and DELETE take
-    * the engine's deletion-vector route, whose commits the feed
-    * attributes from their DV entries and added files. Commit ids are
+    * DucklakeWriterMergeTest.java:119-148). Commit ids are
     * deterministic (v0 seed, v1 upsert, v2 update, v3 delete), which lets
     * plain SQL reproduce the whole feed for the oracle. */
   val q168StreamCdcRewrites = QueryDef(

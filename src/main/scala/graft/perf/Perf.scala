@@ -232,8 +232,11 @@ object Perf {
       // job's start is driver-side work (planning, commit I/O)
       println(f"[profile]   job=${j.id}%-4d stages=${j.stages}%-3d " +
         f"${j.durationMs.fold("?")(_.toString)}%-6s ms at=${j.startMs - t0}%-7d " +
+        f"shuffle=${j.shuffleWriteBytes}%-8d out=${j.outputBytes}%-8d " +
         s"tasks=${j.tasks.mkString("+")} ${j.site.take(90)}")
     }
+    println(s"[profile] shuffle write ${jobs.map(_.shuffleWriteBytes).sum} B, " +
+      s"task output ${jobs.map(_.outputBytes).sum} B")
     GraftMetrics.totalsMs().toSeq.sortBy(-_._2._2).foreach {
       case (op, (c, ms)) => println(f"[profile]   op=$op%-28s n=$c%-4d $ms%.0f ms")
     }

@@ -215,9 +215,9 @@ final case class GraftMergeCommand(
       // arbitrary order for a SQL source) — but ANSI MERGE either raises
       // the cardinality error (key present in target) or inserts every
       // unmatched row (key absent). A duplicate-key source must therefore
-      // leave the fast path: `upsertIfUniquePks` folds that duplicate
-      // check into the upsert's own affected-partition probe (one job
-      // answers both) and REFUSES a duplicate-key source untouched. Keys
+      // leave the fast path: `upsertIfUniquePks` checks the keys it
+      // collects for its probe anyway (no extra job for a trigger-sized
+      // source) and REFUSES a duplicate-key source untouched. Keys
       // are compared as they land, after the cast to the table's key
       // types: keys distinct as written but equal after it are
       // duplicates. The general rewrite then reproduces both ANSI
@@ -226,8 +226,8 @@ final case class GraftMergeCommand(
       // constraint (README "Capability determinations").
       //
       // The projected source is cached for the whole fast path: the
-      // probe's aggregation materializes it, and the upsert's own jobs
-      // (affected-partition probe + rewrite) read the cache instead of
+      // upsert's key collect materializes it, and its later jobs (the
+      // probe join and the row write) read the cache instead of
       // re-executing the source plan — one source execution per MERGE, so
       // an expensive or nondeterministic source is scanned once and the
       // probe and the upsert observe the SAME data. The footprint is the
@@ -387,7 +387,11 @@ final case class GraftMergeCommand(
     * rows plus the partitions the inserts land in are rewritten —
     * untouched partitions keep their files. NOT MATCHED BY SOURCE can
     * touch every target row, so that form (and unpartitioned tables)
-    * rewrites the whole table. */
+    * rewrites the whole table, as does a table whose files are not all
+    * in its current layout (mid-REBUCKET or partition evolution): a
+    * directory of the old layout holds rows of several current
+    * partitions, so a partition-value scope would drop the rows it does
+    * not name. */
   private def generalMerge(spark: SparkSession, lake: GraftLake, meta: TableMeta): Unit = {
     if (matched.isEmpty) { noMatchedActionsMerge(spark, lake, meta); return }
 
@@ -396,7 +400,8 @@ final case class GraftMergeCommand(
     // (scoped target plan, affected dirs, untouched remainder) —
     // None = whole-table rewrite
     val scoping: Option[(LogicalPlan, Seq[String], org.apache.spark.sql.DataFrame)] =
-      if (partCols.isEmpty || notMatchedBySource.nonEmpty) None
+      if (partCols.isEmpty || notMatchedBySource.nonEmpty ||
+          !lake.latestVersion(table).forall(lake.liveSetConforms(table, _))) None
       else {
         val tdf = PlanBridge.ofRows(spark, target)
         val sdf = PlanBridge.ofRows(spark, source)

@@ -33,8 +33,9 @@ import graft.catalog.GraftLake
   *    `_change_type` 'insert' | 'delete' | 'update_preimage' |
   *    'update_postimage' and `_commit_version`. Append commits stream
   *    inserts, MoR deletes their preimages, MoR updates pre/post pairs —
-  *    all derived from commit metadata. Rewrite-class commits (upsert/
-  *    MERGE, copy-on-write UPDATE/DELETE) stream EXACTLY when the table
+  *    all derived from commit metadata. Upserts with matches and
+  *    rewrite-class commits (general MERGE, copy-on-write UPDATE/DELETE)
+  *    stream EXACTLY when the table
   *    has change capture on (`ALTER TABLE t SET TBLPROPERTIES
   *    ('graft.enableChangeDataFeed'='true')` — such commits then write
   *    their row-level changes at commit time and the feed reads them

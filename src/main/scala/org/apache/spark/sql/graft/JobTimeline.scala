@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
-  SparkListenerJobStart}
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.util.CallSite
@@ -18,10 +18,14 @@ import org.apache.spark.util.CallSite
 object JobTimeline {
 
   /** One job: id, job group, task count per stage, start and end (epoch
-    * ms; no end for a job still running when the work returned) and the
-    * engine frame that submitted it. */
+    * ms; no end for a job still running when the work returned), the
+    * engine frame that submitted it, and the bytes its completed stages
+    * wrote as shuffle output and as task output (files a write job
+    * produced). A stage another job already ran is skipped, so its bytes
+    * stay with the job that ran it. */
   final case class Job(id: Int, group: Option[String], tasks: Seq[Int],
-      startMs: Long, endMs: Option[Long], site: String) {
+      startMs: Long, endMs: Option[Long], site: String,
+      shuffleWriteBytes: Long = 0L, outputBytes: Long = 0L) {
     def stages: Int = tasks.size
     def durationMs: Option[Long] = endMs.map(_ - startMs)
   }
@@ -35,16 +39,26 @@ object JobTimeline {
     // SQL execution id → (root execution id, call site); an execution
     // starts before its jobs, and the bus delivers in order
     val executions = new ConcurrentHashMap[Long, (Long, String)]()
+    val jobOfStage = new ConcurrentHashMap[Int, Int]()
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
           executions.put(s.executionId, (s.rootExecutionId.getOrElse(s.executionId), s.details))
         case _ => ()
       }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        e.stageIds.foreach(jobOfStage.put(_, e.jobId))
         jobs.put(e.jobId, Job(e.jobId,
           Option(e.properties).flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_GROUP_ID))),
           e.stageInfos.map(_.numTasks), e.time, None, site(e, executions)))
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        for {
+          jobId <- Option(jobOfStage.get(e.stageInfo.stageId))
+          m <- Option(e.stageInfo.taskMetrics)
+        } jobs.computeIfPresent(jobId, (_, j) => j.copy(
+          shuffleWriteBytes = j.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+          outputBytes = j.outputBytes + m.outputMetrics.bytesWritten))
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.computeIfPresent(e.jobId, (_, j) => j.copy(endMs = Some(e.time)))
     }

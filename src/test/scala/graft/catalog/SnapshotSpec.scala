@@ -176,14 +176,18 @@ class SnapshotSpec extends AnyFunSuite {
     GraftLake.invalidateCaches()
     val wh = Files.createTempDirectory("graft-snap").toString
     val lake = new GraftLake(spark, wh)
-    // rewrite churn: every upsert retires the previous file into _history
-    for (i <- 1 to 6)
+    // rewrite churn: with no DV budget every upsert commits, then folds its
+    // DV into the files, retiring the previous file into _history
+    spark.conf.set("spark.graft.dv.maxEntries", "0")
+    try for (i <- 1 to 6)
       lake.write("h", Seq((1, s"v$i"), (2, s"w$i")).toDF("id", "v"),
         pks = Seq("id"))
+    finally spark.conf.unset("spark.graft.dv.maxEntries")
     val vacuumedBefore = graft.metrics.GraftMetrics.historyFilesVacuumed.sum()
-    lake.expireSnapshots("h", keepLast = 3)
+    // the last three upserts: each one commit plus its fold
+    lake.expireSnapshots("h", keepLast = 5)
     val kept = lake.versions("h")
-    assert(kept.size === 3)
+    assert(kept.size === 5)
     // normalize to the path below _history/ — snapshot resolution and the
     // raw directory walk may differ in scheme qualification
     def relHist(p: String): Option[String] = {
@@ -485,11 +489,14 @@ class SnapshotSpec extends AnyFunSuite {
     lake.write("coll",
       Seq((1, "x", 10), (2, "y", 20)).toDF("id", "seg", "n").coalesce(1),
       partitions = Seq("seg"), pks = Seq("id"))
-    // rewrite BOTH partitions in one upsert (again one task) — both
-    // same-named originals must retire without clobbering each other
-    lake.write("coll",
+    // rewrite BOTH partitions in one upsert whose DV folds at once (no DV
+    // budget) — both same-named originals must retire without clobbering
+    // each other
+    spark.conf.set("spark.graft.dv.maxEntries", "0")
+    try lake.write("coll",
       Seq((1, "x", 11), (2, "y", 21)).toDF("id", "seg", "n").coalesce(1),
       partitions = Seq("seg"), pks = Seq("id"))
+    finally spark.conf.unset("spark.graft.dv.maxEntries")
     val vs = lake.versions("coll")
     assert(rows(lake.readVersion("coll", vs(0)), "id", "seg", "n") ===
       Set(Seq(1, "x", 10), Seq(2, "y", 20)),
@@ -583,8 +590,12 @@ class SnapshotSpec extends AnyFunSuite {
   test("read-after-expire contract: held snapshots fail fast, live tail unaffected") {
     val lake = newLake()
     lake.write("race", Seq((1, "a")).toDF("id", "v"), pks = Seq("id"))
-    lake.write("race", Seq((1, "b")).toDF("id", "v"), pks = Seq("id"))
-    lake.write("race", Seq((1, "c")).toDF("id", "v"), pks = Seq("id"))
+    // no DV budget: each upsert's fold retires the file it masked
+    spark.conf.set("spark.graft.dv.maxEntries", "0")
+    try {
+      lake.write("race", Seq((1, "b")).toDF("id", "v"), pks = Seq("id"))
+      lake.write("race", Seq((1, "c")).toDF("id", "v"), pks = Seq("id"))
+    } finally spark.conf.unset("spark.graft.dv.maxEntries")
     val vs = lake.versions("race")
     // a reader holding v0 while its files are vacuumed: fail-fast with an
     // explicit message at resolution; a plan that already resolved paths
@@ -855,8 +866,9 @@ class SnapshotSpec extends AnyFunSuite {
       s"operation labels: ${h.map(_._2).toSeq}")
     // derived deltas: first commit adds everything from nothing
     assert(h.head._3 > 0 && h.head._4 === 0)
-    // the upsert rewrote id=2's file: both adds and removes
-    assert(h(2)._3 > 0 && h(2)._4 > 0, s"upsert delta: ${h(2)}")
+    // the upsert adds id=2's new row and removes no file (a deletion
+    // vector masks the old row)
+    assert(h(2)._3 > 0 && h(2)._4 === 0, s"upsert delta: ${h(2)}")
     // ts non-decreasing
     val ts = lake.history("h").collect().map(_.getTimestamp(1).getTime)
     assert(ts.zip(ts.tail).forall { case (a, b) => a <= b })
