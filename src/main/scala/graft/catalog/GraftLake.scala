@@ -933,16 +933,22 @@ final class GraftLake(private[graft] val spark: SparkSession,
       // broadcast DV set — no join, no per-query broadcast-build job
       // (executors fetched the blocks at the first query after the DV
       // commit), scan stays single-source and whole-stage-codegen'd
-      val b = dvBroadcastCached(name, dvs)
-      import org.apache.spark.sql.graft.PlanBridge
-      val masked = graft.functions.DvMasked(
-        PlanBridge.expression(GraftLake.dvKeyColumn(partDepth)),
-        PlanBridge.expression(col("_metadata.row_index")), b)
-      df.filter(!PlanBridge.column(masked))
+      dvMaskFilter(name, dvs, df, GraftLake.dvKeyColumn(partDepth),
+        col("_metadata.row_index"))
     } else
       // config-lowered bound after commits: an unbounded set must not be
       // collected to the driver — AQE picks the join
       dvAntiJoinFrames(df, dvFrame(name, dvs), partDepth, broadcastDv = false)
+  }
+
+  /** `df` without the rows whose (DV key, position) the cached broadcast
+    * DV set of `dvs` masks. */
+  private def dvMaskFilter(name: String, dvs: Seq[String], df: DataFrame,
+      key: Column, pos: Column): DataFrame = {
+    import org.apache.spark.sql.graft.PlanBridge
+    df.filter(!PlanBridge.column(graft.functions.DvMasked(
+      PlanBridge.expression(key), PlanBridge.expression(pos),
+      dvBroadcastCached(name, dvs))))
   }
 
   /** Driver-built [[graft.functions.DvSet]] broadcast, memoized per
@@ -1039,7 +1045,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
 
   /** The live rows of `name` through a manifest-pruned scan, with the DV
     * key/position metadata columns ([[keyC]]/[[posC]]) attached and any
-    * live deletion vectors already anti-joined away — the shared front
+    * live deletion vectors already masked away — the shared front
     * half of every merge-on-read DML. `keep` narrows the manifest's
     * (rel dir, file name) set the scan plans (a table without commits
     * reads whole, so a caller needing an exact file set still filters
@@ -1083,9 +1089,14 @@ final class GraftLake(private[graft] val spark: SparkSession,
     if (!fileBacked) return None
     val dvs0 = liveDvs(name)
     val keyed = withDvKeys(base, partDepth)
+    // the live-read mask: the cached per-DV-state broadcast set as a
+    // filter, so a statement under a DV state a read has built runs no
+    // broadcast job; past the entry bound AQE picks the anti-join
     val masked =
       if (dvs0.isEmpty) keyed
-      else dvAntiJoin(keyed, dvFrame(name, dvs0), broadcastDv = true)
+      else if (dvEntryCountCached(name, dvs0) <= dvMaxEntries)
+        dvMaskFilter(name, dvs0, keyed, col(keyC), col(posC))
+      else dvAntiJoin(keyed, dvFrame(name, dvs0), broadcastDv = false)
     // LOGICAL view out: the callers filter user predicates and evaluate
     // user assignments against this frame ([[keyC]]/[[posC]] untouched)
     Some(toLogical(meta.schema, masked))
@@ -4506,7 +4517,16 @@ final class GraftLake(private[graft] val spark: SparkSession,
               .nextLong(1L, math.min(100L, 5L << math.min(attempt, 4))))
       }
     }
+    recacheData(name)
   }
+
+  /** After a commit that changed `name`'s live files: Spark-cached plans
+    * over its data directory would keep serving the old rows (a new read
+    * that plans the same directory scan matches them) and hold a listing
+    * of retired files, so refresh and rebuild them as Spark's own file
+    * writes do. A no-op when nothing is cached. */
+  private def recacheData(name: String): Unit =
+    org.apache.spark.sql.graft.PlanBridge.recacheByPath(spark, dataDir(name))
 
   /** Best-effort physical rollback after a rewrite loses the commit
     * race: every `removed` file returns from `_history/` to `data/` (the
@@ -6099,6 +6119,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     liveSetCache.put(key, (next, list, 0))
     statsMapCache.put(key, (next, stats))
     dvSetCache.put(key, (next, dvs))
+    recacheData(name)
     next
   }
 

@@ -778,13 +778,15 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * side) instead of self-flagging and, under dropDups, being dropped
     * permanently.
     *
-    * `nRecords` (the profiled batch row count, -1 = unknown) gates the
-    * trigger-sized-batch optimizations: above
-    * `spark.graft.ingest.dedupBroadcastMaxRows` (default 5M) the flag
-    * frame joins without a broadcast hint (AQE picks) and admission writes
-    * proportional-to-data slices instead of coalesce(1) — a backfill
-    * replay must degrade to shuffles, not fail the stream on the
-    * broadcast limit or serialize its index write onto one task. */
+    * `nRecords` (the profiled batch row count, -1 = unknown) picks the
+    * probe: up to `spark.graft.ingest.dedupBroadcastMaxRows` (default 5M)
+    * the batch is collected once and verified on the driver, the flag goes
+    * onto the landing frame as an `isin` over the dup ids and each index
+    * table gets one admission file; above it the distributed probe runs,
+    * its joins unhinted (AQE picks) and admission writing
+    * proportional-to-data slices — a backfill replay must degrade to
+    * shuffles, not fail the stream on a driver-sized collect or serialize
+    * its index write onto one task. */
   private def applyDedup(table: String, dc: DedupConfig,
       df: DataFrame, nRecords: Long): (DataFrame, Option[() => Unit]) = {
     if (!df.columns.contains(dc.idCol) || !df.columns.contains(dc.textCol)) {
@@ -799,25 +801,18 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     val probe = df
       .select(col(dc.idCol), col(dc.textCol).cast("string").as(dc.textCol))
       .dropDuplicates(dc.idCol)
-    // STAGED: the probe runs now (flags are stable — the dup set is
-    // checkpointed before any index mutation); admission is handed back
-    // so writeToLake commits it inside ONE transact with the landing
-    // write — index and table never diverge on an in-process flush failure
-    val (flags, admit) = GraftMetrics.time(GraftMetrics.IngestDedup) {
+    // STAGED: the probe runs now (flags are stable — the dup set is fixed
+    // before any index mutation); admission is handed back so writeToLake
+    // commits it inside ONE transact with the landing write — index and
+    // table never diverge on an in-process flush failure
+    val (flag, admit) = GraftMetrics.time(GraftMetrics.IngestDedup) {
       graft.operators.DedupOps.incrementalNearDupsStaged(
         lake, s"${table}_lshidx", probe, dc.idCol, dc.textCol,
         dc.threshold, dc.shingleK, dc.bands, dc.rowsPerBand,
         parallelAdmit = true, hintBroadcast = !huge,
         admitSlices = admitSlices)
     }
-    // the flag frame is batch-bounded (ids + a bit) — broadcast it back
-    // onto the batch rather than shuffling the landing projection (gated:
-    // see nRecords above)
-    val flagsRenamed = flags.withColumnRenamed("is_dup", dc.flagCol)
-    val flagged = df
-      .join(if (huge) flagsRenamed else broadcast(flagsRenamed),
-        Seq(dc.idCol), "left")
-      .withColumn(dc.flagCol, coalesce(col(dc.flagCol), lit(0L)))
+    val flagged = flag(df, dc.flagCol)
     (if (dc.dropDups) flagged.filter(col(dc.flagCol) === 0L).drop(dc.flagCol)
      else flagged, Some(admit))
   }
@@ -895,8 +890,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         // redelivered ids are exempt from flagging/re-admission, see
         // applyDedup.) transactOwned (this pipeline is the members' only
         // writer — foreachBatch serializes triggers) so admission and
-        // landing run CONCURRENTLY: all three writes read only
-        // checkpointed probe state + the trigger cache, and a streaming
+        // landing run CONCURRENTLY: all three writes read only the
+        // probe's fixed state + the trigger cache, and a streaming
         // flush pays ONE write's latency, not three in sequence. The
         // landing stays on this thread (its policy suppression is
         // thread-local); the admission task is quiesced before any

@@ -64,10 +64,16 @@ object DedupOps {
   def bandKeys(sigs: DataFrame, idCol: String,
       bands: Int = 16, rowsPerBand: Int = 4): DataFrame =
     sigs.select(col(idCol), posexplode(
-      array((0 until bands).map { b =>
-        hash((0 until rowsPerBand).map(r =>
-          col("signature").getItem(b * rowsPerBand + r)) :+ lit(b): _*)
-      }: _*)).as(Seq("band", "band_hash")))
+      array(bandHashes(col("signature"), bands, rowsPerBand): _*))
+      .as(Seq("band", "band_hash")))
+
+  /** The `band_hash` of each band of a signature column: band `b` hashes
+    * its `rowsPerBand` signature slots together with `b`. */
+  private def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Seq[Column] =
+    (0 until bands).map { b =>
+      hash((0 until rowsPerBand).map(r =>
+        sig.getItem(b * rowsPerBand + r)) :+ lit(b): _*)
+    }
 
   /** LSH candidate pairs: signatures banded (bands × rowsPerBand), bucket
     * join per band, pairs deduped.
@@ -347,11 +353,11 @@ object DedupOps {
       threshold: Double, shingleK: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 4, admit: Boolean = true): DataFrame =
     if (admit) {
-      val (flagged, doAdmit) = incrementalNearDupsStaged(lake, prefix,
+      val (flag, doAdmit) = incrementalNearDupsStaged(lake, prefix,
         batch, idCol, textCol, threshold, shingleK, bands, rowsPerBand,
         parallelAdmit = true)
       doAdmit()
-      flagged
+      flag(batch.select(col(idCol)), "is_dup")
     } else {
       // pure probe: ONE lazy plan the caller evaluates — no caches, no
       // materialization job inside the call. The multiply-referenced
@@ -363,63 +369,204 @@ object DedupOps {
         idCol, bands, rowsPerBand)
       val bShOuter = shingled(batch, idCol, textCol, shingleK)
         .select(col(idCol).as("__bid"), col("__shingles").as("__sb"))
-      incrementalNearDupsBody(lake, prefix, batch, idCol, textCol,
-        threshold, shingleK, admit = false, parallelAdmit = false,
-        bKeys, bShOuter)._1
+      val (flag, _) = incrementalNearDupsBody(lake, prefix, batch, idCol,
+        textCol, threshold, shingleK, admit = false, parallelAdmit = false,
+        bKeys, bShOuter)
+      flag(batch.select(col(idCol)), "is_dup")
     }
 
   /** [[incrementalNearDups]] with admission STAGED for a coordinating
-    * caller: probes the index eagerly and returns (flag frame, admission
-    * thunk). The ingest pipeline runs the thunk INSIDE a multi-table
-    * [[graft.catalog.GraftLake.transact]] alongside the landing write, so
-    * a failure between index admission and the landing commit rolls BOTH
-    * back — the persisted index can never run ahead of the table it
-    * curates (single-process contract, see transact). The thunk appends
-    * the two index tables SEQUENTIALLY: a transact body holds the member
-    * write locks on ITS thread, so a worker thread (the parallel path)
-    * would deadlock against its own transaction.
+    * caller: probes the index eagerly and returns (flagger, admission
+    * thunk). `flag(frame, name)` adds the 0/1 dup flag `name` to any frame
+    * that carries the id column; its value is fixed when this returns, so
+    * it stays right after the admission. The ingest pipeline runs the thunk
+    * INSIDE a multi-table [[graft.catalog.GraftLake.transact]] alongside
+    * the landing write, so a failure between index admission and the
+    * landing commit rolls BOTH back — the persisted index can never run
+    * ahead of the table it curates (single-process contract, see
+    * transact). With `parallelAdmit` the thunk appends the two index
+    * tables concurrently, on tasks that carry the caller's job group.
     *
-    * Probe mechanics: the batch's (id, shingles, signature) sketch is
-    * computed ONCE and eagerly localCheckpoint'ed. Every downstream
-    * consumer — band keys, both candidate joins, the verify join, the
-    * admission appends — then plans against a shallow in-memory relation
-    * instead of re-deriving (and re-ANALYZING, a per-trigger driver cost
-    * that dwarfed the jobs) the 64-hash sketch tree per branch. */
+    * Probe mechanics. A trigger-sized batch (`hintBroadcast`, the
+    * steady-state streaming shape) is verified on the driver in at most
+    * three collects: the batch sketch (id, text, shingles, band hashes —
+    * the same expressions as the persisted index, so the keys are
+    * identical), the index band rows whose `band_hash` is one of the
+    * batch's, and — only when corpus candidates exist — the candidates'
+    * shingles. In-batch candidates, redelivery self-marks, the exact
+    * Jaccard and keep-min-id (SQL `<` of the id type) then run over the
+    * collected rows; the flag is an `isin` over the dup ids, and admission
+    * appends local frames of the collected survivors. The collects hold
+    * what the broadcasts of the distributed probe would. A large batch (a
+    * replay or backfill), or an id type the driver cannot key with SQL
+    * semantics, takes the distributed probe: the sketch and the mark set
+    * are localCheckpoint'ed, and a large batch plans every join without
+    * broadcast hints so AQE picks it. */
   def incrementalNearDupsStaged(lake: graft.catalog.GraftLake,
       prefix: String, batch: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleK: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 4,
       parallelAdmit: Boolean = false,
       hintBroadcast: Boolean = true,
-      admitSlices: Int = 1): (DataFrame, () => Unit) = {
+      admitSlices: Int = 1): ((DataFrame, String) => DataFrame, () => Unit) = {
     graft.functions.SketchExpressions.register(batch.sparkSession)
     graft.functions.ShingleExpression.register(batch.sparkSession)
-    // text rides along so the ADMISSION doc append also plans against the
-    // shallow checkpoint (the caller's batch lineage — typically a
-    // dropDuplicates shuffle off the trigger cache — never re-runs)
+    import org.apache.spark.sql.graft.PlanBridge
+    val idType = batch.schema(idCol).dataType
+    val indexIdsMatch = Seq(s"${prefix}_bands", s"${prefix}_docs").forall { t =>
+      !lake.tableExists(t) || lake.read(t).schema.find(_.name == idCol)
+        .exists(f => PlanBridge.sameType(f.dataType, idType))
+    }
+    val keys =
+      if (hintBroadcast && indexIdsMatch) PlanBridge.driverKeys(idType) else None
+    keys match {
+      case Some(k) => driverNearDups(lake, prefix, batch, idCol, textCol,
+        threshold, shingleK, bands, rowsPerBand, parallelAdmit, k)
+      case None =>
+        // text rides along so the ADMISSION doc append also plans against
+        // the shallow checkpoint (the caller's batch lineage — typically a
+        // dropDuplicates shuffle off the trigger cache — never re-runs)
+        val sketch = batch
+          .select(col(idCol), col(textCol),
+            wordShingles(col(textCol), shingleK).as("__shingles"))
+          .withColumn("signature",
+            graft.functions.SketchExpressions.minHash(col("__shingles")))
+          .localCheckpoint(true)
+        val bKeys = bandKeys(
+          sketch.filter(col("signature").isNotNull)
+            .select(col(idCol), col("signature")), idCol, bands, rowsPerBand)
+        val bShOuter = sketch
+          .select(col(idCol).as("__bid"), col("__shingles").as("__sb"))
+        incrementalNearDupsBody(lake, prefix, batch, idCol, textCol,
+          threshold, shingleK, admit = true, parallelAdmit = parallelAdmit,
+          bKeys, bShOuter,
+          docsSource = sketch.select(col(idCol), col(textCol)),
+          hintBroadcast = hintBroadcast, admitSlices = admitSlices)
+    }
+  }
+
+  /** The trigger-sized probe of [[incrementalNearDupsStaged]], verified on
+    * the driver over collected rows. */
+  private def driverNearDups(lake: graft.catalog.GraftLake, prefix: String,
+      batch: DataFrame, idCol: String, textCol: String, threshold: Double,
+      shingleK: Int, bands: Int, rowsPerBand: Int, parallelAdmit: Boolean,
+      keys: org.apache.spark.sql.graft.DriverKeys)
+      : ((DataFrame, String) => DataFrame, () => Unit) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val spark = batch.sparkSession
+    val sig = col("__sig")
     val sketch = batch
       .select(col(idCol), col(textCol),
-        wordShingles(col(textCol), shingleK).as("__shingles"))
-      .withColumn("signature",
-        graft.functions.SketchExpressions.minHash(col("__shingles")))
-      .localCheckpoint(true)
-    val bKeys = bandKeys(
-      sketch.filter(col("signature").isNotNull)
-        .select(col(idCol), col("signature")), idCol, bands, rowsPerBand)
-    val bShOuter = sketch
-      .select(col(idCol).as("__bid"), col("__shingles").as("__sb"))
-    // the RETURNED flag frame derives from the caller's batch, not the
-    // sketch: the flush may keep flags alive through the landing write,
-    // and tying them to the sketch would pin the checkpoint blocks
-    // (freed by the ContextCleaner once unreachable — the codebase's
-    // per-trigger checkpoint lifecycle) for the whole flush instead of
-    // just the probe+admission
-    incrementalNearDupsBody(lake, prefix, batch, idCol, textCol,
-      threshold, shingleK, admit = true, parallelAdmit = parallelAdmit,
-      bKeys, bShOuter,
-      docsSource = sketch.select(col(idCol), col(textCol)),
-      hintBroadcast = hintBroadcast, admitSlices = admitSlices)
+        wordShingles(col(textCol), shingleK).as("__sh"))
+      .withColumn("__sig", graft.functions.SketchExpressions.minHash(col("__sh")))
+      .select(col(idCol), col(textCol), col("__sh"),
+        when(sig.isNotNull, array(bandHashes(sig, bands, rowsPerBand): _*))
+          .as("__bands"))
+    // a row's shingle count (SQL `size`) and distinct shingle set
+    final case class Sh(size: Int, set: Set[String])
+    def shOf(r: Row, i: Int) = { val a = r.getSeq[String](i); Sh(a.size, a.toSet) }
+    // DedupOps.jaccard: distinct intersection over size(a) + size(b) - inter
+    def dup(a: Sh, b: Sh): Boolean = {
+      val inter = if (a.set.size <= b.set.size) a.set.count(b.set) else b.set.count(a.set)
+      val uni = a.size + b.size - inter
+      (if (uni == 0) 0.0 else inter.toDouble / uni.toDouble) >= threshold
+    }
+    val (rows, dups, self) = graft.metrics.GraftMetrics.time(
+        graft.metrics.GraftMetrics.DedupProbe) {
+      val rows = sketch.collect()
+      // SQL `=`/`<` with a null id is never true: null-id rows take part in
+      // no candidate pair and are never admitted
+      val ids = rows.map(r => if (r.isNullAt(0)) null else keys.key(r.get(0)))
+      val batchSh = rows.indices.filter(ids(_) != null)
+        .groupMap(ids(_))(i => shOf(rows(i), 2))
+      // (band, band_hash) -> the batch rows carrying it
+      def bk(band: Int, h: Int) = (band.toLong << 32) | (h & 0xffffffffL)
+      val byBand = rows.indices.filter(i => ids(i) != null && !rows(i).isNullAt(3))
+        .flatMap(i => rows(i).getSeq[Int](3).zipWithIndex.map { case (h, b) => bk(b, h) -> i })
+        .groupMap(_._1)(_._2)
+      // keep-min-id: a batch doc is a candidate dup of each lower id it
+      // shares a band with
+      val vsBatch = byBand.valuesIterator.flatMap(is => for {
+        i <- is.iterator; j <- is.iterator if keys.lt(ids(j), ids(i))
+      } yield (ids(i), ids(j))).toSet
+      val hashes = byBand.keysIterator.map(_.toInt).toSet
+      val hits =
+        if (hashes.isEmpty || !lake.tableExists(s"${prefix}_bands")) Array.empty[Row]
+        else lake.read(s"${prefix}_bands")
+          .filter(col("band_hash").isin(hashes.toSeq: _*))
+          .select(col(idCol), col("band"), col("band_hash")).collect()
+      val vsCorpusAll = hits.iterator.filterNot(_.isNullAt(0)).flatMap { r =>
+        val p = keys.key(r.get(0))
+        byBand.getOrElse(bk(r.getInt(1), r.getInt(2)), Nil).map(i => (ids(i), p))
+      }.toSet
+      // a batch doc whose OWN id already band-matches in the index is an
+      // at-least-once REDELIVERY: exempt from dup flagging and admission
+      // (see incrementalNearDupsBody)
+      val self = vsCorpusAll.collect { case (b, p) if b == p => b }
+      val vsCorpus = vsCorpusAll.filter { case (b, p) => b != p }
+      val partners = vsCorpus.map(_._2)
+      val indexSh =
+        if (partners.isEmpty || !lake.tableExists(s"${prefix}_docs"))
+          Map.empty[Any, Seq[Sh]]
+        else lake.read(s"${prefix}_docs")
+          .filter(col(idCol).isin(partners.toSeq.map(keys.lit): _*))
+          .select(col(idCol), wordShingles(col(textCol), shingleK))
+          .collect().toSeq.groupMap(r => keys.key(r.get(0)))(shOf(_, 1))
+      def verified(pairs: Set[(Any, Any)], partnerSh: Map[Any, Seq[Sh]]) =
+        pairs.collect { case (b, p) if batchSh(b).exists(a =>
+          partnerSh.getOrElse(p, Nil).exists(dup(a, _))) => b }
+      (rows, verified(vsCorpus, indexSh) ++ verified(vsBatch, batchSh), self)
+    }
+    val flag = (f: DataFrame, name: String) => {
+      val isDup =
+        if (dups.isEmpty) lit(0L)
+        else when(col(idCol).isin(dups.toSeq.map(keys.lit): _*), 1L).otherwise(0L)
+      // the id column first, as the distributed probe's join puts it
+      f.select((col(idCol) +: f.columns.toSeq.filter(_ != idCol).map(c =>
+        col(s"`${c.replace("`", "``")}`"))) :+ isDup.as(name): _*)
+    }
+    val doAdmit = () => graft.metrics.GraftMetrics.time(
+        graft.metrics.GraftMetrics.DedupAdmit) {
+      val admitted = rows.filter { r =>
+        !r.isNullAt(0) && { val k = keys.key(r.get(0)); !dups(k) && !self(k) }
+      }
+      val docsSchema = StructType(Seq(sketch.schema(idCol), sketch.schema(textCol)))
+      val bandsSchema = StructType(Seq(sketch.schema(idCol),
+        StructField("band", IntegerType, nullable = false),
+        StructField("band_hash", IntegerType, nullable = false)))
+      def local(rs: Seq[Row], schema: StructType) =
+        spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema).coalesce(1)
+      val docsFrame = local(admitted.toSeq.map(r => Row(r.get(0), r.get(1))), docsSchema)
+      val bandsFrame = local(admitted.toSeq.filterNot(_.isNullAt(3)).flatMap(r =>
+        r.getSeq[Int](3).zipWithIndex.map { case (h, b) => Row(r.get(0), b, h) }),
+        bandsSchema)
+      admitBoth(lake, prefix, spark, parallelAdmit, docsFrame, bandsFrame)
+    }
+    (flag, doAdmit)
   }
+
+  /** Append the admitted docs and band keys to the two index tables. The
+    * tables are independent (separate write locks, separate manifests), so
+    * with `parallel` their appends run concurrently and a streaming
+    * trigger pays ONE append's latency. BOTH tasks finish before any
+    * rethrow — an orphaned in-flight append could otherwise commit AFTER
+    * the caller's transaction rollback, leaving aborted band keys live in
+    * the index (a redelivered doc would then self-flag as a dup). Their
+    * jobs carry the caller's job group and local properties. Sequential
+    * otherwise: a caller inside a transact holds the member locks on ITS
+    * thread. */
+  private def admitBoth(lake: graft.catalog.GraftLake, prefix: String,
+      spark: SparkSession, parallel: Boolean,
+      docsFrame: => DataFrame, bandsFrame: => DataFrame): Unit =
+    if (parallel)
+      org.apache.spark.sql.graft.CapturedTasks.runAll(spark, 2)(Seq(
+        () => lake.append(s"${prefix}_docs", docsFrame),
+        () => lake.append(s"${prefix}_bands", bandsFrame)))
+    else {
+      lake.append(s"${prefix}_docs", docsFrame)
+      lake.append(s"${prefix}_bands", bandsFrame)
+    }
 
   private def incrementalNearDupsBody(lake: graft.catalog.GraftLake,
       prefix: String, batch: DataFrame, idCol: String, textCol: String,
@@ -428,7 +575,7 @@ object DedupOps {
       bKeys: DataFrame, bSh: DataFrame,
       docsSource: DataFrame = null,
       hintBroadcast: Boolean = true,
-      admitSlices: Int = 1): (DataFrame, () => Unit) = {
+      admitSlices: Int = 1): ((DataFrame, String) => DataFrame, () => Unit) = {
     // trigger-sized batches broadcast their frames (the steady-state
     // streaming shape); a genuinely large batch (replay/backfill) drops
     // the hints and lets AQE pick the join — a forced broadcast above the
@@ -517,16 +664,11 @@ object DedupOps {
           .agg(max(col("__dup")).as("__dup"), max(col("__self")).as("__self"))
           .localCheckpoint(true)
       } else dupsRaw
-    def marksOf(base: DataFrame) = base.select(col(idCol))
-      .join(marks.withColumnRenamed("__bid", idCol), Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("__dup"), lit(0L)).as("is_dup"),
-        coalesce(col("__self"), lit(0L)).as("__self"))
-    // the RETURNED frame derives from the caller's batch (it may stay
-    // alive through the whole flush — see the staged wrapper); the
-    // ADMISSION-internal frames derive from the shallow sketch when one
-    // exists, so the two append actions never re-run the caller's
-    // (dropDuplicates-shuffle) lineage
-    val flagged = marksOf(batch).select(col(idCol), col("is_dup"))
+    // one mark row per id, so a left join keeps the frame's rows
+    val flag = (f: DataFrame, name: String) => f
+      .join(bc(marks.select(col("__bid").as(idCol), col("__dup").as(name))),
+        Seq(idCol), "left")
+      .withColumn(name, coalesce(col(name), lit(0L)))
     val doAdmit: () => Unit = if (!admit) () => () else () =>
       graft.metrics.GraftMetrics.time(graft.metrics.GraftMetrics.DedupAdmit) {
         // survivors broadcast into both append frames (batch-bounded ids —
@@ -539,37 +681,19 @@ object DedupOps {
         // row count; maxRecordsPerFile still rolls oversized tasks).
         // Already-indexed ids (__self — redelivered docs) are NOT
         // re-admitted: their bands are in the index
-        val admittedIds = bc(marksOf(docsFrom)
-          .filter(col("is_dup") === 0L && col("__self") === 0L)
+        val admittedIds = bc(docsFrom.select(col(idCol))
+          .join(marks.withColumnRenamed("__bid", idCol), Seq(idCol), "left")
+          .filter(coalesce(col("__dup"), lit(0L)) === 0L &&
+            coalesce(col("__self"), lit(0L)) === 0L)
           .select(col(idCol)))
-        def docsFrame = docsFrom.select(col(idCol), col(textCol))
-          .join(admittedIds, Seq(idCol), "left_semi")
-          .coalesce(math.max(1, admitSlices))
-        def bandsFrame = bKeys.join(admittedIds, Seq(idCol), "left_semi")
-          .coalesce(math.max(1, admitSlices))
-        if (parallelAdmit) {
-          // the two index tables are independent (separate write locks,
-          // separate manifests) — submit their append jobs concurrently so
-          // a streaming trigger pays ONE append's latency, not two in
-          // sequence. Both read only the checkpointed dup set + the
-          // caller's batch, so neither depends on the other's commit.
-          // BOTH tasks finish before any rethrow — an orphaned in-flight
-          // append could otherwise commit AFTER the caller's transaction
-          // rollback, leaving aborted band keys live in the index (a
-          // redelivered doc would then self-flag as a dup). Their jobs
-          // carry the caller's job group and local properties
-          org.apache.spark.sql.graft.CapturedTasks.runAll(
-            docsFrom.sparkSession, 2)(Seq(
-            () => lake.append(s"${prefix}_docs", docsFrame),
-            () => lake.append(s"${prefix}_bands", bandsFrame)))
-        } else {
-          // sequential: the staged caller runs this inside a transact
-          // whose member locks are held by THIS thread
-          lake.append(s"${prefix}_docs", docsFrame)
-          lake.append(s"${prefix}_bands", bandsFrame)
-        }
+        admitBoth(lake, prefix, docsFrom.sparkSession, parallelAdmit,
+          docsFrom.select(col(idCol), col(textCol))
+            .join(admittedIds, Seq(idCol), "left_semi")
+            .coalesce(math.max(1, admitSlices)),
+          bKeys.join(admittedIds, Seq(idCol), "left_semi")
+            .coalesce(math.max(1, admitSlices)))
       }
-    (flagged, doAdmit)
+    (flag, doAdmit)
   }
 
   // ---- SimHash ----

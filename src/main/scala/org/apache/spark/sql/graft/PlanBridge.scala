@@ -131,6 +131,28 @@ object PlanBridge {
     case _ => false
   }
 
+  /** Driver-side keys for the values of a column of type `dt`, with the
+    * column's own SQL semantics, or None for a type they do not cover
+    * (binary, collated strings, nested types). */
+  def driverKeys(dt: org.apache.spark.sql.types.DataType): Option[DriverKeys] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType |
+          FloatType | DoubleType | DateType | TimestampType |
+          TimestampNTZType | _: DecimalType => Some(new DriverKeys(dt))
+      case _ if plainString(dt) => Some(new DriverKeys(dt))
+      case _ => None
+    }
+  }
+
+  /** Refresh the file listings of every cached plan that reads under
+    * `dir` and rebuild those cache entries, as Spark's own file writes
+    * do. A no-op when nothing is cached. */
+  def recacheByPath(spark: SparkSession, dir: String): Unit = {
+    val cm = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+    if (!cm.isEmpty) cm.recacheByPath(spark.asInstanceOf[classic.SparkSession], dir)
+  }
+
   /** The session's DSv2 catalog manager (private[sql] on SessionState). */
   def catalogManager(spark: SparkSession)
       : org.apache.spark.sql.connector.catalog.CatalogManager =
@@ -440,4 +462,27 @@ object PlanBridge {
       case _ => PUnknown
     }
   }
+}
+
+/** Keys of one column's values on the driver: [[key]] maps a value as
+  * `collect()` returns it to Spark's internal value, with floating zero and
+  * NaN normalized as join keys are, so hash equality of keys is SQL `=`;
+  * [[lt]] is SQL `<` on keys; [[lit]] turns a key back into a literal of
+  * the column's type. */
+final class DriverKeys private[graft] (dt: org.apache.spark.sql.types.DataType) {
+  private val toInternal =
+    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
+  private val ordering =
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+
+  def key(v: Any): Any = toInternal(v) match {
+    case d: Double => if (d == 0.0d) 0.0d else if (d.isNaN) Double.NaN else d
+    case f: Float => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f
+    case k => k
+  }
+
+  def lt(a: Any, b: Any): Boolean = ordering.lt(a, b)
+
+  def lit(k: Any): Column = PlanBridge.column(
+    org.apache.spark.sql.catalyst.expressions.Literal(k, dt))
 }

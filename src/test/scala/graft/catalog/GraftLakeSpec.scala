@@ -33,6 +33,31 @@ class GraftLakeSpec extends AnyFunSuite {
       Set(Seq(1, "carol"), Seq(2, "dave")))
   }
 
+  // Spark's cache manager matches a new read that plans the same
+  // directory scan to a cached one, so a commit that changes the live
+  // files must refresh the cached plans over the table's data.
+  test("a cached read sees an upsert's fold, and the next read after unpersist succeeds") {
+    val lake = newLake()
+    lake.write("cached", (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "v"),
+      pks = Seq("id"))
+    val held = lake.read("cached").cache()
+    assert(held.count() === 40)
+    // the fold leaves no deletion vector, so the next read plans the same
+    // plain directory scan as the cached one
+    spark.conf.set("spark.graft.dv.maxEntries", "0")
+    try lake.upsert("cached",
+      ((30 to 40) ++ (41 to 45)).map(i => (i.toLong, s"u$i")).toDF("id", "v"))
+    finally spark.conf.unset("spark.graft.dv.maxEntries")
+    def check(): Unit = {
+      val now = lake.read("cached")
+      assert(now.count() === 45)
+      assert(now.filter($"v".startsWith("u")).count() === 16)
+    }
+    check()
+    held.unpersist(blocking = true)
+    check()
+  }
+
   test("_inserted_at set on insert, preserved on merge-update") {
     val lake = newLake()
     lake.write("t", Seq((1, "a")).toDF("id", "v"), pks = Seq("id"))

@@ -124,6 +124,32 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     assert(p.lake.read("bdd_lshidx_docs").count() > 0)
   }
 
+  // q105 shape: the docs of a repeated flush probe an index that earlier
+  // flushes built. The trigger-sized probe collects the batch sketch, the
+  // matching band rows and the candidates' shingles, and flags and admits
+  // from the collected rows
+  test("a repeated dedup-gated docs flush against an existing index (q105 shape) runs 7 jobs") {
+    val p = pipeline(wh => IngestConfig(wh, dlqTable = None,
+      dedup = Map("bq" -> DedupConfig("doc_id", "text"))))
+    // flush n: docs 10n .. 10n+7; the first two copy flush n-1's docs
+    // 10(n-1)+2 and 10(n-1)+3, which that flush admitted
+    def flush(n: Int): Unit = p.processBatch(batchOf((0 until 8).map { j =>
+      val src = if (j < 2 && n > 0) 10 * (n - 1) + j + 2 else 10 * n + j
+      "bq" -> json(s"""{"doc_id":${10 * n + j},"text":"${
+        (0 until 8).map(w => s"w${w}x$src").mkString(" ")}"}""")
+    }: _*), n)
+    flush(0)
+    flush(1)
+    spark.sparkContext.setJobGroup("budget-dedup", "ingest job budget")
+    val jobs = try JobTimeline.record(spark.sparkContext)(flush(2))._2
+      finally spark.sparkContext.clearJobGroup()
+    info(s"${jobs.size} jobs: ${jobs.map(_.site).mkString("; ")}")
+    assert(jobs.forall(_.group.contains("budget-dedup")), jobs)
+    assert(jobs.size === 7)
+    assert(p.lake.read("bq").filter("is_dup = 1").count() === 4)
+    assert(p.lake.read("bq_lshidx_docs").count() === 8 + 6 + 6)
+  }
+
   test("a JSON-only DLQ replay runs its profile instead of a dispatch job and a fallback inference") {
     val wh = Files.createTempDirectory("graft-budget").toString
     graft.catalog.GraftLake.invalidateCaches()
