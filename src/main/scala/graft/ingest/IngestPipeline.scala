@@ -446,6 +446,17 @@ object IngestPipeline {
       length(v) >= 8 && substring(v, 1, 4) === lit(Array[Byte](-1, -1, -1, -1)),
       lit(false))
 
+  /** The dedup gate's probe for a batch of `nRecords` rows (-1 = unknown)
+    * under `spark.graft.ingest.dedupBroadcastMaxRows` = `bcMax`, as
+    * (driver verify, broadcast hints): a counted batch within both `bcMax`
+    * and [[graft.operators.DedupOps.DriverVerifyMaxRows]] is verified on
+    * the driver; any other batch takes the distributed probe, hinted
+    * unless it is counted above `bcMax`. */
+  private[ingest] def dedupRoute(nRecords: Long, bcMax: Long): (Boolean, Boolean) = (
+    nRecords >= 0 &&
+      nRecords <= math.min(bcMax, graft.operators.DedupOps.DriverVerifyMaxRows),
+    nRecords < 0 || nRecords <= bcMax)
+
   /** Write slices for `n` rows: one per `maxRecordsPerFile`, at least one. */
   private def slicesFor(n: Long): Int =
     math.max(1L, math.min(Int.MaxValue.toLong,
@@ -779,14 +790,17 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * permanently.
     *
     * `nRecords` (the profiled batch row count, -1 = unknown) picks the
-    * probe: up to `spark.graft.ingest.dedupBroadcastMaxRows` (default 5M)
-    * the batch is collected once and verified on the driver, the flag goes
-    * onto the landing frame as an `isin` over the dup ids and each index
-    * table gets one admission file; above it the distributed probe runs,
-    * its joins unhinted (AQE picks) and admission writing
+    * probe. A counted batch within `spark.graft.ingest.dedupBroadcastMaxRows`
+    * (default 5M) and within the measured driver bound
+    * [[graft.operators.DedupOps.DriverVerifyMaxRows]] is collected once and
+    * verified on the driver: the flag goes onto the landing frame from a
+    * broadcast set of the dup ids and each index table gets one admission
+    * file. Any other batch within the key's bound, or of unknown size,
+    * takes the distributed probe with broadcast-hinted joins; above the
+    * bound its joins run unhinted (AQE picks) and admission writes
     * proportional-to-data slices — a backfill replay must degrade to
-    * shuffles, not fail the stream on a driver-sized collect or serialize
-    * its index write onto one task. */
+    * shuffles, not fail the stream on the broadcast limit or serialize its
+    * index write onto one task. */
   private def applyDedup(table: String, dc: DedupConfig,
       df: DataFrame, nRecords: Long): (DataFrame, Option[() => Unit]) = {
     if (!df.columns.contains(dc.idCol) || !df.columns.contains(dc.textCol)) {
@@ -795,7 +809,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     }
     val bcMax = spark.conf.getOption("spark.graft.ingest.dedupBroadcastMaxRows")
       .map(_.toLong).getOrElse(5000000L)
-    val huge = nRecords >= 0 && nRecords > bcMax
+    val (driverVerify, hinted) = IngestPipeline.dedupRoute(nRecords, bcMax)
+    val huge = !hinted
     val admitSlices =
       if (!huge) 1 else math.min(64, IngestPipeline.slicesFor(nRecords))
     val probe = df
@@ -809,8 +824,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       graft.operators.DedupOps.incrementalNearDupsStaged(
         lake, s"${table}_lshidx", probe, dc.idCol, dc.textCol,
         dc.threshold, dc.shingleK, dc.bands, dc.rowsPerBand,
-        parallelAdmit = true, hintBroadcast = !huge,
-        admitSlices = admitSlices)
+        parallelAdmit = true, hintBroadcast = hinted,
+        admitSlices = admitSlices, driverVerify = driverVerify)
     }
     val flagged = flag(df, dc.flagCol)
     (if (dc.dropDups) flagged.filter(col(dc.flagCol) === 0L).drop(dc.flagCol)

@@ -387,38 +387,41 @@ object DedupOps {
     * transact). With `parallelAdmit` the thunk appends the two index
     * tables concurrently, on tasks that carry the caller's job group.
     *
-    * Probe mechanics. A trigger-sized batch (`hintBroadcast`, the
-    * steady-state streaming shape) is verified on the driver in at most
-    * three collects: the batch sketch (id, text, shingles, band hashes —
-    * the same expressions as the persisted index, so the keys are
-    * identical), the index band rows whose `band_hash` is one of the
-    * batch's, and — only when corpus candidates exist — the candidates'
-    * shingles. In-batch candidates, redelivery self-marks, the exact
-    * Jaccard and keep-min-id (SQL `<` of the id type) then run over the
-    * collected rows; the flag is an `isin` over the dup ids, and admission
-    * appends local frames of the collected survivors. The collects hold
-    * what the broadcasts of the distributed probe would. A large batch (a
-    * replay or backfill), or an id type the driver cannot key with SQL
-    * semantics, takes the distributed probe: the sketch and the mark set
-    * are localCheckpoint'ed, and a large batch plans every join without
-    * broadcast hints so AQE picks it. */
+    * Probe mechanics. With `driverVerify` (the caller counted the batch
+    * within [[DriverVerifyMaxRows]], the steady-state streaming shape) the
+    * batch is verified on the driver in at most three collects: the batch
+    * sketch (id, text, shingles, band hashes — the same expressions as the
+    * persisted index, so the keys are identical), the index band rows
+    * whose `band_hash` is one of the batch's, and — only when corpus
+    * candidates exist — the candidates' shingles. In-batch candidates,
+    * redelivery self-marks, the exact Jaccard and keep-min-id (SQL `<` of
+    * the id type) then run over the collected rows. The band and partner
+    * filters and the flag probe a broadcast key set
+    * ([[graft.functions.InKeySet]]), so each plan holds one handle however
+    * many keys the batch brings; admission appends local frames of the
+    * collected survivors. Otherwise — a batch of unknown size or above the
+    * driver bound, or an id type the driver cannot key with SQL semantics
+    * — the distributed probe runs: the sketch and the mark set are
+    * localCheckpoint'ed, and every join is broadcast-hinted under
+    * `hintBroadcast` and left to AQE without it (a replay or backfill). */
   def incrementalNearDupsStaged(lake: graft.catalog.GraftLake,
       prefix: String, batch: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleK: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 4,
       parallelAdmit: Boolean = false,
       hintBroadcast: Boolean = true,
-      admitSlices: Int = 1): ((DataFrame, String) => DataFrame, () => Unit) = {
+      admitSlices: Int = 1,
+      driverVerify: Boolean = false): ((DataFrame, String) => DataFrame, () => Unit) = {
     graft.functions.SketchExpressions.register(batch.sparkSession)
     graft.functions.ShingleExpression.register(batch.sparkSession)
     import org.apache.spark.sql.graft.PlanBridge
     val idType = batch.schema(idCol).dataType
-    val indexIdsMatch = Seq(s"${prefix}_bands", s"${prefix}_docs").forall { t =>
+    def indexIdsMatch = Seq(s"${prefix}_bands", s"${prefix}_docs").forall { t =>
       !lake.tableExists(t) || lake.read(t).schema.find(_.name == idCol)
         .exists(f => PlanBridge.sameType(f.dataType, idType))
     }
     val keys =
-      if (hintBroadcast && indexIdsMatch) PlanBridge.driverKeys(idType) else None
+      if (driverVerify && indexIdsMatch) PlanBridge.driverKeys(idType) else None
     keys match {
       case Some(k) => driverNearDups(lake, prefix, batch, idCol, textCol,
         threshold, shingleK, bands, rowsPerBand, parallelAdmit, k)
@@ -444,6 +447,16 @@ object DedupOps {
           hintBroadcast = hintBroadcast, admitSlices = admitSlices)
     }
   }
+
+  /** The largest batch, in rows, the ingest gate verifies on the driver
+    * (`driverVerify` of [[incrementalNearDupsStaged]]): where the driver
+    * verify stops being the faster route. `graft.perf.Perf dedupscale` on
+    * docs of the ingest benchmark's length mix (about 550 characters on
+    * average), 4 cores, 3 GB heap, driver against broadcast-hinted
+    * distributed probe, whole flush: 5.4 against 7.4 s at 10k rows, 11.0
+    * against 11.7 s at 30k, 27.2 against 17.3 s at 100k (peak heap 2.6
+    * and 3.0 GB there). */
+  val DriverVerifyMaxRows: Long = 30000L
 
   /** The trigger-sized probe of [[incrementalNearDupsStaged]], verified on
     * the driver over collected rows. */
@@ -478,8 +491,10 @@ object DedupOps {
       // SQL `=`/`<` with a null id is never true: null-id rows take part in
       // no candidate pair and are never admitted
       val ids = rows.map(r => if (r.isNullAt(0)) null else keys.key(r.get(0)))
-      val batchSh = rows.indices.filter(ids(_) != null)
-        .groupMap(ids(_))(i => shOf(rows(i), 2))
+      val rowsOf = rows.indices.filter(ids(_) != null).groupBy(ids(_))
+      // shingle sets only for the rows a candidate pair verifies
+      val shMemo = scala.collection.mutable.HashMap.empty[Int, Sh]
+      def batchSh(id: Any) = rowsOf(id).map(i => shMemo.getOrElseUpdate(i, shOf(rows(i), 2)))
       // (band, band_hash) -> the batch rows carrying it
       def bk(band: Int, h: Int) = (band.toLong << 32) | (h & 0xffffffffL)
       val byBand = rows.indices.filter(i => ids(i) != null && !rows(i).isNullAt(3))
@@ -494,7 +509,8 @@ object DedupOps {
       val hits =
         if (hashes.isEmpty || !lake.tableExists(s"${prefix}_bands")) Array.empty[Row]
         else lake.read(s"${prefix}_bands")
-          .filter(col("band_hash").isin(hashes.toSeq: _*))
+          .filter(graft.functions.KeySet.member(spark, col("band_hash"),
+            IntegerType, hashes))
           .select(col(idCol), col("band"), col("band_hash")).collect()
       val vsCorpusAll = hits.iterator.filterNot(_.isNullAt(0)).flatMap { r =>
         val p = keys.key(r.get(0))
@@ -510,22 +526,22 @@ object DedupOps {
         if (partners.isEmpty || !lake.tableExists(s"${prefix}_docs"))
           Map.empty[Any, Seq[Sh]]
         else lake.read(s"${prefix}_docs")
-          .filter(col(idCol).isin(partners.toSeq.map(keys.lit): _*))
+          .filter(keys.member(spark, col(idCol), partners))
           .select(col(idCol), wordShingles(col(textCol), shingleK))
           .collect().toSeq.groupMap(r => keys.key(r.get(0)))(shOf(_, 1))
-      def verified(pairs: Set[(Any, Any)], partnerSh: Map[Any, Seq[Sh]]) =
+      def verified(pairs: Set[(Any, Any)], partnerSh: Any => Seq[Sh]) =
         pairs.collect { case (b, p) if batchSh(b).exists(a =>
-          partnerSh.getOrElse(p, Nil).exists(dup(a, _))) => b }
-      (rows, verified(vsCorpus, indexSh) ++ verified(vsBatch, batchSh), self)
+          partnerSh(p).exists(dup(a, _))) => b }
+      (rows, verified(vsCorpus, indexSh.getOrElse(_, Nil)) ++
+        verified(vsBatch, batchSh), self)
     }
-    val flag = (f: DataFrame, name: String) => {
-      val isDup =
-        if (dups.isEmpty) lit(0L)
-        else when(col(idCol).isin(dups.toSeq.map(keys.lit): _*), 1L).otherwise(0L)
+    val isDup =
+      if (dups.isEmpty) lit(0L)
+      else when(keys.member(spark, col(idCol), dups), 1L).otherwise(0L)
+    val flag = (f: DataFrame, name: String) =>
       // the id column first, as the distributed probe's join puts it
       f.select((col(idCol) +: f.columns.toSeq.filter(_ != idCol).map(c =>
         col(s"`${c.replace("`", "``")}`"))) :+ isDup.as(name): _*)
-    }
     val doAdmit = () => graft.metrics.GraftMetrics.time(
         graft.metrics.GraftMetrics.DedupAdmit) {
       val admitted = rows.filter { r =>

@@ -27,6 +27,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * runMain graft.perf.Perf profile <query> <sf-dir>
   * runMain graft.perf.Perf plans <sf-dir> <out-dir> <tag> <query,query,...>
   * runMain graft.perf.Perf flush <sf-dir> [buckets]
+  * runMain graft.perf.Perf dedupscale <rows> <driver|broadcast|shuffle>
   * runMain graft.perf.Perf floor
   * runMain graft.perf.Perf fsfloor
   * runMain graft.perf.Perf harness
@@ -37,7 +38,8 @@ object Perf {
 
   private val commands: Map[String, Command] = Map(
     "run" -> run _, "time" -> time _, "ab" -> ab _, "profile" -> profile _,
-    "plans" -> plans _, "flush" -> flush _, "floor" -> floor _,
+    "plans" -> plans _, "flush" -> flush _, "dedupscale" -> dedupscale _,
+    "floor" -> floor _,
     "fsfloor" -> fsfloor _, "harness" -> harness _)
 
   def main(args: Array[String]): Unit = {
@@ -301,6 +303,80 @@ object Perf {
           f"dur=${j.durationMs.fold("?")(_.toString)}%-6s ms")
       }
     }
+  }
+
+  /** The ingest near-dup gate at a batch size: indexes `rows` generated
+    * docs, then probes and admits a second batch of `rows` docs, 30 % of
+    * them near-copies of indexed docs (one word in 30 replaced), by one
+    * route: `driver` (the driver-side verify), `broadcast` (the distributed
+    * probe with broadcast hints) or `shuffle` (the distributed probe
+    * without them, as above `spark.graft.ingest.dedupBroadcastMaxRows`).
+    * Doc lengths follow the ingest benchmark's mix: Pareto, 30 words at
+    * least, capped at 1,500. Prints the probe, landing and admission times,
+    * the jobs, the landing plan's expression count and the peak heap in use (sampled
+    * every 10 ms, garbage included). Run each route in its own JVM, with
+    * the heap set by `SPARK_DRIVER_MEM`. */
+  private def dedupscale(spark: SparkSession, args: IndexedSeq[String]): Unit = {
+    val n = args(0).toLong
+    val route = args.lift(1).getOrElse("driver")
+    require(Set("driver", "broadcast", "shuffle")(route), s"unknown route $route")
+    val lake = new GraftLake(spark, Files.createTempDirectory("graft-dedupscale").toString)
+    def lenOf(id: org.apache.spark.sql.Column) = least(lit(1500),
+      (lit(30.0) / pow((pmod(hash(id, lit("len")), lit(1000000)) + 0.5) / 1e6,
+        lit(1 / 1.5))).cast("int"))
+    def wordOf(id: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
+      concat(lit("w"), pmod(hash(id, i), lit(50000)).cast("string"))
+    val corpus = spark.range(n).select(col("id").as("doc_id"),
+      concat_ws(" ", transform(sequence(lit(1), lenOf(col("id"))),
+        i => wordOf(col("id"), i))).as("text"))
+    graft.operators.DedupOps.buildMinhashIndex(lake, "d", corpus, "doc_id", "text")
+    val base = col("id") - n
+    val copy = pmod(hash(col("id"), lit("dup")), lit(10)) < 3
+    val batch = spark.range(n, 2 * n).select(col("id").as("doc_id"),
+      concat_ws(" ", transform(sequence(lit(1), lenOf(when(copy, base).otherwise(col("id")))),
+        i => when(copy && pmod(hash(col("id"), i), lit(30)) =!= 0, wordOf(base, i))
+          .otherwise(wordOf(col("id"), i)))).as("text"))
+      .repartition(4).cache()
+    println(s"[dedupscale] rows=$n route=$route indexed; batch text " +
+      s"${batch.agg(sum(length(col("text")))).head().getLong(0) / 1000000} MB")
+    System.gc()
+    val heap = java.lang.management.ManagementFactory.getMemoryMXBean
+    val peak = new java.util.concurrent.atomic.AtomicLong(heap.getHeapMemoryUsage.getUsed)
+    @volatile var sampling = true
+    val sampler = new Thread(() => while (sampling) {
+      peak.accumulateAndGet(heap.getHeapMemoryUsage.getUsed, math.max)
+      Thread.sleep(10)
+    })
+    sampler.setDaemon(true)
+    val before = peak.get()
+    sampler.start()
+    val t0 = System.nanoTime()
+    def ms(from: Long) = (System.nanoTime() - from) / 1e6
+    val ((probeMs, landMs, admitMs, planExprs), jobs) = JobTimeline.record(spark.sparkContext) {
+      val (flag, admit) = graft.operators.DedupOps.incrementalNearDupsStaged(
+        lake, "d", batch, "doc_id", "text", threshold = 0.8,
+        parallelAdmit = true, hintBroadcast = route != "shuffle",
+        admitSlices = if (route == "shuffle") 64 else 1,
+        driverVerify = route == "driver")
+      val probeMs = ms(t0)
+      val t1 = System.nanoTime()
+      val flagged = flag(batch, "is_dup")
+      val planExprs = flagged.queryExecution.optimizedPlan
+        .collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }.sum
+      lake.append("landing", flagged)
+      val landMs = ms(t1)
+      val t2 = System.nanoTime()
+      admit()
+      (probeMs, landMs, ms(t2), planExprs)
+    }
+    val total = ms(t0)
+    sampling = false
+    sampler.join()
+    val dups = lake.read("landing").filter(col("is_dup") === 1L).count()
+    println(f"[dedupscale] rows=$n route=$route total=$total%.0f ms probe=$probeMs%.0f " +
+      f"land=$landMs%.0f admit=$admitMs%.0f jobs=${jobs.size} dups=$dups " +
+      s"landingPlanExprs=$planExprs heapBeforeMb=${before >> 20} " +
+      s"heapPeakMb=${peak.get() >> 20} heapMaxMb=${Runtime.getRuntime.maxMemory >> 20}")
   }
 
   /** The fixed-latency floor of this host and session: no-shuffle, one-

@@ -467,22 +467,17 @@ object PlanBridge {
 /** Keys of one column's values on the driver: [[key]] maps a value as
   * `collect()` returns it to Spark's internal value, with floating zero and
   * NaN normalized as join keys are, so hash equality of keys is SQL `=`;
-  * [[lt]] is SQL `<` on keys; [[lit]] turns a key back into a literal of
-  * the column's type. */
-final class DriverKeys private[graft] (dt: org.apache.spark.sql.types.DataType) {
+  * [[lt]] is SQL `<` on keys; [[member]] is the column `IN` a set of keys. */
+final class DriverKeys private[graft] (val dataType: org.apache.spark.sql.types.DataType) {
   private val toInternal =
-    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
+    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dataType)
   private val ordering =
-    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dataType)
 
-  def key(v: Any): Any = toInternal(v) match {
-    case d: Double => if (d == 0.0d) 0.0d else if (d.isNaN) Double.NaN else d
-    case f: Float => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f
-    case k => k
-  }
+  def key(v: Any): Any = graft.functions.KeySet.normalize(toInternal(v))
 
   def lt(a: Any, b: Any): Boolean = ordering.lt(a, b)
 
-  def lit(k: Any): Column = PlanBridge.column(
-    org.apache.spark.sql.catalyst.expressions.Literal(k, dt))
+  def member(spark: SparkSession, c: Column, keys: Iterable[Any]): Column =
+    graft.functions.KeySet.member(spark, c, dataType, keys)
 }

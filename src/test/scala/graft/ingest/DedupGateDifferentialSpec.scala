@@ -3,15 +3,17 @@ package graft.ingest
 import java.nio.file.Files
 
 import graft.SparkTestSession
+import graft.catalog.GraftLake
+import graft.operators.DedupOps
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The ingest near-dup gate has two probes: a trigger-sized batch is
-  * verified on the driver over collected rows, a batch above
-  * `spark.graft.ingest.dedupBroadcastMaxRows` takes the distributed probe.
-  * The same docs stream through both must flag, land and index the same
-  * rows. */
+  * verified on the driver over collected rows; a batch above the driver
+  * bound or `spark.graft.ingest.dedupBroadcastMaxRows`, or one whose ids
+  * the driver cannot key, takes the distributed probe. The same docs
+  * through both must flag, land and index the same rows. */
 class DedupGateDifferentialSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -107,5 +109,90 @@ class DedupGateDifferentialSpec extends AnyFunSuite {
     // the redelivered batch is exempt: its admitted ids stay indexed once
     assert(driver.lake.read("dd_lshidx_docs").filter(col("doc_id") === "k1").count() === 1)
     assert(driver.lake.read("dd_lshidx_docs").filter(col("doc_id").isNull).count() === 0)
+  }
+
+  test("the gate verifies on the driver only a counted batch within both bounds") {
+    val cap = DedupOps.DriverVerifyMaxRows
+    val bc = 5000000L
+    assert(IngestPipeline.dedupRoute(10, bc) === (true, true))
+    assert(IngestPipeline.dedupRoute(cap, bc) === (true, true))
+    assert(IngestPipeline.dedupRoute(cap + 1, bc) === (false, true))
+    assert(IngestPipeline.dedupRoute(-1, bc) === (false, true), "unknown size")
+    assert(IngestPipeline.dedupRoute(bc, bc) === (false, true))
+    assert(IngestPipeline.dedupRoute(bc + 1, bc) === (false, false))
+    assert(IngestPipeline.dedupRoute(10, 0) === (false, false))
+    assert(IngestPipeline.dedupRoute(10, 9) === (false, false))
+    assert(IngestPipeline.dedupRoute(10, 10) === (true, true))
+  }
+
+  /** One staged probe of `batch` against the index `prefix` of `lake`,
+    * admitted: the (id, is_dup) rows it flags, sorted. */
+  private def probe(lake: GraftLake, batch: DataFrame, driverVerify: Boolean,
+      hintBroadcast: Boolean = true): Seq[(String, Long)] = {
+    val (flag, admit) = DedupOps.incrementalNearDupsStaged(lake, "t", batch,
+      "doc_id", "text", threshold = 0.8, parallelAdmit = true,
+      hintBroadcast = hintBroadcast, driverVerify = driverVerify)
+    val flags = flag(batch.select("doc_id"), "is_dup").collect()
+      .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toSeq.sorted
+    admit()
+    flags
+  }
+
+  private def newLake(): GraftLake = {
+    GraftLake.invalidateCaches()
+    new GraftLake(spark, Files.createTempDirectory("graft-dedup-diff").toString)
+  }
+
+  // the index's id type can differ from a later batch's (an index built
+  // from int ids, a batch whose ids JSON inference reads as bigint): the
+  // driver cannot key such a batch against the index with SQL semantics,
+  // so it takes the distributed probe with broadcast hints
+  test("a batch whose id type differs from the index's takes the distributed probe") {
+    val texts = Seq(at.mkString(" "), plain(0), edit(at, 10), plain(1), plain(0))
+    Seq("int" -> "bigint", "bigint" -> "int").foreach { case (indexed, batched) =>
+      def docs(ids: Seq[Int], t: String) = ids.map(i => (i, texts(i - 1)))
+        .toDF("doc_id", "text").withColumn("doc_id", col("doc_id").cast(t))
+      val flags = Seq(true, false).map { hinted =>
+        val lake = newLake()
+        probe(lake, docs(Seq(1, 2), indexed), driverVerify = hinted, hintBroadcast = hinted)
+        assert(lake.read("t_docs").schema("doc_id").dataType.simpleString === indexed)
+        probe(lake, docs(Seq(3, 4, 5), batched), driverVerify = hinted, hintBroadcast = hinted)
+      }
+      assert(flags(0) === flags(1))
+      assert(flags(0) === Seq("3" -> 1L, "4" -> 0L, "5" -> 1L), indexed -> batched)
+    }
+  }
+
+  test("a 100k-row batch on the driver flags what the distributed probe does, with plans that hold no key list") {
+    val n = 100000L
+    // 8 distinct words per doc; the even ids of the second batch copy a
+    // doc of the first, and in each batch an id ending in 3 copies its
+    // batch-mate ending in 1
+    def docs(from: Long) = spark.range(from, from + n).select(col("id").as("doc_id"),
+      when(col("id") >= n && col("id") % 2 === 0, col("id") - n)
+        .when(col("id") % 10 === 3, col("id") - 2).otherwise(col("id")).as("src"))
+      .select(col("doc_id"), concat_ws(" ", (0 until 8).map(w =>
+        concat(lit(s"w${w}x"), col("src").cast("string"))): _*).as("text"))
+    val expressions = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val Seq(onDriver, distributed) = Seq(true, false).map { driver =>
+      val lake = newLake()
+      probe(lake, docs(0), driverVerify = driver, hintBroadcast = driver)
+      val batch = docs(n)
+      val (flag, admit) = DedupOps.incrementalNearDupsStaged(lake, "t", batch,
+        "doc_id", "text", threshold = 0.8, parallelAdmit = true,
+        hintBroadcast = driver, driverVerify = driver)
+      val flagged = flag(batch, "is_dup")
+      if (driver) expressions += flagged.queryExecution.optimizedPlan
+        .collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }.sum
+      val dups = flagged.filter(col("is_dup") === 1L).select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+      admit()
+      (dups, lake.read("t_docs").count(), lake.read("t_bands").count())
+    }
+    assert(onDriver._1.size === n / 2 + n / 10)
+    assert(onDriver === distributed)
+    // the flag probes one broadcast set; a literal per dup id would put
+    // 60k expressions into the landing plan
+    assert(expressions.head < 200, expressions)
   }
 }

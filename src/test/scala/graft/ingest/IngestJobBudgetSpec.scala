@@ -194,6 +194,28 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     new GraftLake(spark, wh)
   }
 
+  // A DML statement masks the table's live deletion vectors with the same
+  // per-DV-state broadcast set a read builds, so after a read it collects
+  // no DV entries; a statement on a table no read has seen builds the set
+  test("a DELETE under a DV state a read has built runs one job fewer") {
+    def deleteJobs(readFirst: Boolean): Seq[JobTimeline.Job] = {
+      val lake = new GraftLake(spark, Files.createTempDirectory("graft-budget-dv").toString)
+      lake.write("t", (1 to 1000).map(i => (i, s"v$i")).toDF("id", "v"))
+      assert(lake.deleteWhere("t", $"id" % 10 === 0) === 100)
+      if (readFirst) assert(lake.read("t").count() === 900)
+      val (n, jobs) = JobTimeline.record(spark.sparkContext)(
+        lake.deleteWhere("t", $"id" % 10 === 1))
+      assert(n === 100)
+      assert(lake.read("t").count() === 800)
+      jobs
+    }
+    graft.catalog.GraftLake.invalidateCaches()
+    val cold = deleteJobs(readFirst = false)
+    val warm = deleteJobs(readFirst = true)
+    info(s"${cold.size} jobs cold, ${warm.size} after a read: ${warm.map(_.site).mkString("; ")}")
+    assert(warm.size === cold.size - 1)
+  }
+
   private def customers(ids: Seq[Int], segment: Int => String, bump: Double): DataFrame =
     ids.map(i => (i.toLong, s"c$i", segment(i), i * 1.5 + bump))
       .toDF("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
