@@ -6,7 +6,7 @@ import graft.catalog.GraftLake
 import graft.metrics.GraftMetrics
 import graft.schema.{SchemaInference, SchemaUnify}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -243,7 +243,8 @@ final class SchemaCache {
     val cached = Option(cache.get(topic))
     cached match {
       case Some(c) if incoming.forall(_.fieldNames.toSet.subsetOf(c.fieldNames.toSet)) &&
-          (try { SchemaUnify.unify(c +: incoming) == c } catch { case _: Exception => false }) =>
+          (try SchemaUnify.unify(c +: incoming) == c
+           catch { case _: SchemaUnify.GraftSchemaException => false }) =>
         c
       case _ =>
         val u = SchemaUnify.unify(cached.toSeq ++ incoming)
@@ -252,38 +253,98 @@ final class SchemaCache {
     }
   }
 
+  /** Every cached topic schema. */
+  def all: Map[String, StructType] = {
+    import scala.jdk.CollectionConverters._
+    cache.asScala.toMap
+  }
+
   def put(topic: String, s: StructType): Unit = cache.put(topic, s)
   def clear(): Unit = cache.clear()
 }
 
 object IngestPipeline {
-  /** Per-(topic, format) accumulation state for the batch-profile pass —
-    * mutable on purpose: one instance per key per PARTITION (the
-    * aggregate zero deserializes fresh per task), mutated row by row. */
-  private[ingest] final case class ProfState(var n: Long,
-    var schema: org.apache.spark.sql.types.StructType,
-    var conflict: String, var unparseable: Long) extends Serializable
+  /** A running unification of record schemas: their union, or the first
+    * conflict, after which it stays frozen. A conflict is DATA here, never
+    * a task failure. Mutable on purpose: one instance per partition and
+    * key, mutated row by row, then merged on the driver. */
+  private[ingest] final class SchemaUnion extends Serializable {
+    var schema: StructType = StructType(Nil)
+    var conflict: String = null
+
+    def add(s: StructType): Unit =
+      if (conflict == null) {
+        if (schema.isEmpty) schema = s
+        else if (s != schema) // uniform stream fast path
+          try schema = SchemaUnify.unify2(schema, s)
+          catch { case e: SchemaUnify.GraftSchemaException => conflict = e.getMessage }
+      }
+
+    def merge(o: SchemaUnion): Unit =
+      if (o.conflict != null) { if (conflict == null) conflict = o.conflict }
+      else if (o.schema.nonEmpty) add(o.schema)
+
+    /** Left = the conflict; Right(None) = no schema was added. */
+    def result: Either[String, Option[StructType]] =
+      if (conflict != null) Left(conflict) else Right(Some(schema).filter(_.nonEmpty))
+  }
+
+  /** Per-(topic, format) accumulation state for the batch-profile pass.
+    * `unparseable` counts JSON records without a schema, or undecodable
+    * Arrow records. `kept` and `keptSchemas` are triage's verdict against
+    * the topic's cached seed, when the profile has one: the records
+    * [[recordError]] keeps, and the union of their schemas. */
+  private[ingest] final class ProfState extends Serializable {
+    var n = 0L
+    var unparseable = 0L
+    val schemas = new SchemaUnion
+    var kept = 0L
+    val keptSchemas = new SchemaUnion
+    /** Whether a record schema unifies with the seed, memoized per
+      * distinct schema of this task (a drifting stream repeats a few
+      * shapes). */
+    @transient private var unifies: java.util.HashMap[StructType, java.lang.Boolean] = _
+
+    /** Count a record of schema `s` kept when it unifies with `seed`. */
+    def keep(seed: StructType, s: StructType): Unit = {
+      if (unifies == null || unifies.size > 256) unifies = new java.util.HashMap()
+      val keeps = unifies.computeIfAbsent(s, _ =>
+        try { SchemaUnify.unify(Seq(seed, s)); true }
+        catch { case _: SchemaUnify.GraftSchemaException => false })
+      if (keeps) { kept += 1; keptSchemas.add(s) }
+    }
+
+    def merge(o: ProfState): Unit = {
+      n += o.n; unparseable += o.unparseable; kept += o.kept
+      schemas.merge(o.schemas); keptSchemas.merge(o.keptSchemas)
+    }
+  }
 
   /** Executor-side per-row step of the batch profile (a static helper so
-    * the treeAggregate closure never captures the pipeline instance). */
+    * the aggregate closure never captures the pipeline instance): counts
+    * the record, and folds its schema — a JSON record's inferred one, an
+    * Arrow record's IPC header — into the state. `seeds` holds the cached
+    * schema of each topic whose JSON triage verdict the profile computes. */
   private[ingest] def profileRow(
       acc: scala.collection.mutable.HashMap[(String, Boolean), ProfState],
-      topic: String, ipc: Boolean, v: String, avroTopics: Set[String]): Unit = {
-    val st = acc.getOrElseUpdate((topic, ipc),
-      ProfState(0L, org.apache.spark.sql.types.StructType(Nil), null, 0L))
+      topic: String, ipc: Boolean, v: Array[Byte], avroTopics: Set[String],
+      seeds: Map[String, SeedHolder]): Unit = {
+    val st = acc.getOrElseUpdate((topic, ipc), new ProfState)
     st.n += 1
-    if (!ipc && !avroTopics.contains(topic)) {
-      graft.schema.SchemaInference.inferFromJson(v) match {
-        case None => st.unparseable += 1
-        case Some(_) if st.conflict != null => ()
-        case Some(s) if st.schema.isEmpty => st.schema = s
-        case Some(s) if s == st.schema => () // uniform stream fast path
+    if (ipc) ArrowWire.schemaOf(v) match {
+      case Right(Some(s)) => st.schemas.add(s)
+      case _ => st.unparseable += 1
+    }
+    else if (!avroTopics.contains(topic)) {
+      val seed = seeds.get(topic)
+      SchemaInference.inferFromJson(
+        if (v == null) null else new String(v, java.nio.charset.StandardCharsets.UTF_8)) match {
+        case None =>
+          st.unparseable += 1
+          if (seed.isDefined) st.kept += 1
         case Some(s) =>
-          try st.schema = graft.schema.SchemaUnify.unify2(st.schema, s)
-          catch {
-            case e: graft.schema.SchemaUnify.GraftSchemaException =>
-              st.conflict = e.getMessage
-          }
+          st.schemas.add(s)
+          seed.foreach(h => st.keep(h.schema, s))
       }
     }
   }
@@ -299,7 +360,7 @@ object IngestPipeline {
   /** Ships the seed schema to executors as JSON, deserializing once per
     * executor (`@transient lazy`) instead of once per record inside the
     * triage UDFs. */
-  private final class SeedHolder(json: String) extends Serializable {
+  private[ingest] final class SeedHolder(json: String) extends Serializable {
     @transient lazy val schema: StructType =
       DataType.fromJson(json).asInstanceOf[StructType]
   }
@@ -320,11 +381,9 @@ object IngestPipeline {
     /** The DLQ `value` column of payload `v`, and its inverse. */
     def toDlq(v: Column): Column
     def fromDlq(value: Column): Column
-    /** The schemas the survivors' landing unifies; throws on a pairwise
-      * conflict. */
-    def goodSchemas(good: DataFrame): Seq[StructType]
+    /** Land the survivors under `schema`; `n` = their count, -1 = unknown. */
     def land(p: IngestPipeline, table: String, good: DataFrame,
-      schema: StructType, dead: DeadLetters): Unit
+      schema: StructType, dead: DeadLetters, n: Long): Unit
   }
 
   private object JsonWire extends Wire[String]("Schema conflict") {
@@ -338,10 +397,9 @@ object IngestPipeline {
     }
     def toDlq(v: Column): Column = v
     def fromDlq(value: Column): Column = value.cast("binary")
-    def goodSchemas(good: DataFrame): Seq[StructType] =
-      SchemaInference.inferSchemaDistributed(good.select("v").as(Encoders.STRING)).toSeq
     def land(p: IngestPipeline, table: String, good: DataFrame,
-        schema: StructType, dead: DeadLetters): Unit = p.landJson(table, good, schema, dead)
+        schema: StructType, dead: DeadLetters, n: Long): Unit =
+      p.landJson(table, good, schema, dead, n)
   }
 
   private object ArrowWire extends Wire[Array[Byte]]("Arrow schema conflict") {
@@ -358,11 +416,9 @@ object IngestPipeline {
     }
     def toDlq(v: Column): Column = base64(v)
     def fromDlq(value: Column): Column = try_to_binary(value, lit("base64"))
-    def goodSchemas(good: DataFrame): Seq[StructType] =
-      good.select("v").as(Encoders.BINARY).rdd
-        .map(ArrowIpc.decodeSchema).distinct().collect().toSeq
     def land(p: IngestPipeline, table: String, good: DataFrame,
-        schema: StructType, dead: DeadLetters): Unit = p.landArrow(table, good, schema, dead)
+        schema: StructType, dead: DeadLetters, n: Long): Unit =
+      p.landArrow(table, good, schema, dead, n)
   }
 
   /** Triage's verdict on one record against the seed schema: null = the
@@ -393,6 +449,20 @@ object IngestPipeline {
               (if (perField.isEmpty) outer.getMessage else perField.mkString("; "))
         }
     }
+
+  /** The union of the schemas of `good`'s records (payload `v`), or their
+    * first pairwise conflict, in one job: the second half of a triage
+    * verdict the profile did not compute. */
+  private def schemasOf[T](wire: Wire[T], good: DataFrame): Either[String, Option[StructType]] =
+    good.select("v").rdd.aggregate(new SchemaUnion)(
+      (u, r) => { wire.schemaOf(r.getAs[T](0)).toOption.flatten.foreach(u.add); u },
+      (a, b) => { a.merge(b); a }).result
+
+  /** Triage's verdict on a batch against `seed`, computed by the profile
+    * job: the count of records [[recordError]] keeps, and the union of
+    * their schemas or their first pairwise conflict. */
+  private final case class TriageVerdict(seed: StructType, kept: Long,
+    schema: Either[String, Option[StructType]])
 
   /** The trigger-side session confs, applied around every `processBatch`
     * by a reference-counted [[graft.ConfScope]] (concurrent pipelines on
@@ -431,7 +501,7 @@ object IngestPipeline {
     * holds — an overlay applied to a private session would simply never
     * reach the plans it exists to shape. The choice belongs where the
     * stream is built. */
-  private[ingest] val triggerConfs = new graft.ConfScope(Seq(
+  private[graft] val triggerConfs = new graft.ConfScope(Seq(
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.shuffle.partitions" -> "8",
     "spark.sql.codegen.wholeStage" -> "false",
@@ -457,10 +527,21 @@ object IngestPipeline {
       nRecords <= math.min(bcMax, graft.operators.DedupOps.DriverVerifyMaxRows),
     nRecords < 0 || nRecords <= bcMax)
 
-  /** Write slices for `n` rows: one per `maxRecordsPerFile`, at least one. */
-  private def slicesFor(n: Long): Int =
-    math.max(1L, math.min(Int.MaxValue.toLong,
-      (n + GraftLake.maxRecordsPerFile - 1) / GraftLake.maxRecordsPerFile)).toInt
+  /** Write slices for `n` rows: one per `perSlice` rows, at least one. A
+    * coalesce to this count never raises the input's own. */
+  private def slicesFor(n: Long, perSlice: Long = GraftLake.maxRecordsPerFile): Int =
+    math.max(1L, math.min(Int.MaxValue.toLong, (n + perSlice - 1) / perSlice)).toInt
+
+  /** Rows one landing task parses and writes. Measured with `Perf landing`
+    * (JSON records of about 20 fields, 4-core host, the trigger confs,
+    * median of 5): one task against two and four, in ms, at 1k rows 108
+    * against 101 and 104; at 2k 126 against 96 and 104; at 5k 189 against
+    * 133 and 127; at 10k 294 against 198 and 160; at 100k 2,193 against
+    * 1,246 and 768. One task parses a row in about 23 µs, and a task of
+    * its own pays off from about 1k rows, so a second task wins clearly
+    * from 2k rows: a batch of up to 2k rows parses and lands as one file,
+    * and a larger one spreads its parse across cores. */
+  private[ingest] val RowsPerLandingTask = 2000L
 
   /** The dead letters of one batch (or one replay). Every channel that
     * parks records — JSON/Arrow triage, the corrupt-record channel, the
@@ -554,17 +635,27 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * Job count per trigger is streaming flush latency, so the body is
     * kept short:
     *  - ONE job ([[profileBatch]]) yields the topic fan-out, the
-    *    batch-size metric, the per-topic wire-format dispatch AND the
-    *    per-topic JSON schema inference;
-    *  - each topic then costs its landing write (plus the triage jobs of
-    *    a conflicting batch);
+    *    batch-size metric, the per-topic wire-format dispatch, the
+    *    per-topic JSON schema inference, the Arrow schemas, and for a JSON
+    *    topic with a cached schema the triage verdict of a conflicting
+    *    batch;
+    *  - each topic then costs its landing write, one file per
+    *    [[IngestPipeline.RowsPerLandingTask]] rows, conflicting batches
+    *    included;
     *  - the batch's dead letters, from every topic and channel, land at
     *    the end in ONE count and ONE `_dlq` append ([[landDeadLetters]]).
     *    The count doubles as the corrupt-record probe, which must re-check
     *    every JSON landing (from_json's corrupt set is not derivable from
     *    the inference profile) — once per batch, not once per topic.
-    * A steady-state JSON trigger is thus profile + one write per topic +
-    * the DLQ count.
+    * A steady-state trigger is thus the profile, one write per topic, the
+    * DLQ count and the DLQ append: 8 jobs for four JSON topics with
+    * malformed and conflicting records and one Arrow topic
+    * (`IngestJobBudgetSpec`). Triage runs jobs of its own only for a JSON
+    * topic's first conflicting batch in this process (the seed without a
+    * cached schema, the emptiness check, the survivors' schemas), for an
+    * Arrow conflict or undecodable record, and for records that conflict
+    * with the table rather than the topic ([[triageEvolution]]); the
+    * dedup gate and a PK upsert add their own.
     *
     * Topics landing in different tables run CONCURRENTLY
     * ([[org.apache.spark.sql.graft.CapturedTasks.runAll]], at most
@@ -648,11 +739,14 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
   /** Land a batch's dead letters: ONE count (the DLQ metric, the
     * emptiness check and the slice count in one job) and ONE append,
     * coalesced without a shuffle to ceil(n / maxRecordsPerFile) slices.
-    * Under `txnAppId` the append is idempotent like any landing table's,
-    * so a redelivered batch parks its records once. */
+    * The count runs over the union coalesced to `defaultParallelism`
+    * tasks: the union holds a few small partitions per parked frame, and
+    * a task per partition would cost more than its rows. Under
+    * `txnAppId` the append is idempotent like any landing table's, so a
+    * redelivered batch parks its records once. */
   private def landDeadLetters(dead: IngestPipeline.DeadLetters): Unit =
     for (dlq <- config.dlqTable; parked <- dead.parked) {
-      val n = parked.count()
+      val n = parked.coalesce(spark.sparkContext.defaultParallelism).count()
       if (n > 0) {
         GraftMetrics.dlqRecords.add(n)
         val out = parked.coalesce(IngestPipeline.slicesFor(n))
@@ -665,67 +759,68 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       }
     }
 
-  /** What the fan-out job learned about a topic's JSON rows: the unified
-    * schema (None = no record parsed), the first unification conflict
-    * (Some = the batch needs per-record triage), and the unparseable-value
-    * count (0 = the landing write may skip its corrupt-record probe). */
-  private case class BatchProfile(schemaJson: Option[String],
-    conflict: Option[String], unparseable: Long)
+  /** Whether the profile job computes the JSON triage verdict of topics
+    * with a cached schema (see [[profileBatch]]). Off, triage runs its own
+    * verdict jobs; the two are pinned equal by a differential spec. */
+  @volatile private[ingest] var verdictFromProfile: Boolean = true
+
+  /** What the profile job learned about a topic's rows of one wire
+    * format: the unified schema (None = no record has one), the first
+    * unification conflict (Some = the batch needs per-record triage), the
+    * count of JSON records without a schema or of undecodable Arrow
+    * records, and, for JSON rows of a topic with a cached schema, triage's
+    * verdict against it. */
+  private case class BatchProfile(schema: Option[StructType],
+    conflict: Option[String], unparseable: Long,
+    verdict: Option[IngestPipeline.TriageVerdict])
 
   /** ONE pass over the cached batch computing, per topic and wire format
-    * (keyed by the IPC sniff tag): record count, unified JSON schema,
-    * first unification conflict and unparseable count. An RDD
-    * `treeAggregate` rather than a Catalyst aggregate on purpose: a
-    * typed-imperative aggregate would kick the whole stage — including
-    * the format sniff and the cache-populating scan — out of whole-stage
-    * codegen, and the per-trigger fixed cost is
-    * exactly what this fights. Schemas cross the wire once per partition
-    * tree level, never data; a conflict freezes the state and comes back
-    * as DATA (triage is per record anyway), never as a task failure. A
-    * null JSON VALUE (Kafka tombstone) counts unparseable, exactly as the
-    * per-record path treated it. Avro-configured topics skip inference —
-    * their reader schema is config, not inferred. */
+    * (keyed by the IPC sniff tag): record count, unified schema (JSON
+    * inferred per record, Arrow read from each record's IPC header),
+    * first unification conflict, unparseable count and, for a JSON topic
+    * whose schema [[schemaCache]] holds, triage's verdict against that
+    * seed. The verdict costs one unification per distinct record shape
+    * and lets a conflicting batch triage with no job of its own. The
+    * seeds ship once per job. An RDD `aggregate` rather than a Catalyst
+    * aggregate on purpose: a typed-imperative aggregate would kick the
+    * whole stage — including the format sniff and the cache-populating
+    * scan — out of whole-stage codegen, and the per-trigger fixed cost is
+    * exactly what this fights. Schemas cross the wire once per partition,
+    * never data; a conflict freezes the state and comes back as DATA
+    * (triage is per record anyway), never as a task failure. A null JSON
+    * VALUE (Kafka tombstone) counts unparseable, exactly as the per-record
+    * path treated it. Avro-configured topics skip inference — their reader
+    * schema is config, not inferred. */
   private def profileBatch(
       cached: DataFrame): Map[String, Map[Boolean, (Long, BatchProfile)]] = {
-    val rows = cached.select(col("topic"), col("__ipc"),
-      col("value").cast("string").as("__v"))
+    val rows = cached.select(col("topic"), col("__ipc"), col("value"))
     // plain aggregate, not treeAggregate: only schema-sized states reach
     // the driver (one tiny map per partition), and treeAggregate would
     // add a scale-down SHUFFLE STAGE even for single-digit partition
     // counts — a fixed per-trigger stage for nothing
     val zero = scala.collection.mutable.HashMap.empty[(String, Boolean), IngestPipeline.ProfState]
     val avro = config.avroSchemas.keySet // serializable capture, not `config`
+    val seeds = if (!verdictFromProfile || config.dlqTable.isEmpty) Map.empty[String, StructType]
+      else schemaCache.all
+    val shipped = seeds.map { case (t, s) => t -> new IngestPipeline.SeedHolder(s.json) }
     val agg = rows.rdd.aggregate(zero)(
       (acc, r) => {
         IngestPipeline.profileRow(acc, r.getString(0), r.getBoolean(1),
-          if (r.isNullAt(2)) null else r.getString(2), avro)
+          if (r.isNullAt(2)) null else r.getAs[Array[Byte]](2), avro, shipped)
         acc
       },
       (a, b) => {
-        b.foreach { case (k, s) =>
-          a.get(k) match {
-            case None => a.put(k, s)
-            case Some(t) =>
-              t.n += s.n; t.unparseable += s.unparseable
-              if (t.conflict == null) {
-                if (s.conflict != null) { t.conflict = s.conflict }
-                else if (t.schema.isEmpty) t.schema = s.schema
-                else if (s.schema.nonEmpty && s.schema != t.schema) {
-                  try t.schema = SchemaUnify.unify2(t.schema, s.schema)
-                  catch {
-                    case e: SchemaUnify.GraftSchemaException =>
-                      t.conflict = e.getMessage
-                  }
-                }
-              }
-          }
-        }
+        b.foreach { case (k, s) => a.get(k) match {
+          case None => a.put(k, s)
+          case Some(t) => t.merge(s)
+        } }
         a
       })
     agg.toSeq.groupBy(_._1._1).map { case (topic, states) =>
       topic -> states.map { case ((_, ipc), st) => ipc -> (st.n, BatchProfile(
-        if (st.schema.isEmpty) None else Some(st.schema.json),
-        Option(st.conflict), st.unparseable)) }.toMap
+        st.schemas.result.toOption.flatten, Option(st.schemas.conflict), st.unparseable,
+        seeds.get(topic).filter(_ => !ipc).map(seed =>
+          IngestPipeline.TriageVerdict(seed, st.kept, st.keptSchemas.result)))) }.toMap
     }
   }
 
@@ -740,8 +835,9 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       dead: IngestPipeline.DeadLetters): Unit =
     if (config.avroSchemas.contains(topic)) processAvro(topic, table, records, dead)
     else {
-      if (profiles.contains(true))
-        processArrowIpc(topic, table, records.filter(col("__ipc")), dead)
+      profiles.get(true).foreach { case (n, profile) =>
+        processArrowIpc(topic, table, records.filter(col("__ipc")), n, profile, dead)
+      }
       profiles.get(false).foreach { case (n, profile) =>
         processJson(topic, table, records.filter(!col("__ipc")), n, profile, dead)
       }
@@ -987,8 +1083,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // still throw here; either way (Left) the batch routes to per-record
     // triage
     val inferred: Either[String, Option[StructType]] =
-      try profile.conflict.toLeft(profile.schemaJson.map(j => schemaCache.unifiedFor(
-        topic, Seq(DataType.fromJson(j).asInstanceOf[StructType]))))
+      try profile.conflict.toLeft(profile.schema.map(s => schemaCache.unifiedFor(topic, Seq(s))))
       catch { case e: SchemaUnify.GraftSchemaException => Left(e.getMessage) }
     inferred match {
       case Right(None) =>
@@ -1008,7 +1103,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
           case e: graft.catalog.LandedTypes.SchemaEvolutionException =>
             triageEvolution(table, values, e, dead)
         }
-      case Left(_) => triage(IngestPipeline.JsonWire, topic, table, values, dead)
+      case Left(_) =>
+        triage(IngestPipeline.JsonWire, topic, table, values, dead, profile.verdict)
     }
   }
 
@@ -1040,42 +1136,23 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       }
     }
     val good = dead.split(table, values, errorDetail(col("v")))
-    if (!good.isEmpty) {
-      val unified =
-        try IngestPipeline.JsonWire.goodSchemas(good).headOption
-        catch {
-          case e: Exception =>
-            dead.park(table, good,
-              "table-compatible records conflict pairwise: " + e.getMessage)
-            None
-        }
-      unified.foreach(u => landJson(table, good, u, dead))
+    if (!good.isEmpty) IngestPipeline.schemasOf(IngestPipeline.JsonWire, good) match {
+      case Right(Some(u)) => landJson(table, good, u, dead)
+      case Right(None) => dead.park(table, good, "unparseable JSON")
+      case Left(conflict) =>
+        dead.park(table, good, "table-compatible records conflict pairwise: " + conflict)
     }
-  }
-
-  /** Reference E1: conflict detection via the exception cause chain
-    * (DucklakeSinkTask.java:989-1003) — here typed where possible, message
-    * sniff only across Spark's task-failure wrapper. */
-  private def causeChainHasSchemaConflict(e: Throwable): Boolean = {
-    var cur: Throwable = e
-    while (cur != null) {
-      if (cur.isInstanceOf[SchemaUnify.GraftSchemaException]) return true
-      if (cur.getMessage != null &&
-        cur.getMessage.contains("Cannot unify incompatible types")) return true
-      cur = cur.getCause
-    }
-    false
   }
 
   /** Parse + land one topic's JSON rows under `schema`. `nRecords` (known
-    * from the fan-out job, never re-counted) sizes the landing write:
-    * the batch coalesces to ceil(n / maxRecordsPerFile) slices, so a
-    * trigger-sized batch lands as ONE file per flush instead of one tiny
-    * file per upstream partition — fewer write tasks, fewer footer-stats
-    * reads, fewer manifest entries, less auto-compaction pressure — while
-    * a genuinely large trigger keeps one task per target-sized file
-    * (parallelism stays proportional to data; `maxRecordsPerFile` still
-    * rolls oversized tasks). The corrupt records are always parked (and
+    * from the profile job or triage's profiled verdict, never re-counted;
+    * -1 = unknown) sizes the landing write: the batch coalesces to
+    * ceil(n / RowsPerLandingTask) tasks, so a trigger-sized batch lands as
+    * ONE file per flush instead of one tiny file per upstream partition —
+    * fewer write tasks, fewer footer-stats reads, fewer manifest entries,
+    * less auto-compaction pressure — while a large trigger keeps its parse
+    * spread across cores (`maxRecordsPerFile` still rolls oversized
+    * tasks). The corrupt records are always parked (and
     * checked by the batch's DLQ count) when a DLQ is configured:
     * from_json's corrupt set is NOT a subset of what per-record inference
     * found unparseable (inference types an array by its FIRST element and
@@ -1097,11 +1174,14 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     val good0 = parsed.filter(col("__corrupt").isNull && col("__parsed").isNotNull)
       .select((schema.fieldNames.map(n => col(s"__parsed.`$n`").as(n)) :+
         col("__offset")).toSeq: _*)
-    // repartition, NOT coalesce: coalesce would collapse the parse itself
-    // onto `slices` cores; the shuffle moves only already-parsed rows of
-    // one trigger, and the parse keeps the batch's full parallelism
-    val good = if (nRecords < 0) good0 // triage subset: size unknown, land as-is
-      else good0.repartition(IngestPipeline.slicesFor(nRecords))
+    // coalesce, not repartition: no shuffle, so the parse runs in the
+    // landing tasks themselves, one per RowsPerLandingTask rows (2k: the
+    // measured point from which a second parsing task pays for itself) —
+    // a trigger-sized batch parses and lands as one file, a large one
+    // keeps its parse spread across cores. A batch of unknown size lands
+    // as-is
+    val good = if (nRecords < 0) good0
+      else good0.coalesce(IngestPipeline.slicesFor(nRecords, IngestPipeline.RowsPerLandingTask))
     writeToLake(table, good, dead, nRecords)
     // parked whether or not anything is corrupt: the batch's one DLQ
     // count is the emptiness check
@@ -1117,16 +1197,32 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * schema (the cached topic schema, else the lowest-offset record's);
     * records that cannot unify with it go to the DLQ with a per-record
     * error ([[IngestPipeline.recordError]]), the rest are re-batched and
-    * landed. With no DLQ configured the batch fails instead. */
+    * landed. With no DLQ configured the batch fails instead.
+    *
+    * The verdict — how many records stay, and the union of their schemas —
+    * comes from the profile job when it computed one against the topic's
+    * current seed (`verdict`); then triage lands with no job of its own,
+    * sized by the count. Otherwise (a topic's first conflicting batch in
+    * this process, or Arrow) triage runs the verdict jobs: the seed
+    * (without a cached schema), the emptiness check and the union. */
   private def triage[T: TypeTag](wire: IngestPipeline.Wire[T], topic: String,
-      table: String, values: DataFrame, dead: IngestPipeline.DeadLetters): Unit = {
+      table: String, values: DataFrame, dead: IngestPipeline.DeadLetters,
+      verdict: Option[IngestPipeline.TriageVerdict] = None): Unit = {
     if (config.dlqTable.isEmpty) failNoDlq(values, s"${wire.conflict} in topic '$topic'")
-    val seed = schemaCache.get(topic).getOrElse(firstSchema(wire, values))
+    val profiled = verdict.filter(v => schemaCache.get(topic).contains(v.seed))
+    val seed = profiled.map(_.seed).orElse(schemaCache.get(topic))
+      .getOrElse(firstSchema(wire, values))
     val holder = new IngestPipeline.SeedHolder(seed.json)
     val good = dead.split(table, values,
       udf((v: T) => IngestPipeline.recordError(wire, holder.schema, v)).apply(col("v")),
       wire.toDlq)
-    if (!good.isEmpty) {
+    // kept = -1: some, count unknown
+    val (kept, keptSchemas) = profiled match {
+      case Some(v) => (v.kept, v.schema)
+      case None if good.isEmpty => (0L, Right(None))
+      case None => (-1L, IngestPipeline.schemasOf(wire, good))
+    }
+    if (kept != 0) {
       // "good" records each unify with the seed, but may still conflict
       // pairwise (two records adding the same NEW field with different
       // types). In that case land under the seed schema alone — every
@@ -1136,17 +1232,17 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       // that role: re-seed from the lowest-offset good record that has
       // one, and as a last resort DLQ the survivors — a triage pass must
       // never silently drop records.
-      val unified =
-        try {
-          val schemas = wire.goodSchemas(good)
-          if (schemas.isEmpty) seed else schemaCache.unifiedFor(topic, schemas)
-        } catch {
-          case e: Throwable if causeChainHasSchemaConflict(e) =>
-            if (seed.nonEmpty) seed
-            else firstSchema(wire, good.filter(
-              udf((v: T) => wire.schemaOf(v).exists(_.isDefined)).apply(col("v"))))
-        }
-      if (unified.nonEmpty) wire.land(this, table, good, unified, dead)
+      def seedOrFirst = if (seed.nonEmpty) seed
+        else firstSchema(wire, good.filter(
+          udf((v: T) => wire.schemaOf(v).exists(_.isDefined)).apply(col("v"))))
+      val unified = keptSchemas match {
+        case Right(None) => seed
+        case Right(Some(u)) =>
+          try schemaCache.unifiedFor(topic, Seq(u))
+          catch { case _: SchemaUnify.GraftSchemaException => seedOrFirst }
+        case Left(_) => seedOrFirst
+      }
+      if (unified.nonEmpty) wire.land(this, table, good, unified, dead, kept)
       else dead.park(table,
         good.select(wire.toDlq(col("v")).as("v"), col("partition"), col("offset")),
         s"pairwise schema conflict and no resolvable seed schema for topic '$topic'")
@@ -1192,7 +1288,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     }
     val resolvable =
       try { df.select(checks.map(_._2): _*).queryExecution.analyzed; true }
-      catch { case _: Exception => false }
+      catch { case _: AnalysisException => false }
     if (!resolvable) return df
     // concat_ws skips nulls: the column lists exactly the violated names.
     // The tagged frame is CACHED and held until the batch's dead letters
@@ -1219,34 +1315,33 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
 
   // ---- Arrow IPC path (S4/S6) ----
 
+  /** Land one topic's Arrow IPC records. Their unified schema came out of
+    * the profile job (each record's IPC header). A schema conflict OR an
+    * undecodable record routes the batch to per-record triage, same as
+    * the JSON path — a single corrupt payload must not become a poison
+    * pill that fails the stream on every retry. */
   private def processArrowIpc(topic: String, table: String, records: DataFrame,
-      dead: IngestPipeline.DeadLetters): Unit = {
+      nRecords: Long, profile: BatchProfile, dead: IngestPipeline.DeadLetters): Unit = {
     val values = records.select(col("value").as("v"), col("partition"), col("offset"))
-    // Pass 1: unify record schemas (schema-only header decode). A schema
-    // conflict OR an undecodable record routes the batch to per-record
-    // triage, same as the JSON path — a single corrupt payload must not
-    // become a poison pill that fails the stream on every retry.
-    val tried = values.select(col("v")).as[Array[Byte]].rdd
-      .map(b =>
-        try Right(ArrowIpc.decodeSchema(b))
-        catch { case e: Exception => Left(e.getClass.getName) })
-      .distinct().collect()
     val unified =
-      if (tried.exists(_.isLeft)) None
+      if (profile.unparseable > 0 || profile.conflict.isDefined) None
       else
-        try Some(schemaCache.unifiedFor(topic, tried.collect { case Right(s) => s }.toSeq))
-        catch { case e: Throwable if causeChainHasSchemaConflict(e) => None }
+        try profile.schema.map(s => schemaCache.unifiedFor(topic, Seq(s)))
+        catch { case _: SchemaUnify.GraftSchemaException => None }
     unified match {
-      case Some(u) => landArrow(table, values, u, dead)
+      case Some(u) => landArrow(table, values, u, dead, nRecords)
       case None => triage(IngestPipeline.ArrowWire, topic, table, values, dead)
     }
   }
 
-  /** Pass 2: decode + conform rows (payload `v`) to the unified schema,
-    * land. */
+  /** Decode + conform rows (payload `v`) to the unified schema, and land
+    * them: coalesced to one task per [[IngestPipeline.RowsPerLandingTask]]
+    * rows when `nRecords` is known, as [[landJson]] does. */
   private def landArrow(table: String, values: DataFrame, unified: StructType,
-      dead: IngestPipeline.DeadLetters): Unit = {
-    val bytesRdd: RDD[(Array[Byte], Long)] = values
+      dead: IngestPipeline.DeadLetters, nRecords: Long): Unit = {
+    val sized = if (nRecords < 0) values
+      else values.coalesce(IngestPipeline.slicesFor(nRecords, IngestPipeline.RowsPerLandingTask))
+    val bytesRdd: RDD[(Array[Byte], Long)] = sized
       .select(col("v"), col("offset")).as[(Array[Byte], Long)].rdd
     val unifiedJson = unified.json
     val rows: RDD[Row] = bytesRdd.mapPartitions { it =>

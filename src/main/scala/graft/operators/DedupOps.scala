@@ -584,6 +584,24 @@ object DedupOps {
       lake.append(s"${prefix}_bands", bandsFrame)
     }
 
+  /** `a = b` over columns `a` (a batch id) and `b` (an indexed id) of
+    * `df`, as SQL compares them, except that a string id that does not
+    * cast to the other side's type is unequal instead of failing the query
+    * under ANSI mode: a batch id the index's id type cannot represent
+    * matches no indexed id. Nulls compare as with `=`. */
+  private def sameId(df: DataFrame, a: String, b: String): Column = {
+    import org.apache.spark.sql.types.StringType
+    def castEq(str: String, other: String): Column = {
+      val cast = col(str).try_cast(df.schema(other).dataType)
+      when(col(str).isNotNull && cast.isNull, lit(false)).otherwise(cast === col(other))
+    }
+    (df.schema(a).dataType, df.schema(b).dataType) match {
+      case (_: StringType, t) if !t.isInstanceOf[StringType] => castEq(a, b)
+      case (t, _: StringType) if !t.isInstanceOf[StringType] => castEq(b, a)
+      case _ => col(a) === col(b)
+    }
+  }
+
   private def incrementalNearDupsBody(lake: graft.catalog.GraftLake,
       prefix: String, batch: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleK: Int, admit: Boolean,
@@ -621,9 +639,9 @@ object DedupOps {
     // and exempt from RE-admission (its bands are already indexed). A
     // same-id doc whose TEXT changed band-matches nothing of itself and
     // is admitted again: the index verify-joins tolerate duplicate ids
-    val vsCorpus = vsCorpusAll.filter(col("__bid") =!= col("__partner"))
-      .distinct()
-    val selfMarks = vsCorpusAll.filter(col("__bid") === col("__partner"))
+    val self = sameId(vsCorpusAll, "__bid", "__partner")
+    val vsCorpus = vsCorpusAll.filter(!self).distinct()
+    val selfMarks = vsCorpusAll.filter(self)
       .select(col("__bid")).distinct()
       .select(col("__bid"), lit(0L).as("__dup"), lit(1L).as("__self"))
     // batch-internal candidates, keep-min-id (lower id wins admission).

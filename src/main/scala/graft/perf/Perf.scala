@@ -28,6 +28,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * runMain graft.perf.Perf plans <sf-dir> <out-dir> <tag> <query,query,...>
   * runMain graft.perf.Perf flush <sf-dir> [buckets]
   * runMain graft.perf.Perf dedupscale <rows> <driver|broadcast|shuffle>
+  * runMain graft.perf.Perf landing <rows,rows,...> [reps]
   * runMain graft.perf.Perf floor
   * runMain graft.perf.Perf fsfloor
   * runMain graft.perf.Perf harness
@@ -39,6 +40,7 @@ object Perf {
   private val commands: Map[String, Command] = Map(
     "run" -> run _, "time" -> time _, "ab" -> ab _, "profile" -> profile _,
     "plans" -> plans _, "flush" -> flush _, "dedupscale" -> dedupscale _,
+    "landing" -> landing _,
     "floor" -> floor _,
     "fsfloor" -> fsfloor _, "harness" -> harness _)
 
@@ -377,6 +379,52 @@ object Perf {
       f"land=$landMs%.0f admit=$admitMs%.0f jobs=${jobs.size} dups=$dups " +
       s"landingPlanExprs=$planExprs heapBeforeMb=${before >> 20} " +
       s"heapPeakMb=${peak.get() >> 20} heapMaxMb=${Runtime.getRuntime.maxMemory >> 20}")
+  }
+
+  /** The JSON landing at each row count: generated records of about 20
+    * fields (the ingest benchmark's shape), cached over every core, parsed
+    * with `from_json` and appended, coalesced to 1, 2 and all cores' tasks,
+    * under the trigger confs. `reps` interleaved rounds after one warm-up
+    * round; prints the median wall per task count. The row count at which
+    * one task stops beating the spread bounds a landing task's rows. */
+  private def landing(spark: SparkSession, args: IndexedSeq[String]): Unit = {
+    val reps = args.lift(1).map(_.toInt).getOrElse(3)
+    val cores = spark.sparkContext.defaultParallelism
+    val lake = new GraftLake(spark, Files.createTempDirectory("graft-landing").toString)
+    val id = col("id")
+    def word(salt: String) = concat(lit(salt), pmod(hash(id, lit(salt)), lit(9973)).cast("string"))
+    val record = struct(id.as("seq"), word("kind").as("kind"), pmod(hash(id), lit(100000)).as("user_id"),
+      lit("2024-03-01T12:00:00Z").as("event_ts"), word("r").as("region"),
+      (pmod(hash(id, lit("a")), lit(50000)) / 100.0).as("amount"), pmod(id, lit(20)).as("qty"),
+      (pmod(id, lit(2)) === 0).as("flag"),
+      struct((pmod(hash(id, lit("lat")), lit(18000)) / 100.0).as("lat"),
+        (pmod(hash(id, lit("lon")), lit(36000)) / 100.0).as("lon"), word("c").as("city")).as("geo"),
+      array(word("t1"), word("t2")).as("tags"), word("ua").as("ua"), word("ref").as("ref"),
+      (pmod(hash(id, lit("s")), lit(1000)) / 1000.0).as("score"), pmod(id, lit(10)).as("level"),
+      word("sess").as("session_id"), (id + 5000000000L).as("item_id"),
+      (pmod(hash(id, lit("p")), lit(9000)) / 100.0).as("price"), word("cur").as("currency"),
+      concat_ws(" ", word("n1"), word("n2"), word("n3")).as("note"))
+    args(0).split(',').map(_.toLong).foreach { n =>
+      val values = spark.range(0, n, 1, cores).select(to_json(record).as("v")).cache()
+      values.count()
+      val schema = graft.schema.SchemaInference.inferFromJson(values.head().getString(0)).get
+      val parseSchema = StructType(schema.fields.toSeq :+ StructField("_corrupt", StringType))
+      val parsed = values.select(from_json(col("v"), parseSchema,
+        Map("columnNameOfCorruptRecord" -> "_corrupt")).as("p"))
+        .filter(col("p._corrupt").isNull).select(schema.fieldNames.map(f => col(s"p.`$f`")): _*)
+      val tasks = Seq(1, 2, cores).distinct
+      val walls = mutable.Map.empty[Int, Seq[Double]].withDefaultValue(Nil)
+      graft.ingest.IngestPipeline.triggerConfs(spark) {
+        for (round <- 0 to reps; k <- tasks) {
+          val t0 = System.nanoTime()
+          lake.append(s"landing_$n", parsed.coalesce(k))
+          if (round > 0) walls(k) = walls(k) :+ (System.nanoTime() - t0) / 1e6
+        }
+      }
+      println(s"[landing] rows=$n " + tasks.map(k =>
+        f"tasks=$k%d med=${walls(k).sorted.apply(walls(k).size / 2)}%.0f ms").mkString(" "))
+      values.unpersist()
+    }
   }
 
   /** The fixed-latency floor of this host and session: no-shuffle, one-

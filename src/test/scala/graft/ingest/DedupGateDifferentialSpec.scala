@@ -163,6 +163,42 @@ class DedupGateDifferentialSpec extends AnyFunSuite {
     }
   }
 
+  // the distributed probe's redelivery self-mark compares a batch id with
+  // an indexed id; under ANSI mode a string id the index's id type cannot
+  // represent (`s3`) failed the cast, and with it the flush. Such an id
+  // matches no indexed id; one that casts (`2`) still marks a redelivery
+  test("an int-id index probed by string ids flags without failing the flush") {
+    val indexed = Seq(1 -> at.mkString(" "), 2 -> plain(0)).toDF("doc_id", "text")
+    val strings = Seq("2" -> plain(0), "s3" -> edit(at, 10), "4" -> plain(1))
+      .toDF("doc_id", "text")
+    Seq(true, false).foreach { hinted =>
+      val lake = newLake()
+      probe(lake, indexed, driverVerify = false)
+      // probe only: string ids cannot be admitted into an int-id index
+      val (flag, _) = DedupOps.incrementalNearDupsStaged(lake, "t", strings,
+        "doc_id", "text", threshold = 0.8, parallelAdmit = true,
+        hintBroadcast = hinted, driverVerify = false)
+      val flags = flag(strings.select("doc_id"), "is_dup").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
+      assert(flags === Seq("2" -> 0L, "4" -> 0L, "s3" -> 1L), s"hinted = $hinted")
+    }
+    // through the pipeline: a restarted process has no cached topic schema,
+    // so string ids reach the probe of a table indexed with int ids; the
+    // records, incompatible with the table, park in the DLQ
+    val wh = Files.createTempDirectory("graft-dedup-ids").toString
+    def pipeline() = new IngestPipeline(spark, IngestConfig(wh,
+      dedup = Map("dd" -> DedupConfig("doc_id", "text"))))
+    def docs(ids: Seq[String]) = ids.zipWithIndex.map { case (id, i) =>
+      ("dd", 0, i.toLong, s"""{"doc_id":$id,"text":"${plain(i)}"}""".getBytes("UTF-8"))
+    }.toDF("topic", "partition", "offset", "value")
+    GraftLake.invalidateCaches()
+    pipeline().processBatch(docs(Seq("1", "2")), 0)
+    val restarted = pipeline()
+    restarted.processBatch(docs(Seq("\"2\"", "\"s3\"")), 1)
+    assert(restarted.lake.read("dd").count() === 2)
+    assert(restarted.lake.read("_dlq").count() === 2)
+  }
+
   test("a 100k-row batch on the driver flags what the distributed probe does, with plans that hold no key list") {
     val n = 100000L
     // 8 distinct words per doc; the even ids of the second batch copy a

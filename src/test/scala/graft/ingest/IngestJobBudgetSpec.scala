@@ -62,7 +62,13 @@ class IngestJobBudgetSpec extends AnyFunSuite {
         t -> json("""{"id":99,"a":"2024-03-01T12:00:00Z","name":"x"}"""))) :+
       ("barrow" -> ipc(arrowIds)): _*)
 
-  test("a 5-topic flush with malformed and conflicting records stays within 17 jobs and one DLQ commit") {
+  // The profile job decides the triage of each JSON topic against its
+  // cached schema and reads the Arrow schemas; then each table lands in
+  // one write of one file, and the dead letters in one count and one
+  // append. The parent of this shape ran 17 jobs: an Arrow schema job,
+  // per JSON topic an emptiness check and a re-inference, and a DLQ count
+  // of one task per parked partition.
+  test("a 5-topic flush with malformed and conflicting records runs 8 jobs, one file per table and one DLQ commit") {
     val p = pipeline()
     // the warm batch creates the tables and seeds each topic's schema
     p.processBatch(batchOf(jsonTopics.flatMap(t =>
@@ -70,13 +76,23 @@ class IngestJobBudgetSpec extends AnyFunSuite {
       ("barrow" -> ipc(Seq(1L, 2L))): _*), 0)
     val dlqVersions =
       if (p.lake.tableExists("_dlq")) p.lake.versions("_dlq").size else 0
+    val tables = jsonTopics :+ "barrow"
+    val filesBefore = tables.map(t => t -> p.lake.liveFileCount(t)).toMap
     val measured = fiveTopicBatch(10 to 14, Seq(3L, 4L, 5L))
-    val groups = jobGroupsOf("budget-flush") { p.processBatch(measured, 1) }
-    info(s"${groups.size} jobs")
-    assert(groups.nonEmpty)
-    assert(groups.forall(_ == "budget-flush"),
-      s"jobs outside the flush's job group: ${groups.filterNot(_ == "budget-flush")}")
-    assert(groups.size <= 17, s"${groups.size} jobs for one flush (budget 17)")
+    spark.sparkContext.setJobGroup("budget-flush", "ingest job budget")
+    val jobs = try JobTimeline.record(spark.sparkContext)(p.processBatch(measured, 1))._2
+      finally spark.sparkContext.clearJobGroup()
+    info(s"${jobs.size} jobs: ${jobs.map(j => s"${j.site} (${j.tasks.sum} tasks)").mkString("; ")}")
+    assert(jobs.forall(_.group.contains("budget-flush")),
+      s"jobs outside the flush's job group: ${jobs.filterNot(_.group.contains("budget-flush"))}")
+    // the profile, five landing writes, the DLQ count and the DLQ append
+    assert(jobs.size === 8, jobs.map(_.site))
+    tables.foreach(t =>
+      assert(p.lake.liveFileCount(t) - filesBefore(t) === 1, s"new data files of $t"))
+    val dlqCount = jobs.filter(_.site.contains("landDeadLetters"))
+    assert(dlqCount.size === 1, jobs.map(_.site))
+    assert(dlqCount.head.tasks.sum <= spark.sparkContext.defaultParallelism + 1,
+      dlqCount.head.tasks)
     // every dead letter of the batch lands in ONE _dlq commit
     assert(p.lake.versions("_dlq").size === dlqVersions + 1)
     val parked = p.lake.read("_dlq").select("target_table", "error").collect()
@@ -85,6 +101,26 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     assert(parked.count(_.getString(1) == "unparseable JSON") === 4)
     jsonTopics.foreach(t => assert(p.lake.read(t).count() === 8, t))
     assert(p.lake.read("barrow").count() === 5)
+  }
+
+  // The landing coalesces to one task per RowsPerLandingTask rows: a
+  // trigger-sized topic lands as one file, and a larger one keeps its
+  // parse spread over several tasks rather than folded onto one core
+  test("a JSON topic above RowsPerLandingTask rows parses and lands in several write tasks") {
+    import org.apache.spark.sql.functions._
+    val p = pipeline()
+    val n = 2 * IngestPipeline.RowsPerLandingTask + 1
+    val rows = spark.range(0, n, 1, 4).select(col("id"), concat(lit("n"), col("id")).as("name"))
+    val batch = rows.select(lit("big").as("topic"), (col("id") % 4).cast("int").as("partition"),
+      col("id").as("offset"), to_json(struct(col("id"), col("name"))).cast("binary").as("value"))
+    val jobs = JobTimeline.record(spark.sparkContext)(p.processBatch(batch, 0))._2
+    val writes = jobs.filter(_.site.contains("stageRowsLocked"))
+    assert(writes.size === 1, jobs.map(_.site))
+    info(s"${writes.head.tasks.last} write tasks for $n rows")
+    assert(writes.head.tasks.last >= 2)
+    val landed = p.lake.read("big").select(col("id").cast("long").as("id"), col("name"))
+    assert(landed.count() === n)
+    assert(landed.except(rows).isEmpty)
   }
 
   // A trigger runs interpreted: a flush of a shape the pipeline has seen
