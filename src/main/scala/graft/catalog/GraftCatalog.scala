@@ -7,7 +7,6 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -24,8 +23,10 @@ import scala.jdk.CollectionConverters._
   * spark.sql("INSERT INTO graft.raw_events SELECT ...")   // plain append
   * }}}
   *
-  * Reads delegate to Spark's own v2 parquet machinery (vectorized scan,
-  * pushdown, partition pruning) under the registry's logical schema — so
+  * Reads are the engine's manifest read ([[graft.plans
+  * .ApplyGraftDeletionVectors]] substitutes it in a GraftExtensions
+  * session; a bare session scans Spark's v2 parquet table over the
+  * manifest's file list) under the registry's logical schema — so
   * widened columns read correctly. Writes route through the engine
   * ([[GraftLake]]) as a `V1Write`: INSERT INTO appends with expression
   * partitioning + `_inserted_at` stamping (partitioned tables included),
@@ -57,16 +58,16 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     lake.listTables().map(t => Identifier.of(Array.empty, t)).toArray
   }
 
-  /** DV correctness for SQL reads lives in the analyzer rule
-    * [[graft.plans.ApplyGraftDeletionVectors]] — the catalog's plain DSv2
-    * parquet scan does not apply deletion vectors. A session that
-    * configured only `spark.sql.catalog.*` (no GraftExtensions) would
-    * silently resurrect deleted rows, the worst failure class there is —
-    * so a DV-carrying table REFUSES to load in such a session. O(1) on
-    * the common path: `liveDvs` is served from the commit cache, and the
-    * rule lookup is a list scan of the session's post-hoc rules. */
-  /** Whether this session carries the engine read rule — the ONE probe
-    * behind every "this state needs the engine scan" refusal. */
+  /** Whether this session carries the engine read rule
+    * [[graft.plans.ApplyGraftDeletionVectors]] — the ONE probe behind
+    * every "this state needs the engine scan" refusal. A session that
+    * configured only `spark.sql.catalog.*` (no GraftExtensions) scans the
+    * plain DSv2 parquet table, which applies no deletion vectors, no
+    * renames and no generated-column recompute: it would silently
+    * resurrect deleted rows, the worst failure class there is — so such
+    * tables REFUSE to load there. O(1) on the common path: `liveDvs` is
+    * served from the commit cache, and the rule lookup is a list scan of
+    * the session's post-hoc rules. */
   private def engineReadInstalled: Boolean =
     spark.sessionState.analyzer.postHocResolutionRules
       .exists(_.isInstanceOf[graft.plans.ApplyGraftDeletionVectors])
@@ -104,54 +105,24 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     }
     val meta = lake.readMeta(ident.name)
     requireDvCapable(ident.name, lake.liveDvs(ident.name), meta.schema)
-    // MIXED-layout state (mid-incremental-REBUCKET or mid-partition-
-    // evolution): live files span two layouts whose directory names
-    // conflict in Spark's partition discovery, so the directory-based
-    // table can't even resolve its schema. Serve the explicit live FILE
-    // list (each file its own leaf — no partition inference) under the
-    // SAME full schema as the normal path (no transient schema flap for
-    // SQL consumers); the DV read rule substitutes the engine's
-    // recompute scan — which computes the `__p_*` columns from the
-    // stored source columns — before planning (dvRuleUnchanged is false
-    // while the set is mixed), and a session WITHOUT the extensions is
-    // refused like a DV-carrying table (its plain scan would read the
-    // generated columns as nulls). Probe cost: only partitioned tables
-    // can be mixed, the last version is cache-first and the conformity
-    // verdict memoizes per version — zero extra LISTs on the
-    // steady-state path.
-    if (meta.partitionExprs.nonEmpty)
-      for (v <- lake.probeLastVersion(ident.name)
-           if !lake.liveSetConforms(ident.name, v)) {
-        requireEngineRead(ident.name, "is mid-layout-migration (live " +
-          "files span two partition layouts)",
-          " — or let the migration finish")
-        val (_, files) = lake.snapshotFiles(ident.name, v)
-        val full = StructType(
-          GraftLake.logicalSchema(meta.schema).fields.toSeq ++
-            GraftLake.partitionFields(meta))
-        val parquet = ParquetTable(
-          ident.name,
-          spark,
-          new CaseInsensitiveStringMap(Map("path" -> dataDir(ident)).asJava),
-          files,
-          Some(full),
-          classOf[ParquetFileFormat])
-        return new GraftTable(ident.name, parquet, warehouse,
-          mixedLayout = true)
-      }
-    // the relation's columns are the LOGICAL names; with renames live the
-    // analyzer rule substitutes the engine read before any scan plans
+    // the relation's columns are the LOGICAL names; a session with the
+    // extensions substitutes the engine read before any scan plans, so
+    // the manifest scan below is only ever built for a bare session
     val full = StructType(
       GraftLake.logicalSchema(meta.schema).fields.toSeq ++
         GraftLake.partitionFields(meta))
-    val parquet = ParquetTable(
-      ident.name,
-      spark,
-      new CaseInsensitiveStringMap(Map("path" -> dataDir(ident)).asJava),
-      Seq(dataDir(ident)),
-      Some(full),
-      classOf[ParquetFileFormat])
-    new GraftTable(ident.name, parquet, warehouse)
+    if (!engineReadInstalled)
+      for (v <- lake.lastVersionCached(ident.name)
+           if !lake.liveSetConforms(ident.name, v))
+        // MIXED-layout state (mid-incremental-REBUCKET or mid-partition-
+        // evolution): live files span two layouts whose directory names
+        // conflict in Spark's partition discovery, and only the engine
+        // scan recomputes the generated `__p_*` columns
+        requireEngineRead(ident.name, "is mid-layout-migration (live " +
+          "files span two partition layouts)",
+          " — or let the migration finish")
+    new GraftTable(ident.name, warehouse, full,
+      () => lake.currentScanTable(ident.name, full))
   }
 
   /** `SELECT … FROM cat.t TIMESTAMP AS OF '…'` — resolves the latest
@@ -188,47 +159,46 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // logical names AS OF that snapshot (the manifest schema carries its
     // own rename metadata)
     val logical = GraftLake.logicalSchema(schema)
-    val parquet = ParquetTable(
-      s"${ident.name}@v$v",
-      spark,
-      new CaseInsensitiveStringMap(Map("path" -> dataDir(ident)).asJava),
-      files,
-      Some(logical),
-      classOf[ParquetFileFormat])
-    new SnapshotTable(ident.name, v, warehouse, parquet, logical)
+    new SnapshotTable(ident.name, v, warehouse, logical,
+      () => lake.scanTable(s"${ident.name}@v$v", files, logical,
+        lake.pruningIndex(files, Map.empty, logical, 0, None)))
   }
 
   /** Read-only snapshot facade: BATCH_READ only — writing to history is
     * not a thing. */
   private final class SnapshotTable(tableName: String, version: Long,
-      wh: String, underlying: ParquetTable,
-      snapSchema: StructType) extends Table with SupportsRead
-      with GraftTableIdentity {
+      wh: String, snapSchema: StructType, scan: () => ParquetTable)
+      extends Table with SupportsRead with GraftTableIdentity {
     override def graftWarehouse: String = wh
     override def graftTableName: String = tableName
     override def graftVersion: Option[Long] = Some(version)
-    override def name(): String = underlying.name
-    override def schema(): StructType = snapSchema
+    override def name(): String = s"$tableName@v$version"
+    override def schema(): StructType =
+      org.apache.spark.sql.graft.PlanBridge.asNullable(snapSchema)
     override def capabilities(): util.Set[TableCapability] =
       util.EnumSet.of(TableCapability.BATCH_READ)
     override def newScanBuilder(options: CaseInsensitiveStringMap) =
-      underlying.newScanBuilder(options)
+      scan().newScanBuilder(options)
     override def partitioning(): Array[Transform] = Array.empty
-    override def properties(): util.Map[String, String] = underlying.properties()
+    override def properties(): util.Map[String, String] =
+      Map("path" -> s"$wh/$tableName/data").asJava
   }
 
-  /** Catalog table facade: scans delegate to Spark's v2 parquet machinery
-    * (vectorized read, pushdown, partition pruning over the generated
-    * `__p_*` columns), writes route through the engine as a
-    * [[org.apache.spark.sql.connector.write.V1Write]] — so SQL
+  /** Catalog table facade. Reads: a session with
+    * [[graft.plans.GraftExtensions]] substitutes the engine read for the
+    * relation before any scan plans; a bare session scans `scan()` — a
+    * Spark v2 parquet table over the latest manifest's file list with
+    * manifest-bounds file skipping (vectorized read, pushdown, partition
+    * pruning over the generated `__p_*` columns). Writes route through the
+    * engine as a [[org.apache.spark.sql.connector.write.V1Write]] — so SQL
     * `INSERT INTO` lands through [[GraftLake.append]] (expression
     * partitioning applied, `_inserted_at` stamped — the reference injects
     * it on every write path, DucklakeWriter.java:205-214) and
     * `INSERT OVERWRITE` through [[GraftLake.overwriteContents]]. The
     * generated `__p_*` and `_inserted_at` columns are system-managed:
     * values supplied for them by SQL writers are discarded. */
-  private final class GraftTable(tableName: String, underlying: ParquetTable,
-      wh: String, mixedLayout: Boolean = false)
+  private final class GraftTable(tableName: String, wh: String,
+      fullSchema: StructType, scan: () => ParquetTable)
       extends Table with SupportsRead with SupportsWrite
       with org.apache.spark.sql.connector.catalog.TruncatableTable
       with GraftTableIdentity {
@@ -241,8 +211,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
       new GraftLake(SparkSession.active, wh).truncate(tableName)
       true
     }
-    override def name(): String = underlying.name
-    override def schema(): StructType = underlying.schema
+    override def name(): String = tableName
+    override def schema(): StructType =
+      org.apache.spark.sql.graft.PlanBridge.asNullable(fullSchema)
     // AUTOMATIC_SCHEMA_EVOLUTION lets Spark's own analysis rule
     // (ResolveMergeIntoSchemaEvolution) route `MERGE … WITH SCHEMA
     // EVOLUTION` through alterTable below — matching the reference's
@@ -251,41 +222,17 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
       util.EnumSet.of(TableCapability.BATCH_READ,
         TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
         TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
-    /** Scans go through manifest-level file skipping: when the optimizer
-      * pushes prunable data filters, the parquet table is rebuilt over
-      * only the files whose manifest bounds can satisfy them (`WHERE
-      * ts > X` on a 100 TB table plans a task set proportional to the
-      * matching range, through plain SQL). `basePath` keeps the generated
-      * `__p_*` partition-directory columns parsing identically on the
-      * explicit file list. Falls back to the full directory scan whenever
-      * pruning proves nothing. */
     override def newScanBuilder(options: CaseInsensitiveStringMap) =
-      if (mixedLayout)
-        // explicit-file scan, no manifest re-pruning: the pruning rebuild
-        // sets a basePath, which mixed-layout files cannot share (and the
-        // DV rule routes sessions with the extensions through the engine
-        // read before this scan ever plans)
-        underlying.newScanBuilder(options)
-      else new org.apache.spark.sql.graft.PruningScanBuilder(
-        underlying.newScanBuilder(options),
-        filters => {
-          val sp = SparkSession.active
-          val lake = new GraftLake(sp, wh)
-          lake.prunedScanPaths(tableName, filters).map { kept =>
-            val opts = new CaseInsensitiveStringMap(
-              (options.asScala ++ Map(
-                "basePath" -> s"$wh/$tableName/data")).asJava)
-            ParquetTable(underlying.name, sp, opts, kept,
-              Some(underlying.schema), classOf[ParquetFileFormat])
-              .newScanBuilder(opts)
-          }
-        })
-    override def partitioning(): Array[Transform] = underlying.partitioning()
+      scan().newScanBuilder(options)
+    override def partitioning(): Array[Transform] =
+      fullSchema.fieldNames.filter(_.startsWith("__p_"))
+        .map(n => org.apache.spark.sql.connector.expressions.Expressions
+          .identity(n): Transform)
     // engine table properties (TableMeta.props — e.g. change-feed
-    // capture) surface through SHOW TBLPROPERTIES alongside the format's
+    // capture) surface through SHOW TBLPROPERTIES beside the data path
     override def properties(): util.Map[String, String] = {
       val meta = new GraftLake(SparkSession.active, wh).readMeta(tableName)
-      (underlying.properties().asScala ++ meta.props).asJava
+      (Map("path" -> s"$wh/$tableName/data") ++ meta.props).asJava
     }
 
     override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -312,9 +259,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
         }
       }
   }
-
-  private def dataDir(ident: Identifier): String =
-    s"$warehouse/${ident.name}/data"
 
   /** SQL `PARTITIONED BY` transform → the engine's expression-partition
     * spec string ([[PartitionExpr.parse]]): `bucket(n, c…)`,
@@ -374,14 +318,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // columns (`_inserted_at`, `__p_*`) must not be demanded from the
     // SELECT output — the V1 insert path stamps/derives them itself.
     // Subsequent statements loadTable() fresh and see the full schema.
-    val parquet = ParquetTable(
-      ident.name,
-      spark,
-      new CaseInsensitiveStringMap(Map("path" -> dataDir(ident)).asJava),
-      Seq(dataDir(ident)),
-      Some(schema),
-      classOf[ParquetFileFormat])
-    new GraftTable(ident.name, parquet, warehouse)
+    new GraftTable(ident.name, warehouse, schema,
+      () => lake.scanTable(ident.name, Nil, schema,
+        lake.pruningIndex(Nil, Map.empty, schema, 0, None)))
   }
 
   /** Schema evolution through the engine's evolve path ([[GraftLake

@@ -207,10 +207,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     statsMapCache.remove(s"$warehouse/$name")
     dvSetCache.remove(s"$warehouse/$name")
     dvCountCache.remove(s"$warehouse/$name")
-    dvRulePassCache.remove(s"$warehouse/$name")
     conformCache.remove(s"$warehouse/$name")
-    probeFreshCache.remove(s"$warehouse/$name")
-    dvRulePassAtVersion.keySet.removeIf(_.startsWith(s"$warehouse/$name#"))
     bloomCache.keySet.removeIf(_.startsWith(s"$warehouse/$name#"))
     layoutCache.remove(s"$warehouse/$name")
     typeStableCache.remove(s"$warehouse/$name")
@@ -641,62 +638,50 @@ final class GraftLake(private[graft] val spark: SparkSession,
   private def partitionFields(meta: TableMeta): Seq[StructField] =
     GraftLake.partitionFields(meta)
 
-  /** Full on-disk view incl. generated partition columns. During a
-    * MIXED-layout state (mid-incremental-REBUCKET: live files under two
-    * bucket counts, whose directory names conflict in Spark's partition
-    * discovery) the view serves the live manifest set through the
-    * recompute scan shape instead of the directory — same rows, partition
-    * columns recomputed from the stored source columns. */
-  private def readInternal(name: String, meta: TableMeta): DataFrame = {
+  /** Absolute path of a manifest file identity: a committed file keeps
+    * `data/<rel>/<name>` for its whole life. */
+  private def refPath(name: String, ref: (String, String)): String =
+    if (ref._1.isEmpty) s"${dataDir(name)}/${ref._2}"
+    else s"${dataDir(name)}/${ref._1}/${ref._2}"
+
+  /** Live (rel, name) files of snapshot `v` — the commit path's live-set
+    * cache when it holds `v`, else one manifest-chain resolution. */
+  private def liveFilesAt(name: String, v: Long): Vector[(String, String)] = {
+    val cached = liveSetCache.get(s"$warehouse/$name")
+    if (cached != null && cached._1 == v) cached._2
+    else resolveManifest(name, v)._2
+  }
+
+  /** Deletion-vector files of snapshot `v`, cache-first like
+    * [[liveFilesAt]]. */
+  private def dvsAt(name: String, v: Long): Vector[String] = {
+    val cached = dvSetCache.get(s"$warehouse/$name")
+    if (cached != null && cached._1 == v) cached._2 else resolveDvs(name, v)
+  }
+
+  /** The rows of snapshot `version`'s live files (None: no commit yet,
+    * an empty frame), generated partition columns included, deletion
+    * vectors NOT applied: the one current-state scan every engine read,
+    * SQL read and rewrite plans. `keep` narrows the file set; the scan
+    * prunes further by manifest bounds, bloom sidecars and bucket
+    * directories at planning time, and reads a mixed-layout file set
+    * (mid-REBUCKET) through the recompute shape of [[manifestScan]]. */
+  private def liveScan(name: String, meta: TableMeta, version: Option[Long],
+      keep: ((String, String)) => Boolean = _ => true): DataFrame = {
     val full = StructType(meta.schema.fields.toSeq ++ partitionFields(meta))
-    if (meta.partitionExprs.nonEmpty) {
-      val key = s"$warehouse/$name"
-      // Two-step on purpose. The ENTRY decision (is the table mixed?)
-      // rides the TTL-bounded probe: in a reader-only JVM
-      // `lastVersionCached` never populates and would pay an uncached
-      // versions-dir LIST per table reference on the read hot path —
-      // the probe caps that at one LIST per TTL, and its own-commit max
-      // keeps a writer mid-ITS-OWN migration exact. The REFS themselves
-      // are then resolved at `lastVersionCached` (own commit, or a
-      // fresh list only in the rare mixed state): a TTL-stale version
-      // must never choose which refs a read serves — its files may
-      // since have been retired and a manifestScan over moved paths
-      // reads empty silently. Worst case of probe staleness is
-      // direction-safe: a just-started foreign migration is seen as
-      // conforming for <= one TTL and the directory read fails LOUD on
-      // the mixed names, never wrong rows.
-      for (v0 <- probeLastVersion(name) if !liveSetConforms(name, v0);
-           v <- lastVersionCached(name)) {
-        val cached = liveSetCache.get(key)
-        val refs =
-          if (cached != null && cached._1 == v) cached._2
-          else resolveManifest(name, v)._2
-        val dd = dataDir(name)
-        val paths = refs.map { case (rel, fn) =>
-          if (rel.isEmpty) s"$dd/$fn" else s"$dd/$rel/$fn"
-        }
-        return manifestScan(paths, statsFor(name, v), full,
-          meta.partitionExprs.size, Some(dd),
-          recomputeWith = Some(meta))
-      }
-    }
-    val dd = new Path(dataDir(name))
-    val f = fs(dd)
-    // partition dirs (`__p_x=v`) begin with '_' but ARE data
-    val hasData = f.exists(dd) && f.listStatus(dd).exists { s =>
-      val n = s.getPath.getName
-      (s.isDirectory && n.contains("=")) ||
-        (!n.startsWith("_") && !n.startsWith("."))
-    }
-    if (!hasData) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-    } else {
-      spark.read
-        .option("basePath", dataDir(name))
-        .schema(full)
-        .parquet(dataDir(name))
+    version match {
+      case None => manifestScan(Nil, Map.empty, full, 0, None)
+      case Some(v) =>
+        manifestScan(liveFilesAt(name, v).filter(keep).map(refPath(name, _)),
+          statsFor(name, v), full, meta.partitionExprs.size,
+          Some(dataDir(name)), bloomPruner(name, _),
+          bucketPrunerAt(name, v, meta, _), recomputeWith = Some(meta))
     }
   }
+
+  /** [[liveScan]] of the latest snapshot this process knows of. */
+  private def readInternal(name: String, meta: TableMeta): DataFrame =
+    liveScan(name, meta, lastVersionCached(name))
 
   // ---- deletion vectors (merge-on-read DELETE) ----
 
@@ -771,80 +756,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
   }
 
-  /** True when the analyzer DV/rename rule can keep the table's plain
-    * DSv2 scan: no live deletion vectors AND no renamed columns at the
-    * requested snapshot. Memoized per (table, version) so the steady
-    * state — the common one, re-established by any full rewrite — costs
-    * exactly two ConcurrentHashMap gets per relation per analyzer pass
-    * (version lookup + verdict lookup), with no metadata resolution of
-    * any kind. A commit of any flavor bumps the version and misses the
-    * memo, so DV/rename commits are picked up on the very next analysis.
-    * `VERSION AS OF` verdicts are immutable and cached unboundedly-sound
-    * (bounded defensively). */
-  private[graft] def dvRuleUnchanged(name: String,
-      version: Option[Long]): Boolean = {
-    val key = s"$warehouse/$name"
-    version match {
-      case Some(v) =>
-        val vk = s"$key#$v"
-        val cached = GraftLake.dvRulePassAtVersion.get(vk)
-        if (cached != null) cached.booleanValue()
-        else {
-          GraftLake.dvRuleSlowPathEvals.increment()
-          val ok = dvsAtVersion(name, v).isEmpty &&
-            GraftLake.logicalNamesOf(schemaAtVersion(name, v)).isEmpty
-          // defensive bound with PER-ENTRY eviction: drop an arbitrary
-          // quarter instead of clear() — a full wipe would force every
-          // concurrent analyzer pass onto the slow path at once (a
-          // thundering herd on a wide multi-table session), while a
-          // partial evict keeps 3/4 of the steady state hot. Arbitrary
-          // order is fine: verdicts are immutable and cheap to re-derive
-          // one at a time
-          if (GraftLake.dvRulePassAtVersion.size() > 65536) {
-            val it = GraftLake.dvRulePassAtVersion.keySet().iterator()
-            var n = 16384
-            while (n > 0 && it.hasNext) { it.next(); it.remove(); n -= 1 }
-          }
-          GraftLake.dvRulePassAtVersion.put(vk, java.lang.Boolean.valueOf(ok))
-          ok
-        }
-      case None =>
-        val last: Option[Long] =
-          Option(GraftLake.lastVersionCache.get(key)).map(_.longValue())
-            .orElse(latestVersion(name))
-        last match {
-          case None =>
-            // zero commits: no DVs possible, but play it safe on renames
-            // (they always commit, so this branch is cold anyway)
-            GraftLake.dvRuleSlowPathEvals.increment()
-            liveDvs(name).isEmpty &&
-              GraftLake.logicalNamesOf(readMeta(name).schema).isEmpty
-          case Some(v) =>
-            val memo = GraftLake.dvRulePassCache.get(key)
-            if (memo != null && memo.longValue() == v) true
-            else {
-              GraftLake.dvRuleSlowPathEvals.increment()
-              // the mixed-layout check routes SQL reads through the
-              // engine scan for the duration of an incremental REBUCKET:
-              // the plain DSv2 directory scan would trip Spark's
-              // conflicting-partition-names assertion on a table whose
-              // live files span two bucket counts
-              val ok = liveDvs(name).isEmpty &&
-                GraftLake.logicalNamesOf(readMeta(name).schema).isEmpty &&
-                liveSetConforms(name, v)
-              if (ok)
-                GraftLake.dvRulePassCache.put(key, java.lang.Long.valueOf(v))
-              ok
-            }
-        }
-    }
-  }
-
-  /** Whether every live file of snapshot `v` sits under the CURRENT
-    * layout's directory names — false during an incremental REBUCKET's
-    * transient mixed state. O(live files) of in-memory string prefix
-    * checks off the live-set cache; only consulted on the DV rule's
-    * slow path (the verdict memoizes per version once true). */
   /** Latest committed version, cache-first — the same O(1)-on-the-hot-
     * path discipline as [[liveDvs]] (one versions-dir listing only on a
     * cold start). For callers that must not pay a LIST per analysis. */
@@ -854,38 +765,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
       .orElse(latestVersion(name))
   }
 
-  /** Latest version for the LAYOUT-CONFORMITY probe: freshly listed, but
-    * at most once per `spark.graft.layout.probeTtlMs` (default 10 s) per
-    * table. `lastVersionCached` alone would serve a WRITER JVM's own
-    * last-commit version forever, so a cross-process layout migration
-    * would stay invisible to it and its directory-discovery reads would
-    * crash on the mixed state; a raw LIST per analysis would pay an
-    * object-store request per table reference. The TTL bounds both: the
-    * steady state pays one LIST per table per TTL window, and a foreign
-    * migration is observed within it. */
-  private[graft] def probeLastVersion(name: String): Option[Long] = {
-    val key = s"$warehouse/$name"
-    val ttl = spark.conf
-      .getOption("spark.graft.layout.probeTtlMs").map(_.toLong)
-      .getOrElse(10000L)
-    val now = System.currentTimeMillis()
-    val memo = GraftLake.probeFreshCache.get(key)
-    val listed: Option[Long] =
-      if (memo != null && now - memo._1 < ttl)
-        (if (memo._2 < 0) None else Some(memo._2))
-      else {
-        val v = latestVersion(name)
-        GraftLake.probeFreshCache.put(key, (now, v.getOrElse(-1L)))
-        v
-      }
-    // this JVM's OWN commits advance lastVersionCache immediately — the
-    // probe must never lag its own writes (a writer mid-ITS-OWN
-    // migration would otherwise misclassify the table as conforming
-    // within the TTL window)
-    val own = Option(lastVersionCache.get(key)).map(_.longValue())
-    (listed ++ own).reduceOption(_ max _)
-  }
-
+  /** Whether every live file of snapshot `v` sits under the CURRENT
+    * layout's directory names — false during an incremental REBUCKET's
+    * transient mixed state. O(live files) of in-memory string prefix
+    * checks off the live-set cache, memoized per (version, layout). */
   private[graft] def liveSetConforms(name: String, v: Long): Boolean = {
     val meta = readMeta(name)
     if (meta.partitionExprs.isEmpty) return true
@@ -894,15 +777,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // the memo keys on (version, LAYOUT): a cross-process layout flip
     // changes the verdict for the SAME version (post-flip, pre-first-
     // group every file is suddenly foreign) — a version-only memo would
-    // serve the pre-flip "conforms" and route a directory read against
-    // the new meta (dropped/null partition columns, silently wrong)
+    // serve the pre-flip "conforms" and scope a MERGE by partition
+    // values the old-layout directories do not follow
     val memo = GraftLake.conformCache.get(key)
     if (memo != null && memo._1 == v && memo._3 == prefixes) return memo._2
-    val cached = liveSetCache.get(key)
-    val refs =
-      if (cached != null && cached._1 == v) cached._2
-      else resolveManifest(name, v)._2
-    val ok = refs.forall(r => GraftLake.relConforms(r._1, prefixes))
+    val ok = liveFilesAt(name, v).forall(r => GraftLake.relConforms(r._1, prefixes))
     GraftLake.conformCache.put(key, (v, ok, prefixes))
     ok
   }
@@ -1058,30 +937,13 @@ final class GraftLake(private[graft] val spark: SparkSession,
       within: Option[org.apache.spark.sql.graft.PlanBridge.SimplePred] = None)
       : Option[DataFrame] = {
     val partDepth = meta.partitionExprs.size
-    // manifest-driven pruning scan when the table has commits: a
-    // selective MoR DML on a 100 TB table plans only the files whose
-    // bounds can match the predicate, not the table
-    val key = s"$warehouse/$name"
-    val last: Option[Long] = Option(lastVersionCache.get(key)).map(_.longValue())
-      .orElse(latestVersion(name))
-    val base = last match {
-      case None => readInternal(name, meta)
-      case Some(v) =>
-        val cached = liveSetCache.get(key)
-        val files =
-          if (cached != null && cached._1 == v) cached._2
-          else resolveManifest(name, v)._2
-        val bucketK = within.flatMap(bucketPrunerAt(name, v, meta, _))
-        val paths = files.filter(ref => keep(ref) &&
-            bucketK.forall(_(GraftLake.fileKey(ref)))).map { case (rel, fn) =>
-          if (rel.isEmpty) s"${dataDir(name)}/$fn"
-          else s"${dataDir(name)}/$rel/$fn"
-        }
-        val full = StructType(meta.schema.fields.toSeq ++ partitionFields(meta))
-        manifestScan(paths, statsFor(name, v), full, partDepth,
-          Some(dataDir(name)), bloomPruner(name, _),
-          bucketPrunerAt(name, v, meta, _), recomputeWith = Some(meta))
-    }
+    // manifest-driven pruning scan: a selective MoR DML on a 100 TB
+    // table plans only the files whose bounds can match the predicate
+    val last = lastVersionCached(name)
+    val bucketK = for (v <- last; w <- within; k <- bucketPrunerAt(name, v, meta, w))
+      yield k
+    val base = liveScan(name, meta, last,
+      ref => keep(ref) && bucketK.forall(_(GraftLake.fileKey(ref))))
     val fileBacked = base.queryExecution.logical.collectFirst {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
       case _: org.apache.spark.sql.execution.LogicalRDD => ()
@@ -1104,8 +966,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
 
   /** METADATA-ONLY DELETE fast path: when the manifest bounds PROVE the
     * predicate holds for every row of a file ([[GraftLake.fileAllMatcher]]
-    * — zero-null witness included), the file is dropped wholesale — a
-    * rename into `_history/` plus one remove-only commit. NO data file is
+    * — zero-null witness included), the file is dropped wholesale — one
+    * remove-only commit. NO data file is
     * opened, NO Spark job runs over table rows; the returned count comes
     * from the manifest's footer row counts minus the files' already-live
     * DV entries. The 100 TB shape this exists for: `DELETE WHERE
@@ -1234,65 +1096,18 @@ final class GraftLake(private[graft] val spark: SparkSession,
           .flatMap(_.getSeq[String](2)).toSet
         (m, dvs0.filterNot(pinned))
       }
-    // rename-only retirement (the same _history/ protocol as rewrites, so
-    // time travel / restore / vacuum see nothing new); any failure rolls
-    // the moved files back and the scan path serves the delete instead
-    if (!retireRefs(name, drop)) return None
     val deleted = drop.map { ref =>
       (statsOf(ref).get(GraftLake.RowCountKey) match {
         case Some(GraftLake.NumBounds(lo, _)) => lo.toLong
         case _ => 0L
       }) - masked.getOrElse(GraftLake.fileKey(ref), 0L)
     }.sum
-    // on a lost commit race, commitVersion's unswapOnCollision renames the
-    // removed files back out of _history/ before failing fast — the same
-    // contract every rewrite commit has
     commitVersion(name, Nil, drop, op = "delete", dvRemoved = dvRemoved)
     graft.metrics.GraftMetrics.op("metadataDelete").record(drop.size.toLong)
     Some(deleted)
   }
 
-  /** Rename-only retirement of live files into `_history/` (the rewrite
-    * protocol's layout, so time travel / restore / vacuum see nothing
-    * new). All-or-nothing: any failure renames the already-moved files
-    * back and returns false — the caller picks its own fallback. A file
-    * that cannot be renamed back is STRANDED: the manifest still lists it
-    * but `data/` no longer holds it, so no fallback is safe and the
-    * retirement fails with a message naming every stranded file. */
-  private def retireRefs(name: String, refs: Seq[(String, String)]): Boolean = {
-    val dd = new Path(dataDir(name))
-    val hd = historyDir(name)
-    val f = fs(dd)
-    def at(root: Path, ref: (String, String)): Path =
-      if (ref._1.isEmpty) new Path(root, ref._2)
-      else new Path(new Path(root, ref._1), ref._2)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    try {
-      refs.foreach { ref =>
-        val dst = at(hd, ref)
-        f.mkdirs(dst.getParent)
-        renameOrFail(f, at(dd, ref), dst)
-        moved += ref
-      }
-      true
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        val stranded = moved.filterNot(ref =>
-          try f.rename(at(hd, ref), at(dd, ref))
-          catch { case scala.util.control.NonFatal(_) => false })
-        if (stranded.nonEmpty)
-          throw new IllegalStateException(
-            s"'$name': retiring ${refs.size} file(s) into $hd failed, and " +
-              s"${stranded.size} of them could not be renamed back: " +
-              stranded.map(at(hd, _)).mkString(", ") + ". The manifest " +
-              s"still lists them, so reads of '$name' fail: rename them " +
-              s"back under $dd, or run repairTable(\"$name\") to commit " +
-              "their removal", e)
-        false
-    }
-  }
-
-  /** TRUNCATE: retire EVERY live file in one remove-only commit —
+  /** TRUNCATE: remove EVERY live file in one remove-only commit —
     * O(metadata) at any table size, the unconditional twin of the
     * metadata-only DELETE (no proofs needed: everything goes). Old
     * snapshots stay time-travelable; the retention vacuum reaps them;
@@ -1315,9 +1130,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
         commitVersion(name, Nil, Nil, op = "dv-clear", dvRemoved = dvs)
       return
     }
-    require(retireRefs(name, files),
-      s"TRUNCATE '$name': retiring live files into _history/ failed " +
-        "(partially-moved files were renamed back; the table is unchanged)")
     commitVersion(name, Nil, files, op = "truncate", dvRemoved = dvs)
   }
 
@@ -1631,11 +1443,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     if (cols.isEmpty) return Map.empty
     val meta = readMeta(name)
     val partDepth = meta.partitionExprs.size
-    val last = latestVersion(name)
-    val liveRefs = last match {
-      case Some(v) => resolveManifest(name, v)._2
-      case None => listDataFiles(name)
-    }
+    val liveRefs = latestVersion(name).fold(Vector.empty[(String, String)])(
+      resolveManifest(name, _)._2)
     val liveKeys = liveRefs.map(GraftLake.fileKey)
     cols.map { c =>
       val dest = new Path(bloomDir(name), c)
@@ -1646,14 +1455,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
       else {
         val (expected, fpp) = readBloomParams(dest)
         val missingSet = missing.toSet
-        val paths = liveRefs.collect {
-          case ref @ (rel, fn) if missingSet.contains(GraftLake.fileKey(ref)) =>
-            if (rel.isEmpty) s"${dataDir(name)}/$fn"
-            else s"${dataDir(name)}/$rel/$fn"
-        }
+        val paths = liveRefs.filter(ref => missingSet.contains(GraftLake.fileKey(ref)))
+          .map(refPath(name, _))
         // partition-source columns live in the data files themselves, so a
         // plain read of ONLY the missing files carries everything needed
-        val blooms = spark.read.parquet(paths: _*)
+        val blooms = manifestScan(paths, Map.empty, meta.schema, partDepth, None)
           .select(GraftLake.dvKeyColumn(partDepth).as("file_key"),
             col(quoted(c)).as("__v"))
           .groupBy(col("file_key"))
@@ -1833,15 +1639,14 @@ final class GraftLake(private[graft] val spark: SparkSession,
     case Some((src, v)) => readVersion(src, v)
     case None =>
       val meta = readMeta(name)
-      def build(): DataFrame = {
-        val live = applyDvs(name, readInternal(name, meta), liveDvs(name),
-          meta.partitionExprs.size)
-        toLogical(meta.schema,
-          live.select(meta.schema.fieldNames.map(n => col(quoted(n))): _*))
-      }
+      // the FRESH latest version: a commit of another process is visible
+      // to the next read, as the memo below promises
+      def build(): DataFrame = toLogical(meta.schema,
+        liveRows(name, meta, latestVersion(name))
+          .select(meta.schema.fieldNames.map(n => col(quoted(n))): _*))
       // READ-PLAN memo (the Delta snapshot-cache pattern): building the
-      // live view re-lists the data directory, re-creates the file index
-      // and re-derives the DV mask on EVERY call — 30–80 ms of driver
+      // live view resolves the manifest, lists the live files'
+      // directories and re-derives the DV mask on EVERY call — driver
       // work per read, paid several times per operation (probe scans,
       // final reads, feed epochs). The memo pins the built DataFrame to
       // (versions-dir mtime, own last version, meta instance): any
@@ -1849,9 +1654,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
       // directory mtime, own commits additionally advance
       // lastVersionCache, and every metadata change swaps the cached
       // TableMeta instance, so ONE stat call replaces the per-read
-      // listing while cross-process commits stay immediately visible
-      // (the same freshness a fresh listing gave). Plans only — every
-      // execution still scans parquet.
+      // resolution while cross-process commits stay immediately visible.
+      // Plans only — every execution still scans parquet.
       val key = s"$warehouse/$name"
       val vd = versionsDir(name)
       val mtime =
@@ -1869,8 +1673,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
       }
   }
 
-  /** V1 scan of an EXPLICIT manifest file set that keeps manifest-bounds
-    * file skipping at PLANNING time: the relation's
+  /** The one scan constructor of the lake: every read — engine or SQL,
+    * current or `VERSION AS OF`, rewrite input or change window — plans
+    * an EXPLICIT manifest file set here, never a listing of `data/`. A
+    * V1 scan that keeps manifest-bounds file skipping at PLANNING time:
+    * the relation's
     * [[org.apache.spark.sql.graft.GraftPruningFileIndex]] lowers whatever
     * data filters the optimizer pushes into the scan against `stats` and
     * drops provably-disjoint files. The v1 stack (not DSv2) because the
@@ -1888,10 +1695,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
       bucketFor: org.apache.spark.sql.graft.PlanBridge.SimplePred =>
         Option[String => Boolean] = _ => None,
       recomputeWith: Option[TableMeta] = None): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata,
-      HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.graft.{GraftPruningFileIndex, PlanBridge}
+    import org.apache.spark.sql.graft.PlanBridge
     if (paths.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fullSchema)
@@ -1916,6 +1723,31 @@ final class GraftLake(private[graft] val spark: SparkSession,
       return withPartitionCols(flat, m)
         .select(fullSchema.fieldNames.map(n => col(quoted(n))): _*)
     }
+    val index = pruningIndex(paths, stats, fullSchema, partDepth, basePath,
+      bloomFor, bucketFor)
+    val partSchema = index.partitionSpec().partitionColumns
+    val dataSchema = StructType(
+      fullSchema.filterNot(f => partSchema.fieldNames.contains(f.name)))
+    val rel = HadoopFsRelation(index, partSchema, dataSchema, None,
+      new ParquetFileFormat(), Map.empty)(spark)
+    PlanBridge.ofRows(spark, LogicalRelation(rel))
+  }
+
+  /** The file index of [[manifestScan]] (and of the DSv2 table a session
+    * without GraftExtensions scans): `paths` with their leaf statuses
+    * from one listing per directory, pruned at planning time by the data
+    * filters pushed into the scan, lowered against `stats` and the bloom
+    * and bucket pruners. */
+  private[catalog] def pruningIndex(paths: Seq[String],
+      stats: Map[String, Map[String, GraftLake.Bounds]],
+      fullSchema: StructType, partDepth: Int, basePath: Option[String],
+      bloomFor: org.apache.spark.sql.graft.PlanBridge.SimplePred =>
+        Option[String => Boolean] = _ => None,
+      bucketFor: org.apache.spark.sql.graft.PlanBridge.SimplePred =>
+        Option[String => Boolean] = _ => None)
+      : org.apache.spark.sql.graft.GraftPruningFileIndex = {
+    import org.apache.spark.sql.execution.datasources.FileStatusWithMetadata
+    import org.apache.spark.sql.graft.PlanBridge
     val keepFor =
       (filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         if (filters.isEmpty) None
@@ -1935,52 +1767,63 @@ final class GraftLake(private[graft] val spark: SparkSession,
               bucketK.forall(_(k))
           })
         }
-    val index = new GraftPruningFileIndex(spark, paths.map(new Path(_)),
-      basePath.map("basePath" -> _).toMap, Some(fullSchema), keepFor)
-    val partSchema = index.partitionSpec().partitionColumns
-    val dataSchema = StructType(
-      fullSchema.filterNot(f => partSchema.fieldNames.contains(f.name)))
-    val rel = HadoopFsRelation(index, partSchema, dataSchema, None,
-      new ParquetFileFormat(), Map.empty)(spark)
-    PlanBridge.ofRows(spark, LogicalRelation(rel))
+    new org.apache.spark.sql.graft.GraftPruningFileIndex(spark,
+      paths.map(new Path(_)), basePath.map("basePath" -> _).toMap,
+      Some(fullSchema), keepFor)
   }
 
-  /** Full on-disk view incl. generated partition columns, with deletion
-    * vectors applied — the DSv2 read-rule's replacement plan (SQL SELECTs
-    * over a DV-carrying table route through this). Planned against the
-    * LATEST manifest's file set via [[manifestScan]], so file skipping
-    * SURVIVES live deletion vectors: pushed predicates still prune, and
-    * the DV anti-join applies per surviving file ((file, position) keys
-    * of pruned files never match anything). */
+  /** [[liveScan]] of snapshot `v` with that snapshot's deletion vectors
+    * applied. */
+  private def liveRows(name: String, meta: TableMeta, v: Option[Long]): DataFrame =
+    applyDvs(name, liveScan(name, meta, v),
+      v.fold(Vector.empty[String])(dvsAt(name, _)), meta.partitionExprs.size)
+
+  /** Full view incl. generated partition columns, with deletion vectors
+    * applied — the plan the SQL read rule substitutes for every graft
+    * relation. Planned against the latest manifest's file set, so file
+    * skipping SURVIVES live deletion vectors: pushed predicates still
+    * prune, and the DV mask applies per surviving file ((file, position)
+    * keys of pruned files never match anything). */
   def readLiveFull(name: String): DataFrame = {
     shallowInfo(name).foreach { case (src, v) =>
       return readVersion(src, v)
     }
     val meta = readMeta(name)
-    val key = s"$warehouse/$name"
-    val last: Option[Long] = Option(lastVersionCache.get(key)).map(_.longValue())
-      .orElse(latestVersion(name))
-    val masked = last match {
-      case None =>
-        applyDvs(name, readInternal(name, meta), liveDvs(name),
-          meta.partitionExprs.size)
-      case Some(v) =>
-        val cached = liveSetCache.get(key)
-        val files =
-          if (cached != null && cached._1 == v) cached._2
-          else resolveManifest(name, v)._2
-        val paths = files.map { case (rel, fn) =>
-          if (rel.isEmpty) s"${dataDir(name)}/$fn"
-          else s"${dataDir(name)}/$rel/$fn"
-        }
-        val full = StructType(meta.schema.fields.toSeq ++ partitionFields(meta))
-        val scan = manifestScan(paths, statsFor(name, v), full,
-          meta.partitionExprs.size, Some(dataDir(name)),
-          bloomPruner(name, _), bucketPrunerAt(name, v, meta, _),
-          recomputeWith = Some(meta))
-        applyDvs(name, scan, liveDvs(name), meta.partitionExprs.size)
+    toLogical(meta.schema, liveRows(name, meta, latestVersion(name)))
+  }
+
+  /** A Spark v2 parquet table over an explicit manifest file set, its
+    * file index `index` ([[pruningIndex]]: no directory listed beyond the
+    * files' own, no listing job) — what a session without GraftExtensions
+    * scans through [[GraftCatalog]]. */
+  private[catalog] def scanTable(tableName: String, paths: Seq[String],
+      schema: StructType,
+      index: => org.apache.spark.sql.graft.GraftPruningFileIndex)
+      : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable =
+    new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
+        tableName, spark,
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(), paths,
+        Some(schema),
+        classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]) {
+      override lazy val fileIndex
+          : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =
+        index
     }
-    toLogical(meta.schema, masked)
+
+  /** [[scanTable]] of the latest snapshot's live files under `full` (the
+    * catalog's logical view), pruned by manifest bounds, bloom sidecars
+    * and bucket directories like [[liveScan]]. */
+  private[catalog] def currentScanTable(name: String,
+      full: StructType): org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable = {
+    val meta = readMeta(name)
+    val v = latestVersion(name)
+    val paths = v.fold(Seq.empty[String])(liveFilesAt(name, _).map(refPath(name, _)))
+    scanTable(name, paths, full, v match {
+      case None => pruningIndex(Nil, Map.empty, full, 0, None)
+      case Some(vv) => pruningIndex(paths, statsFor(name, vv), full,
+        meta.partitionExprs.size, Some(dataDir(name)), bloomPruner(name, _),
+        bucketPrunerAt(name, vv, meta, _))
+    })
   }
 
   /** Data-skipping read: like `read(...).filter(predicate)` (identical
@@ -2003,13 +1846,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
       return readVersion(src, v).filter(predicate)
     }
     val meta = readMeta(name)
-    val key = s"$warehouse/$name"
-    val last: Option[Long] = Option(lastVersionCache.get(key)).map(_.longValue())
-      .orElse(latestVersion(name))
-    last match {
+    lastVersionCached(name) match {
       case None => read(name).filter(predicate)
       case Some(v) =>
-        val (_, files, _) = resolveManifest(name, v)
         val stats = statsFor(name, v)
         // one shared lowering (logical names → physical-keyed pruning
         // tree) with the read pruner, bloom probe and metadata-delete
@@ -2018,99 +1857,17 @@ final class GraftLake(private[graft] val spark: SparkSession,
         val keep = GraftLake.filePruner(pred)
         val bloomK = bloomPruner(name, pred)
         val bucketK = bucketPrunerAt(name, v, meta, pred)
-        val kept = files.filter { ref =>
+        val scan = liveScan(name, meta, Some(v), { ref =>
           val k = GraftLake.fileKey(ref)
           keep(stats.getOrElse(k, Map.empty)) && bloomK.forall(_(k)) &&
             bucketK.forall(_(k))
-        }
-        if (kept.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            GraftLake.logicalSchema(meta.schema))
-        else {
-          val paths = kept.map { case (rel, fn) =>
-            if (rel.isEmpty) s"${dataDir(name)}/$fn"
-            else s"${dataDir(name)}/$rel/$fn"
-          }
-          val scan = spark.read.schema(meta.schema).parquet(paths: _*)
-          toLogical(meta.schema,
-            applyDvs(name, scan, liveDvs(name), meta.partitionExprs.size))
-            .filter(predicate)
-            .select(GraftLake.logicalSchema(meta.schema).fieldNames
-              .map(n => col(quoted(n))): _*)
-        }
-    }
-  }
-
-  /** Manifest-level file skipping for the DSv2 SQL scan: lower the
-    * optimizer's pushed data filters against the LATEST snapshot's
-    * per-file bounds and return the kept absolute paths — but only when
-    * pruning actually removes files (`None` otherwise, so the caller
-    * keeps the plain directory-listing scan and its exact current
-    * behavior). The same conservative pruner as [[readWhere]]; row-level
-    * filters still run after the scan, so a pruned plan can never change
-    * results. A never-empty path list is returned (one arbitrary file is
-    * kept when everything proves disjoint) because an empty-relation scan
-    * cannot be expressed through the parquet table. */
-  private[catalog] def prunedScanPaths(name: String,
-      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Option[Seq[String]] = {
-    if (filters.isEmpty) return None
-    val key = s"$warehouse/$name"
-    val last: Option[Long] = Option(lastVersionCache.get(key)).map(_.longValue())
-      .orElse(latestVersion(name))
-    last.flatMap { v =>
-      val meta = readMeta(name)
-      val pred0 = filters
-        .map(org.apache.spark.sql.graft.PlanBridge.catalystPredicate)
-        .reduce(org.apache.spark.sql.graft.PlanBridge.PAnd(_, _))
-      val pred =
-        if (GraftLake.nullWitnessShadowed(meta.schema))
-          GraftLake.stripNullTests(pred0)
-        else pred0
-      // reuse the commit path's live-set cache — repeated SQL queries must
-      // not pay a manifest-chain read each
-      val cached = liveSetCache.get(key)
-      val files =
-        if (cached != null && cached._1 == v) cached._2
-        else resolveManifest(name, v)._2
-      val stats = statsFor(name, v)
-      val keep = GraftLake.filePruner(pred)
-      val bloomK = bloomPruner(name, pred)
-      val bucketK = bucketPrunerAt(name, v, meta, pred)
-      val kept = files.filter { ref =>
-        val k = GraftLake.fileKey(ref)
-        keep(stats.getOrElse(k, Map.empty)) && bloomK.forall(_(k)) &&
-          bucketK.forall(_(k))
-      }
-      if (kept.size >= files.size) None
-      else {
-        val effective = if (kept.nonEmpty) kept else files.take(1)
-        Some(effective.map { case (rel, fn) =>
-          if (rel.isEmpty) s"${dataDir(name)}/$fn"
-          else s"${dataDir(name)}/$rel/$fn"
         })
-      }
+        toLogical(meta.schema,
+          applyDvs(name, scan, dvsAt(name, v), meta.partitionExprs.size))
+          .filter(predicate)
+          .select(GraftLake.logicalSchema(meta.schema).fieldNames
+            .map(n => col(quoted(n))): _*)
     }
-  }
-
-  /** Structured-Streaming source over an APPEND-ONLY lake table: every
-    * committed write lands whole part files (staged rename, never
-    * in-place mutation), so Spark's file-stream source tails the data
-    * directory and emits each file's rows exactly once. The same
-    * append-only contract as [[readAppendsBetween]]: after a rewrite
-    * the survivors land in NEW files and would re-emit, and an upsert's
-    * masked rows would stay emitted —
-    * stream from ingest logs, diff snapshots on merged tables. */
-  def readStream(name: String): DataFrame = {
-    val meta = readMeta(name)
-    val full = StructType(meta.schema.fields.toSeq ++ partitionFields(meta))
-    toLogical(meta.schema, spark.readStream
-      .schema(full)
-      .option("basePath", dataDir(name))
-      .parquet(if (meta.partitions.isEmpty) dataDir(name)
-        else s"${dataDir(name)}/*")
-      .select(meta.schema.fieldNames.map(n => col(quoted(n))): _*))
   }
 
   // ---- write ----
@@ -2798,9 +2555,19 @@ final class GraftLake(private[graft] val spark: SparkSession,
   private[graft] def runStandingPolicies(name: String,
       exclude: Set[String] = Set.empty): Unit = {
     if (GraftLake.policiesSuppressed.get()) return
+    // an unreadable meta defers every policy like a failed execution
+    // does: the triggering write has committed and must not fail, but the
+    // stalled maintenance must be visible
     val props =
       try { if (!tableExists(name)) return else readMeta(name).props }
-      catch { case scala.util.control.NonFatal(_) => return }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          graft.metrics.GraftMetrics.op("policyDeferred").record(0L)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"standing policies of '$name' deferred to the next write: " +
+              s"its metadata is unreadable: $e")
+          return
+      }
     if (!props.keysIterator.exists(_.startsWith("graft.policy."))) return
     def longProp(k: String): Option[Long] = props.get(k).map { v =>
       try v.trim.toLong
@@ -2922,8 +2689,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     catch {
       // the commit's layout validation refused the staged files (a
       // concurrent REBUCKET changed the partition layout while this
-      // append was staging — commitVersion already rolled the stage
-      // back physically): appends commute, so re-derive under the fresh
+      // append was staging — commitVersion already deleted the staged
+      // files): appends commute, so re-derive under the fresh
       // layout and retry once; a second refusal means rebuckets are
       // racing each other and deserves the loud failure
       case _: java.util.ConcurrentModificationException =>
@@ -3168,8 +2935,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
 
   /** Replace the entire table contents with `df` (must carry exactly the
     * table's user schema — typed columns incl. `_inserted_at`). Staged
-    * write + directory swap; partition columns are recomputed from the new
-    * row values. Used by the general-form SQL MERGE rewrite, which is an
+    * write committed as the table's whole live set; partition columns are
+    * recomputed from the new row values. Used by the general-form SQL MERGE rewrite, which is an
     * explicit whole-table copy-on-write (the upsert-shaped form routes
     * through [[upsert]] instead).
     *
@@ -3201,7 +2968,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // reads of the PRE-version stay under the current meta; only the
     // staged write and the generated partition columns use the new
     // layout, and the metadata flips in the same locked section as the
-    // directory swap
+    // commit
     val effMeta = newPartitions.fold(meta)(sp => meta.copy(partitions = sp))
     val projectedRaw = enforceConstraints(meta, physicalSelect(meta, df))
     val pks = meta.pks.flatMap(p =>
@@ -3304,8 +3071,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val out = withPartitionCols(projected, effMeta)
     val outPartCols = effMeta.partitionExprs.map(_.outputName)
     val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
-    val dd = new Path(dataDir(name))
-    val f = fs(dd)
+    val f = fs(stage)
     try {
       val writer = distributeForWrite(out, outPartCols).write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", maxRecordsPerFile)
@@ -3313,14 +3079,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
         (if (outPartCols.nonEmpty) writer.partitionBy(outPartCols: _*)
          else writer).parquet(stage.toString)
       }
-      // rename-aside instead of delete-then-rename: a crash between the
-      // two renames leaves the old contents recoverable in .old-*, never
-      // a lost table
       val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
-      val old = new Path(s"${tableDir(name)}/.old-${UUID.randomUUID()}")
       // layout rebuild: flip the registry in the same locked breath as
-      // the swap (the crash-inconsistent window is this flip + two
-      // renames, never the rewrite itself). A DV that landed since the
+      // the commit (the crash-inconsistent window is this flip + the
+      // commit, never the rewrite itself). A DV that landed since the
       // caller's pre-lock materializeDeletes must abort: its old-depth
       // keys would misresolve under the new depth during the window
       // (the content-preserving path validates the same way).
@@ -3337,18 +3099,16 @@ final class GraftLake(private[graft] val spark: SparkSession,
               "rebuild was staging — re-run against the new state")
         writeMeta(name, effMeta)
       }
-      if (f.exists(dd)) renameOrFail(f, dd, old)
-      renameOrFail(f, stage, dd)
-      val removed = retire(name, old, old)
-      // a whole-table replace's "delta" IS the new contents — list just the
-      // freshly renamed directory (O(new files), not O(history))
-      val added = listDataFiles(name)
-      // every previous file is retired: all DV entries are inert — drop
+      // a whole-table replace removes the manifest's live set; the new
+      // files land beside it in data/ and every old DV entry turns inert
+      val removed = lastVersionCached(name)
+        .fold(Vector.empty[(String, String)])(liveFilesAt(name, _))
+      val added = mergeStageInto(stage, new Path(dataDir(name)))
       commitVersion(name, added, removed, writeStats, op = "overwrite",
         dvRemoved = liveDvs(name), changes = changeFiles,
         assumedLayout =
           if (newPartitions.isEmpty) Some(meta.partitions) else None)
-    } finally f.delete(stage, true) // no-op when the rename consumed it
+    } finally f.delete(stage, true)
   }
 
   /** Append rows that already carry the full user schema including
@@ -3412,16 +3172,32 @@ final class GraftLake(private[graft] val spark: SparkSession,
         .parquet(stage.toString)
     }
     val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
-    val (added, removed) = swapInto(name, stage, new Path(dataDir(name)),
-      partCols.size, affectedDirs.map(new Path(_)))
+    // the removed set is the manifest's live files under the affected
+    // directories (all of them when unpartitioned); no file moves
+    val live = lastVersionCached(name)
+      .fold(Vector.empty[(String, String)])(liveFilesAt(name, _))
+    val removed =
+      if (partCols.isEmpty) live
+      else {
+        val dd = new Path(dataDir(name))
+        val ddUri = fs(dd).makeQualified(dd).toUri
+        val rels = affectedDirs.map { d =>
+          val p = new Path(d)
+          ddUri.relativize(fs(p).makeQualified(p).toUri).getPath.stripSuffix("/")
+        }.toSet
+        live.filter(r => rels.exists(d => r._1 == d || r._1.startsWith(s"$d/")))
+      }
+    val added =
+      try mergeStageInto(stage, new Path(dataDir(name)))
+      finally fs(stage).delete(stage, true)
     commitVersion(name, added, removed, writeStats, op = op,
       dvRemoved = if (clearDvs) liveDvs(name) else Nil,
       changes = changeFiles, assumedLayout = Some(meta.partitions))
   }
 
   /** Compact a table's data files: rewrites each partition (or the whole
-    * table) into ~`targetRecordsPerFile`-row files via the staged-swap
-    * path. The small-file antidote for streaming ingest — micro-batches
+    * table) into ~`targetRecordsPerFile`-row files through a staged
+    * write. The small-file antidote for streaming ingest — micro-batches
     * append many small files; compaction restores scan efficiency without
     * changing table contents. Run it per partition predicate at scale
     * (`predicate` limits the rewrite scope, e.g. yesterday's partition).
@@ -3451,8 +3227,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
       try compactAttempt(name, targetRecordsPerFile, predicate, clusterBy)
       catch {
         // a CROSS-PROCESS writer won the manifest version race inside the
-        // commit section; commitVersion already rolled the swap back
-        // physically — same answer as an in-process conflict: re-derive
+        // commit section; commitVersion already deleted its own files —
+        // same answer as an in-process conflict: re-derive
         // from the winner's state and try again
         case _: java.util.ConcurrentModificationException => false
       }
@@ -3611,9 +3387,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
     compactBeforeCommitHook()
     // COMMIT section — the only part under the table lock (microseconds
-    // against the rewrite's seconds-to-minutes): validate, place, retire,
-    // commit. Appends that landed during the rewrite are untouched — their
-    // files are neither read nor retired and stay live in the manifest.
+    // against the rewrite's seconds-to-minutes): validate, place, commit.
+    // Appends that landed during the rewrite are untouched — their files
+    // are neither read nor removed and stay live in the manifest.
     writeLock(name) {
       val vNow = latestVersion(name).getOrElse(-1L)
       val ok = vNow == v0 || {
@@ -3623,18 +3399,12 @@ final class GraftLake(private[graft] val spark: SparkSession,
       }
       if (!ok) { fs(stage).delete(stage, true); return false }
       val added = mergeStageInto(stage, new Path(dd))
-      val ddPath = new Path(dd)
-      val removed = scopedRefs.flatMap { case (rel, fn) =>
-        val p = if (rel.isEmpty) new Path(ddPath, fn)
-          else new Path(new Path(ddPath, rel), fn)
-        retire(name, ddPath, p)
-      }
       // a whole-table rewrite (no predicate, or unpartitioned) leaves
-      // every DV entry pointing at a retired file — drop them all; a
+      // every DV entry pointing at a removed file — drop them all; a
       // partition-scoped rewrite keeps the DVs (entries for the rewritten
       // partitions are inert, other partitions still need theirs)
       val fullRewrite = predicate.isEmpty || partCols.isEmpty
-      commitVersion(name, added, removed, writeStats,
+      commitVersion(name, added, scopedRefs, writeStats,
         op = if (clusterCols.nonEmpty) "zorder" else "compact",
         dvRemoved = if (fullRewrite) dvs0 else Nil,
         assumedLayout = Some(meta.partitions))
@@ -3905,14 +3675,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
                 "was staging — re-run when concurrent writers quiesce")
           }
           writeMeta(name, newMeta)
-          val ddPath = new Path(dd)
-          val added = mergeStageInto(stage, ddPath)
-          val removed = refs0.flatMap { case (r, fn) =>
-            val p = if (r.isEmpty) new Path(ddPath, fn)
-              else new Path(new Path(ddPath, r), fn)
-            retire(name, ddPath, p)
-          }
-          commitVersion(name, added, removed, writeStats, op = "rebucket")
+          val added = mergeStageInto(stage, new Path(dd))
+          commitVersion(name, added, refs0, writeStats, op = "rebucket")
           fs(stage).delete(stage, true)
         }
     }
@@ -4172,17 +3936,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
         readMeta(name).partitions == meta.partitions
       if (!ok) { fs(stage).delete(stage, true); return Some((rel, false)) }
       val added = mergeStageInto(stage, new Path(dd))
-      val ddPath = new Path(dd)
-      val removed = group.flatMap { case (r, fn) =>
-        val p = if (r.isEmpty) new Path(ddPath, fn)
-          else new Path(new Path(ddPath, r), fn)
-        retire(name, ddPath, p)
-      }
-      try commitVersion(name, added, removed, writeStats, op = "rebucket",
+      try commitVersion(name, added, group, writeStats, op = "rebucket",
         assumedLayout = Some(meta.partitions))
       catch {
         case _: java.util.ConcurrentModificationException =>
-          // cross-process loser: commitVersion already unswapped the files
+          // cross-process loser: commitVersion already deleted its files
           return Some((rel, false))
       }
       fs(stage).delete(stage, true) // committer droppings (_SUCCESS etc.)
@@ -4190,31 +3948,20 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
   }
 
-  /** Data files currently backing a table (observability / compaction
-    * policy input). Deliberately the RAW directory scan: deletion-vector
-    * sidecars are not data files and DV-masked rows don't change which
-    * files exist. */
+  /** Live data files of the latest snapshot, as the scan names them
+    * (observability / compaction policy input): deletion-vector sidecars
+    * are not data files and DV-masked rows don't change which files are
+    * live. */
   def dataFiles(name: String): Seq[String] =
     readInternal(name, readMeta(name)).inputFiles.toSeq
 
   /** Live file count of the latest snapshot — O(1) from the commit cache
-    * on the hot path (one manifest-chain read on a cold start; a
-    * directory listing only for tables with no snapshot yet). The cheap
+    * on the hot path (one manifest-chain read on a cold start). The cheap
     * signal auto-compaction polls after every flush: a listing per
     * micro-batch would pay O(files) exactly when the table has the
     * small-file problem the policy exists to fix. */
-  def liveFileCount(name: String): Int = {
-    val key = s"$warehouse/$name"
-    val last: Option[Long] = Option(lastVersionCache.get(key)).map(_.longValue())
-      .orElse(latestVersion(name))
-    last match {
-      case Some(v) =>
-        val cached = liveSetCache.get(key)
-        if (cached != null && cached._1 == v) cached._2.size
-        else resolveManifest(name, v)._2.size
-      case None => listDataFiles(name).size
-    }
-  }
+  def liveFileCount(name: String): Int =
+    lastVersionCached(name).fold(0)(liveFilesAt(name, _).size)
 
   // ---- snapshots / time travel ----
   //
@@ -4225,14 +3972,16 @@ final class GraftLake(private[graft] val spark: SparkSession,
   // file's identity is its (relative partition path, file name) pair
   // (part-file NAMES repeat across partition dirs within one job — the
   // dynamic-partition writer resets its file counter per partition — so
-  // the name alone is NOT unique), and a rewrite RETIRES replaced files
-  // into `_history/<rel>/` (partition layout preserved) instead of
-  // deleting them. A snapshot read resolves its file list (still-live
-  // files in `data/`, replaced ones in `_history/`) — no directory-state
-  // coupling, so the current-version read path is untouched.
+  // the name alone is NOT unique), and a committed file keeps its path
+  // `data/<rel>/<name>` for its whole life. The manifest is the ONLY
+  // record of which files are live: a remove changes the manifest, never
+  // the directory, and [[expireSnapshots]] deletes a file once no
+  // retained snapshot and no `_pins/` entry references it. Every read,
+  // current or time-travel, plans the resolved manifest's file list, so
+  // a read planned before a rewrite keeps reading the files it planned.
   //
   // Scale: commits are O(delta), not O(table). Every writer knows exactly
-  // which files it added (stage-dir renames) and which it retired, so the
+  // which files it added (stage-dir renames) and which it removed, so the
   // commit writes a DELTA manifest `{base, add, remove}` against the
   // previous snapshot; a FULL manifest checkpoint lands every
   // [[GraftLake.checkpointInterval]] commits (and whenever the delta
@@ -4242,7 +3991,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
   // listing survives only in [[repairTable]].
 
   private def versionsDir(name: String) = new Path(s"${tableDir(name)}/_versions")
-  private def historyDir(name: String) = new Path(s"${tableDir(name)}/_history")
 
   private def renameOrFail(f: FileSystem, src: Path, dst: Path): Unit =
     if (!f.rename(src, dst))
@@ -4261,36 +4009,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val fc = FileContext.getFileContext(f.getUri, f.getConf)
     fc.rename(f.makeQualified(src), f.makeQualified(dst),
       Options.Rename.OVERWRITE)
-  }
-
-  /** Move a replaced data file / partition directory into `_history`,
-    * PRESERVING its path relative to `base` (the dir that mirrors the
-    * `data/` layout — `data/` itself, or a renamed-aside `.old-*` root):
-    * partitioned tables reuse part-file names across partition dirs, so a
-    * flat history would collide and silently corrupt time travel.
-    * Returns the retired (rel, name) identities; non-data droppings are
-    * deleted. */
-  private def retire(name: String, base: Path, p: Path): Seq[(String, String)] = {
-    val f = fs(p)
-    if (!f.exists(p)) return Nil
-    val hd = historyDir(name)
-    val baseUri = f.makeQualified(base).toUri
-    val out = Seq.newBuilder[(String, String)]
-    def move(q: Path): Unit = {
-      if (f.getFileStatus(q).isDirectory) {
-        f.listStatus(q).foreach(s => move(s.getPath))
-        f.delete(q, true)
-      } else if (q.getName.endsWith(".parquet")) {
-        val rel = baseUri.relativize(f.makeQualified(q.getParent).toUri)
-          .getPath.stripSuffix("/")
-        val destDir = if (rel.isEmpty) hd else new Path(hd, rel)
-        f.mkdirs(destDir)
-        renameOrFail(f, q, new Path(destDir, q.getName))
-        out += ((rel, q.getName))
-      } else f.delete(q, false)
-    }
-    move(p)
-    out.result()
   }
 
   /** Rename every staged part file into `target` keeping its partition
@@ -4315,21 +4033,20 @@ final class GraftLake(private[graft] val spark: SparkSession,
     out.result()
   }
 
-  /** Full recursive (rel, name) listing of a table's data directory —
-    * O(table files), used ONLY by [[repairTable]] and the whole-table
-    * replace path (where the listing IS the delta), never by ordinary
-    * commits. */
-  private def listDataFiles(name: String): Seq[(String, String)] = {
+  /** Full recursive (rel, name) listing of a table's data directory,
+    * with each file's modification time — O(table files), used ONLY by
+    * [[repairTable]]'s orphan sweep, never by reads or commits. */
+  private def listDataFiles(name: String): Seq[((String, String), Long)] = {
     val dd = new Path(dataDir(name))
     val f = fs(dd)
     val ddUri = f.makeQualified(dd).toUri
-    def files(p: Path): Seq[(String, String)] =
+    def files(p: Path): Seq[((String, String), Long)] =
       if (!f.exists(p)) Nil
       else f.listStatus(p).toSeq.flatMap { s =>
         if (s.isDirectory) files(s.getPath)
         else if (s.getPath.getName.endsWith(".parquet"))
-          Seq((ddUri.relativize(f.makeQualified(s.getPath.getParent).toUri)
-            .getPath.stripSuffix("/"), s.getPath.getName))
+          Seq(((ddUri.relativize(f.makeQualified(s.getPath.getParent).toUri)
+            .getPath.stripSuffix("/"), s.getPath.getName), s.getModificationTime))
         else Nil
       }
     files(dd)
@@ -4451,7 +4168,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
       txn: Option[(String, Long)] = None,
       txnsReset: Option[Map[String, Long]] = None,
       changes: Seq[String] = Nil,
-      assumedLayout: Option[Seq[String]] = None): Unit = {
+      assumedLayout: Option[Seq[String]] = None,
+      addedAreNew: Boolean = true): Unit = {
     // single chokepoint for EVERY mutation path: a shallow clone is
     // read-only until materialized (its reads resolve through the
     // SOURCE's pinned manifest — a local commit would silently fork)
@@ -4481,11 +4199,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
       catch {
         case e: java.util.ConcurrentModificationException =>
           // layout validation refused the commit (concurrent REBUCKET):
-          // same physical rollback as a lost rewrite race, then propagate
-          // — the caller re-derives under the new layout (appends retry
-          // internally, see appendTxn)
+          // drop this commit's own files, as a lost rewrite race does,
+          // then propagate — the caller re-derives under the new layout
+          // (appends retry internally, see appendTxn)
           invalidateTable(name)
-          unswapOnCollision(name, added, removed)
+          if (addedAreNew) discardUnpublished(name, added)
           throw e
         case e: java.io.IOException
             if isManifestCollision(e) && (attempt < 5 ||
@@ -4495,14 +4213,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
           // caller's re-run) must see the winner's state
           invalidateTable(name)
           if (!appendOnly) {
-            // PHYSICAL rollback before failing: the swap has already
-            // retired files the WINNER's manifest references as live —
-            // without this, every read after the exception would
-            // FileNotFound until a manual repair. Files move back
-            // (retired → data/, this commit's output → _history/, where
-            // the vacuum reaps it as unreferenced); nothing is deleted,
-            // so concurrent snapshot readers stay safe either way.
-            unswapOnCollision(name, added, removed)
+            // no file moved, so the winner's live set is intact; only
+            // this commit's own files go (no manifest references them)
+            if (addedAreNew) discardUnpublished(name, added)
             throw new java.util.ConcurrentModificationException(
               s"concurrent commit to '$name': a newer snapshot appeared " +
                 s"while this ${op} was computing its delta — re-run " +
@@ -4517,42 +4230,16 @@ final class GraftLake(private[graft] val spark: SparkSession,
               .nextLong(1L, math.min(100L, 5L << math.min(attempt, 4))))
       }
     }
-    recacheData(name)
   }
 
-  /** After a commit that changed `name`'s live files: Spark-cached plans
-    * over its data directory would keep serving the old rows (a new read
-    * that plans the same directory scan matches them) and hold a listing
-    * of retired files, so refresh and rebuild them as Spark's own file
-    * writes do. A no-op when nothing is cached. */
-  private def recacheData(name: String): Unit =
-    org.apache.spark.sql.graft.PlanBridge.recacheByPath(spark, dataDir(name))
-
-  /** Best-effort physical rollback after a rewrite loses the commit
-    * race: every `removed` file returns from `_history/` to `data/` (the
-    * winner's manifest references it as live) and every `added` file
-    * parks under `_history/` (unreferenced — the retention vacuum reaps
-    * it). Rename-only and skip-if-present, so a partially applied
-    * rollback can never destroy data; whatever could not move is exactly
-    * what [[repairTable]] reconciles. */
-  private def unswapOnCollision(name: String, added: Seq[(String, String)],
-      removed: Seq[(String, String)]): Unit = {
-    val dd = new Path(dataDir(name))
-    val hd = historyDir(name)
-    val f = fs(dd)
-    def in(root: Path, ref: (String, String)): Path =
-      if (ref._1.isEmpty) new Path(root, ref._2)
-      else new Path(new Path(root, ref._1), ref._2)
-    def move(src: Path, dst: Path): Unit =
-      try {
-        if (f.exists(src) && !f.exists(dst)) {
-          f.mkdirs(dst.getParent)
-          f.rename(src, dst)
-        }
-      } catch { case _: Exception => () } // best-effort: never worse
-    removed.foreach(ref => move(in(hd, ref), in(dd, ref)))
-    added.foreach(ref => move(in(dd, ref), in(hd, ref)))
-  }
+  /** Best-effort delete of a lost commit's own files: written by this
+    * commit and referenced by no manifest. */
+  private def discardUnpublished(name: String, added: Seq[(String, String)]): Unit =
+    added.foreach { ref =>
+      val p = new Path(refPath(name, ref))
+      try fs(p).delete(p, false)
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
 
   private def isManifestCollision(e: java.io.IOException): Boolean =
     e.isInstanceOf[org.apache.hadoop.fs.FileAlreadyExistsException] ||
@@ -4794,7 +4481,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
               s"manifest v$version of '$name' is unreadable — " +
                 "truncated by a writer that crashed mid-commit, or corrupt " +
                 s"(${raw.length} bytes, stable across re-reads); " +
-                "repairTable can re-adopt the directory state", e)
+                "delete it to fall back to the previous snapshot", e)
           Thread.sleep(delayMs)
           delayMs = math.min(delayMs * 2, 200L)
       }
@@ -4979,28 +4666,15 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
   }
 
-  /** (schema at commit, (rel,name) identity → resolved absolute path) of
-    * a snapshot — still-live files resolve into `data/<rel>/`, replaced
-    * ones into `_history/<rel>/`. */
+  /** (schema at commit, (rel,name) identity → absolute path) of a
+    * snapshot. A retained snapshot's files are all at `data/<rel>/<name>`
+    * (vacuum deletes only files no retained snapshot lists), so the one
+    * check is that `version` is still retained: an expired one fails
+    * naming the snapshots that are. */
   private def snapshotResolved(name: String,
       version: Long): (StructType, Seq[((String, String), Path)]) = {
     val (schema, files, _) = resolveManifest(name, version)
-    val hd = historyDir(name)
-    val f = fs(hd)
-    val resolved = files.map { case ref @ (rel, fn) =>
-      val live = if (rel.isEmpty) new Path(dataDir(name), fn)
-        else new Path(s"${dataDir(name)}/$rel", fn)
-      if (f.exists(live)) (ref, live)
-      else {
-        val retired = if (rel.isEmpty) new Path(hd, fn)
-          else new Path(new Path(hd, rel), fn)
-        require(f.exists(retired), s"snapshot $version of '$name' references " +
-          s"'${if (rel.isEmpty) fn else s"$rel/$fn"}', which was vacuumed by " +
-          "expireSnapshots")
-        (ref, retired)
-      }
-    }
-    (schema, resolved)
+    (schema, files.map(ref => (ref, new Path(refPath(name, ref)))))
   }
 
   /** (schema at commit, resolved absolute file paths) of a snapshot.
@@ -5040,31 +4714,27 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // VERSIONED: bucketPrunerAt hashes under the layout recorded in THAT
     // snapshot's manifest (a later REBUCKET doesn't confuse it), and it
     // disables itself when a bucket source column's type ever changed in
-    // retained history; retired files under _history/ keep their relative
-    // layout, which the key derivation preserves
+    // retained history
     val scan = manifestScan(paths, resolveStats(name, version), schema,
       partDepth, basePath = None, bloomPruner(name, _),
       bucketPrunerAt(name, version, meta, _))
-    // apply the DELETION VECTORS OF THAT SNAPSHOT: the key derivation is
-    // segment-based, so it matches retired files under _history/ too
+    // apply the DELETION VECTORS OF THAT SNAPSHOT
     toLogical(schema, applyDvs(name, scan, resolveDvs(name, version), partDepth)
       .select(schema.fieldNames.map(n => col(quoted(n))): _*))
   }
 
   /** RESTORE the table to snapshot `version` as a NEW commit (Delta-style
     * RESTORE; reference analog: rolling a DuckLake catalog back to an
-    * earlier snapshot id). O(changed files) and ZERO bytes copied: the
-    * target snapshot's file set is re-referenced — files it needs that
-    * were since retired rename back from `_history/<rel>/` into
-    * `data/<rel>/`, files live now but absent from the target retire into
-    * `_history/` — and the commit's deletion-vector set becomes the
-    * target's. File identity is the (rel, name) pair and every manifest
-    * resolves it in EITHER location ([[snapshotResolved]]), so all other
-    * snapshots stay readable: time travel both below and above the
+    * earlier snapshot id). Metadata-only: the commit re-references the
+    * target snapshot's file set — files it needs that were since removed
+    * are added back, files live now but absent from the target are
+    * removed — and its deletion-vector set becomes the target's. No file
+    * moves (a committed file keeps its `data/` path for life), so every
+    * other snapshot stays readable: time travel both below and above the
     * restore point keeps working, and a later restore can roll forward
     * again. The CURRENT schema is kept (Delta semantics — restore moves
     * data, not schema evolution; files from a narrower schema read with
-    * nulls as usual). The target snapshot must not have been vacuumed by
+    * nulls as usual). The target snapshot must not have been expired by
     * `expireSnapshots`. */
   /** DEEP CLONE: materialize snapshot `version` (default: latest) of
     * `src` as the INDEPENDENT table `dst` — its own data files (copied by
@@ -5245,7 +4915,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
         s"'$src' is itself a shallow clone — materialize it first")
       val v = version.getOrElse(versions(src).lastOption.getOrElse(
         throw new IllegalArgumentException(s"table '$src' has no snapshots")))
-      snapshotResolved(src, v) // fail fast if already vacuumed
+      readManifestFile(src, v) // fail fast if already expired
       val snapSchema = schemaAtVersion(src, v)
       val srcMeta = readMeta(src)
       writePin(src, dst, v)
@@ -5298,9 +4968,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
             }
           }
       // marker off BEFORE the commit (the commit chokepoint refuses
-      // shallow tables); a crash in the window between leaves a
-      // zero-snapshot table with its data files on disk — repairTable
-      // recovers, and the still-held pin keeps the source snapshot safe
+      // shallow tables); a crash in the window between leaves an empty
+      // zero-snapshot table whose copied files no manifest lists — drop
+      // it and clone again: the still-held pin keeps the source snapshot
+      // safe
       val mp = shallowMarker(name)
       fs(mp).delete(mp, false)
       GraftLake.shallowCache.put(s"$warehouse/$name", None)
@@ -5314,38 +4985,24 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val cur = latestVersion(name).getOrElse(
       throw new IllegalArgumentException(s"table '$name' has no snapshots"))
     if (cur == version) return
-    // resolves every target file to its live/retired location and FAILS
-    // FAST if any was vacuumed — nothing is moved before this validates
-    val (_, targetResolved) = snapshotResolved(name, version)
+    // FAILS FAST when the target was expired — before anything commits
+    val targetRefs = resolveManifest(name, version)._2
     val curRefs = resolveManifest(name, cur)._2.toSet
-    val targetRefs = targetResolved.map(_._1).toSet
-    val addedRefs = targetResolved.filterNot(r => curRefs.contains(r._1))
-    val removedRefs = curRefs.diff(targetRefs).toSeq.sorted
-    val dd = new Path(dataDir(name))
-    val f = fs(dd)
-    addedRefs.foreach { case ((rel, fn), at) =>
-      val destDir = if (rel.isEmpty) dd else new Path(dd, rel)
-      f.mkdirs(destDir)
-      renameOrFail(f, at, new Path(destDir, fn))
-    }
-    val hd = historyDir(name)
-    removedRefs.foreach { case (rel, fn) =>
-      val src = if (rel.isEmpty) new Path(dd, fn)
-        else new Path(new Path(dd, rel), fn)
-      val destDir = if (rel.isEmpty) hd else new Path(hd, rel)
-      f.mkdirs(destDir)
-      renameOrFail(f, src, new Path(destDir, fn))
-    }
+    val addedRefs = targetRefs.filterNot(curRefs.contains)
+    val removedRefs = curRefs.diff(targetRefs.toSet).toSeq.sorted
     // per-file bounds for the re-added files come from the TARGET
     // snapshot's own manifest — the restore commit re-reads no footers
     val tStats = resolveStats(name, version)
-    val addStats = addedRefs.flatMap { case (ref, _) =>
+    val addStats = addedRefs.flatMap { ref =>
       tStats.get(GraftLake.fileKey(ref)).map(GraftLake.fileKey(ref) -> _)
     }.toMap
     val curDvs = liveDvs(name)
     val tDvs = resolveDvs(name, version)
-    commitVersion(name, addedRefs.map(_._1), removedRefs, addStats,
-      op = "restore", dvAdded = tDvs.diff(curDvs), dvRemoved = curDvs.diff(tDvs))
+    // the re-added files belong to retained snapshots: a lost commit race
+    // must leave them in place
+    commitVersion(name, addedRefs, removedRefs, addStats,
+      op = "restore", dvAdded = tDvs.diff(curDvs), dvRemoved = curDvs.diff(tDvs),
+      addedAreNew = false)
   }
 
   /** Audit view of a table's shape over time: (version, live file count,
@@ -5381,7 +5038,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         GraftLake.logicalSchema(schema))
-    else toLogical(schema, spark.read.schema(schema).parquet(fresh: _*)
+    else toLogical(schema, manifestScan(fresh, Map.empty, schema, 0, None)
       .select(schema.fieldNames.map(n => col(quoted(n))): _*))
   }
 
@@ -5517,9 +5174,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
             m.dvRemove.nonEmpty)
       }
       // a METADATA-ONLY DELETE or TRUNCATE (remove-only commit, no adds,
-      // no new DVs) IS row-attributable: the retired files' still-unmasked
-      // rows are exactly the deleted rows, readable forever from
-      // _history/. Both may also drop now-inert DV sidecars in the same
+      // no new DVs) IS row-attributable: the removed files' still-unmasked
+      // rows are exactly the deleted rows, readable from data/ while the
+      // window is retained. Both may also drop now-inert DV sidecars in the same
       // commit — that removal clears nothing a reader could see, and the
       // emission below anti-joins the PRE-commit DV state regardless.
       val metadataDelete = removedAny && added.isEmpty && dvAdded.isEmpty &&
@@ -5549,8 +5206,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
           if (m.op == "update") ("update_preimage", "update_postimage")
           else ("delete", "insert")
         if (added.nonEmpty)
-          pieces += spark.read.schema(toSchema)
-            .parquet(resolveRefPaths(name, added): _*)
+          pieces += manifestScan(added.map(refPath(name, _)), Map.empty,
+              toSchema, 0, None)
             .withColumn(GraftLake.ChangeTypeCol, lit(insType))
             .withColumn(GraftLake.CommitVersionCol, lit(v))
         if (dvAdded.nonEmpty) {
@@ -5564,8 +5221,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
             .withColumn(GraftLake.CommitVersionCol, lit(v))
         }
         if (metadataDelete) {
-          val scan = spark.read.schema(toSchema)
-            .parquet(resolveRefPaths(name, removedRefs): _*)
+          val scan = manifestScan(removedRefs.map(refPath(name, _)),
+            Map.empty, toSchema, 0, None)
           val rows =
             if (prevDvs.isEmpty) scan
             else {
@@ -5602,8 +5259,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * DataFrame whose plan is `isStreaming = true` (the contract
     * MicroBatchExecution asserts on a v1 `Source.getBatch` result — the
     * same `LogicalRelation(relation, isStreaming = true)` construction
-    * Spark's own FileStreamSource uses). Unlike the file-tailing
-    * [[readStream]], version-offset batches survive REWRITES:
+    * Spark's own FileStreamSource uses). Version-offset batches survive
+    * REWRITES:
     * content-preserving commits (`compact`, `zorder`, `dv-clear`,
     * `materialize`)
     * contribute nothing — their files are rearrangements of rows already
@@ -5611,9 +5268,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * update/delete, truncate, restore) FAIL FAST by default (row
     * attribution through a rewrite is not metadata-derivable;
     * `onRewrite = "skip"` downgrades them to no-ops for consumers that
-    * accept documented at-least-once gaps). Emitted files are resolved
-    * to their CURRENT location (live or `_history/` after a later
-    * compaction), so a slow consumer is immune to concurrent rewrites.
+    * accept documented at-least-once gaps). Emitted files never move, so
+    * a slow consumer is immune to concurrent rewrites while its window is
+    * retained.
     *
     * Bootstrap: when `fromVersion` equals the source's pinned
     * `bootstrapAt` floor (the `startingVersion=snapshot` mode — the
@@ -5765,8 +5422,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     for (msg <- refusal)
       return failingStreamBatch(
         advertised.getOrElse(GraftLake.logicalSchema(meta.schema)), msg)
-    val paths = resolveRefPaths(name, out.result())
-    val scan = streamingParquetScan(paths, meta.schema)
+    val scan = streamingParquetScan(out.result().map(refPath(name, _)), meta.schema)
     val bootDvs =
       if (bootstrap) resolveDvs(name, window.head) else Nil
     val masked =
@@ -6032,32 +5688,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
   }
 
-  /** Resolve (rel, name) file identities to readable absolute paths —
-    * still-live files under `data/`, files retired by a later rewrite
-    * under `_history/` (same fallback as snapshot reads; a vacuumed file
-    * fails fast with the expireSnapshots message). */
-  private def resolveRefPaths(name: String,
-      refs: Seq[(String, String)]): Seq[String] = {
-    val hd = historyDir(name)
-    val f = fs(hd)
-    refs.map { case (rel, fn) =>
-      val live = if (rel.isEmpty) new Path(dataDir(name), fn)
-        else new Path(s"${dataDir(name)}/$rel", fn)
-      if (f.exists(live)) live.toString
-      else {
-        val retired = if (rel.isEmpty) new Path(hd, fn)
-          else new Path(new Path(hd, rel), fn)
-        require(f.exists(retired),
-          s"table '$name' change window references " +
-            s"'${GraftLake.fileKey((rel, fn))}', which was vacuumed by " +
-            "expireSnapshots")
-        retired.toString
-      }
-    }
-  }
-
   /** The rows a set of deletion-vector files masks: scan ONLY the data
-    * files the DVs reference (live or retired), semi-join on (file key,
+    * files the DVs reference, semi-join on (file key,
     * row position). The DV side broadcasts under the same entry-count
     * gate as live reads, so the probe is a map-side hash lookup. */
   private def dvMaskedRows(name: String, schema: StructType,
@@ -6067,11 +5699,13 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // touch (metadata-scale), never per deleted row
     val keys = dv.select(col("file_key")).distinct().collect()
       .map(_.getString(0)).toSeq.sorted
-    val paths = resolveRefPaths(name, keys.map(GraftLake.decodeKey).map { k =>
-      val idx = k.lastIndexOf('/')
-      if (idx < 0) ("", k) else (k.substring(0, idx), k.substring(idx + 1))
-    })
-    val keyed = withDvKeys(spark.read.schema(schema).parquet(paths: _*), partDepth)
+    val paths = keys.map(k => refPath(name, {
+      val key = GraftLake.decodeKey(k)
+      val idx = key.lastIndexOf('/')
+      if (idx < 0) ("", key) else (key.substring(0, idx), key.substring(idx + 1))
+    }))
+    val keyed = withDvKeys(manifestScan(paths, Map.empty, schema, partDepth, None),
+      partDepth)
     // the UNCACHED count: the per-table cache slot holds the LIVE DV
     // set's count, and a feed window's subset must not evict it (an
     // incremental consumer would force a recount on every live read)
@@ -6083,58 +5717,73 @@ final class GraftLake(private[graft] val spark: SparkSession,
       .drop(keyC, posC)
   }
 
-  /** Reconcile the directory and manifest views after a crash: a writer
-    * that died between landing part files and committing its manifest
-    * leaves rows visible to directory-based CURRENT reads but missing
-    * from every snapshot. Adopting the data directory as-is into a fresh
-    * manifest makes the newest snapshot match `read` again. Returns the
-    * adopted snapshot id. */
+  /** Repair after a crash: rebuild the latest snapshot as a FULL
+    * checkpoint manifest with every live file's bounds recomputed from its
+    * footer, its deletion vectors (restricted to sidecars still on disk)
+    * and its txn watermarks carried forward, then delete ORPHANS — part
+    * files under `data/` that no retained manifest lists and that are
+    * older than `spark.graft.vacuum.stageRetentionMs` (default 24 h), the
+    * debris of a writer that died between landing its files and
+    * committing. The manifest is the only live-file list, so an orphan was
+    * never visible to any read and nothing is adopted: adopting `data/`
+    * would resurrect removed files. Returns the new snapshot id. */
   def repairTable(name: String): Long = writeLock(name) {
     val key = s"$warehouse/$name"
-    val list = listDataFiles(name).toVector.sorted
+    val last = latestVersion(name)
+    val list = last.fold(Vector.empty[(String, String)])(resolveManifest(name, _)._2)
     // repair is the one O(table) path by design — refreshing every
-    // file's bounds here keeps data skipping alive for adopted orphans
+    // file's bounds here keeps data skipping alive whatever the manifests
+    // carried
     val stats = boundsOf(name, list)
-    val next = latestVersion(name).getOrElse(-1L) + 1L
+    val next = last.getOrElse(-1L) + 1L
     val vd = versionsDir(name)
     val f = fs(vd)
     f.mkdirs(vd)
-    // deletion vectors are MANIFEST state, not directory state: adopting
-    // the directory without them would resurrect deleted rows — carry the
-    // previous snapshot's set forward (restricted to sidecars still on
-    // disk, in case the crash lost one)
-    val dvs = latestVersion(name).map(v => resolveDvs(name, v))
-      .getOrElse(Vector.empty)
+    // deletion vectors and txn watermarks are manifest state: dropping
+    // them would resurrect deleted rows or re-apply committed idempotent
+    // batches
+    val dvs = last.map(resolveDvs(name, _)).getOrElse(Vector.empty)
       .filter(d => f.exists(new Path(dvDir(name), d)))
-    // txn watermarks are manifest state too: losing them on repair would
-    // re-apply already-committed idempotent batches
     val body = GraftLake.renderManifest(next, readMeta(name), list, stats,
       op = "repair", dvs = dvs,
-      txns = latestVersion(name).map(v => resolveTxns(name, v))
-        .getOrElse(Map.empty))
-    val p = new Path(vd, s"v$next.json")
-    atomicClaim(f, p, body)
+      txns = last.map(resolveTxns(name, _)).getOrElse(Map.empty))
+    atomicClaim(f, new Path(vd, s"v$next.json"), body)
     writeLastHint(name, next)
     lastVersionCache.put(key, java.lang.Long.valueOf(next))
     liveSetCache.put(key, (next, list, 0))
     statsMapCache.put(key, (next, stats))
     dvSetCache.put(key, (next, dvs))
-    recacheData(name)
+    val referenced = versions(name).flatMap(resolveManifest(name, _)._2).toSet
+    val cutoff = System.currentTimeMillis() - stageRetentionMs
+    listDataFiles(name).foreach { case (ref, mtime) =>
+      if (!referenced.contains(ref) && mtime < cutoff) {
+        val p = new Path(refPath(name, ref))
+        fs(p).delete(p, false)
+      }
+    }
     next
   }
 
+  /** Age past which crashed writers' debris is reaped: staging
+    * directories by [[expireSnapshots]], orphan data files by
+    * [[repairTable]]. A live writer's files are always younger. */
+  private def stageRetentionMs: Long = spark.conf
+    .getOption("spark.graft.vacuum.stageRetentionMs").map(_.toLong)
+    .getOrElse(24L * 3600 * 1000)
+
   /** Drop all but the last `keepLast` snapshots and physically delete
-    * retired files no surviving manifest references (the storage-bounding
-    * half of the snapshot contract). The oldest KEPT manifest is first
+    * the data files an expired snapshot listed and no surviving one does
+    * (the storage-bounding half of the snapshot contract). Only files a
+    * manifest once listed are candidates, so a concurrent writer's
+    * not-yet-committed files are never touched. The oldest KEPT manifest is first
     * rewritten as a full checkpoint if it is a delta — its resolution
     * chain may run through manifests about to be dropped.
     *
     * Contract with concurrent readers: expiry is fail-fast, not
     * fenced — a reader still holding an expired version (an open
     * [[readVersion]] DataFrame or an in-flight stream) fails at its next
-    * resolution/scan with the explicit "vacuumed by expireSnapshots"
-    * message (or a file-not-found mid-scan if the scan already resolved
-    * paths). Pick `keepLast` to cover your longest reader, as with every
+    * resolution naming the retained snapshots (or with a file-not-found
+    * mid-scan if the scan already resolved paths). Pick `keepLast` to cover your longest reader, as with every
     * lakehouse vacuum. */
   def expireSnapshots(name: String, keepLast: Int = 1): Unit = writeLock(name) {
     graft.metrics.GraftMetrics.time(graft.metrics.GraftMetrics.ExpireSnapshots) {
@@ -6181,6 +5830,20 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val referenced: Set[(String, String)] = keep.flatMap { v =>
       resolveManifest(name, v)._2
     }.toSet
+    // every file a retained-until-now snapshot listed, one manifest read
+    // per version (a delta applies to its base, the version before it)
+    val listed = scala.collection.mutable.Set.empty[(String, String)]
+    var prev = (-1L, Vector.empty[(String, String)])
+    vs.foreach { v =>
+      val m = readManifestFile(name, v)
+      val files = m.files match {
+        case Some(full) => full.toVector
+        case None if prev._1 == m.base => prev._2.filterNot(m.remove.toSet) ++ m.add
+        case None => resolveManifest(name, v)._2
+      }
+      listed ++= files
+      prev = (v, files)
+    }
     val referencedDvs: Set[String] = keep.flatMap { v =>
       resolveDvs(name, v)
     }.toSet
@@ -6206,69 +5869,19 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // forever. Age-gated — a live writer's stage is always younger than
     // the retention window (default 24 h; multi-hour 100 TB rewrites
     // refresh their dir mtimes as leaves land)
-    val stageRetentionMs = spark.conf
-      .getOption("spark.graft.vacuum.stageRetentionMs").map(_.toLong)
-      .getOrElse(24L * 3600 * 1000)
     val td = new Path(tableDir(name))
     val stagePrefixes =
-      Seq(".stage-", ".dvstage-", ".updstage-", ".chgstage-", ".old-")
+      Seq(".stage-", ".dvstage-", ".updstage-", ".chgstage-")
     f.listStatus(td).foreach { s =>
       val n = s.getPath.getName
       if (s.isDirectory && stagePrefixes.exists(n.startsWith) &&
           System.currentTimeMillis() - s.getModificationTime > stageRetentionMs)
         f.delete(s.getPath, true)
     }
-    val hd = historyDir(name)
-    val hdUri = f.makeQualified(hd).toUri
-    def vacuum(p: Path): Unit =
-      f.listStatus(p).foreach { s =>
-        if (s.isDirectory) {
-          vacuum(s.getPath)
-          if (f.listStatus(s.getPath).isEmpty) f.delete(s.getPath, false)
-        } else {
-          val rel = hdUri.relativize(f.makeQualified(s.getPath.getParent).toUri)
-            .getPath.stripSuffix("/")
-          if (!referenced.contains((rel, s.getPath.getName))) {
-            f.delete(s.getPath, false)
-            graft.metrics.GraftMetrics.historyFilesVacuumed.increment()
-          }
-        }
-      }
-    if (f.exists(hd)) vacuum(hd)
-  }
-
-  /** Move staged output into the data dir: partitioned tables retire
-    * `affectedDirs` whole (a rewrite can empty a partition) and add the
-    * staged files beside whatever their destination directories still
-    * hold; unpartitioned tables swap the whole file set. Best-effort
-    * atomicity (renames), mirroring a commit-protocol boundary. Returns
-    * the commit delta: ((rel, name) files added, files retired). */
-  private def swapInto(name: String, stage: Path, target: Path, partDepth: Int,
-      affectedDirs: Seq[Path]): (Seq[(String, String)], Seq[(String, String)]) = {
-    val f = fs(target)
-    val added = Seq.newBuilder[(String, String)]
-    val removed = Seq.newBuilder[(String, String)]
-    try {
-      if (partDepth == 0) {
-        // replace all data files (replaced ones retire into _history)
-        if (f.exists(target))
-          f.listStatus(target).foreach { s =>
-            if (!s.getPath.getName.startsWith("."))
-              removed ++= retire(name, target, s.getPath)
-          }
-        else f.mkdirs(target)
-        f.listStatus(stage)
-          .filter(s => s.getPath.getName.endsWith(".parquet"))
-          .foreach { s =>
-            renameOrFail(f, s.getPath, new Path(target, s.getPath.getName))
-            added += (("", s.getPath.getName))
-          }
-      } else {
-        affectedDirs.foreach(d => removed ++= retire(name, target, d))
-        added ++= mergeStageInto(stage, target)
-      }
-      (added.result(), removed.result())
-    } finally f.delete(stage, true)
+    (listed -- referenced).foreach { ref =>
+      if (f.delete(new Path(refPath(name, ref)), false))
+        graft.metrics.GraftMetrics.dataFilesVacuumed.increment()
+    }
   }
 
   private def quoted(n: String): String = GraftLake.quoted(n)
@@ -6484,27 +6097,11 @@ object GraftLake {
     * the live set obeys the current layout (false mid-incremental-
     * REBUCKET). Keyed on (version, layout prefixes): a same-process
     * commit moves the version, and a CROSS-process layout flip observed
-    * through a TTL-stale version changes the prefixes — either
-    * invalidates. */
+    * at a stale version changes the prefixes — either invalidates. */
   private[catalog] val conformCache =
     new ConcurrentHashMap[String, (Long, Boolean, Seq[String])]()
-  /** (wall-clock ms of last fresh LIST, version or -1) per table — the
-    * TTL memo behind [[GraftLake.probeLastVersion]]. */
-  private[catalog] val probeFreshCache =
-    new ConcurrentHashMap[String, (Long, Long)]()
   private val dvCountCache =
     new ConcurrentHashMap[String, (Vector[String], Long)]()
-  /** Memoized analyzer-rule fast-path verdicts: `warehouse/table` →
-    * latest version at which (no live DVs ∧ no renamed columns) held, so
-    * [[graft.plans.ApplyGraftDeletionVectors]] does ZERO metadata work —
-    * not even cache-hit lookups — per relation per analyzer pass in the
-    * steady state. Sound because every state change that could flip the
-    * verdict (MoR DELETE/UPDATE committing a DV, RENAME COLUMN,
-    * materializeDeletes, RESTORE, full rewrites) goes through
-    * [[commitVersion]] and bumps the version the memo is keyed on. Only
-    * POSITIVE verdicts are stored — a DV-carrying table must rebuild its
-    * substituted read every pass anyway. */
-  private val dvRulePassCache = new ConcurrentHashMap[String, java.lang.Long]()
   /** table key → (version, that manifest's recorded partition layout). */
   private val layoutCache =
     new ConcurrentHashMap[String, (Long, Option[Seq[String]])]()
@@ -6513,16 +6110,6 @@ object GraftLake {
     * partition-source type evolution, so stability cannot regress. */
   private val typeStableCache =
     new ConcurrentHashMap[String, (Long, Boolean)]()
-  /** Same verdict for `VERSION AS OF` snapshot relations — immutable per
-    * (table, version), size-bounded defensively with PER-ENTRY eviction
-    * (never clear() — see dvRuleUnchanged). private[graft] for the
-    * eviction spec only. */
-  private[graft] val dvRulePassAtVersion =
-    new ConcurrentHashMap[String, java.lang.Boolean]()
-  /** Times the rule's slow path (resolve DVs + read schema metadata) ran —
-    * spec observability for the memoization: analyzing the same clean
-    * table N times must evaluate the slow path once. */
-  private[graft] val dvRuleSlowPathEvals = new java.util.concurrent.atomic.LongAdder
   /** Deserialized bloom sidecars, keyed `warehouse/table#column` with the
     * sidecar directory mtime as the freshness token. */
   private val bloomCache = new ConcurrentHashMap[
@@ -6539,9 +6126,7 @@ object GraftLake {
   /** Manifest file key of the file backing each row, derived from
     * `_metadata.file_path` by taking the last `partDepth + 1` path
     * segments (partition dirs + file name). Segment-count-based rather
-    * than marker-string-based so it is exact for every warehouse path and
-    * works identically for live (`data/<rel>/f`) and retired
-    * (`_history/<rel>/f`) locations — both preserve the relative layout. */
+    * than marker-string-based so it is exact for every warehouse path. */
   private[catalog] def dvKeyColumn(partDepth: Int): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{col, substring_index}
     substring_index(col("_metadata.file_path"), "/", -(partDepth + 1))
@@ -6560,8 +6145,7 @@ object GraftLake {
 
   /** Manifest file key of an absolute path: its last `partDepth + 1`
     * '/'-segments (partition dirs + file name) — the same segment-based
-    * derivation as [[dvKeyColumn]], exact for live (`data/<rel>/f`) and
-    * retired (`_history/<rel>/f`) locations alike. */
+    * derivation as [[dvKeyColumn]]. */
   private[catalog] def keyOfPath(path: String, partDepth: Int): String = {
     var idx = path.length
     var n = partDepth + 1
@@ -7188,9 +6772,8 @@ object GraftLake {
     dvBroadcastCache.clear()
     lastVersionCache.clear(); liveSetCache.clear(); statsMapCache.clear()
     dvSetCache.clear(); dvCountCache.clear(); bloomCache.clear()
-    dvRulePassCache.clear(); dvRulePassAtVersion.clear()
     layoutCache.clear(); typeStableCache.clear(); conformCache.clear()
-    probeFreshCache.clear(); readDfCache.clear()
+    readDfCache.clear()
   }
 
   // -- meta (de)serialization: tiny hand-rolled JSON (schema via DataType.json) --

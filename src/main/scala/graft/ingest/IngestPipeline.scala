@@ -148,10 +148,8 @@ final case class QualityConfig(
   * compaction commits a snapshot like any write, and a crash mid-compact
   * leaves the staged dir orphaned, never the table corrupted.
   *
-  * Do NOT enable on a table tailed by [[graft.catalog.GraftLake
-  * .readStream]]: the file-stream source's append-only contract means a
-  * compaction's rewritten survivors re-emit (same caveat as any manual
-  * rewrite there — stream from ingest logs, or diff snapshots). */
+  * A table tailed by the `graft-cdf` source stays exact under it:
+  * compaction commits are content-preserving, so they emit nothing. */
 final case class CompactionConfig(
     minFiles: Int = 64,
     targetRecordsPerFile: Long = graft.catalog.GraftLake.maxRecordsPerFile,
@@ -183,8 +181,8 @@ final case class RebucketConfig(
 /** Snapshot-retention policy for one table (see
   * [[IngestConfig.retention]]): when the committed snapshot count reaches
   * `keepLast + slack`, all but the last `keepLast` are expired and
-  * unreferenced retired files vacuumed ([[graft.catalog.GraftLake
-  * .expireSnapshots]]) — bounding manifest-chain length and `_history`
+  * data files no kept snapshot lists vacuumed ([[graft.catalog.GraftLake
+  * .expireSnapshots]]) — bounding manifest-chain length and replaced-file
   * storage for streams that commit every few seconds, without an
   * operator running vacuums by hand. `slack` batches the expiry (one
   * O(keep) pass per `slack` commits, not per flush). Pick `keepLast` to

@@ -70,7 +70,7 @@ object GraftMetrics {
     * ingest path. */
   val AutoCompact = "autoCompact"
 
-  /** Engine extension: snapshot expiry + `_history` vacuum cost. */
+  /** Engine extension: snapshot expiry + data-file vacuum cost. */
   val ExpireSnapshots = "expireSnapshots"
 
   private val ops = new ConcurrentHashMap[String, OpStats]()
@@ -86,9 +86,10 @@ object GraftMetrics {
   /** Batches that skipped the configured quality gate for the same
     * schema-drift reason. */
   val qualitySkippedBatches = new LongAdder
-  /** `_history` files physically deleted by vacuum — the storage-bounding
-    * half of the snapshot contract, observable. */
-  val historyFilesVacuumed = new LongAdder
+  /** Data files physically deleted by vacuum (no retained snapshot
+    * lists them) — the storage-bounding half of the snapshot contract,
+    * observable. */
+  val dataFilesVacuumed = new LongAdder
 
   def op(name: String): OpStats = ops.computeIfAbsent(name, _ => new OpStats)
 
@@ -122,7 +123,7 @@ object GraftMetrics {
       "dlq.records.total" -> dlqRecords.sum().toDouble,
       "dedup.skipped.batches" -> dedupSkippedBatches.sum().toDouble,
       "quality.skipped.batches" -> qualitySkippedBatches.sum().toDouble,
-      "history.files.vacuumed" -> historyFilesVacuumed.sum().toDouble)
+      "data.files.vacuumed" -> dataFilesVacuumed.sum().toDouble)
   }
 
   /** Raw (count, total ms) per sensor — the delta-friendly view bench
@@ -139,7 +140,7 @@ object GraftMetrics {
     ops.clear(); recordsProcessed.reset(); batchCount.reset()
     maxBatchSize.set(0); dlqRecords.reset()
     dedupSkippedBatches.reset(); qualitySkippedBatches.reset()
-    historyFilesVacuumed.reset()
+    dataFilesVacuumed.reset()
     startedAtNanos = System.nanoTime()
   }
 

@@ -671,8 +671,8 @@ object AnalyticsOps {
   /** q106: manifest data skipping through the SQL surface — the catalog
     * twin of [[q102FileSkipping]]. The same z-ordered lake table is
     * queried via plain `spark.sql` against the DSv2 catalog; the pushed
-    * `BETWEEN` lowers against the manifest bounds inside the scan builder
-    * ([[org.apache.spark.sql.graft.PruningScanBuilder]]) and the query
+    * `BETWEEN` lowers against the manifest bounds inside the file index
+    * ([[org.apache.spark.sql.graft.GraftPruningFileIndex]]) and the query
     * REQUIRES that the planned file set actually shrank — making SQL-side
     * skipping a hard driver-gated contract, not just a spec. The oracle
     * runs the same filter over the raw table: a hash match proves pruning
@@ -710,25 +710,15 @@ object AnalyticsOps {
     df
   }
 
-  /** Files the (post-pushdown) scan actually plans. Counted from the
-    * OPTIMIZED LOGICAL plan's scan relation, never `executedPlan`
-    * leaves: under AQE the executed plan is one opaque
-    * `AdaptiveSparkPlanExec` LEAF, which silently hides the scan and
-    * made the old physical-leaf count return 0 — turning a
-    * `pruned < all` contract vacuous. The pushed-filter file pruning
-    * happens in V2ScanRelationPushDown, so the optimized plan's
-    * `DataSourceV2ScanRelation` carries the exact planned file set. A
-    * table with live deletion vectors is read through the engine's v1
-    * scan instead, which prunes as its file index lists: those scans are
-    * counted off the physical plan (before AQE wraps it), by listing
-    * their index under the scan's own pushed filters — the DV sidecar
-    * scan under `_dv/` excluded. */
+  /** Files the (post-pushdown) scan actually plans. A graft relation is
+    * read through the engine's v1 manifest scan, which prunes as its
+    * file index lists: the scans are counted off the physical plan
+    * (before AQE wraps it in one opaque `AdaptiveSparkPlanExec` leaf,
+    * which would hide them and make a `pruned < all` contract vacuous),
+    * by listing each index under the scan's own pushed filters — the DV
+    * sidecar scan under `_dv/` excluded. */
   private def scannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        r.scan.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-          .fileIndex.inputFiles.length
-    }.sum + df.queryExecution.sparkPlan.collect {
+    df.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
           if !f.relation.location.rootPaths.exists(_.toString.contains("/_dv")) =>
         f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
@@ -1466,8 +1456,8 @@ object AnalyticsOps {
   }
 
   /** q136: RESTORE to an earlier snapshot as a NEW commit — Delta-style
-    * rollback, O(changed files) and zero bytes copied (files re-reference
-    * by their (rel, name) identity between `data/` and `_history/`; the
+    * rollback, metadata-only (files re-reference by their (rel, name)
+    * identity and never move; the
     * in-query `require`s prove the restored live set IS the target
     * snapshot's file set and that history above the restore point still
     * reads). The sequence append → merge-on-read DELETE → append →

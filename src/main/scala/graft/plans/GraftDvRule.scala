@@ -9,31 +9,28 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graft.PlanBridge
 
-/** Merge-on-read for SQL: when a graft table carries live deletion
-  * vectors, its DSv2 scan relation is replaced by the engine's
-  * DV-applied read (manifest-pruned scan + broadcast anti-join on (file
-  * key, row position)), projected back onto the relation's original
-  * output attribute ids so the surrounding plan is untouched. Tables
-  * without DVs — the steady state, re-established by any full rewrite or
-  * [[graft.catalog.GraftLake.materializeDeletes]] — keep the plain DSv2
-  * scan. The DV plan KEEPS manifest-level file skipping: the substituted
-  * read plans against a [[org.apache.spark.sql.graft
-  * .GraftPruningFileIndex]], which lowers the pushed data filters over
-  * the manifest's per-file bounds at planning time, and the anti-join
-  * applies per surviving file (a pruned file's DV entries never match
-  * anything). The same trade DuckLake makes with its positional-delete
-  * files, which DuckDB merges at scan WITHOUT disabling file pruning
-  * (reference: DuckLake DELETE, executed by DuckDB as delete files
-  * merged at scan).
+/** The SQL read of a graft table IS the engine read: every graft
+  * relation's DSv2 scan is replaced by [[GraftLake.readLiveFull]] (or
+  * [[GraftLake.readVersion]] for a `VERSION AS OF` relation), projected
+  * back onto the relation's original output attribute ids so the
+  * surrounding plan is untouched. The substituted plan scans the
+  * manifest's file list, resolved here at analysis: a query planned
+  * before a rewrite keeps reading the snapshot it planned. It applies
+  * the snapshot's deletion vectors (a codegen'd filter on (file key, row
+  * position)), aliases renamed columns back from their frozen physical
+  * names, and keeps manifest-level file skipping — the
+  * [[org.apache.spark.sql.graft.GraftPruningFileIndex]] lowers the
+  * pushed data filters over the manifest's per-file bounds at planning
+  * time. The same trade DuckLake makes with its positional-delete files,
+  * which DuckDB merges at scan WITHOUT disabling file pruning.
   *
   * Injected AFTER [[RewriteGraftMerge]]: DML statements are converted to
   * engine commands first, so this rule only ever sees pure read
   * relations (a command's inner plans are re-analyzed — and so
-  * DV-rewritten — when the command builds its DataFrames at run time).
-  * Applied WITH subquery descent: a DV-carrying table inside an
-  * IN/EXISTS/scalar subquery must be masked too, and `transformDown`
-  * alone never enters subquery expression plans. `VERSION AS OF`
-  * snapshot relations apply the DVs OF THAT SNAPSHOT.
+  * substituted — when the command builds its DataFrames at run time).
+  * Applied WITH subquery descent: a graft table inside an
+  * IN/EXISTS/scalar subquery is substituted too, and `transformDown`
+  * alone never enters subquery expression plans.
   */
 final case class ApplyGraftDeletionVectors(spark: SparkSession)
     extends Rule[LogicalPlan] {
@@ -44,30 +41,16 @@ final case class ApplyGraftDeletionVectors(spark: SparkSession)
         r.table match {
           case t: GraftTableIdentity =>
             val lake = new GraftLake(spark, t.graftWarehouse)
-            // fast path — memoized per (table, version): a table with no
-            // live DVs and no renamed columns (the steady state) keeps
-            // its plain DSv2 scan at the cost of two cache lookups, with
-            // ZERO metadata resolution per analyzer pass. Renamed columns
-            // must route through the engine read: the plain DSv2 scan
-            // addresses parquet by the LOGICAL name and would read nulls
-            // for every file (RENAME COLUMN freezes the physical name;
-            // GraftLake.read aliases it back). A versioned read checks
-            // the SNAPSHOT's OWN schema — the current meta may have
-            // renamed back (identity mapping) while the snapshot-era
-            // schema still needs the alias.
-            if (lake.dvRuleUnchanged(t.graftTableName, t.graftVersion)) r
-            else {
-              val df = t.graftVersion match {
-                case None => lake.readLiveFull(t.graftTableName)
-                case Some(v) => lake.readVersion(t.graftTableName, v)
-              }
-              val child = PlanBridge.planOf(df)
-              val byName = child.output.map(a => a.name -> a).toMap
-              Project(r.output.map { o =>
-                Alias(byName(o.name), o.name)(exprId = o.exprId,
-                  qualifier = o.qualifier)
-              }, child)
+            val df = t.graftVersion match {
+              case None => lake.readLiveFull(t.graftTableName)
+              case Some(v) => lake.readVersion(t.graftTableName, v)
             }
+            val child = PlanBridge.planOf(df)
+            val byName = child.output.map(a => a.name -> a).toMap
+            Project(r.output.map { o =>
+              Alias(byName(o.name), o.name)(exprId = o.exprId,
+                qualifier = o.qualifier)
+            }, child)
           case _ => r
         }
     }

@@ -15,8 +15,8 @@ import graft.catalog.GraftLake
   * added by the pure-additive commits in `(lastOffset, latest]`
   * ([[GraftLake.streamAppendBatch]]): exactly-once under Spark's normal
   * offset checkpointing, immune to compaction (content-preserving
-  * rewrites contribute nothing — the file-tailing [[GraftLake.readStream]]
-  * would re-emit every compacted file), and fail-fast on row-changing
+  * rewrites contribute nothing — a tail of the data directory would
+  * re-emit every compacted file), and fail-fast on row-changing
   * rewrites unless `onRewrite=skip`. The v1 `Source` realization is the
   * established one for lakehouse streams (Delta's source is the same
   * shape): `getBatch` returns an arbitrary DataFrame over exactly the

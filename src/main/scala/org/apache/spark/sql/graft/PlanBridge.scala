@@ -145,13 +145,10 @@ object PlanBridge {
     }
   }
 
-  /** Refresh the file listings of every cached plan that reads under
-    * `dir` and rebuild those cache entries, as Spark's own file writes
-    * do. A no-op when nothing is cached. */
-  def recacheByPath(spark: SparkSession, dir: String): Unit = {
-    val cm = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
-    if (!cm.isEmpty) cm.recacheByPath(spark.asInstanceOf[classic.SparkSession], dir)
-  }
+  /** `schema` with every field, nested ones included, nullable — the
+    * shape Spark's file tables report (private[spark] on StructType). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 
   /** The session's DSv2 catalog manager (private[sql] on SessionState). */
   def catalogManager(spark: SparkSession)

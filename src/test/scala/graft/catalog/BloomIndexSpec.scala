@@ -121,15 +121,12 @@ class BloomIndexSpec extends AnyFunSuite {
     try {
       build(lake, "t")
       lake.buildBloomIndex("t", "uid", expectedItemsPerFile = 2000)
-      // count from the OPTIMIZED plan: under AQE the executed plan is one
-      // opaque AdaptiveSparkPlanExec LEAF that hides the scan (a physical
-      // collectLeaves would return 0 and make `pruned < all` vacuous)
-      def scannedFiles(df: DataFrame): Int =
-        df.queryExecution.optimizedPlan.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-            r.scan.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-              .fileIndex.inputFiles.length
-        }.sum
+      // files the engine scan planned, from execution metrics (a session
+      // with GraftExtensions reads every graft relation through it)
+      def scannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
+        df.collect()
+        GraftPlanWalk.v1ScannedFiles(df.queryExecution.executedPlan).toInt
+      }
       val allN = scannedFiles(spark.sql("SELECT * FROM blc.t"))
       val q = spark.sql("SELECT uid, tag FROM blc.t WHERE uid = 1234")
       val prunedN = scannedFiles(q)

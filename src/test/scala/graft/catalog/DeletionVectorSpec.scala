@@ -503,64 +503,31 @@ class DeletionVectorSpec extends AnyFunSuite {
     }
   }
 
-  test("versioned dv-rule verdict cache evicts per-entry at its bound, never clear-all") {
-    val lake = newLake()
-    lake.write("t", Seq((1, "a")).toDF("id", "v"))
-    val map = GraftLake.dvRulePassAtVersion
-    val saved = new java.util.HashMap[String, java.lang.Boolean](map)
-    try {
-      map.clear()
-      (0 until 65537).foreach(i =>
-        map.put(s"__evict_synth#$i", java.lang.Boolean.TRUE))
-      // one slow-path eval trips the defensive bound: an arbitrary QUARTER
-      // is evicted (16384 entries), never the whole cache — a clear-all
-      // would stampede every concurrent analyzer pass onto the slow path
-      lake.dvRuleUnchanged("t", Some(0L))
-      val size = map.size()
-      assert(size === 65537 - 16384 + 1,
-        s"expected one quarter evicted + the new verdict, got size=$size")
-      // the fresh verdict itself must have survived the eviction pass
-      assert(map.containsKey(s"${lake.warehouseDir}/t#0"))
-    } finally {
-      map.clear()
-      map.putAll(saved)
-    }
-  }
-
-  test("DV/rename rule fast path is memoized: zero metadata work steady-state") {
+  test("a GraftExtensions session reads every graft relation through the engine scan") {
     val lake = newLake()
     spark.conf.set("spark.sql.catalog.dvmemo", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.dvmemo.warehouse", lake.warehouseDir)
     try {
       lake.write("t", (1 to 50).map(i => (i, s"v$i")).toDF("id", "v"))
-      // first analysis: the rule's slow path (resolve DVs + schema
-      // metadata) runs once and memoizes the per-(table, version) verdict
-      spark.sql("SELECT count(*) FROM dvmemo.t").collect()
-      val after1 = GraftLake.dvRuleSlowPathEvals.sum()
-      // steady state: repeated analyses — several rule invocations each —
-      // must do NO metadata resolution of any kind (the memoized verdict
-      // short-circuits before readMeta/liveDvs are even called)
-      (1 to 5).foreach { _ =>
-        spark.sql("SELECT id FROM dvmemo.t WHERE id < 10").collect()
-      }
-      assert(GraftLake.dvRuleSlowPathEvals.sum() === after1,
-        "memoized fast-path verdict must short-circuit the analyzer rule")
-      // a DV commit bumps the version, so the memo misses and the rule
-      // substitutes the DV-applied read on the very next analysis
+      // a clean table too: the plan scans the manifest's files through
+      // the engine's v1 scan, never the catalog's DSv2 parquet table
+      val q = spark.sql("SELECT count(*) FROM dvmemo.t")
+      assert(q.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
+      }.isEmpty, "no DSv2 scan may plan")
+      val scanned = q.queryExecution.optimizedPlan.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+            .location.inputFiles.toSet
+      }.flatten.toSet
+      assert(scanned === lake.dataFiles("t").toSet)
+      assert(q.head().getLong(0) === 50)
+      // a DV commit is seen by the very next analysis
       lake.deleteWhere("t", col("id") === 1)
       assert(spark.sql("SELECT count(*) FROM dvmemo.t").head().getLong(0) === 49)
-      // materializing the deletes restores the fast path at the NEW
-      // version: one more slow-path eval, then steady state again
       lake.materializeDeletes("t")
-      spark.sql("SELECT count(*) FROM dvmemo.t").collect()
-      val after2 = GraftLake.dvRuleSlowPathEvals.sum()
-      (1 to 3).foreach { _ =>
-        spark.sql("SELECT id FROM dvmemo.t WHERE id > 40").collect()
-      }
-      assert(GraftLake.dvRuleSlowPathEvals.sum() === after2,
-        "fast path must re-memoize after DVs are materialized away")
-      // and the rename half: RENAME COLUMN flips the verdict off — the
-      // renamed logical name must resolve (engine read), memo re-keys
+      assert(spark.sql("SELECT count(*) FROM dvmemo.t").head().getLong(0) === 49)
+      // and a renamed logical name resolves (the engine read aliases it)
       lake.renameColumn("t", "v", "val")
       assert(spark.sql("SELECT val FROM dvmemo.t WHERE id = 2")
         .head().getString(0) === "v2")

@@ -112,7 +112,7 @@ class MetadataDeleteSpec extends AnyFunSuite {
     assert(lake.deleteWhere("t", col("id") <= 50) === 49L) // then metadata
     val vs = lake.versions("t")
     assert(ids(lake.readVersion("t", vs(1))) === (1 to 100).toSet,
-      "pre-delete snapshots read the retired file from _history/")
+      "pre-delete snapshots read the removed file, still in data/")
     // change feed: the MoR commit emits id=7; the metadata-delete commit
     // emits the file's remaining 49 rows, NOT the already-masked id=7
     val feed = lake.tableChanges("t", vs(1), vs.last)
@@ -124,7 +124,10 @@ class MetadataDeleteSpec extends AnyFunSuite {
       ((1 to 50).toSet - 7))
     lake.restore("t", vs(1))
     assert(ids(lake.read("t")) === (1 to 100).toSet,
-      "restore renames the retired file back to the live set")
+      "restore re-references the removed file")
+    assert(ids(lake.readVersion("t", vs.last)) === (51 to 100).toSet,
+      "the post-delete snapshot still reads after the restore")
+    assert(ids(lake.readVersion("t", vs(1))) === (1 to 100).toSet)
   }
 
   test("IS NULL prunes witnessed files; IS NOT NULL proves metadata deletes") {
@@ -171,7 +174,7 @@ class MetadataDeleteSpec extends AnyFunSuite {
     assert(lake.history("t").collect().last.getString(2) === "truncate")
     val vs = lake.versions("t")
     assert(ids(lake.readVersion("t", vs(0))) === (1 to 10).toSet,
-      "pre-truncate snapshots read the retired file from _history/")
+      "pre-truncate snapshots read the removed file, still in data/")
     // feed across the truncate: the 9 surviving rows emit as deletes
     // (id=3 was already emitted by the DV commit's slice)
     val feed = lake.tableChanges("t", vs(1), vs.last)
@@ -319,48 +322,130 @@ class MetadataDeleteSpec extends AnyFunSuite {
     assert(lake.liveDvs("t").isEmpty && lake.dataFiles("t").isEmpty)
   }
 
-  test("a retirement that strands a file fails naming it and repairTable") {
+  test("no rewrite-class operation renames or deletes a committed file") {
     val wh = Files.createTempDirectory("graft-mdfault").toString
     GraftLake.invalidateCaches()
-    val lake = new GraftLake(spark, wh)
-    lake.write("p", (1 to 30).map(i => (i, s"s${i % 3}")).toDF("id", "seg")
-      .repartition(1), partitions = Seq("seg"))
     spark.sparkContext.hadoopConfiguration.set("fs.graftfault.impl",
-      classOf[HistoryRenameFaultFs].getName)
-    // the same table through a filesystem whose second rename into or
-    // out of _history/ fails: the first file moves, the second does not,
-    // and the first cannot move back
-    val faulty = new GraftLake(spark, s"graftfault://$wh")
-    HistoryRenameFaultFs.allowed.set(1)
-    val e = try intercept[IllegalStateException](faulty.truncate("p"))
-      finally HistoryRenameFaultFs.allowed.set(Int.MaxValue)
-    val history = new java.io.File(s"$wh/p/_history")
-    val stranded = Files.walk(history.toPath).toArray.map(_.toString)
-      .filter(_.endsWith(".parquet")).toSeq
-    assert(stranded.size === 1)
-    assert(e.getMessage.contains(new java.io.File(stranded.head).getName), e.getMessage)
-    assert(e.getMessage.contains("repairTable(\"p\")"), e.getMessage)
-    // the remedy the message names: the table reads again, without the
-    // stranded file's rows
+      classOf[RecordingFs].getName)
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.AbstractFileSystem.graftfault.impl", classOf[RecordingAfs].getName)
+    val lake = new GraftLake(spark, s"graftfault://$wh")
+    def batch(r: Range, tag: String) =
+      r.map(i => (i, s"$tag$i")).toDF("id", "v")
+    lake.write("t", batch(1 to 60, "a"), partitions = Seq("bucket(4, id)"),
+      pks = Seq("id"))
+    lake.append("t", batch(61 to 90, "a"))
+    def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    def committed(): Set[String] = lake.versions("t")
+      .flatMap(v => lake.snapshotFiles("t", v)._2).map(norm).toSet
+    def dataOps(): Seq[String] = RecordingFs.ops.toArray.toSeq
+      .map(_.toString).filter(_.contains("/t/data/"))
+    RecordingFs.ops.clear()
+    // metadata-only DELETE: the appended files provably all match
+    assert(lake.deleteWhere("t", col("id") > 60) === 30L)
+    assert(lake.liveDvs("t").isEmpty &&
+      lake.history("t").collect().last.getString(2) === "delete")
+    spark.conf.set("spark.graft.dv.maxEntries", "0")
+    try {
+      lake.upsert("t", batch(1 to 5, "u")) // the DV folds copy-on-write
+      assert(lake.deleteWhere("t", col("id") === 7) === 1L) // past the bound
+    } finally spark.conf.unset("spark.graft.dv.maxEntries")
+    assert(lake.liveDvs("t").isEmpty)
+    lake.compact("t")
+    lake.rebucket("t", 8)
+    lake.rebuildPartitioned("t", Seq("bucket(2, id)"))
+    val beforeTruncate = lake.versions("t").last
+    lake.truncate("t")
+    lake.restore("t", beforeTruncate)
+    lake.overwriteContents("t", lake.read("t").filter(col("id") < 50))
+    assert(ids(lake.read("t")) === (1 to 49).toSet - 7)
+    // every removal changed only manifests: no rename moved a file out of
+    // data/ and no delete touched one — each file any snapshot listed is
+    // where its commit put it
+    assert(dataOps().forall(_.startsWith("rename")) &&
+      dataOps().forall(op => !committed().exists(f => op.contains(s"$f ->"))),
+      s"data files moved or deleted: ${dataOps().filterNot(_.contains("/.stage-"))}")
+    val all = committed()
+    all.foreach(f => assert(new java.io.File(f).exists(), s"$f is gone"))
+    assert(ids(lake.readVersion("t", 0L)) === (1 to 60).toSet,
+      "the first snapshot reads its files, untouched by every rewrite")
+    // only the vacuum deletes, and only what no retained snapshot lists
+    RecordingFs.ops.clear()
+    lake.expireSnapshots("t", keepLast = 1)
+    val deleted = dataOps().filter(_.startsWith("delete")).map(_.stripPrefix("delete "))
+    assert(deleted.nonEmpty && deleted.toSet.subsetOf(all -- committed()),
+      s"vacuum deleted a retained file: ${deleted.toSet -- (all -- committed())}")
+    // and repair, only orphans past the retention
+    val live = lake.snapshotFiles("t", lake.versions("t").last)._2.map(norm)
+    val orphan = new java.io.File(new java.io.File(live.head).getParent,
+      "part-orphan-deadbeef-c000.snappy.parquet")
+    Files.copy(new java.io.File(live.head).toPath, orphan.toPath)
+    orphan.setLastModified(System.currentTimeMillis() - 60000L)
+    RecordingFs.ops.clear()
+    spark.conf.set("spark.graft.vacuum.stageRetentionMs", "0")
+    try lake.repairTable("t")
+    finally spark.conf.unset("spark.graft.vacuum.stageRetentionMs")
+    assert(dataOps() === Seq(s"delete ${orphan.getPath}"))
+    assert(ids(lake.read("t")) === (1 to 49).toSet - 7)
+  }
+
+  test("an unreadable policy table meta defers its policies; the write commits") {
+    val wh = Files.createTempDirectory("graft-mdpolicy").toString
     GraftLake.invalidateCaches()
-    val strandedRows = spark.read.parquet(stranded.head).count()
-    lake.repairTable("p")
-    assert(lake.read("p").count() === 30 - strandedRows)
+    spark.sparkContext.hadoopConfiguration.set("fs.graftfault.impl",
+      classOf[RecordingFs].getName)
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.AbstractFileSystem.graftfault.impl", classOf[RecordingAfs].getName)
+    val lake = new GraftLake(spark, s"graftfault://$wh")
+    lake.append("p", (1 to 10).map(i => (i, i)).toDF("id", "n"))
+    lake.setTableProperty("p", "graft.policy.autoCompact.minFiles", "2")
+    val versions = lake.versions("p").size
+    val deferred = graft.metrics.GraftMetrics.op("policyDeferred").count.sum()
+    // the meta turns unreadable right after the next commit's last step
+    // (its `_last` hint), before the write's policy hook reads it
+    val meta = new java.io.File(s"$wh/p/_graft_meta.json")
+    val good = Files.readAllBytes(meta.toPath)
+    RecordingFs.afterRename = dst => if (dst.endsWith("/p/_versions/_last")) {
+      Files.write(meta.toPath, "{".getBytes("UTF-8"))
+      GraftLake.invalidateCaches()
+    }
+    try lake.append("p", (11 to 20).map(i => (i, i)).toDF("id", "n"))
+    finally RecordingFs.afterRename = _ => ()
+    assert(lake.versions("p").size === versions + 1, "the write committed")
+    assert(graft.metrics.GraftMetrics.op("policyDeferred").count.sum() > deferred)
+    // with the meta readable again, the next write runs the compaction
+    Files.write(meta.toPath, good)
+    GraftLake.invalidateCaches()
+    lake.append("p", (21 to 30).map(i => (i, i)).toDF("id", "n"))
+    assert(lake.liveFileCount("p") === 1 && ids(lake.read("p")) === (1 to 30).toSet)
   }
 }
 
-/** The local filesystem under the `graftfault` scheme. A rename into or
-  * out of `_history/` fails once [[HistoryRenameFaultFs.allowed]] of them
-  * have succeeded. */
-class HistoryRenameFaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+/** The local filesystem under the `graftfault` scheme, recording every
+  * rename (`rename <src> -> <dst>`) and delete (`delete <path>`) by
+  * local path. */
+class RecordingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfault:///")
   override def getScheme: String = "graftfault"
-  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
-    if (s"$src $dst".contains("/_history/") &&
-        HistoryRenameFaultFs.allowed.getAndDecrement() <= 0) false
-    else super.rename(src, dst)
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    RecordingFs.ops.add(s"rename ${src.toUri.getPath} -> ${dst.toUri.getPath}")
+    val ok = super.rename(src, dst)
+    RecordingFs.afterRename(dst.toUri.getPath)
+    ok
+  }
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean = {
+    RecordingFs.ops.add(s"delete ${p.toUri.getPath}")
+    super.delete(p, recursive)
+  }
 }
 
-object HistoryRenameFaultFs {
-  val allowed = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
+/** [[RecordingFs]] for `FileContext` callers (atomic replace-renames). */
+class RecordingAfs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+  extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new RecordingFs, conf,
+    "graftfault", false)
+
+object RecordingFs {
+  val ops = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Runs after every rename with the destination's local path. */
+  @volatile var afterRename: String => Unit = _ => ()
 }

@@ -41,7 +41,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(lake.versions("s").contains(0L),
       "pinned snapshot manifest must survive expireSnapshots")
     // (b) the clone survives source evolution — incl. the rewrite that
-    // retired version 0's files into _history
+    // removed version 0's files from the live set
     assert(rows(lake.read("c"), "id", "v") ===
       (1 to 100).map(i => Seq(i, s"v$i")).toSet,
       "clone must read the PINNED snapshot, untouched by evolution")
@@ -172,47 +172,48 @@ class SnapshotSpec extends AnyFunSuite {
     assert(rows(lake.readVersion("x", vs.last), "id", "v") === Set(Seq(1, "c")))
   }
 
-  test("history audit: vacuum leaves exactly the kept-version references in _history") {
+  test("history audit: vacuum leaves exactly the kept-version references in data/") {
     GraftLake.invalidateCaches()
     val wh = Files.createTempDirectory("graft-snap").toString
     val lake = new GraftLake(spark, wh)
     // rewrite churn: with no DV budget every upsert commits, then folds its
-    // DV into the files, retiring the previous file into _history
+    // DV into the files, removing the previous file from the live set
     spark.conf.set("spark.graft.dv.maxEntries", "0")
     try for (i <- 1 to 6)
       lake.write("h", Seq((1, s"v$i"), (2, s"w$i")).toDF("id", "v"),
         pks = Seq("id"))
     finally spark.conf.unset("spark.graft.dv.maxEntries")
-    val vacuumedBefore = graft.metrics.GraftMetrics.historyFilesVacuumed.sum()
+    val vacuumedBefore = graft.metrics.GraftMetrics.dataFilesVacuumed.sum()
     // the last three upserts: each one commit plus its fold
     lake.expireSnapshots("h", keepLast = 5)
     val kept = lake.versions("h")
     assert(kept.size === 5)
-    // normalize to the path below _history/ — snapshot resolution and the
+    // normalize to the path below data/ — snapshot resolution and the
     // raw directory walk may differ in scheme qualification
-    def relHist(p: String): Option[String] = {
-      val i = p.indexOf("/_history/")
-      if (i < 0) None else Some(p.substring(i + "/_history/".length))
+    def relData(p: String): Option[String] = {
+      val i = p.indexOf("/data/")
+      if (i < 0) None else Some(p.substring(i + "/data/".length))
     }
     val referenced = kept
-      .flatMap(v => lake.snapshotFiles("h", v)._2).flatMap(relHist).toSet
+      .flatMap(v => lake.snapshotFiles("h", v)._2).flatMap(relData).toSet
     val conf = spark.sparkContext.hadoopConfiguration
-    val hd = new org.apache.hadoop.fs.Path(s"$wh/h/_history")
-    val hfs = hd.getFileSystem(conf)
+    val dd = new org.apache.hadoop.fs.Path(s"$wh/h/data")
+    val dfs = dd.getFileSystem(conf)
     def walk(p: org.apache.hadoop.fs.Path): Seq[String] =
-      if (!hfs.exists(p)) Nil
-      else hfs.listStatus(p).toSeq.flatMap(s =>
+      if (!dfs.exists(p)) Nil
+      else dfs.listStatus(p).toSeq.flatMap(s =>
         if (s.isDirectory) walk(s.getPath) else Seq(s.getPath.toString))
-    val historyFiles = walk(hd).flatMap(relHist).toSet
-    // equality BOTH ways: no unreferenced file survives the vacuum (history
+    val dataFiles = walk(dd).filter(_.endsWith(".parquet")).flatMap(relData).toSet
+    // equality BOTH ways: no unreferenced file survives the vacuum (storage
     // is retention-bounded — it cannot grow with rewrite churn between
     // expires), and no still-referenced file was lost
-    assert(historyFiles === referenced,
-      s"_history after vacuum must hold exactly the kept-version references;" +
-        s" extra=${historyFiles -- referenced} missing=${referenced -- historyFiles}")
-    assert(historyFiles.nonEmpty, "rewrite churn must have retired files")
-    assert(graft.metrics.GraftMetrics.historyFilesVacuumed.sum() > vacuumedBefore,
-      "the vacuum sensor observes deleted history files")
+    assert(dataFiles === referenced,
+      s"data/ after vacuum must hold exactly the kept-version references;" +
+        s" extra=${dataFiles -- referenced} missing=${referenced -- dataFiles}")
+    assert(referenced.size > lake.liveFileCount("h"),
+      "the kept window must still reference replaced files")
+    assert(graft.metrics.GraftMetrics.dataFilesVacuumed.sum() > vacuumedBefore,
+      "the vacuum sensor observes deleted data files")
     // the kept snapshots still reconstruct exactly
     assert(rows(lake.readVersion("h", kept.head), "id", "v") ===
       Set(Seq(1, "v4"), Seq(2, "w4")))
@@ -423,7 +424,7 @@ class SnapshotSpec extends AnyFunSuite {
       "snapshots must not pick up debris either")
   }
 
-  test("repairTable adopts orphan part files a crashed writer left behind") {
+  test("repairTable reaps orphan part files past the retention; no read sees them") {
     val lake = newLake()
     lake.write("rp", Seq((1, "a")).toDF("id", "v"), pks = Seq("id"))
     // simulate a writer that landed a part file but died before its
@@ -432,21 +433,26 @@ class SnapshotSpec extends AnyFunSuite {
       new java.net.URI(lake.read("rp").inputFiles.head)).getParent
     val src = java.nio.file.Files.list(dataDir)
       .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-    java.nio.file.Files.copy(src,
-      dataDir.resolve("part-orphan-deadbeef-c000.snappy.parquet"))
-    // an orphan is UNCOMMITTED debris — below the commit protocol, so the
-    // read-plan memo (which tracks committed state: versions-dir mtime +
-    // meta) legitimately keeps serving the last committed view until a
-    // commit or repair lands. Force a cold view to pin the DIRECTORY
-    // read's adoption setup the rest of the test depends on.
+    val orphan = dataDir.resolve("part-orphan-deadbeef-c000.snappy.parquet")
+    java.nio.file.Files.copy(src, orphan)
+    // the manifest is the only live-file list: no read, cold or not,
+    // current or time travel, sees uncommitted debris
     graft.catalog.GraftLake.invalidateCaches()
-    assert(lake.read("rp").count() === 2, "directory read sees the orphan")
-    val vs = lake.versions("rp")
-    assert(lake.readVersion("rp", vs.last).count() === 1,
-      "pre-repair snapshot misses it")
-    val adopted = lake.repairTable("rp")
-    assert(lake.readVersion("rp", adopted).count() === 2,
-      "repair reconciles the snapshot view with the directory")
+    assert(lake.read("rp").count() === 1, "a current read ignores the orphan")
+    assert(lake.readVersion("rp", lake.versions("rp").last).count() === 1)
+    // within the retention a live writer's file may look like debris:
+    // repair keeps it
+    val v1 = lake.repairTable("rp")
+    assert(java.nio.file.Files.exists(orphan))
+    assert(lake.readVersion("rp", v1).count() === 1, "repair adopts nothing")
+    java.nio.file.Files.setLastModifiedTime(orphan,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600000L))
+    spark.conf.set("spark.graft.vacuum.stageRetentionMs", "60000")
+    try lake.repairTable("rp")
+    finally spark.conf.unset("spark.graft.vacuum.stageRetentionMs")
+    assert(!java.nio.file.Files.exists(orphan), "an old orphan is reaped")
+    assert(java.nio.file.Files.exists(src), "the committed file stays")
+    assert(rows(lake.read("rp"), "id", "v") === Set(Seq(1, "a")))
   }
 
   test("schemaHistory: column growth tracked per version") {
@@ -460,10 +466,13 @@ class SnapshotSpec extends AnyFunSuite {
     assert(!hist.head._4.contains("score"))
   }
 
-  test("lake readStream tails an append-only table exactly once per row") {
+  test("graft-cdf feed=appends tails an append-only table exactly once per row") {
     val lake = newLake()
     lake.write("stream_log", Seq((1, "a"), (2, "b")).toDF("id", "v"))
-    val q = lake.readStream("stream_log")
+    val q = spark.readStream.format("graft-cdf")
+      .option("warehouse", lake.warehouseDir).option("table", "stream_log")
+      .option("feed", "appends").option("startingVersion", "snapshot")
+      .load()
       .writeStream.outputMode("append")
       .format("memory").queryName("lake_tail")
       .option("checkpointLocation",
@@ -484,14 +493,13 @@ class SnapshotSpec extends AnyFunSuite {
     val lake = newLake()
     // ONE task writing BOTH partitions: the dynamic-partition writer
     // resets its file counter per partition, so seg=x and seg=y get
-    // identically named part files from the same job — the case a flat
-    // _history/ keyed by name alone would silently corrupt
+    // identically named part files from the same job — the case a file
+    // identity keyed by name alone would silently corrupt
     lake.write("coll",
       Seq((1, "x", 10), (2, "y", 20)).toDF("id", "seg", "n").coalesce(1),
       partitions = Seq("seg"), pks = Seq("id"))
     // rewrite BOTH partitions in one upsert whose DV folds at once (no DV
-    // budget) — both same-named originals must retire without clobbering
-    // each other
+    // budget) — both same-named originals must stay readable side by side
     spark.conf.set("spark.graft.dv.maxEntries", "0")
     try lake.write("coll",
       Seq((1, "x", 11), (2, "y", 21)).toDF("id", "seg", "n").coalesce(1),
@@ -503,12 +511,11 @@ class SnapshotSpec extends AnyFunSuite {
       "v0 must read its own files, not a history survivor of a name collision")
     assert(rows(lake.readVersion("coll", vs(1)), "id", "seg", "n") ===
       Set(Seq(1, "x", 11), Seq(2, "y", 21)))
-    // both retired files must coexist in history under their partition rel
-    val wh = lake.read("coll").inputFiles.head.replaceAll("/data/.*$", "")
-    val hist = java.nio.file.Paths.get(new java.net.URI(s"$wh/_history"))
-    val count = java.nio.file.Files.walk(hist)
-      .filter(p => p.toString.endsWith(".parquet")).count()
-    assert(count >= 2, s"both same-named retired files must survive, saw $count")
+    // both removed files stay at their own partition rel in data/
+    val v0Files = lake.snapshotFiles("coll", vs(0))._2
+    assert(v0Files.size === 2, s"v0 lists one file per partition: $v0Files")
+    v0Files.foreach(f => assert(new java.io.File(
+      new org.apache.hadoop.fs.Path(f).toUri.getPath).exists(), s"$f was moved"))
   }
 
   test("manifests are O(delta) between checkpoints; resolution equals the directory") {
@@ -949,24 +956,25 @@ class SnapshotSpec extends AnyFunSuite {
       lake.deleteWhere("t", col("id") === 1)
     }
     // the failure invalidated the caches: an immediate re-run succeeds
+    // against the winner's state — a copy of v0, which does not list the
+    // appended file, so id 3 is not live
     assert(lake.deleteWhere("t", col("id") === 1) === 1L)
-    assert(rows(lake.read("t"), "id") === Set(Seq(2), Seq(3)))
-    // a COMPACTION losing the race rolls its swap back (the winner's
-    // manifest references the pre-rewrite files as live — without the
-    // unswap every later read would FileNotFound) and then RETRIES
-    // against the winner's state inside the same call (round-11
-    // concurrent-optimize semantics: appends always win, compaction
-    // re-derives; it no longer fails fast like a one-shot DML). The
-    // winner here is (again) a copy of v0 — no DVs — so the visible
-    // state is all three rows with the delete undone: exactly what an
-    // external writer's commit meant
+    assert(rows(lake.read("t"), "id") === Set(Seq(2)))
+    // a COMPACTION losing the race deletes only its own unpublished files
+    // (the winner's manifest references the pre-rewrite files, which
+    // never moved) and then RETRIES against the winner's state inside the
+    // same call (round-11 concurrent-optimize semantics: appends always
+    // win, compaction re-derives; it no longer fails fast like a one-shot
+    // DML). The winner here is (again) a copy of v0 — no DVs — so the
+    // visible state is v0's two rows with the delete undone: exactly what
+    // an external writer's commit meant
     externalCommit(lake.versions("t").last + 1)
     lake.compact("t")
-    assert(rows(lake.read("t"), "id") === Set(Seq(1), Seq(2), Seq(3)),
+    assert(rows(lake.read("t"), "id") === Set(Seq(1), Seq(2)),
       "after a lost rewrite race the compaction must land against the " +
         "winner's state, never a stale one")
     lake.compact("t")
-    assert(rows(lake.read("t"), "id") === Set(Seq(1), Seq(2), Seq(3)))
+    assert(rows(lake.read("t"), "id") === Set(Seq(1), Seq(2)))
   }
 
   test("manifests publish atomically; a torn manifest diagnoses, never NPEs") {

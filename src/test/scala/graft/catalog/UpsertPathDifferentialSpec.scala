@@ -164,4 +164,36 @@ class UpsertPathDifferentialSpec extends AnyFunSuite {
         spark.conf.unset(s"spark.sql.catalog.$cat.warehouse")
       }
     }
+
+  // Null primary keys, landed and in the batch, never match: each lands
+  // as a row of its own. The DV route and the route that folds the DV
+  // into the files must land the same rows.
+  for ((label, layout) <- Seq(("unpartitioned", Nil),
+      ("bucket(8, id)", Seq("bucket(8, id)"))))
+    test(s"null primary keys land equally through the DV and the fold route: $label") {
+      GraftLake.invalidateCaches()
+      val lake = new GraftLake(spark, Files.createTempDirectory("graft-updnull").toString)
+      val landed = (1 to 40).map(i => (Option.when(i % 9 != 0)(i.toLong), s"v$i"))
+        .toDF("id", "s").repartition(2)
+      val r = new scala.util.Random(11)
+      val b = (0 until 50).map { seq =>
+        (Option.when(r.nextInt(6) != 0)(1L + r.nextInt(60)), s"u$seq", seq)
+      }.toDF("id", "s", "seq").repartition(3)
+      val Seq(viaDv, viaFold) = Seq(None, Some("0")).map { dvMax =>
+        val t = s"t${dvMax.size}"
+        lake.write(t, landed, partitions = layout, pks = Seq("id"))
+        val before = lake.read(t).select("_inserted_at").distinct()
+          .as[java.sql.Timestamp].collect().toSeq
+        dvMax.foreach(spark.conf.set("spark.graft.dv.maxEntries", _))
+        try lake.upsert(t, b, ordering = Seq(col("seq")))
+        finally spark.conf.unset("spark.graft.dv.maxEntries")
+        assert(lake.liveDvs(t).isEmpty === dvMax.nonEmpty)
+        lake.read(t).select("id", "s", "_inserted_at").collect().map { row =>
+          (Option(row.get(0)), row.getString(1),
+            before.contains(row.getTimestamp(2)))
+        }.toSeq.sortBy(_.toString)
+      }
+      assert(viaDv.count(_._1.isEmpty) > 4, "null keys landed from the batch")
+      assert(viaDv === viaFold)
+    }
 }

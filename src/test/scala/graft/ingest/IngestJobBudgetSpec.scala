@@ -307,6 +307,46 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     assert(lake.read("cust_cg").count() === 39 + 7)
   }
 
+  // Spark lists more than 32 explicit paths
+  // (spark.sql.sources.parallelPartitionDiscovery.threshold) with a job at
+  // plan time; the lake's file index lists the files' directories itself,
+  // so no read plans a job at any file count, and an upsert's probe costs
+  // the same jobs above the threshold as below it.
+  test("reads of a 40-file table plan no job, and its upsert runs a 30-file table's jobs") {
+    val wh = Files.createTempDirectory("graft-budget-plan").toString
+    graft.catalog.GraftLake.invalidateCaches()
+    val lake = new GraftLake(spark, wh)
+    def build(t: String, files: Int): Unit = {
+      lake.write(t, Seq((0L, "v0")).toDF("id", "v"), pks = Seq("id"))
+      (1 until files).foreach(i => lake.append(t, Seq((i.toLong, s"v$i")).toDF("id", "v")))
+      assert(lake.liveFileCount(t) === files)
+    }
+    build("t40", 40)
+    build("t30", 30)
+    spark.conf.set("spark.sql.catalog.gplan", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gplan.warehouse", wh)
+    try {
+      val (_, planJobs) = JobTimeline.record(spark.sparkContext) {
+        Seq(lake.read("t40"),
+          lake.readWhere("t40", org.apache.spark.sql.functions.col("id") > 5L),
+          spark.sql("SELECT id, v FROM gplan.t40 WHERE id > 5"))
+          .foreach(_.queryExecution.executedPlan)
+      }
+      assert(planJobs.isEmpty, s"planning ran jobs: ${planJobs.map(_.site)}")
+      def upsertJobs(t: String): Seq[String] = JobTimeline.record(spark.sparkContext) {
+        lake.upsert(t, Seq((3L, "u3"), (99L, "n")).toDF("id", "v"))
+      }._2.map(_.site)
+      val at40 = upsertJobs("t40")
+      val at30 = upsertJobs("t30")
+      info(s"upsert jobs: ${at40.mkString(", ")}")
+      assert(at40.size === at30.size, s"40 files: $at40; 30 files: $at30")
+      assert(lake.read("t40").count() === 41 && lake.read("t30").count() === 31)
+    } finally {
+      spark.conf.unset("spark.sql.catalog.gplan")
+      spark.conf.unset("spark.sql.catalog.gplan.warehouse")
+    }
+  }
+
   // Merge-on-read: the flush writes its batch and one deletion vector and
   // leaves every existing data file where it is, whatever the table size.
   test("a 100-row upsert into a 10k-row bucket(8, id) table removes no file and adds at most 8 files and 1 DV") {
@@ -326,7 +366,7 @@ class IngestJobBudgetSpec extends AnyFunSuite {
       }
     }
     val dataBefore = files("data")
-    val historyBefore = files("_history")
+    val liveBefore = lake.liveFileCount("acct")
     val dvBefore = files("_dv")
     // 70 updates of existing ids, 30 inserts
     lake.upsert("acct", ((0L until 7000L by 100L) ++ (20000L until 20030L)).toDF("id")
@@ -334,8 +374,11 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     val dataAfter = files("data")
     val added = dataAfter -- dataBefore.keySet
     val dvAdded = files("_dv") -- dvBefore.keySet
-    assert(dataBefore.keySet.subsetOf(dataAfter.keySet), "the upsert removed a data file")
-    assert(files("_history") === historyBefore, "the upsert moved files into _history/")
+    // no committed file was renamed or deleted, and the manifest removed none
+    assert(dataBefore.forall { case (p, n) => dataAfter.get(p).contains(n) },
+      "the upsert moved or rewrote a data file")
+    assert(lake.liveFileCount("acct") === liveBefore + added.size,
+      "the upsert removed a live file")
     assert(added.size <= 8, s"${added.size} data files added")
     assert(dvAdded.size === 1, s"${dvAdded.size} DV files added")
     val addedBytes = added.values.sum + dvAdded.values.sum

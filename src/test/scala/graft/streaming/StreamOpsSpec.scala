@@ -211,7 +211,10 @@ class StreamOpsSpec extends AnyFunSuite {
       (id, (1 to words).map(i => s"w${i % 9} the").mkString(" "))
     lake.write("raw_docs", Seq(doc(1, 30), doc(2, 2)).toDF("doc_id", "text"))
     val q = graft.operators.QualityOps
-      .qualityFunnel(lake.readStream("raw_docs"), "text",
+      .qualityFunnel(spark.readStream.format("graft-cdf")
+        .option("warehouse", lake.warehouseDir).option("table", "raw_docs")
+        .option("feed", "appends").option("startingVersion", "snapshot")
+        .load(), "text",
         minTokens = 10, maxTokens = 1000, minMeanWordLen = 1.0,
         maxMeanWordLen = 10.0, minStopwordRatio = 0.1, maxDupTokenFrac = 0.99)
       .filter(org.apache.spark.sql.functions.col("fail_rule").isNull)
