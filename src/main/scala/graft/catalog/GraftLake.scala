@@ -737,6 +737,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
   def lastTxnVersion(name: String, appId: String): Option[Long] =
     latestVersion(name).flatMap(v => resolveTxns(name, v).get(appId))
 
+  /** The `(appId, txnVersion)` that snapshot `version` itself committed
+    * under; None for a commit outside the exactly-once path. */
+  def commitTxn(name: String, version: Long): Option[(String, Long)] =
+    readManifestFile(name, version).txn
+
   /** Live deletion-vector files of the LATEST snapshot — O(1) from the
     * commit cache on the hot path (every read goes through this). */
   def liveDvs(name: String): Vector[String] = {
@@ -2074,7 +2079,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val f = fs(p)
     try f.setTimes(p, System.currentTimeMillis(), -1)
     catch {
-      case _: Exception =>
+      case e: Exception =>
+        log.debug(s"lease renewal of $p: setTimes failed, rewriting the journal instead", e)
         try if (f.exists(p)) {
           val in = f.open(p)
           val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -2088,7 +2094,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
           // resurrection
           if (stillBeating() && f.exists(p)) replaceAtomic(f, tmp, p)
           else f.delete(tmp, false)
-        } catch { case _: Exception => () }
+        } catch {
+          case e2: Exception =>
+            log.debug(s"lease renewal of $p skipped: the journal rewrite failed", e2)
+        }
     }
   }
 
@@ -2666,26 +2675,44 @@ final class GraftLake(private[graft] val spark: SparkSession,
       txnVersion: Long, partitions: Seq[String] = Nil,
       pks: Seq[String] = Nil, legacyAppId: Option[String] = None): Boolean =
     writeLock(name) {
-    // `legacyAppId`: a PRIOR spelling of the same idempotence scope (the
-    // sink's pre-normalization checkpoint-string appId). When the current
-    // scope has no watermark yet, the legacy one is adopted — otherwise an
-    // appId rename across an upgrade would reset the watermark and let a
-    // WAL-replayed epoch land twice, the exact duplicate the scope exists
-    // to prevent. Once a commit lands under the new scope, the new
-    // watermark takes over and the legacy entry goes inert.
-    def watermark = lastTxnVersion(name, appId).orElse(
-      legacyAppId.filter(_ != appId).flatMap(lastTxnVersion(name, _)))
-    if (tableExists(name) && watermark.exists(_ >= txnVersion)) false
+    if (applied(name, appId, txnVersion, legacyAppId)) false
     else {
       appendTxn(name, batch, Some((appId, txnVersion)), partitions, pks)
       true
     }
   }
 
+  /** Whether the table's watermark for `appId` is at or past
+    * `txnVersion`. `legacyAppId`: a PRIOR spelling of the same
+    * idempotence scope (the sink's pre-normalization checkpoint-string
+    * appId). When the current scope has no watermark yet, the legacy one
+    * is adopted — otherwise an appId rename across an upgrade would reset
+    * the watermark and let a WAL-replayed epoch land twice, the exact
+    * duplicate the scope exists to prevent. Once a commit lands under the
+    * new scope, the new watermark takes over and the legacy entry goes
+    * inert. */
+  private def applied(name: String, appId: String, txnVersion: Long,
+      legacyAppId: Option[String] = None): Boolean =
+    tableExists(name) && lastTxnVersion(name, appId).orElse(
+      legacyAppId.filter(_ != appId).flatMap(lastTxnVersion(name, _))).exists(_ >= txnVersion)
+
+  /** [[append]], or under `txn` the exactly-once append of
+    * [[appendIdempotent]], that commits nothing when the staged files
+    * hold no row. Returns the rows it committed, summed from the footer
+    * row counts the write collected (no count job); None when `txn` is at
+    * or below the table's watermark. */
+  def appendCounted(name: String, batch: DataFrame,
+      txn: Option[(String, Long)]): Option[Long] = writeLock(name) {
+    if (txn.exists { case (app, v) => applied(name, app, v) }) None
+    else Some(appendTxn(name, batch, txn, counted = true))
+  }
+
+  /** `counted`: count the rows staged and commit nothing when there are
+    * none. Returns the rows committed when `counted`, else -1. */
   private def appendTxn(name: String, batch: DataFrame,
       txn: Option[(String, Long)], partitions: Seq[String] = Nil,
-      pks: Seq[String] = Nil): Unit = {
-    try appendTxnOnce(name, batch, txn, partitions, pks)
+      pks: Seq[String] = Nil, counted: Boolean = false): Long = {
+    val rows = try appendTxnOnce(name, batch, txn, partitions, pks, counted)
     catch {
       // the commit's layout validation refused the staged files (a
       // concurrent REBUCKET changed the partition layout while this
@@ -2695,14 +2722,15 @@ final class GraftLake(private[graft] val spark: SparkSession,
       // racing each other and deserves the loud failure
       case _: java.util.ConcurrentModificationException =>
         graft.metrics.GraftMetrics.op("appendLayoutRetry").record(0L)
-        appendTxnOnce(name, batch, txn, partitions, pks)
+        appendTxnOnce(name, batch, txn, partitions, pks, counted)
     }
     runStandingPolicies(name)
+    rows
   }
 
   private def appendTxnOnce(name: String, batch: DataFrame,
       txn: Option[(String, Long)], partitions: Seq[String],
-      pks: Seq[String]): Unit = {
+      pks: Seq[String], counted: Boolean): Long = {
     // before ensureTable: schema evolution must not touch a read-only
     // clone's meta either (writeLock would catch the data write later,
     // but by then the registry would have drifted)
@@ -2720,9 +2748,29 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val out = withPartitionCols(enforceConstraints(meta, conformed), meta)
     writeLock(name) {
       val (added, writeStats) = stageRowsLocked(name, meta, out)
-      commitVersion(name, added, Nil, writeStats, op = "append", txn = txn,
+      val rows = if (counted) rowsIn(name, added, writeStats) else -1L
+      if (rows == 0) discardUnpublished(name, added)
+      else commitVersion(name, added, Nil, writeStats, op = "append", txn = txn,
         assumedLayout = Some(meta.partitions))
+      rows
     }
+  }
+
+  /** Rows in the data files `added`: their footer row counts, from the
+    * write's `stats` or, for a file it did not report, its footer; a count
+    * job only where a user column shadows the count key. */
+  private def rowsIn(name: String, added: Seq[(String, String)],
+      stats: Map[String, Map[String, GraftLake.Bounds]]): Long = {
+    def count(s: Map[String, Map[String, GraftLake.Bounds]], ref: (String, String)) =
+      s.get(GraftLake.fileKey(ref)).flatMap(_.get(GraftLake.RowCountKey)).collect {
+        case GraftLake.NumBounds(n, _) => n.toLong
+      }
+    val missing = added.filter(count(stats, _).isEmpty)
+    val footers = if (missing.isEmpty) Map.empty[String, Map[String, GraftLake.Bounds]]
+      else boundsOf(name, missing)
+    if (missing.forall(count(footers, _).isDefined))
+      added.flatMap(r => count(stats, r).orElse(count(footers, r))).sum
+    else spark.read.parquet(added.map(refPath(name, _)): _*).count()
   }
 
   /** `batch` cast to the table's landed data columns; the columns named in
@@ -3927,7 +3975,12 @@ final class GraftLake(private[graft] val spark: SparkSession,
             .parquet(churned.toSeq.map(d => s"$ddv/$d"): _*)
             .select("file_key").distinct().collect()
             .exists(r => groupKeys.contains(GraftLake.decodeKey(r.getString(0))))
-        } catch { case scala.util.control.NonFatal(_) => false }
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            log.debug(s"rebucket of '$name': churned DV sidecars unreadable, " +
+              "treating the group as touched and retrying it", e)
+            false
+        }
       }
       val ok = (vNow == v0 || {
         val liveNow = resolveManifest(name, vNow)._2.toSet
@@ -4238,7 +4291,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
     added.foreach { ref =>
       val p = new Path(refPath(name, ref))
       try fs(p).delete(p, false)
-      catch { case scala.util.control.NonFatal(_) => () }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          log.debug(s"unpublished file $p left for the orphan reap", e)
+      }
     }
 
   private def isManifestCollision(e: java.io.IOException): Boolean =
@@ -4633,7 +4689,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
         f.delete(lastHintPath(name), false)
         if (!f.rename(tmp, lastHintPath(name))) f.delete(tmp, false)
       }
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        log.debug(s"'_last' hint of '$name' not written; readers list the versions instead", e)
+    }
 
   /** Latest committed snapshot id WITHOUT listing `_versions/`: read the
     * advisory `_last` hint, verify it exists, then walk the DENSE id
@@ -4655,7 +4714,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
             java.nio.charset.StandardCharsets.UTF_8)
         } finally in.close()
         raw.trim.toLongOption
-      } catch { case scala.util.control.NonFatal(_) => None }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          log.debug(s"'_last' hint of '$name' unreadable; listing the versions instead", e)
+          None
+      }
     hinted match {
       case Some(h) if fs(vd).exists(new Path(vd, s"v$h.json")) =>
         var v = h
@@ -5888,6 +5951,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
 }
 
 object GraftLake {
+  /** Logs the engine's best-effort fallbacks (at debug). */
+  private[catalog] val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftLake])
+
   /** The most batch keys an upsert collects to the driver, where they
     * join its probe as a local relation. */
   private[catalog] val KeyProbeCap = 4096
@@ -6634,7 +6700,11 @@ object GraftLake {
                       !java.util.Arrays.equals(mx.getBytes(utf8), mxB) ||
                       mn.length > 256 || mx.length > 256) None
                   else Some((mn, mx))
-                } catch { case _: Exception => None }
+                } catch {
+                  case e: Exception =>
+                    log.debug(s"string bounds of '$col' in $p unreadable; the column is unbounded", e)
+                    None
+                }
                 b match {
                   case None => dead += col; acc.remove(col)
                   case Some((mn, mx)) => acc.get(col) match {
@@ -6652,7 +6722,11 @@ object GraftLake {
                 dead += col; acc.remove(col) // one unbounded group poisons the file
               case Some(conv) =>
                 val (mn, mx) = try conv(st.genericGetMin, st.genericGetMax)
-                  catch { case _: Exception => (Double.NaN, Double.NaN) }
+                  catch {
+                    case e: Exception =>
+                      log.debug(s"bounds of '$col' in $p unreadable; the column is unbounded", e)
+                      (Double.NaN, Double.NaN)
+                  }
                 if (mn.isNaN || mx.isNaN || mn.isInfinite || mx.isInfinite) {
                   dead += col; acc.remove(col)
                 } else acc.get(col) match {

@@ -7,6 +7,8 @@ import graft.metrics.GraftMetrics
 import graft.schema.{SchemaInference, SchemaUnify}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Union
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -347,13 +349,17 @@ object IngestPipeline {
     }
   }
 
+  /** A DLQ replay in progress: the DLQ snapshot id it read from, and the
+    * table its rows were parked for. */
+  private final case class Replay(version: Long, source: String)
+
   /** THREAD-LOCAL replay context: non-null while [[IngestPipeline
-    * .replayDlq]] is landing parked rows on this thread, carrying the
-    * DLQ snapshot id the replay read from. The write path uses it as an
-    * idempotency watermark under a replay-specific app id — never the
-    * shared trigger batch id, so a concurrent streaming trigger keeps
-    * its own exactly-once path untouched. */
-  private val replayTxn = new ThreadLocal[java.lang.Long]()
+    * .replayDlq]] is landing parked rows on this thread. The write path
+    * uses its snapshot id as an idempotency watermark under a
+    * replay-specific app id — never the shared trigger batch id, so a
+    * concurrent streaming trigger keeps its own exactly-once path
+    * untouched. */
+  private val replayTxn = new ThreadLocal[Replay]()
 
   /** Ships the seed schema to executors as JSON, deserializing once per
     * executor (`@transient lazy`) instead of once per record inside the
@@ -549,19 +555,27 @@ object IngestPipeline {
     * are therefore held here and released only after that write: a gate
     * frame recomputed after index admission could flip `is_dup` in the
     * parked payload. Thread-safe: a batch's topics park concurrently. */
-  private final class DeadLetters {
+  private final class DeadLetters(spark: SparkSession) {
     private val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     private val held = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    private val provenRows = new java.util.concurrent.atomic.AtomicLong()
 
     /** `records` carries the raw payload (`v`), source `partition`/`offset`,
       * and either a per-record `error` column or none (then `error`
-      * supplies the constant message). */
-    def park(table: String, records: DataFrame, error: String = null): Unit =
+      * supplies the constant message). `proven` is a lower bound on its
+      * row count known without a job (0: none known). */
+    def park(table: String, records: DataFrame, error: String = null,
+        proven: Long = 0L): Unit = {
       frames.add(records.select(col("v").as("value"), col("partition"),
         col("offset"),
         (if (records.columns.contains("error")) col("error") else lit(error))
           .as("error"),
         lit(table).as("target_table")))
+      provenRows.addAndGet(proven)
+    }
+
+    /** A lower bound on the rows parked so far, proven without a job. */
+    def proven: Long = provenRows.get
 
     /** Keep `cached` alive until [[release]]. */
     def hold(cached: DataFrame): Unit = held.add(cached)
@@ -570,20 +584,28 @@ object IngestPipeline {
       * park the records it flags — payload rendered by `toDlq` — and
       * return the rest as (v, partition, offset). The tagged frame is
       * cached and held until the batch's dead letters land, so the split
-      * evaluates `error` once per record. */
+      * evaluates `error` once per record. `proven` bounds the flagged
+      * records from below, as in [[park]]. */
     def split(table: String, values: DataFrame, error: Column,
-        toDlq: Column => Column = identity): DataFrame = {
+        toDlq: Column => Column = identity, proven: Long = 0L): DataFrame = {
       val tagged = values.withColumn("__err", error).cache()
       hold(tagged)
       park(table, tagged.filter(col("__err").isNotNull).select(toDlq(col("v")).as("v"),
-        col("partition"), col("offset"), col("__err").as("error")))
+        col("partition"), col("offset"), col("__err").as("error")), proven = proven)
       tagged.filter(col("__err").isNull).select(col("v"), col("partition"), col("offset"))
     }
 
-    /** Everything parked so far as one frame; None when nothing was. */
+    /** Everything parked so far as one frame over ONE `Union` node (every
+      * [[park]] selects the same five columns in the same order), so the
+      * landing analyzes and optimizes the batch's dead letters once, not
+      * once per parked frame; None when nothing was parked. */
     def parked: Option[DataFrame] = {
       import scala.jdk.CollectionConverters._
-      frames.asScala.reduceOption(_ unionByName _)
+      frames.asScala.toSeq match {
+        case Seq() => None
+        case Seq(one) => Some(one)
+        case all => Some(PlanBridge.ofRows(spark, Union(all.map(PlanBridge.planOf))))
+      }
     }
 
     def release(): Unit = held.forEach(df => df.unpersist())
@@ -641,19 +663,23 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     *    [[IngestPipeline.RowsPerLandingTask]] rows, conflicting batches
     *    included;
     *  - the batch's dead letters, from every topic and channel, land at
-    *    the end in ONE count and ONE `_dlq` append ([[landDeadLetters]]).
-    *    The count doubles as the corrupt-record probe, which must re-check
-    *    every JSON landing (from_json's corrupt set is not derivable from
-    *    the inference profile) — once per batch, not once per topic.
-    * A steady-state trigger is thus the profile, one write per topic, the
-    * DLQ count and the DLQ append: 8 jobs for four JSON topics with
-    * malformed and conflicting records and one Arrow topic
-    * (`IngestJobBudgetSpec`). Triage runs jobs of its own only for a JSON
-    * topic's first conflicting batch in this process (the seed without a
-    * cached schema, the emptiness check, the survivors' schemas), for an
-    * Arrow conflict or undecodable record, and for records that conflict
-    * with the table rather than the topic ([[triageEvolution]]); the
-    * dedup gate and a PK upsert add their own.
+    *    the end in ONE `_dlq` append ([[landDeadLetters]]). When a park
+    *    site proved some exist (the profile's triage verdict, a topic with
+    *    no parseable record), the append runs alone; otherwise one DLQ
+    *    count decides whether there is anything to write. That count is
+    *    the corrupt-record probe, which must re-check every JSON landing
+    *    (from_json's corrupt set is not derivable from the inference
+    *    profile) — once per batch, not once per topic.
+    * A steady-state trigger is thus the profile, one write per topic and
+    * the DLQ append: 7 jobs for four JSON topics with malformed and
+    * conflicting records and one Arrow topic (`IngestJobBudgetSpec`); a
+    * clean batch runs the DLQ count and no append. Triage runs jobs of
+    * its own only for a JSON topic's first conflicting batch in this
+    * process (the seed without a cached schema, whether any record
+    * survives, the survivors' schemas), for an Arrow conflict or
+    * undecodable record, and for records that conflict with the table
+    * rather than the topic ([[triageEvolution]]); the dedup gate and a PK
+    * upsert add their own.
     *
     * Topics landing in different tables run CONCURRENTLY
     * ([[org.apache.spark.sql.graft.CapturedTasks.runAll]], at most
@@ -697,10 +723,11 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // tagged once for the whole batch — Avro-configured topics just
     // ignore the column
     val cached = spread.withColumn("__ipc", IngestPipeline.ipcSniff(col("value"))).cache()
-    val dead = new IngestPipeline.DeadLetters
+    val dead = new IngestPipeline.DeadLetters(spark)
     try {
       val profiled = profileBatch(cached)
-      GraftMetrics.recordBatch(profiled.valuesIterator.flatMap(_.valuesIterator).map(_._1).sum)
+      val records = profiled.valuesIterator.flatMap(_.valuesIterator).map(_._1).sum
+      GraftMetrics.recordBatch(records)
       // one task per TABLE: topics sharing a table land one after another
       // in topic order (order holds within each table, not across tables)
       val tasks = profiled.toSeq.sortBy(_._1)
@@ -712,7 +739,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         } }
       org.apache.spark.sql.graft.CapturedTasks.runAll(
         spark, spark.sparkContext.defaultParallelism)(tasks)
-      landDeadLetters(dead)
+      landDeadLetters(dead, records)
     } finally {
       dead.release()
       cached.unpersist()
@@ -728,33 +755,42 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
   private def txnWatermark(table: String): Option[(String, Long)] =
     config.txnAppId.flatMap { app =>
       IngestPipeline.replayTxn.get() match {
-        case v if v != null => Some((s"$app:replay:$table", v.longValue))
+        case r if r != null => Some((replayKey(app, table, r.source), r.version))
         case _ if currentBatchId >= 0 => Some((s"$app:$table", currentBatchId))
         case _ => None
       }
     }
 
-  /** Land a batch's dead letters: ONE count (the DLQ metric, the
-    * emptiness check and the slice count in one job) and ONE append,
-    * coalesced without a shuffle to ceil(n / maxRecordsPerFile) slices.
-    * The count runs over the union coalesced to `defaultParallelism`
-    * tasks: the union holds a few small partitions per parked frame, and
-    * a task per partition would cost more than its rows. Under
-    * `txnAppId` the append is idempotent like any landing table's, so a
-    * redelivered batch parks its records once. */
-  private def landDeadLetters(dead: IngestPipeline.DeadLetters): Unit =
+  /** The exactly-once key of a DLQ replay's write to `table`. The replay's
+    * own dead letters also key on `source`, the table the replayed rows
+    * were parked for, so that a re-run recognizes the DLQ append of its
+    * own crashed run ([[replayDlq]]) and not another table's. */
+  private def replayKey(app: String, table: String, source: String): String =
+    if (config.dlqTable.contains(table)) s"$app:replay:$table:$source"
+    else s"$app:replay:$table"
+
+  /** Land the dead letters of a batch of `nRecords` records in ONE
+    * append, coalesced without a shuffle to ceil(n / maxRecordsPerFile)
+    * slices. When a park site proved some exist, n = `nRecords` (an upper
+    * bound on them) and no job runs before the append. Otherwise ONE
+    * count decides whether there is anything to write and gives n; it
+    * runs over the union coalesced to `defaultParallelism` tasks, since
+    * the union holds a few small partitions per parked frame and a task
+    * per partition would cost more than its rows. `dlq.records.total`
+    * adds the rows the append committed, from its footer row counts; an
+    * append whose files hold no row commits nothing. Under `txnAppId`
+    * the append is idempotent like any landing table's, so a redelivered
+    * batch parks and counts its records once. */
+  private def landDeadLetters(dead: IngestPipeline.DeadLetters, nRecords: Long): Unit =
     for (dlq <- config.dlqTable; parked <- dead.parked) {
-      val n = parked.coalesce(spark.sparkContext.defaultParallelism).count()
-      if (n > 0) {
-        GraftMetrics.dlqRecords.add(n)
-        val out = parked.coalesce(IngestPipeline.slicesFor(n))
-        txnWatermark(dlq) match {
-          case Some((appId, ver)) =>
-            if (!lake.appendIdempotent(dlq, out, appId, ver))
-              GraftMetrics.op("txnSkippedBatches").record(0L)
-          case None => lake.append(dlq, out)
+      val n = if (dead.proven > 0) nRecords
+        else parked.coalesce(spark.sparkContext.defaultParallelism).count()
+      if (n > 0)
+        lake.appendCounted(dlq, parked.coalesce(IngestPipeline.slicesFor(n)),
+            txnWatermark(dlq)) match {
+          case Some(rows) => GraftMetrics.dlqRecords.add(rows)
+          case None => GraftMetrics.op("txnSkippedBatches").record(0L)
         }
-      }
     }
 
   /** Whether the profile job computes the JSON triage verdict of topics
@@ -1090,7 +1126,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         // either landed or reported): DLQ them all, or fail loudly.
         if (config.dlqTable.isEmpty)
           failNoDlq(values, s"No record in topic '$topic' batch parses as JSON")
-        dead.park(table, values, "unparseable JSON")
+        dead.park(table, values, "unparseable JSON", proven = nRecords)
       case Right(Some(unified)) =>
         // the batch unified INTERNALLY and with the topic cache, but can
         // still conflict with the TABLE schema (cross-topic routing, a
@@ -1102,7 +1138,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
             triageEvolution(table, values, e, dead)
         }
       case Left(_) =>
-        triage(IngestPipeline.JsonWire, topic, table, values, dead, profile.verdict)
+        triage(IngestPipeline.JsonWire, topic, table, values, dead, profile.verdict, nRecords)
     }
   }
 
@@ -1150,8 +1186,9 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * fewer write tasks, fewer footer-stats reads, fewer manifest entries,
     * less auto-compaction pressure — while a large trigger keeps its parse
     * spread across cores (`maxRecordsPerFile` still rolls oversized
-    * tasks). The corrupt records are always parked (and
-    * checked by the batch's DLQ count) when a DLQ is configured:
+    * tasks). The corrupt records are always parked when a DLQ is
+    * configured, with no proven bound (the batch's DLQ count checks them
+    * unless another site proved dead letters):
     * from_json's corrupt set is NOT a subset of what per-record inference
     * found unparseable (inference types an array by its FIRST element and
     * sniffs timestamps with its own grammar, so a record can infer cleanly
@@ -1181,8 +1218,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     val good = if (nRecords < 0) good0
       else good0.coalesce(IngestPipeline.slicesFor(nRecords, IngestPipeline.RowsPerLandingTask))
     writeToLake(table, good, dead, nRecords)
-    // parked whether or not anything is corrupt: the batch's one DLQ
-    // count is the emptiness check
+    // parked whether or not anything is corrupt: the batch's DLQ landing
+    // finds out whether anything is
     if (config.dlqTable.isDefined)
       dead.park(table, parsed
         .filter(col("__corrupt").isNotNull || col("__parsed").isNull)
@@ -1197,15 +1234,17 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * error ([[IngestPipeline.recordError]]), the rest are re-batched and
     * landed. With no DLQ configured the batch fails instead.
     *
-    * The verdict — how many records stay, and the union of their schemas —
-    * comes from the profile job when it computed one against the topic's
-    * current seed (`verdict`); then triage lands with no job of its own,
-    * sized by the count. Otherwise (a topic's first conflicting batch in
-    * this process, or Arrow) triage runs the verdict jobs: the seed
-    * (without a cached schema), the emptiness check and the union. */
+    * The verdict — how many of the `nRecords` records stay, and the union
+    * of their schemas — comes from the profile job when it computed one
+    * against the topic's current seed (`verdict`); then triage lands with
+    * no job of its own, sized by the count, and the `nRecords - kept`
+    * records it parks prove the batch's dead letters. Otherwise (a
+    * topic's first conflicting batch in this process, or Arrow) triage
+    * runs the verdict jobs: the seed (without a cached schema), whether
+    * any record survives, and the union. */
   private def triage[T: TypeTag](wire: IngestPipeline.Wire[T], topic: String,
       table: String, values: DataFrame, dead: IngestPipeline.DeadLetters,
-      verdict: Option[IngestPipeline.TriageVerdict] = None): Unit = {
+      verdict: Option[IngestPipeline.TriageVerdict] = None, nRecords: Long = -1L): Unit = {
     if (config.dlqTable.isEmpty) failNoDlq(values, s"${wire.conflict} in topic '$topic'")
     val profiled = verdict.filter(v => schemaCache.get(topic).contains(v.seed))
     val seed = profiled.map(_.seed).orElse(schemaCache.get(topic))
@@ -1213,7 +1252,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     val holder = new IngestPipeline.SeedHolder(seed.json)
     val good = dead.split(table, values,
       udf((v: T) => IngestPipeline.recordError(wire, holder.schema, v)).apply(col("v")),
-      wire.toDlq)
+      wire.toDlq, proven = profiled.fold(0L)(v => math.max(0L, nRecords - v.kept)))
     // kept = -1: some, count unknown
     val (kept, keptSchemas) = profiled match {
       case Some(v) => (v.kept, v.schema)
@@ -1291,8 +1330,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // concat_ws skips nulls: the column lists exactly the violated names.
     // The tagged frame is CACHED and held until the batch's dead letters
     // land — the DLQ split and the write must not re-run the quality/dedup
-    // lineage, and the job count per trigger stays fixed (the batch's one
-    // DLQ count doubles as the emptiness check)
+    // lineage, and the gate adds no job: the batch's DLQ landing finds out
+    // whether any row violated
     val violName = concat_ws(", ", checks.map { case (n, c) =>
       when(!c, lit(n))
     }: _*)
@@ -1407,7 +1446,13 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       "replayDlq requires a configured dlqTable"))
     if (!lake.tableExists(dlq)) return (0L, 0L)
     val parkedAs = fromTable.getOrElse(config.tableFor(topic))
-    val pre = lake.versions(dlq).lastOption.getOrElse(return (0L, 0L))
+    val head = lake.versions(dlq).lastOption.getOrElse(return (0L, 0L))
+    // a replay of these rows that crashed between appending its fresh
+    // failures and the DLQ rewrite left that append at the head, keyed
+    // with the snapshot it read: resume from that snapshot, so its
+    // landings no-op and its fresh failures count as this run's
+    val pre = (for (app <- config.txnAppId; (key, read) <- lake.commitTxn(dlq, head)
+      if key == replayKey(app, dlq, parkedAs)) yield read).getOrElse(head)
     val all = lake.readVersion(dlq, pre)
     val mine = all.filter(col("target_table") === parkedAs).cache()
     try {
@@ -1433,13 +1478,14 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       // concurrent trigger keeps its own exactly-once path) swaps in the
       // DLQ snapshot id as the watermark instead: monotonic per target,
       // so a replay that crashed between landing and the DLQ rewrite
-      // no-ops on re-run rather than duplicating.
-      IngestPipeline.replayTxn.set(java.lang.Long.valueOf(pre))
+      // no-ops on re-run rather than duplicating (after its DLQ append
+      // too: `pre` is then the crashed run's snapshot, see above).
+      IngestPipeline.replayTxn.set(IngestPipeline.Replay(pre, parkedAs))
       // fresh failures land before the post-replay version is read below
-      val dead = new IngestPipeline.DeadLetters
+      val dead = new IngestPipeline.DeadLetters(spark)
       try {
         processTopic(topic, config.tableFor(topic), tagged, profiles, dead)
-        landDeadLetters(dead)
+        landDeadLetters(dead, n)
       } finally {
         IngestPipeline.replayTxn.remove()
         dead.release()

@@ -210,22 +210,63 @@ object Perf {
     }
   }
 
+  /** CPU ms of the process (`None` key) and of each live thread (keyed by
+    * id), each with its `comm` name (15 characters at most). */
+  private type ThreadCpu = Map[Option[String], (String, Long)]
+
+  /** The [[ThreadCpu]] of this process now, from `/proc/self`; None where
+    * `/proc/self/task` is absent. A clock tick is taken as 10 ms
+    * (USER_HZ = 100, the Linux default). */
+  private def threadCpuMs(): Option[ThreadCpu] = {
+    def cpuMs(dir: java.nio.file.Path): Option[(String, Long)] =
+      try {
+        val stat = new String(Files.readAllBytes(dir.resolve("stat")), StandardCharsets.UTF_8)
+        val comm = new String(Files.readAllBytes(dir.resolve("comm")), StandardCharsets.UTF_8).trim
+        // the fields after "(comm) ": utime and stime are fields 14 and 15
+        val f = stat.substring(stat.lastIndexOf(')') + 2).split(' ')
+        Some((comm, (f(11).toLong + f(12).toLong) * 10L))
+      } catch { case _: java.io.IOException => None } // the thread exited
+    Option(new java.io.File("/proc/self/task").listFiles()).map { tasks =>
+      (tasks.toSeq.flatMap(t => cpuMs(t.toPath).map(Some(t.getName) -> _)) ++
+        cpuMs(Paths.get("/proc/self")).map(None -> _)).toMap
+    }
+  }
+
+  /** The class of a thread by its `comm` name: JIT compilers, GC, executor
+    * tasks, engine task forks, the driver, this tool's sampler, the rest. */
+  private def threadClass(comm: String): String = comm match {
+    case c if c.startsWith("C2 CompilerThre") => "jit-c2"
+    case c if c.startsWith("C1 CompilerThre") => "jit-c1"
+    case c if c.startsWith("GC Thread") || c.startsWith("G1 ") => "gc"
+    case c if c.startsWith("Executor task") => "executor-task"
+    case c if c.startsWith("graft-task") => "graft-task"
+    // the launcher runs `main` on a thread that keeps the process's name
+    case "java" | "main" => "driver-main"
+    case c if c.startsWith("graft-perf-samp") => "sampler"
+    case _ => "other"
+  }
+
   /** Every Spark job one warm query run submits, with its call site and
-    * timing, the engine op-sensor totals, and driver and executor
-    * stack-sample histograms. A micro-batch's cost at constant data volume
-    * is mostly its job count times the scheduling latency; the histograms
-    * show where the gaps between jobs go. */
+    * timing, the engine op-sensor totals, the process CPU per thread
+    * class, and driver and executor stack-sample histograms. A
+    * micro-batch's cost at constant data volume is mostly its job count
+    * times the scheduling latency; the histograms show where the gaps
+    * between jobs go, and the thread classes how much of the CPU is JIT
+    * warm-up. */
   private def profile(spark: SparkSession, args: IndexedSeq[String]): Unit = {
     val query = args(0)
     var t0 = 0L
     var jobs = Seq.empty[JobTimeline.Job]
     var samples = Map.empty[Either[String, (String, String)], Int]
     var sweeps = 0
+    var cpu: Option[(ThreadCpu, ThreadCpu)] = None
     timedRuns(spark, query, args(1), iters = 1, measure = run => {
       GraftMetrics.reset()
       t0 = System.currentTimeMillis()
+      val cpu0 = threadCpuMs()
       val ((rows, counts, n), js) =
         JobTimeline.record(spark.sparkContext)(sampled(profileKey)(run()))
+      cpu = cpu0.zip(threadCpuMs())
       jobs = js; samples = counts; sweeps = n
       rows
     }) { (_, _, rows, s, c) =>
@@ -243,6 +284,20 @@ object Perf {
       s"task output ${jobs.map(_.outputBytes).sum} B")
     GraftMetrics.totalsMs().toSeq.sortBy(-_._2._2).foreach {
       case (op, (c, ms)) => println(f"[profile]   op=$op%-28s n=$c%-4d $ms%.0f ms")
+    }
+    cpu match {
+      case None => println("[profile] process CPU by thread class: n/a (no /proc/self/task)")
+      case Some((before, after)) =>
+        def ms(m: ThreadCpu, k: Option[String]) = m.get(k).fold(0L)(_._2)
+        val total = ms(after, None) - ms(before, None)
+        val live = after.toSeq.collect { case (k @ Some(_), (comm, v)) =>
+          threadClass(comm) -> (v - ms(before, k)) }
+        val classes = live.groupMapReduce(_._1)(_._2)(_ + _) +
+          ("exited-threads" -> (total - live.map(_._2).sum))
+        println(s"[profile] process CPU by thread class: $total ms")
+        classes.toSeq.sortBy(-_._2).foreach { case (c, v) =>
+          println(f"[profile]   $c%-15s $v%7d ms ${v * 100.0 / total.max(1)}%5.1f%%")
+        }
     }
     val driver = samples.collect { case (Right(k), c) => k -> c }
     val total = driver.values.sum.max(1)

@@ -77,16 +77,20 @@ object JobTimeline {
       !frame.contains(getClass.getName)
 
   /** The first engine frame of the submitting thread's call site (carried
-    * through SQL execution threads), else of the last stage's, else of the
-    * call sites of the job's SQL execution and of that execution's root,
-    * else the last stage's name. The execution's call site names the
-    * engine frame of a job that Spark submitted from its own threads: a
-    * broadcast, or a stage that adaptive execution materializes. */
+    * through SQL execution threads), else of the result stage's, else of
+    * the call sites of the job's SQL execution and of that execution's
+    * root, else the result stage's name. The execution's call site names
+    * the engine frame of a job that Spark submitted from its own threads:
+    * a broadcast, or a stage that adaptive execution materializes. The
+    * result stage is the job's highest stage id: a job lists its stages in
+    * no fixed order, and a parent stage an earlier job created (a shuffle
+    * of the trigger's cached batch) carries that job's call site. */
   private def site(e: SparkListenerJobStart,
       executions: java.util.Map[Long, (Long, String)]): String = {
     val fromProps = Option(e.properties)
       .flatMap(p => Option(p.getProperty(CallSite.LONG_FORM))).toSeq.flatMap(_.split('\n'))
-    val fromStage = e.stageInfos.lastOption.toSeq.flatMap(_.details.split('\n'))
+    val result = e.stageInfos.maxByOption(_.stageId)
+    val fromStage = result.toSeq.flatMap(_.details.split('\n'))
     def fromExecution = Option(e.properties)
       .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
       .flatMap(id => Option(executions.get(id.toLong))).toSeq
@@ -94,6 +98,6 @@ object JobTimeline {
         details +: Option(executions.get(root)).map(_._2).toSeq
       }.flatMap(_.split('\n'))
     (fromProps.iterator ++ fromStage ++ fromExecution).find(isEngineFrame)
-      .getOrElse(e.stageInfos.lastOption.map(_.name).getOrElse("?")).trim
+      .getOrElse(result.map(_.name).getOrElse("?")).trim
   }
 }

@@ -769,6 +769,44 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(p.lake.read("_dlq").count() === 0)
   }
 
+  // The crash point: the replay landed its records and appended its
+  // still-failing one to the DLQ, then died before the DLQ rewrite
+  // committed. The re-run must recognize that append as its own.
+  test("DLQ replay re-run after a crash between its DLQ append and its DLQ rewrite lands nothing twice") {
+    import graft.catalog.{RecordingAfs, RecordingFs}
+    graft.catalog.GraftLake.invalidateCaches()
+    spark.sparkContext.hadoopConfiguration.set("fs.graftfault.impl",
+      classOf[RecordingFs].getName)
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.AbstractFileSystem.graftfault.impl", classOf[RecordingAfs].getName)
+    val wh = "graftfault://" + Files.createTempDirectory("graft-rcrash")
+    def config(route: String) = IngestConfig(warehouse = wh,
+      topic2table = Map("rj2" -> route), txnAppId = Some("app"))
+    // misrouted: rj2 lands in rj1's table, where its records conflict
+    val p1 = new IngestPipeline(spark, config("rj1"))
+    p1.processBatch(batchOf((1 to 3).map(i => "rj1" -> s"""{"id":$i,"a":$i}"""): _*), 0)
+    p1.processBatch(batchOf((1 to 3).map(i =>
+      "rj2" -> s"""{"id":$i,"a":"2024-03-0${i}T12:00:00Z"}""") :+ ("rj2" -> "{{{not json"): _*), 1)
+    assert(p1.lake.read("_dlq").count() === 4)
+    // the replay's second rename into _dlq/data/ is its DLQ rewrite's file
+    val dlqRenames = new java.util.concurrent.atomic.AtomicInteger()
+    RecordingFs.afterRename = dst =>
+      if (dst.contains("/_dlq/data/") && dlqRenames.incrementAndGet() == 2)
+        throw new java.io.IOException("crash before the DLQ rewrite commits")
+    try intercept[Exception](
+      new IngestPipeline(spark, config("rj2_t")).replayDlq("rj2", fromTable = Some("rj1")))
+    finally RecordingFs.afterRename = _ => ()
+    assert(dlqRenames.get() === 2)
+    graft.catalog.GraftLake.invalidateCaches()
+    val p3 = new IngestPipeline(spark, config("rj2_t"))
+    assert(p3.replayDlq("rj2", fromTable = Some("rj1")) === ((4L, 1L)))
+    val landed = p3.lake.read("rj2_t")
+    assert(landed.count() === 3)
+    assert(landed.select("id").distinct().count() === 3)
+    val dlq = p3.lake.read("_dlq").select("value", "target_table").collect()
+    assert(dlq.map(r => (r.getString(0), r.getString(1))).toSeq === Seq(("{{{not json", "rj2_t")))
+  }
+
   test("txnAppId: a redelivered micro-batch lands exactly once") {
     graft.catalog.GraftLake.invalidateCaches()
     val p = new IngestPipeline(spark, IngestConfig(
