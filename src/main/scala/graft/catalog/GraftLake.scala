@@ -485,23 +485,14 @@ final class GraftLake(private[graft] val spark: SparkSession,
   def detail(name: String): DataFrame = {
     val meta = readMeta(name)
     val vs = versions(name)
-    val (files, bytes, liveKeys, footerRows) = vs.lastOption match {
+    val (files, bytes, liveKeys, footerTotal) = vs.lastOption match {
       case None => (0L, 0L, Set.empty[String], Some(0L))
       case Some(v) =>
         val (_, resolved) = snapshotResolved(name, v)
         val f = fs(new Path(dataDir(name)))
-        val stats = statsFor(name, v)
         // Σ footer row counts, reusing the files already resolved —
         // None when a live file predates the stat or a column shadows it
-        val counts = resolved.map(r =>
-          stats.getOrElse(GraftLake.fileKey(r._1), Map.empty)
-            .get(GraftLake.RowCountKey))
-        val total =
-          if (rowCountShadowed(meta) || counts.exists(_.isEmpty)) None
-          else Some(counts.flatten.map {
-            case GraftLake.NumBounds(lo, _) => lo.toLong
-            case _ => 0L
-          }.sum)
+        val total = footerRows(meta, statsFor(name, v), resolved.map(_._1))
         (resolved.size.toLong,
           resolved.map(r => f.getFileStatus(r._2).getLen).sum,
           resolved.map(r => GraftLake.fileKey(r._1)).toSet,
@@ -511,7 +502,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val dvLiveEntries =
       liveDvEntriesByFile(name, liveDvs(name), liveKeys).values.sum
     val renamed = GraftLake.logicalNamesOf(meta.schema)
-    val nRows = footerRows.map(_ - dvLiveEntries).getOrElse(-1L)
+    val nRows = footerTotal.map(_ - dvLiveEntries).getOrElse(-1L)
     import spark.implicits._
     Seq((name, vs.size.toLong, vs.lastOption.getOrElse(-1L), files, nRows,
       bytes, meta.schema.fields.length.toLong,
@@ -2819,7 +2810,19 @@ final class GraftLake(private[graft] val spark: SparkSession,
     require(meta.pks.nonEmpty, s"upsert on '$name' requires configured PKs")
     val pks = meta.pks
     val pkCols = pks.map(c => col(quoted(c)))
-    val batchP = toPhysical(meta.schema, batch)
+    val landed = toPhysical(meta.schema, batch)
+    // the batch's landed keys: up to KeyProbeCap of them on the driver,
+    // where they feed the probe as a local relation and, up to
+    // BucketHashCap, pick the files that can hold one (bucket pruning); a
+    // larger batch probes against its own keys
+    val keys = conformBatch(landed, meta).select(pkCols: _*)
+    val keyRows = keys.coalesce(1).limit(GraftLake.KeyProbeCap + 1).collect()
+    val small = keyRows.length <= GraftLake.KeyProbeCap
+    // a batch within KeyProbeCap is one task's work: coalesced at its
+    // source, the last-wins window needs no exchange and its rows are
+    // written without one (the writer's partition sort still gives each
+    // touched bucket one file); a larger batch keeps its parallelism
+    val batchP = if (small) landed.coalesce(1) else landed
     // W4: dedup duplicate PKs within the batch — last wins — on the keys
     // as they land (after the conform cast), ordered by `ordering` (e.g.
     // the Kafka offset, not landed: it rides through the conform as a
@@ -2837,13 +2840,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn" +: ord.map(_._1): _*)
       })
-    // the batch's landed keys: up to KeyProbeCap of them on the driver,
-    // where they feed the probe as a local relation and, up to
-    // BucketHashCap, pick the files that can hold one (bucket pruning); a
-    // larger batch probes against its own keys
-    val keys = conformBatch(batchP, meta).select(pkCols: _*)
-    val keyRows = keys.coalesce(1).limit(GraftLake.KeyProbeCap + 1).collect()
-    val small = keyRows.length <= GraftLake.KeyProbeCap
     val distinctKeys = keyRows.distinctBy(GraftLake.groupingKey)
     if (refuseDuplicates && (
         if (small) distinctKeys.length != keyRows.length
@@ -2901,7 +2897,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
               .withColumn(ct, lit("update_preimage")).unionByName(post))
         }
       val (added, addedStats) = stageRowsLocked(name, meta,
-        withPartitionCols(rows.drop(tIns), meta))
+        withPartitionCols(rows.drop(tIns), meta), distribute = !small)
       val dvNames = if (n == 0L) Nil else publishDvStage(name, dvStage)
       val before = if (n == 0L) 0L else dvEntryCountCached(name, liveDvs(name))
       commitVersion(name, added, Nil, addedStats, op = "upsert",
@@ -2964,12 +2960,17 @@ final class GraftLake(private[graft] val spark: SparkSession,
   /** Land `out` (physical columns, partition columns attached) through
     * the append machinery — stats collected by the commit protocol,
     * partition dirs derived from the row values — without committing.
-    * Returns the commit's add-delta and its stats. */
-  private def stageRowsLocked(name: String, meta: TableMeta, out: DataFrame)
+    * Returns the commit's add-delta and its stats. `distribute = false`
+    * writes `out` as it is partitioned, with no [[distributeForWrite]]
+    * exchange: for a frame the caller already holds in one task, whose
+    * write sorts by partition and so gives each partition one file. */
+  private def stageRowsLocked(name: String, meta: TableMeta, out: DataFrame,
+      distribute: Boolean = true)
       : (Seq[(String, String)], Map[String, Map[String, GraftLake.Bounds]]) = {
     val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
     try {
-      val writer = distributeForWrite(out, meta).write.mode(SaveMode.Overwrite)
+      val writer = (if (distribute) distributeForWrite(out, meta) else out)
+        .write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", maxRecordsPerFile)
       val parted =
         if (meta.partitions.nonEmpty)
@@ -3256,7 +3257,17 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * through the middle of a partition cannot drop its non-matching rows.
     * Unpartitioned tables always rewrite the full file set (there is no
     * sub-table swap unit), so the predicate only matters as an is-empty
-    * no-op check there. */
+    * no-op check there.
+    *
+    * The rewrite is sized from the manifest alone, with no count job: its
+    * rows are bounded by the scoped files' footer row counts and its
+    * input bytes by their listed sizes. A rewrite within both
+    * `targetRecordsPerFile` rows and
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` bytes runs in ONE
+    * task with no exchange and writes one file per partition. A larger
+    * one rebalances (AQE on) or repartitions to ceil(rows / target)
+    * tasks (AQE off; a count job only where a file lacks its footer count
+    * or a user column shadows it). */
   def compact(name: String, targetRecordsPerFile: Long = maxRecordsPerFile,
       predicate: Option[Column] = None,
       clusterBy: Seq[String] = Nil): Unit = {
@@ -3316,9 +3327,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
       toPhys.find(_._1.equalsIgnoreCase(c)).map(_._2).getOrElse(c)
     val clusterCols = clusterBy.map(physName)
     val dd = dataDir(name)
-    val paths = refs0.map { case (rel, fn) =>
-      if (rel.isEmpty) s"$dd/$fn" else s"$dd/$rel/$fn"
-    }
+    val paths = refs0.map(refPath(name, _))
     val full = StructType(meta.schema.fields.toSeq ++ partitionFields(meta))
     // the pinned-snapshot scan (v0's files, v0's stats) — NOT the data
     // directory: concurrently appended files must not be read, rewritten
@@ -3376,22 +3385,45 @@ final class GraftLake(private[graft] val spark: SparkSession,
       }
       c -> numeric
     }.toMap
+    // the rewrite's size from the manifest, with no job: its rows bounded
+    // by the scoped files' footer row counts (DV-masked rows included;
+    // None when a file lacks the count or a user column shadows it), its
+    // bytes from the statuses the scan's file index listed
+    val rowBound = footerRows(meta, statsFor(name, v0), scopedRefs)
+    val inputBytes = {
+      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+        LogicalRelation, PartitioningAwareFileIndex}
+      def bare(p: Path) = Path.getPathWithoutSchemeAndAuthority(p).toString
+      val scopedPaths = scopedRefs.map(r => bare(new Path(refPath(name, r)))).toSet
+      scanOnly.queryExecution.analyzed.collect { case l: LogicalRelation =>
+        l.relation }.collect { case h: HadoopFsRelation => h.location }
+        .collect { case i: PartitioningAwareFileIndex => i.allFiles() }.flatten
+        .filter(f => scopedPaths.contains(bare(f.getPath))).map(_.getLen).sum
+    }
+    // a rewrite that fits one output file per partition and one task's
+    // advisory input runs in one task with no exchange: the writer's
+    // partition sort gives each partition one file, the layout a
+    // rebalance would coalesce this input to anyway
+    val oneTask = rowBound.exists(_ <= targetRecordsPerFile) &&
+      inputBytes <= spark.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     // the REBALANCE hint only resolves under adaptive execution; when the
     // session runs AQE-off (e.g. inside the ingest trigger scope, which
     // trades AQE replanning latency away for bounded micro-batches) the
     // hint would be silently DROPPED and compaction would re-emit one
-    // file per input task — so compute an explicit output partition count
-    // from the scoped row count instead (one extra tiny agg against a
-    // scan the rewrite pays for anyway)
+    // file per input task — so take an explicit output partition count
+    // from the row bound instead (a count job only where there is none)
     val adaptiveOn = spark.conf
       .get("spark.sql.adaptive.enabled", "true").toBoolean
     def rebalanced(df: DataFrame): DataFrame =
-      if (adaptiveOn) {
+      if (oneTask) df.coalesce(1)
+      else if (adaptiveOn) {
         if (partCols.nonEmpty) df.hint("rebalance", partCols.map(col(_)): _*)
         else df.hint("rebalance")
       } else {
+        val rows = rowBound.getOrElse(df.count())
         val n = math.max(1L, math.min(Int.MaxValue.toLong,
-          (df.count() + targetRecordsPerFile - 1) / targetRecordsPerFile)).toInt
+          (rows + targetRecordsPerFile - 1) / targetRecordsPerFile)).toInt
         if (partCols.nonEmpty) df.repartition(n, partCols.map(c => col(quoted(c))): _*)
         else df.repartition(n)
       }
@@ -5628,6 +5660,21 @@ final class GraftLake(private[graft] val spark: SparkSession,
   private def rowCountShadowed(meta: TableMeta): Boolean =
     meta.schema.fieldNames.exists(_.equalsIgnoreCase(GraftLake.RowCountKey))
 
+  /** Σ footer row counts of the files `refs` in `stats` (DV-masked rows
+    * included); None when one lacks the count or a user column shadows
+    * it. */
+  private def footerRows(meta: TableMeta,
+      stats: Map[String, Map[String, GraftLake.Bounds]],
+      refs: Seq[(String, String)]): Option[Long] =
+    if (rowCountShadowed(meta)) None
+    else refs.foldLeft(Option(0L)) { (sum, r) =>
+      for {
+        s <- sum
+        n <- stats.get(GraftLake.fileKey(r)).flatMap(_.get(GraftLake.RowCountKey))
+          .collect { case GraftLake.NumBounds(n, _) => n.toLong }
+      } yield s + n
+    }
+
   /** Live DV entry count per data-file key, restricted to `liveKeys` —
     * inert entries for retired files never subtract. Bounded driver
     * collect: one row per data file the DVs touch. */
@@ -5639,20 +5686,13 @@ final class GraftLake(private[graft] val spark: SparkSession,
       .filter(kn => liveKeys.contains(kn._1)).toMap
 
   def rowCountFromStats(name: String): Option[Long] = {
-    if (rowCountShadowed(readMeta(name))) return None
+    val meta = readMeta(name)
+    if (rowCountShadowed(meta)) return None
     val vs = versions(name)
     if (vs.isEmpty) return Some(0L)
     val v = vs.last
     val (_, files, _) = resolveManifest(name, v)
-    val stats = statsFor(name, v)
-    val counts = files.map(r =>
-      stats.getOrElse(GraftLake.fileKey(r), Map.empty)
-        .get(GraftLake.RowCountKey))
-    if (counts.exists(_.isEmpty)) return None
-    val total = counts.flatten.map {
-      case GraftLake.NumBounds(lo, _) => lo.toLong
-      case _ => 0L
-    }.sum
+    val total = footerRows(meta, statsFor(name, v), files).getOrElse(return None)
     val masked = liveDvEntriesByFile(name, liveDvs(name),
       files.map(GraftLake.fileKey).toSet).values.sum
     Some(total - masked)

@@ -232,6 +232,15 @@ object Perf {
     }
   }
 
+  /** Bytes this process has passed to write calls (`wchar` of
+    * `/proc/self/io`: files, shuffle and spill alike, page cache or not);
+    * None where the file is absent. */
+  private def processWchar(): Option[Long] =
+    try {
+      val io = new String(Files.readAllBytes(Paths.get("/proc/self/io")), StandardCharsets.UTF_8)
+      io.linesIterator.collectFirst { case l if l.startsWith("wchar:") => l.drop(6).trim.toLong }
+    } catch { case _: java.io.IOException => None }
+
   /** The class of a thread by its `comm` name: JIT compilers, GC, executor
     * tasks, engine task forks, the driver, this tool's sampler, the rest. */
   private def threadClass(comm: String): String = comm match {
@@ -260,13 +269,16 @@ object Perf {
     var samples = Map.empty[Either[String, (String, String)], Int]
     var sweeps = 0
     var cpu: Option[(ThreadCpu, ThreadCpu)] = None
+    var wchar: Option[Long] = None
     timedRuns(spark, query, args(1), iters = 1, measure = run => {
       GraftMetrics.reset()
       t0 = System.currentTimeMillis()
       val cpu0 = threadCpuMs()
+      val wchar0 = processWchar()
       val ((rows, counts, n), js) =
         JobTimeline.record(spark.sparkContext)(sampled(profileKey)(run()))
       cpu = cpu0.zip(threadCpuMs())
+      wchar = wchar0.zip(processWchar()).map { case (a, b) => b - a }
       jobs = js; samples = counts; sweeps = n
       rows
     }) { (_, _, rows, s, c) =>
@@ -280,11 +292,14 @@ object Perf {
         f"shuffle=${j.shuffleWriteBytes}%-8d out=${j.outputBytes}%-8d " +
         s"tasks=${j.tasks.mkString("+")} ${j.site.take(90)}")
     }
-    println(s"[profile] shuffle write ${jobs.map(_.shuffleWriteBytes).sum} B, " +
-      s"task output ${jobs.map(_.outputBytes).sum} B")
     GraftMetrics.totalsMs().toSeq.sortBy(-_._2._2).foreach {
       case (op, (c, ms)) => println(f"[profile]   op=$op%-28s n=$c%-4d $ms%.0f ms")
     }
+    // a shuffle byte shows about twice in wchar: the map side writes it to
+    // a per-reducer file, then copies it into its data file
+    println(s"[profile] process write bytes: wchar ${wchar.fold("n/a")(b => s"$b B")}, " +
+      s"task output ${jobs.map(_.outputBytes).sum} B, " +
+      s"shuffle write ${jobs.map(_.shuffleWriteBytes).sum} B")
     cpu match {
       case None => println("[profile] process CPU by thread class: n/a (no /proc/self/task)")
       case Some((before, after)) =>
@@ -333,7 +348,8 @@ object Perf {
   }
 
   /** Per-job breakdown of three fixed-size upsert flushes against a
-    * PK-bucketed table: the steady-state MERGE latency budget. */
+    * PK-bucketed table, with each flush's write bytes as `profile` prints
+    * them: the steady-state MERGE latency budget. */
   private def flush(spark: SparkSession, args: IndexedSeq[String]): Unit = {
     val buckets = args.lift(1).fold(250)(_.toInt)
     val lake = new GraftLake(spark, Files.createTempDirectory("graft-bprobe").toString)
@@ -349,12 +365,16 @@ object Perf {
         lit("X").as("o_orderstatus"), lit(1.0).as("o_totalprice"))
         .repartition(4)
       val t0 = System.currentTimeMillis()
+      val wchar0 = processWchar()
       val (wall, jobs) = JobTimeline.record(spark.sparkContext) {
         val t0n = System.nanoTime()
         lake.upsert("m", batch)
         (System.nanoTime() - t0n) / 1e6
       }
-      println(f"[bprobe] flush=$f wall=$wall%.0f ms, jobs:")
+      val wchar = wchar0.zip(processWchar()).map { case (a, b) => b - a }
+      println(f"[bprobe] flush=$f wall=$wall%.0f ms, " +
+        s"wchar ${wchar.fold("n/a")(b => s"$b B")}, task output ${jobs.map(_.outputBytes).sum} B, " +
+        s"shuffle write ${jobs.map(_.shuffleWriteBytes).sum} B, jobs:")
       jobs.foreach { j =>
         println(f"[bprobe]   job=${j.id}%-4d at=${j.startMs - t0}%-6d " +
           f"dur=${j.durationMs.fold("?")(_.toString)}%-6s ms")

@@ -165,6 +165,33 @@ class UpsertPathDifferentialSpec extends AnyFunSuite {
       }
     }
 
+  // A batch above KeyProbeCap rows keeps its parallelism: it probes
+  // against its own keys, its last-wins window and its rows' write run
+  // through exchanges, and the write's distribution gives each touched
+  // bucket one file (without it, each window task would write a file per
+  // bucket).
+  test("an upsert batch above KeyProbeCap takes the distributed write and lands the model's rows") {
+    GraftLake.invalidateCaches()
+    val lake = new GraftLake(spark, Files.createTempDirectory("graft-updbig").toString)
+    val (before, _) = table(lake, "big", Seq("bucket(8, id)"), _ => ())
+    val b = (0 to GraftLake.KeyProbeCap).map { seq =>
+      val id = 20 + seq % 4000 // 97 keys twice, the rest once
+      (id.toString, segs(seq % 3), Option.when(seq % 5 != 0)(seq), s"u$seq", seq)
+    }.toDF("id", "seg", "x", "s", "seq").repartition(3)
+    val live = lake.read("big")
+    val pre = spark.createDataFrame(java.util.Arrays.asList(live.collect(): _*), live.schema)
+    val (mRows, _) = model(pre, b, before)
+    val filesBefore = lake.dataFiles("big").toSet
+    val (_, jobs) = org.apache.spark.sql.graft.JobTimeline.record(spark.sparkContext)(
+      lake.upsert("big", b, ordering = Seq(col("seq"))))
+    assert(jobs.filter(_.site.contains("stageRowsLocked")).map(_.shuffleWriteBytes).sum > 0L,
+      jobs.map(_.site))
+    val added = lake.dataFiles("big").filterNot(filesBefore)
+    assert(added.size === 8 &&
+      added.map(f => new org.apache.hadoop.fs.Path(f).getParent.getName).distinct.size === 8, added)
+    assert(labelled(lake.read("big"), before) === mRows)
+  }
+
   // Null primary keys, landed and in the batch, never match: each lands
   // as a row of its own. The DV route and the route that folds the DV
   // into the files must land the same rows.

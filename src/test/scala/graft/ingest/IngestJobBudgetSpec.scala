@@ -282,7 +282,7 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     ids.map(i => (i.toLong, s"c$i", segment(i), i * 1.5 + bump))
       .toDF("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
 
-  test("a SQL MERGE into a partitioned PK table (q59 shape) runs 8 jobs in the caller's group") {
+  test("a SQL MERGE into a partitioned PK table (q59 shape) runs 7 jobs in the caller's group") {
     sqlLake.write("cust", customers(1 to 40, i => s"SEG${i % 4}", 0),
       partitions = Seq("c_mktsegment"), pks = Seq("c_custkey"))
     customers((3 to 60 by 3), i => if (i % 2 == 0) "MOVED" else s"SEG${i % 4}", 10)
@@ -299,9 +299,11 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     info(s"${groups.size} jobs")
     assert(groups.forall(_ == "budget-merge"), groups)
     // the key collect, the probe's DV stage (broadcast, exchange, write)
-    // and the rows' write (two broadcasts, exchange, write); the
-    // copy-on-write upsert ran 13
-    assert(groups.size === 8)
+    // and the rows' write (two broadcasts, write: a batch within
+    // KeyProbeCap is written in one task, without the rebalance exchange
+    // that adaptive execution ran as a job of its own); the copy-on-write
+    // upsert ran 13
+    assert(groups.size === 7)
     assert(sqlLake.read("cust").count() === 40 + 7)
     assert(sqlLake.read("cust").filter("c_mktsegment = 'MOVED'").count() === 10)
   }
@@ -413,6 +415,65 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     assert(addedBytes < liveBytes)
     assert(lake.read("acct").count() === 10030)
     assert(lake.read("acct").filter("v = -1").count() === 100)
+  }
+
+  /** The bucket directory of a data file. */
+  private def bucketOf(file: String): String = new org.apache.hadoop.fs.Path(file).getParent.getName
+
+  // A batch within KeyProbeCap is one task's work: its last-wins window
+  // and its rows' write run where the batch was coalesced, with no
+  // exchange, and the write's partition sort still gives each touched
+  // bucket one file.
+  test("a 100-row upsert into a bucket(8, id) table writes its rows with no shuffle, one file per bucket") {
+    graft.catalog.GraftLake.invalidateCaches()
+    val lake = new GraftLake(spark, Files.createTempDirectory("graft-budget-up").toString)
+    lake.write("acct", spark.range(7000).selectExpr("id", "id * 3 AS v"),
+      partitions = Seq("bucket(8, id)"), pks = Seq("id"))
+    val before = lake.dataFiles("acct").toSet
+    // 70 updates and 30 inserts in 6 source partitions, read without a
+    // shuffle of their own
+    val batch = spark.range(0L, 7000L, 100L, 4).union(spark.range(20000L, 20030L, 1L, 2))
+      .selectExpr("id", "-1L AS v")
+    val (_, jobs) = IngestPipeline.triggerConfs(spark) {
+      JobTimeline.record(spark.sparkContext)(lake.upsert("acct", batch))
+    }
+    val writes = jobs.filter(_.site.contains("stageRowsLocked"))
+    info(jobs.map(j => s"${j.site} shuffle=${j.shuffleWriteBytes}").mkString("; "))
+    assert(writes.nonEmpty, jobs.map(_.site))
+    assert(writes.map(_.shuffleWriteBytes).sum === 0L)
+    val added = lake.dataFiles("acct").filterNot(before)
+    assert(added.size === 8 && added.map(bucketOf).distinct.size === 8, added)
+    assert(lake.read("acct").count() === 7030)
+    assert(lake.read("acct").filter("v = -1").count() === 100)
+  }
+
+  // Compaction sizes its rewrite from the manifest's footer row counts
+  // and file sizes: a table within one task's bounds is rewritten by one
+  // job with no exchange and no count job, and its live DV is folded in.
+  test("auto-compaction of a small bucket(8, id) table with a live DV runs one job with no shuffle") {
+    graft.catalog.GraftLake.invalidateCaches()
+    val lake = new GraftLake(spark, Files.createTempDirectory("graft-budget-compact").toString)
+    lake.write("acct", spark.range(400).selectExpr("id", "id * 3 AS v").repartition(2),
+      partitions = Seq("bucket(8, id)"), pks = Seq("id"))
+    lake.append("acct", spark.range(400, 600).selectExpr("id", "id * 3 AS v"))
+    lake.upsert("acct", (0L until 50L).toDF("id").selectExpr("id", "-1L AS v"))
+    assert(lake.liveDvs("acct").nonEmpty)
+    // the read also builds the DV state the rewrite masks with
+    val rows = lake.read("acct").selectExpr("id", "v").collect().map(_.toString).sorted.toSeq
+    assert(rows.size === 600)
+    assert(lake.dataFiles("acct").size > 8)
+    lake.setTableProperty("acct", "graft.policy.autoCompact.minFiles", "2")
+    val (_, jobs) = IngestPipeline.triggerConfs(spark) {
+      JobTimeline.record(spark.sparkContext)(lake.runStandingPolicies("acct"))
+    }
+    info(jobs.map(j => s"${j.site} shuffle=${j.shuffleWriteBytes}").mkString("; "))
+    assert(lake.history("acct").collect().map(_.getString(2)).count(_ == "compact") === 1)
+    assert(jobs.size === 1 && jobs.head.site.contains("compactAttempt"), jobs.map(_.site))
+    assert(jobs.head.shuffleWriteBytes === 0L)
+    val files = lake.dataFiles("acct")
+    assert(files.size === 8 && files.map(bucketOf).distinct.size === 8, files)
+    assert(lake.liveDvs("acct").isEmpty)
+    assert(lake.read("acct").selectExpr("id", "v").collect().map(_.toString).sorted.toSeq === rows)
   }
 
   test("a SQL INSERT into an expression-partitioned table (q61 shape) runs 2 jobs in the caller's group") {
