@@ -75,9 +75,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
   def warehouseDir: String = warehouse
 
   /** Run `f` with the lake's write-side session confs applied, restoring
-    * the caller's settings after. Scoped per write (neither is a
-    * DataFrameWriter option) so the lake never changes how the
-    * application's own parquet output lands. Two confs:
+    * the caller's settings after. Every Parquet file the lake writes (data
+    * files, DV and bloom sidecars, change files) is written inside this
+    * scope, and the application's own parquet output never is. Three confs:
     *  - parquet timestamps forced to INT64 TIMESTAMP_MICROS: Spark's
     *    legacy INT96 default carries no usable column statistics, which
     *    would leave `_inserted_at` — the dominant pruning predicate of a
@@ -85,9 +85,19 @@ final class GraftLake(private[graft] val spark: SparkSession,
     *  - the commit protocol swapped for
     *    [[org.apache.spark.sql.graft.StatsCommitProtocol]], which collects
     *    per-file bounds INSIDE the write job (executor-side footer reads
-    *    at task commit) so [[commitVersion]] needs no second I/O pass. */
-  private def withLakeTimestampFormat[T](f: => T): T =
-    GraftLake.lakeWriteConfs(spark)(f)
+    *    at task commit) so [[commitVersion]] needs no second I/O pass;
+    *  - the compression codec forced to zstd at Parquet's default level:
+    *    snappy barely compresses document text, and a zstd file of it is
+    *    about half the size.
+    * Only the codec is also a DataFrameWriter option; it stays a scoped
+    * conf so that this one place covers every write site.
+    *
+    * The confs go on the session of `df`, the frame `f` writes: a write
+    * plans under its frame's session, and a frame from a streaming
+    * trigger carries the stream's own clone of the session, where confs
+    * set on the lake's session never reach it. */
+  private def withLakeWriteConfs[T](df: DataFrame)(f: => T): T =
+    GraftLake.lakeWriteConfs(df.sparkSession)(f)
 
   /** Write-side DISTRIBUTION for staged data writes (the Iceberg
     * hash `distribution-mode` analog; optimization guide §6: small
@@ -1406,7 +1416,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val dest = new Path(bloomDir(name), field.name)
     val f = fs(stage)
     try {
-      blooms.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      withLakeWriteConfs(blooms) {
+        blooms.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      }
       org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
       f.mkdirs(bloomDir(name))
       val old = new Path(s"${tableDir(name)}/.bloomold-${UUID.randomUUID()}")
@@ -1463,7 +1475,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
             col("__v"), expected, fpp).as("bloom"))
         val stage = new Path(s"${tableDir(name)}/.bloomstage-${UUID.randomUUID()}")
         try {
-          blooms.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+          withLakeWriteConfs(blooms) {
+            blooms.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+          }
           org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
           f.listStatus(stage).toSeq
             .filter(_.getPath.getName.endsWith(".parquet"))
@@ -2929,7 +2943,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
       else if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
         hits.hint("rebalance")
       else hits
-    withLakeTimestampFormat {
+    withLakeWriteConfs(staged) {
       staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
     }
     val stats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
@@ -2969,14 +2983,14 @@ final class GraftLake(private[graft] val spark: SparkSession,
       : (Seq[(String, String)], Map[String, Map[String, GraftLake.Bounds]]) = {
     val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
     try {
-      val writer = (if (distribute) distributeForWrite(out, meta) else out)
-        .write.mode(SaveMode.Overwrite)
+      val arranged = if (distribute) distributeForWrite(out, meta) else out
+      val writer = arranged.write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", maxRecordsPerFile)
       val parted =
         if (meta.partitions.nonEmpty)
           writer.partitionBy(meta.partitionExprs.map(_.outputName): _*)
         else writer
-      withLakeTimestampFormat { parted.parquet(stage.toString) }
+      withLakeWriteConfs(arranged) { parted.parquet(stage.toString) }
       val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
       (mergeStageInto(stage, new Path(dataDir(name))), writeStats)
     } finally fs(stage).delete(stage, true)
@@ -3124,7 +3138,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     try {
       val writer = distributeForWrite(out, outPartCols).write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", maxRecordsPerFile)
-      withLakeTimestampFormat {
+      withLakeWriteConfs(out) {
         (if (outPartCols.nonEmpty) writer.partitionBy(outPartCols: _*)
          else writer).parquet(stage.toString)
       }
@@ -3173,7 +3187,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
       val writer = distributeForWrite(out, meta).write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", maxRecordsPerFile)
       val partCols = meta.partitionExprs.map(_.outputName)
-      withLakeTimestampFormat {
+      withLakeWriteConfs(out) {
         (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
           .parquet(stage.toString)
       }
@@ -3216,7 +3230,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
     val writer = distributeForWrite(out, partCols).write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
-    withLakeTimestampFormat {
+    withLakeWriteConfs(out) {
       (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
         .parquet(stage.toString)
     }
@@ -3460,7 +3474,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val writer = arranged
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", targetRecordsPerFile)
-    withLakeTimestampFormat {
+    withLakeWriteConfs(arranged) {
       (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
         .parquet(stage.toString)
     }
@@ -3740,7 +3754,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
         val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
         val writer = arranged.write.mode(SaveMode.Overwrite)
           .option("maxRecordsPerFile", maxRecordsPerFile)
-        withLakeTimestampFormat {
+        withLakeWriteConfs(arranged) {
           writer.partitionBy(partCols: _*).parquet(stage.toString)
         }
         val writeStats =
@@ -3979,7 +3993,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
     val writer = arranged.write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
-    withLakeTimestampFormat {
+    withLakeWriteConfs(arranged) {
       writer.partitionBy(partCols: _*).parquet(stage.toString)
     }
     val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
@@ -5168,7 +5182,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
         if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
           out.hint("rebalance")
         else out
-      withLakeTimestampFormat {
+      withLakeWriteConfs(staged) {
         staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
       }
       org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
@@ -6170,13 +6184,16 @@ object GraftLake {
   private val metaCache = new ConcurrentHashMap[String, TableMeta]()
   private val tableLocks = new ConcurrentHashMap[String, Object]()
 
-  /** The lake's write-side session confs (see [[withLakeTimestampFormat]]),
-    * scoped per session by reference count: lake writes legitimately run
-    * concurrently (multi-table writers, the parallel LSH-index admission). */
+  /** The lake's write-side session confs (see [[withLakeWriteConfs]]):
+    * the timestamp type, the stats-collecting commit protocol and the
+    * zstd codec, whatever the session sets. Scoped per session by
+    * reference count: lake writes legitimately run concurrently
+    * (multi-table writers, the parallel LSH-index admission). */
   private val lakeWriteConfs = new graft.ConfScope(Seq(
     "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
     "spark.sql.sources.commitProtocolClass" ->
-      org.apache.spark.sql.graft.StatsCommitProtocol.className))
+      org.apache.spark.sql.graft.StatsCommitProtocol.className,
+    "spark.sql.parquet.compression.codec" -> "zstd"))
 
   /** Snapshot-side caches: last committed version and its resolved live
     * file set + delta-chain depth, so the hot commit path reads nothing.

@@ -347,12 +347,26 @@ object Perf {
     }
   }
 
+  /** On-disk bytes of a lake table's parts: data files, deletion-vector,
+    * change-feed and bloom sidecars, the version log, and the rest. */
+  private def tableBytes(spark: SparkSession, tableDir: String): Seq[(String, Long)] = {
+    val dir = new Path(tableDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val kinds = Seq("data", "_dv", "_changes", "_versions", "_bloom")
+    val sizes = fs.listStatus(dir).map { s =>
+      s.getPath.getName -> fs.getContentSummary(s.getPath).getLength
+    }.toMap
+    kinds.map(k => k -> sizes.getOrElse(k, 0L)) :+ ("other" -> (sizes -- kinds).values.sum)
+  }
+
   /** Per-job breakdown of three fixed-size upsert flushes against a
     * PK-bucketed table, with each flush's write bytes as `profile` prints
-    * them: the steady-state MERGE latency budget. */
+    * them: the steady-state MERGE latency budget. After the last flush it
+    * prints the table's on-disk bytes by kind. */
   private def flush(spark: SparkSession, args: IndexedSeq[String]): Unit = {
     val buckets = args.lift(1).fold(250)(_.toInt)
-    val lake = new GraftLake(spark, Files.createTempDirectory("graft-bprobe").toString)
+    val warehouse = Files.createTempDirectory("graft-bprobe").toString
+    val lake = new GraftLake(spark, warehouse)
     val ord = Tables.orders(spark, args(0))
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     lake.write("m", ord.repartition(64, pmod(hash(col("o_orderkey")), lit(buckets))),
@@ -380,6 +394,8 @@ object Perf {
           f"dur=${j.durationMs.fold("?")(_.toString)}%-6s ms")
       }
     }
+    println("[bprobe] table m bytes: " +
+      tableBytes(spark, s"$warehouse/m").map { case (k, b) => s"$k $b B" }.mkString(", "))
   }
 
   /** The ingest near-dup gate at a batch size: indexes `rows` generated
