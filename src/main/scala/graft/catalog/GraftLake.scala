@@ -25,8 +25,8 @@ final case class TableMeta(
   def partitionExprs: Seq[PartitionExpr] = PartitionExpr.parseList(partitions)
 
   /** Change-data-feed capture: when set, every row-changing commit that
-    * is not a plain append (upsert/MERGE, deletion-vector and
-    * copy-on-write UPDATE/DELETE) WRITES its row-level
+    * is not a plain append (upsert/MERGE, deletion-vector
+    * UPDATE/DELETE, overwrite) WRITES its row-level
     * changes as parquet sidecars under `_changes/` in the same commit —
     * the Delta `_change_data` mechanism — so [[GraftLake.tableChanges]]
     * and the `graft-cdf` streaming source attribute those windows exactly
@@ -783,8 +783,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // the memo keys on (version, LAYOUT): a cross-process layout flip
     // changes the verdict for the SAME version (post-flip, pre-first-
     // group every file is suddenly foreign) — a version-only memo would
-    // serve the pre-flip "conforms" and scope a MERGE by partition
-    // values the old-layout directories do not follow
+    // serve the pre-flip "conforms" and let a bare catalog session plan
+    // a directory scan the old-layout directories do not follow
     val memo = GraftLake.conformCache.get(key)
     if (memo != null && memo._1 == v && memo._3 == prefixes) return memo._2
     val ok = liveFilesAt(name, v).forall(r => GraftLake.relConforms(r._1, prefixes))
@@ -796,8 +796,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * (manifest file key, file-local row position) against the union of
     * the live DV files. The DV side is explicitly broadcast while its
     * entry count stays within `spark.graft.dv.maxEntries` — the invariant
-    * [[deleteWhere]] maintains (oversized DELETEs fold copy-on-write
-    * instead of committing a DV) — so the probe is a map-side hash lookup
+    * every row-level write restores (a DV that takes the count past the
+    * bound is folded right after its commit) — so the probe is a map-side hash lookup
     * with no shuffle of the (100 TB) data side, and expressions
     * downstream that depend on scan-task locality (`input_file_name`)
     * keep working. If the entry count nonetheless exceeds the bound (a
@@ -925,8 +925,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     dvCountCache.put(s"$warehouse/$name", (liveDvs(name), before + n))
 
   /** DV key/position column names of [[withDvKeys]] frames. */
-  private val keyC = "__graft_dv_key"
-  private val posC = "__graft_dv_pos"
+  private val keyC = GraftLake.DvKeyCol
+  private val posC = GraftLake.DvPosCol
 
   /** The live rows of `name` through a manifest-pruned scan, with the DV
     * key/position metadata columns ([[keyC]]/[[posC]]) attached and any
@@ -1145,14 +1145,15 @@ final class GraftLake(private[graft] val spark: SparkSession,
     *    ([[metadataDeleteLocked]]);
     *  - otherwise a deletion vector masks the hits — (file key, row
     *    position) pairs written as a parquet sidecar under `_dv/` and
-    *    committed to the manifest — WITHOUT rewriting a single data file.
-    *    A DELETE touching 0.001 % of rows costs one column-pruned scan +
-    *    a tiny sidecar write (reference analog: DuckLake DELETE, which
-    *    DuckDB executes as its own positional delete files);
-    *  - a hit set that would take the live DV entry count past
+    *    committed to the manifest — WITHOUT rewriting a single data file
+    *    ([[writeRowLevel]]). A DELETE touching 0.001 % of rows costs one
+    *    column-pruned scan + a tiny sidecar write (reference analog:
+    *    DuckLake DELETE, which DuckDB executes as its own positional
+    *    delete files);
+    *  - a DV that takes the live entry count past
     *    `spark.graft.dv.maxEntries` (default 1M — the broadcast-safety
-    *    bound) folds copy-on-write instead ([[rewriteWhere]]), so DV
-    *    probes stay map-side forever.
+    *    bound) is folded into the files right after its commit
+    *    ([[materializeDeletes]]), so DV probes stay map-side.
     * Reads apply DVs as a broadcast probe; [[compact]],
     * [[materializeDeletes]] or any full rewrite folds them back in. SQL
     * `DELETE FROM` runs here too. Returns the number of rows deleted
@@ -1160,7 +1161,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * through the live DVs). */
   def deleteWhere(name: String, predicate: Column): Long = writeLock(name) {
     metadataDeleteLocked(name, readMeta(name), predicate)
-      .getOrElse(mergeOnReadLocked(name, predicate, Map.empty))
+      .getOrElse(dmlWhere(name, _.filter(coalesce(predicate, lit(false)))))
   }
 
   private def dvMaxEntries: Long = spark.conf
@@ -1178,73 +1179,94 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * (simultaneous-assignment semantics) and cast to the column's landed
     * type; `_inserted_at` is preserved (W5). An update that moves rows
     * across partitions just lands the new rows in their new partitions —
-    * the DV masks the old copies in place. Hit sets above
-    * `spark.graft.dv.maxEntries` fold copy-on-write ([[rewriteWhere]]).
-    * Returns the rows updated. */
+    * the DV masks the old copies in place. A DV past
+    * `spark.graft.dv.maxEntries` folds after the commit, as for
+    * [[deleteWhere]]. Returns the rows updated. */
   def updateWhere(name: String, predicate: Column,
       assignments: Map[String, Column]): Long = {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
-    writeLock(name) { mergeOnReadLocked(name, predicate, assignments) }
+    dmlWhere(name, _.filter(coalesce(predicate, lit(false))), assignments)
   }
 
-  /** The body of [[deleteWhere]] (`assignments` empty) and
-    * [[updateWhere]]. The hit keys — (file key, row position) of every
-    * live row `predicate` holds TRUE on — are staged once, DV-shaped;
-    * their footer count picks the route. Past `spark.graft.dv.maxEntries`
-    * the statement folds copy-on-write ([[rewriteWhere]]) and the stage,
-    * two narrow columns, is dropped. Otherwise the staged files ARE the
-    * DV sidecar, and an UPDATE first re-inserts the hit rows with the
-    * assignments applied, read back from only the files that hold them
-    * and matched to the staged keys (the predicate is not evaluated a
-    * second time). On a CDF-enabled table the same hit rows are the
-    * commit's change rows (`delete`, or `update_preimage` and
-    * `update_postimage`), written before the commit that references
-    * them. */
-  private def mergeOnReadLocked(name: String, predicate: Column,
-      assignments: Map[String, Column]): Long = {
+  /** DELETE (`assignments` empty) or UPDATE of the live rows `hit`
+    * selects, through [[writeRowLevel]]: one DV over the hit rows and,
+    * for an UPDATE, those rows re-inserted with the assignments applied,
+    * read back from only the files that hold them and matched to the
+    * staged keys (`hit` is not evaluated a second time). `hit` and the
+    * assignments resolve against the live rows after `bind` (see
+    * [[writeRowLevel]]). On a table with change capture the hit rows are
+    * the commit's `delete`, or `update_preimage` and `update_postimage`,
+    * rows. Returns the rows hit. */
+  private[graft] def dmlWhere(name: String, hit: DataFrame => DataFrame,
+      assignments: Map[String, Column] = Map.empty,
+      bind: DataFrame => DataFrame = identity): Long = writeLock(name) {
     val meta = readMeta(name)
     // assignments address LOGICAL names and evaluate against the logical
     // live view; the re-inserted rows convert back to physical at write
     val byField = landedAssignments(name, meta, assignments)
-    val live = liveKeyedScanLocked(name, meta).getOrElse(return 0L)
-    val hit = coalesce(predicate, lit(false))
+    val ct = GraftLake.ChangeTypeCol
+    writeRowLevel(name, if (byField.isEmpty) "delete" else "update", bind) { live =>
+      GraftLake.RowLevel(hit(live),
+        rows = hitRows =>
+          if (byField.isEmpty) None else hitRows.map(assign(meta, _, byField)),
+        changes = hitRows => hitRows.map(old =>
+          if (byField.isEmpty) old.withColumn(ct, lit("delete"))
+          else assign(meta, old, Map.empty).withColumn(ct, lit("update_preimage"))
+            .unionByName(assign(meta, old, byField)
+              .withColumn(ct, lit("update_postimage")))))
+    }
+  }
+
+  /** The one row-level write, behind DELETE, UPDATE, the general SQL
+    * MERGE and CDC apply. Under the table's write lock, `plan` gets the
+    * live rows ([[liveKeyedScanLocked]]; an empty frame of that shape for
+    * a table without live files) after `bind`: the identity for the
+    * engine's own predicates, an attribute re-binding for SQL, whose
+    * resolved subqueries and actions cannot be retargeted by name. The
+    * statement's hits are staged as ONE deletion vector; its rows (hit
+    * rows read back from their files, when it asks for them) and its
+    * change rows are written; and all of it lands in ONE commit under
+    * `op`, so no read sees the mask without the rows. A statement without
+    * a hit commits a plain `append`, and one with neither a hit nor a row
+    * commits nothing. No existing data file is rewritten: a DV set now
+    * past `spark.graft.dv.maxEntries` folds right after the commit
+    * ([[materializeDeletes]]), as the upsert's does. Returns the rows
+    * hit. */
+  private[graft] def writeRowLevel(name: String, op: String,
+      bind: DataFrame => DataFrame = identity)(
+      plan: DataFrame => GraftLake.RowLevel): Long = writeLock(name) {
+    val meta = readMeta(name)
+    val scan = liveKeyedScanLocked(name, meta)
+    val stmt = plan(bind(scan.getOrElse(toLogical(meta.schema,
+      liveScan(name, meta, None).withColumns(Map(
+        keyC -> lit(null).cast(StringType), posC -> lit(null).cast(LongType)))))))
     val stage = new Path(s"${tableDir(name)}/.dvstage-${UUID.randomUUID()}")
     try {
-      val n = stageDvKeys(live.filter(hit), stage)
-      if (n == 0L) return 0L
-      val before = dvEntryCountCached(name, liveDvs(name))
-      if (before + n > dvMaxEntries) {
-        // OVERSIZED hit set: an above-bound DV set must never be
-        // committed — every read until materialization would anti-join
-        // (and force-broadcast) it
-        rewriteWhere(name, hit, assignments)
-        return n
+      val n = if (scan.isEmpty) 0L else stageDvKeys(stmt.hits, stage)
+      lazy val hitRows = Option.when(n > 0L)(bind(rowsAtDvKeysLocked(name, meta,
+        spark.read.schema(GraftLake.dvSchema).parquet(stage.toString))))
+      val rows = stmt.rows(hitRows)
+      if (n == 0L && rows.isEmpty) return 0L
+      val (added, addedStats) = rows.fold(
+        (Seq.empty[(String, String)], Map.empty[String, Map[String, GraftLake.Bounds]]))(r =>
+        stageRowsLocked(name, meta, withPartitionCols(
+          enforceConstraints(meta, physicalSelect(meta, r)), meta)))
+      if (n == 0L && rowsIn(name, added, addedStats) == 0L) {
+        discardUnpublished(name, added)
+        return 0L
       }
-      val hitRows =
-        if (byField.isEmpty && !meta.cdfEnabled) None
-        else Some(rowsAtDvKeysLocked(name, meta,
-          spark.read.schema(GraftLake.dvSchema).parquet(stage.toString)))
+      // the change plan reads the pre-commit live files
       val changeFiles =
         if (!meta.cdfEnabled) Nil
-        else {
-          val ct = GraftLake.ChangeTypeCol
-          val old = assign(meta, hitRows.get, Map.empty)
-          writeChangeFiles(name, meta,
-            if (byField.isEmpty) old.withColumn(ct, lit("delete"))
-            else old.withColumn(ct, lit("update_preimage"))
-              .unionByName(assign(meta, hitRows.get, byField)
-                .withColumn(ct, lit("update_postimage"))))
-        }
-      val (added, addedStats) =
-        if (byField.isEmpty) (Nil, Map.empty[String, Map[String, GraftLake.Bounds]])
-        else stageRowsLocked(name, meta, withPartitionCols(enforceConstraints(meta,
-          toPhysical(meta.schema, assign(meta, hitRows.get, byField))), meta))
-      // ONE commit: the DV and an UPDATE's re-insert in the same version
-      commitVersion(name, added, Nil, addedStats,
-        op = if (byField.isEmpty) "delete" else "update",
-        dvAdded = publishDvStage(name, stage), changes = changeFiles,
-        assumedLayout = Some(meta.partitions))
-      noteDvCommit(name, before, n)
+        else stmt.changes(hitRows).fold(Seq.empty[String])(writeChangeFiles(name, meta, _))
+      val before = if (n == 0L) 0L else dvEntryCountCached(name, liveDvs(name))
+      commitVersion(name, added, Nil, addedStats, op = if (n == 0L) "append" else op,
+        dvAdded = if (n == 0L) Nil else publishDvStage(name, stage),
+        changes = changeFiles, assumedLayout = Some(meta.partitions))
+      if (n > 0L) {
+        noteDvCommit(name, before, n)
+        if (before + n > dvMaxEntries) materializeDeletesLocked(name)
+      }
       n
     } finally fs(stage).delete(stage, true)
   }
@@ -1262,84 +1284,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
       ref => hitFiles(GraftLake.fileKey(ref))).get
     rows.join(keys,
       rows(keyC) === keys("file_key") && rows(posC) === keys("pos"), "left_semi")
-  }
-
-  /** Partition directories holding the given partition-value rows — via a
-    * DV-FREE internal scan's `input_file_name`, decoded (it is
-    * URI-encoded; directories are not). Every partition-scoped
-    * rewrite needs this instead of probing its own (possibly DV-masked)
-    * frame: the DV anti-join plan has TWO file sources, which
-    * `input_file_name` rejects outright — and the dirs must include files
-    * whose every row is DV-masked anyway, since the rewrite replaces
-    * those partitions wholesale. Bounded by affected partitions × files. */
-  private[graft] def partitionDirsFor(name: String, partCols: Seq[String],
-      parts: Array[org.apache.spark.sql.Row]): Seq[String] =
-    readInternal(name, readMeta(name))
-      .filter(GraftLake.partitionScope(partCols, parts))
-      .select(input_file_name().as("f")).distinct()
-      .collect().map(r => new Path(new java.net.URI(r.getString(0))).getParent.toString)
-      .toSeq.distinct
-
-  /** The one scoped copy-on-write rewrite, behind DELETE (`assignments`
-    * empty) and UPDATE: the fold of an oversized [[deleteWhere]] or
-    * [[updateWhere]] hit set, and SQL DML whose condition carries a
-    * subquery. `hit` (TRUE exactly on the affected rows) and the
-    * assignments resolve against the table's live rows — DV-masked,
-    * logical names, generated partition columns and the DV key columns
-    * included — after `bind`: the identity for the engine's own
-    * predicates, an attribute re-binding for SQL, whose resolved
-    * subqueries cannot be retargeted by name.
-    *
-    * The scope is PHYSICAL: every directory holding a hit is rewritten
-    * whole (all its live rows, whatever layout wrote them), and the
-    * result lands beside the files already in its destination
-    * directories. So an UPDATE that moves rows adds them to their new
-    * partitions without rewriting those, and a directory of a layout
-    * still mid-migration (REBUCKET, partition evolution), which holds
-    * rows of several current partitions, never loses the rows the hits
-    * do not touch. Pre-existing DV entries of untouched directories stay
-    * live. An unpartitioned table replaces its whole file set and clears
-    * every DV. The hit rows are the commit's change rows (CDF-enabled
-    * tables). */
-  private[graft] def rewriteWhere(name: String, hit: Column,
-      assignments: Map[String, Column],
-      bind: DataFrame => DataFrame = identity): Unit = writeLock(name) {
-    val meta = readMeta(name)
-    val byField = landedAssignments(name, meta, assignments)
-    val depth = meta.partitionExprs.size
-    def rewrite(live: DataFrame, dirs: Seq[String]): Unit = {
-      val matching = live.filter(hit)
-      val ct = GraftLake.ChangeTypeCol
-      val changes =
-        if (byField.isEmpty) matching.withColumn(ct, lit("delete"))
-        else assign(meta, matching, Map.empty).withColumn(ct, lit("update_preimage"))
-          .unionByName(assign(meta, matching, byField)
-            .withColumn(ct, lit("update_postimage")))
-      val survivors =
-        if (byField.isEmpty) live.filter(!hit)
-        else assign(meta, live, byField.map { case (k, v) =>
-          k -> when(hit, v).otherwise(col(quoted(k))) })
-      replaceScoped(name, survivors, dirs.map(d => s"${dataDir(name)}/$d"),
-        clearDvs = depth == 0, changes = Some(changes))
-    }
-    val live = bind(liveKeyedScanLocked(name, meta).getOrElse(return))
-    if (depth == 0) {
-      if (!live.filter(hit).isEmpty) rewrite(live, Nil)
-    } else {
-      // the partition directory of each row, as its DV key spells it
-      val dirOf = substring_index(col(keyC), "/", depth)
-      val keyDirs = live.filter(hit).select(dirOf).distinct().collect()
-        .map(_.getString(0)).toSeq
-      if (keyDirs.nonEmpty) {
-        // DV keys are URI-encoded (`_metadata.file_path`); manifest refs
-        // and directories are not
-        val dirs = keyDirs.map(GraftLake.decodeKey)
-        val inScope = dirs.toSet
-        val scoped = bind(liveKeyedScanLocked(name, meta,
-          ref => inScope(ref._1)).get).filter(dirOf.isin(keyDirs: _*))
-        rewrite(scoped, dirs)
-      }
-    }
   }
 
   /** UPDATE assignments keyed by the LOGICAL column name they resolve to
@@ -1600,9 +1544,15 @@ final class GraftLake(private[graft] val spark: SparkSession,
     }
 
   /** Rewrite ONLY the partitions whose files carry deletion-vector
-    * entries, folding the deletes into the data and clearing every DV —
-    * the bounded-rewrite pressure valve that keeps DV probes broadcast-
-    * sized. Partitions without deleted rows are untouched. */
+    * entries (the whole table when unpartitioned), folding the deletes
+    * into the data and clearing every DV — the bounded-rewrite pressure
+    * valve that keeps DV probes broadcast-sized, and the only
+    * copy-on-write a row-level statement ever causes. Partitions without
+    * deleted rows are untouched. The rewrite masks its rows as every
+    * live scan does: through the broadcast DV set within
+    * `spark.graft.dv.maxEntries`, past it (the case an automatic fold
+    * runs in) through the anti-join adaptive execution picks, so an
+    * oversized DV set is never collected to the driver. */
   def materializeDeletes(name: String): Unit = writeLock(name) {
     materializeDeletesLocked(name)
   }
@@ -1611,34 +1561,25 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val dvs = liveDvs(name)
     if (dvs.isEmpty) return
     val meta = readMeta(name)
-    val partDepth = meta.partitionExprs.size
-    val liveKeys = resolveManifest(name, versions(name).last)._2
-      .map(GraftLake.fileKey).toSet
-    if (partDepth == 0) {
-      val survivors = applyDvs(name, readInternal(name, meta), dvs, 0)
-        .select(meta.schema.fieldNames.map(n => col(quoted(n))): _*)
-      replaceScoped(name, survivors, Nil, clearDvs = true, op = "materialize")
-    } else {
-      // partition rels that still hold live DV'd files (stale entries for
-      // already-retired files are dropped with the DV clear)
-      // (DV keys spell them URI-encoded, directories decoded)
-      val keyRels = dvFrame(name, dvs).select("file_key").distinct()
-        .collect().map(_.getString(0)).toSeq
-        .filter(k => liveKeys.contains(GraftLake.decodeKey(k)))
-        .map(k => k.substring(0, k.lastIndexOf('/')))
-        .distinct
-      if (keyRels.isEmpty) {
-        commitVersion(name, Nil, Nil, op = "dv-clear", dvRemoved = dvs)
-        return
-      }
-      val dirs = keyRels.map(r => s"${dataDir(name)}/${GraftLake.decodeKey(r)}")
-      // scope + anti-join on the materialized key columns
-      val scoped = withDvKeys(readInternal(name, meta), partDepth).filter(
-        substring_index(col(keyC), "/", partDepth).isin(keyRels: _*))
-      val survivors = dvAntiJoin(scoped, dvFrame(name, dvs), broadcastDv = true)
-        .drop(keyC, posC)
-      replaceScoped(name, survivors, dirs, clearDvs = true, op = "materialize")
+    val live = lastVersionCached(name)
+      .fold(Vector.empty[(String, String)])(liveFilesAt(name, _))
+    val liveKeys = live.map(GraftLake.fileKey).toSet
+    // the partition dirs that still hold live DV'd files (stale entries
+    // for already-retired files are dropped with the DV clear); DV keys
+    // spell them URI-encoded, the manifest decoded
+    val rels = dvFrame(name, dvs).select("file_key").distinct()
+      .collect().map(r => GraftLake.decodeKey(r.getString(0)))
+      .filter(liveKeys).map(k => k.substring(0, k.lastIndexOf('/') max 0)).toSet
+    if (rels.isEmpty) {
+      commitVersion(name, Nil, Nil, op = "dv-clear", dvRemoved = dvs)
+      return
     }
+    val inScope = (ref: (String, String)) => rels(ref._1)
+    val survivors = liveKeyedScanLocked(name, meta, inScope).get.drop(keyC, posC)
+    val (added, addedStats) = stageRowsLocked(name, meta, withPartitionCols(
+      enforceConstraints(meta, physicalSelect(meta, survivors)), meta))
+    commitVersion(name, added, live.filter(inScope), addedStats, op = "materialize",
+      dvRemoved = dvs, assumedLayout = Some(meta.partitions))
   }
 
   /** User-facing table view (generated partition columns hidden).
@@ -2999,32 +2940,29 @@ final class GraftLake(private[graft] val spark: SparkSession,
   /** Replace the entire table contents with `df` (must carry exactly the
     * table's user schema — typed columns incl. `_inserted_at`). Staged
     * write committed as the table's whole live set; partition columns are
-    * recomputed from the new row values. Used by the general-form SQL MERGE rewrite, which is an
-    * explicit whole-table copy-on-write (the upsert-shaped form routes
-    * through [[upsert]] instead).
+    * recomputed from the new row values. Its callers replace a table by
+    * definition: `INSERT OVERWRITE`, a Complete-mode streaming sink, the
+    * DLQ replay's rewrite of its own table, and (under a new layout)
+    * REPLACE TABLE through [[rebuildPartitioned]]. Row-level statements
+    * never come here ([[writeRowLevel]]).
     *
-    * `changes`: as on [[replaceScoped]] — a caller that can attribute the
-    * overwrite row-by-row (the general MERGE can) passes its change rows
-    * for write-time capture. When the table has capture on and the caller
-    * passes NONE (a streaming Complete-mode epoch), the attribution is
-    * DERIVED here by a keyed diff against the pre-version — O(table), but
-    * so is Complete mode itself — so the commit never poisons the change
-    * feed with an uncapturable rewrite: PK tables diff by key (unchanged
-    * keys emit nothing and keep their original `_inserted_at`, upsert
-    * parity; changed keys emit update pre/postimages; vanished keys
-    * deletes; new keys inserts), keyless tables emit the exact
-    * delete-all ∪ insert-all set. Insert timestamps in the derived
-    * branches are frozen driver-side (the table write and the change-file
-    * write are separate jobs — per-job `current_timestamp()` would make
-    * the feed disagree with the table). */
-  def overwriteContents(name: String, df: DataFrame,
-      changes: Option[DataFrame] = None): Unit = {
-    overwriteContentsLocked(name, df, changes)
+    * When the table has capture on, the attribution is DERIVED here by a
+    * keyed diff against the pre-version — O(table), but so is a whole
+    * replace — so the commit never poisons the change feed with an
+    * uncapturable rewrite: PK tables diff by key (unchanged keys emit
+    * nothing and keep their original `_inserted_at`, upsert parity;
+    * changed keys emit update pre/postimages; vanished keys deletes; new
+    * keys inserts), keyless tables emit the exact delete-all ∪ insert-all
+    * set. Insert timestamps in the derived branches are frozen
+    * driver-side (the table write and the change-file write are separate
+    * jobs — per-job `current_timestamp()` would make the feed disagree
+    * with the table). */
+  def overwriteContents(name: String, df: DataFrame): Unit = {
+    overwriteContentsLocked(name, df)
     runStandingPolicies(name)
   }
 
   private def overwriteContentsLocked(name: String, df: DataFrame,
-      changes: Option[DataFrame],
       newPartitions: Option[Seq[String]] = None): Unit = writeLock(name) {
     val meta = readMeta(name)
     // the REPLACE TABLE … PARTITIONED BY rebuild ([[rebuildPartitioned]]):
@@ -3033,17 +2971,14 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // layout, and the metadata flips in the same locked section as the
     // commit
     val effMeta = newPartitions.fold(meta)(sp => meta.copy(partitions = sp))
-    val projectedRaw = enforceConstraints(meta, physicalSelect(meta, df))
+    val projected0 = enforceConstraints(meta, physicalSelect(meta, df))
     val pks = meta.pks.flatMap(p =>
       meta.schema.fieldNames.find(_.equalsIgnoreCase(p)))
-    val projected0 = projectedRaw
-    // LAST-WINS PK dedup for the DERIVED Complete-mode capture below
-    // (the upsert's row_number pattern): that branch's full-outer keyed
-    // diff assumes unique PKs — duplicate keys would land twice and fan
-    // out into duplicated pre/postimages. Scoped to that branch ONLY:
-    // the general SQL MERGE rewrite also routes through here (with its
-    // own change attribution or none) and its ANSI insert semantics
-    // legitimately land duplicate keys (MergeSqlSpec pins it).
+    // LAST-WINS PK dedup for the DERIVED capture below (the upsert's
+    // row_number pattern): its full-outer keyed diff assumes unique PKs —
+    // duplicate keys would land twice and fan out into duplicated
+    // pre/postimages. Scoped to that branch ONLY: without capture, PKs
+    // stay advisory and an overwrite lands the rows it is given.
     def dedupLastWins(d: DataFrame): DataFrame =
       if (pks.isEmpty) d
       else {
@@ -3056,10 +2991,9 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val partCols = meta.partitionExprs.map(_.outputName)
     val ct = GraftLake.ChangeTypeCol
     // BEFORE the swap: the change plan reads the pre-rewrite live files
-    val (projected, changeFiles) = changes match {
-      case Some(c) if meta.cdfEnabled =>
-        (projected0, writeChangeFiles(name, meta, c))
-      case None if meta.cdfEnabled =>
+    val (projected, changeFiles) =
+      if (!meta.cdfEnabled) (projected0, Nil)
+      else {
         val deduped = dedupLastWins(projected0)
         val frozen = InsertStamp.now()
         def freeze(d: DataFrame): DataFrame =
@@ -3129,8 +3063,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
             (landed, writeChangeFiles(name, meta, chg))
           }
         }
-      case _ => (projected0, Nil)
-    }
+      }
     val out = withPartitionCols(projected, effMeta)
     val outPartCols = effMeta.partitionExprs.map(_.outputName)
     val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
@@ -3172,90 +3105,6 @@ final class GraftLake(private[graft] val spark: SparkSession,
         assumedLayout =
           if (newPartitions.isEmpty) Some(meta.partitions) else None)
     } finally f.delete(stage, true)
-  }
-
-  /** Append rows that already carry the full user schema including
-    * `_inserted_at` (the SQL MERGE insert-only path computes the system
-    * column by its own assignment/default policy). No conform pass — the
-    * caller has already cast every column to the table schema. */
-  private[graft] def appendPrepared(name: String, batch: DataFrame): Unit = writeLock(name) {
-    val meta = readMeta(name)
-    val out = withPartitionCols(
-      enforceConstraints(meta, physicalSelect(meta, batch)), meta)
-    val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
-    try {
-      val writer = distributeForWrite(out, meta).write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-      val partCols = meta.partitionExprs.map(_.outputName)
-      withLakeWriteConfs(out) {
-        (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-          .parquet(stage.toString)
-      }
-      val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
-      val added = mergeStageInto(stage, new Path(dataDir(name)))
-      commitVersion(name, added, Nil, writeStats, op = "append",
-        assumedLayout = Some(meta.partitions))
-    } finally fs(stage).delete(stage, true)
-  }
-
-  /** Rewrite a scoped slice of the table: `survivors` replaces the
-    * contents of `affectedDirs` (every partition directory the scope
-    * covered — a partition whose rows all vanish has no staged leaf but
-    * must still be cleared). Unpartitioned tables replace the whole file
-    * set, so `survivors` must then be the full remaining table.
-    * Engine-internal support for [[rewriteWhere]], MERGE and replication.
-    * `survivors` are exactly the rows of `affectedDirs`: a survivor that
-    * lands in a directory outside them (an UPDATE moving a row into an
-    * untouched partition, an old-layout row re-homed mid-REBUCKET) joins
-    * the files already there instead of replacing them.
-    *
-    * `changes`: the rewrite's row-level change rows (table columns +
-    * `_change_type`), published as write-time change files in the same
-    * commit when the table has change capture on ([[TableMeta
-    * .cdfEnabled]]) — the caller holds the pre/post-images anyway, so
-    * capture costs one change-sized write, never a second table scan. */
-  private[graft] def replaceScoped(name: String, survivors: DataFrame,
-      affectedDirs: Seq[String], clearDvs: Boolean = false,
-      changes: Option[DataFrame] = None,
-      op: String = "replace-scoped"): Unit = writeLock(name) {
-    val meta = readMeta(name)
-    val partCols = meta.partitionExprs.map(_.outputName)
-    val out = withPartitionCols(
-      enforceConstraints(meta, physicalSelect(meta, survivors)), meta)
-    // BEFORE the swap: the change plan reads the pre-rewrite live files
-    val changeFiles = changes match {
-      case Some(c) if meta.cdfEnabled => writeChangeFiles(name, meta, c)
-      case _ => Nil
-    }
-    val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
-    val writer = distributeForWrite(out, partCols).write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-    withLakeWriteConfs(out) {
-      (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-        .parquet(stage.toString)
-    }
-    val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
-    // the removed set is the manifest's live files under the affected
-    // directories (all of them when unpartitioned); no file moves
-    val live = lastVersionCached(name)
-      .fold(Vector.empty[(String, String)])(liveFilesAt(name, _))
-    val removed =
-      if (partCols.isEmpty) live
-      else {
-        val dd = new Path(dataDir(name))
-        val ddUri = fs(dd).makeQualified(dd).toUri
-        val rels = affectedDirs.map { d =>
-          val p = new Path(d)
-          ddUri.relativize(fs(p).makeQualified(p).toUri).getPath.stripSuffix("/")
-        }.toSet
-        live.filter(r => rels.exists(d => r._1 == d || r._1.startsWith(s"$d/")))
-      }
-    val added =
-      try mergeStageInto(stage, new Path(dataDir(name)))
-      finally fs(stage).delete(stage, true)
-    commitVersion(name, added, removed, writeStats, op = op,
-      dvRemoved = if (clearDvs) liveDvs(name) else Nil,
-      changes = changeFiles, assumedLayout = Some(meta.partitions))
   }
 
   /** Compact a table's data files: rewrites each partition (or the whole
@@ -3709,7 +3558,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
       "partition rebuild")
     contents match {
       case Some(df) =>
-        overwriteContentsLocked(name, df, changes = None,
+        overwriteContentsLocked(name, df,
           newPartitions = Some(specs))
         runStandingPolicies(name)
       case None =>
@@ -5176,8 +5025,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val f = fs(stage)
     try {
       // rebalance, as in the DV staging paths: AQE coalesces the typical
-      // batch-sized change set to one file without capping a huge COW
-      // fallback's write parallelism
+      // batch-sized change set to one file without capping a huge one's
+      // write parallelism
       val staged =
         if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
           out.hint("rebalance")
@@ -5230,8 +5079,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * consumer follow a 100 TB table whose per-commit delta is megabytes.
     * A merge-on-read UPDATE commit pairs into
     * 'update_preimage' (its new DV entries) / 'update_postimage' (its
-    * added files). Rewrite-class commits (overwrite, COW update/delete,
-    * restore, repair) and upserts with matches (their added files mix
+    * added files). Rewrite-class commits (overwrite, restore, repair) and
+    * upserts and general MERGEs with matches (their added files mix
     * updated and inserted rows) are attributable ONLY when the
     * commit carries WRITE-TIME CHANGE FILES ([[TableMeta.cdfEnabled]] —
     * the commit's manifest then references its complete row-level change
@@ -5290,9 +5139,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
       // emission below anti-joins the PRE-commit DV state regardless.
       val metadataDelete = removedAny && added.isEmpty && dvAdded.isEmpty &&
         (m.op == "delete" || m.op == "truncate")
-      // an upsert's added files mix updated and inserted rows: without
-      // change files only a match-less one (no DV) is attributable
-      val unpairedUpsert = m.op == "upsert" && dvAdded.nonEmpty
+      // an upsert's or a general MERGE's added files mix updated and
+      // inserted rows: without change files only a match-less one (no
+      // DV) is attributable
+      val unpaired = (m.op == "upsert" || m.op == "merge") && dvAdded.nonEmpty
       if (m.changes.nonEmpty) {
         // write-time change files are the commit's AUTHORITATIVE,
         // complete row-level change set — read them verbatim and ignore
@@ -5302,7 +5152,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
         pieces += changeFileRows(name, m.changes, toSchema)
           .withColumn(GraftLake.CommitVersionCol, lit(v))
       } else if (!GraftLake.LogicalNoOps(m.op)) {
-        require(metadataDelete || (!removedAny && !dvRemovedAny && !unpairedUpsert),
+        require(metadataDelete || (!removedAny && !dvRemovedAny && !unpaired),
           s"tableChanges on '$name': commit v$v ('${m.op}') rewrites files " +
             "or clears deletion vectors — row-level attribution through a " +
             "rewrite is not metadata-derivable; enable the change feed " +
@@ -5373,7 +5223,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     * content-preserving commits (`compact`, `zorder`, `dv-clear`,
     * `materialize`)
     * contribute nothing — their files are rearrangements of rows already
-    * emitted — and row-changing commits (upsert matches, COW/MoR
+    * emitted — and row-changing commits (upsert and MERGE matches, MoR
     * update/delete, truncate, restore) FAIL FAST by default (row
     * attribution through a rewrite is not metadata-derivable;
     * `onRewrite = "skip"` downgrades them to no-ops for consumers that
@@ -6027,6 +5877,24 @@ object GraftLake {
       case x: Float if x == 0.0f => 0.0f
       case v => v
     }
+
+  /** DV key/position column names of a keyed live scan: the manifest
+    * file key and the file-local row position. */
+  private[graft] val DvKeyCol = "__graft_dv_key"
+  private[graft] val DvPosCol = "__graft_dv_pos"
+
+  /** A row-level statement planned over the table's live rows (see
+    * [[GraftLake.writeRowLevel]]): `hits`, the live rows it deletes or
+    * replaces, their [[DvKeyCol]]/[[DvPosCol]] columns kept; `rows`, the
+    * rows it appends, on the table's logical columns; `changes`, its
+    * change rows (table columns plus `_change_type`), asked for only on a
+    * table with change capture. Both are handed the hit rows read back
+    * from only the files that hold them (None: nothing was hit), read
+    * only if used: a statement whose new rows derive from its hits takes
+    * them from there without evaluating its condition again. */
+  private[graft] final case class RowLevel(hits: DataFrame,
+      rows: (=> Option[DataFrame]) => Option[DataFrame] = _ => None,
+      changes: (=> Option[DataFrame]) => Option[DataFrame] = _ => None)
 
   /** Commit ops that rearrange rows without changing them: the change
     * feed and the appends stream skip them. */

@@ -491,20 +491,22 @@ object IngestPipeline {
     * `upsert_curation` drain spends 35 % less CPU per record
     * (`json_append`: 13 %). Statements outside a trigger keep codegen.
     *
+    * The scope goes on two sessions: the pipeline's own, on which the
+    * engine's writes and probes plan, and the session of the trigger
+    * frame. A DataFrame plans under the session it was created on, and a
+    * started stream hands `foreachBatch` frames created on the stream's
+    * own clone of the session it was started from, so an overlay on the
+    * pipeline's session alone never reaches them. The scope is keyed per
+    * session, so for a direct `processBatch` call, whose frame carries
+    * the pipeline's session, the second entry only nests.
+    *
     * SHARED-SESSION caveat: session confs are session-global, so an
-    * ad-hoc query submitted WHILE a trigger is in flight also plans with
-    * AQE off, the small fan-out and no codegen. In deployments that mix
-    * interactive work and ingest on one application, build the SOURCE
-    * STREAM on its own `spark.newSession()` (separate conf, shared
-    * catalog + context) and hand that session's pipeline to
-    * [[IngestPipeline.start]] — the overlay then never touches the
-    * interactive session. This cannot be
-    * the pipeline's silent default: a DataFrame plans under the session
-    * it was CREATED on, so the trigger frames arriving in foreachBatch
-    * carry the caller's session no matter which session the pipeline
-    * holds — an overlay applied to a private session would simply never
-    * reach the plans it exists to shape. The choice belongs where the
-    * stream is built. */
+    * ad-hoc query submitted on the pipeline's session WHILE a trigger is
+    * in flight also plans with AQE off, the small fan-out and no codegen.
+    * In deployments that mix interactive work and ingest on one
+    * application, build the pipeline on its own `spark.newSession()`
+    * (separate conf, shared catalog + context) — the overlay then never
+    * touches the interactive session. */
   private[graft] val triggerConfs = new graft.ConfScope(Seq(
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.shuffle.partitions" -> "8",
@@ -689,7 +691,13 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * this batch commits after it returns; a failed batch writes no dead
     * letters (its redelivery parks them). */
   def processBatch(batch: DataFrame, batchId: Long): Unit =
-      IngestPipeline.triggerConfs(spark) {
+    // a started stream's trigger frames plan on the stream's own clone of
+    // the session, so the scope goes on that session as well
+    IngestPipeline.triggerConfs(spark) {
+      IngestPipeline.triggerConfs(batch.sparkSession)(landBatch(batch, batchId))
+    }
+
+  private def landBatch(batch: DataFrame, batchId: Long): Unit = {
     // foreachBatch serializes batches per query; the landing code reads
     // this for the idempotent-append watermark
     currentBatchId = batchId

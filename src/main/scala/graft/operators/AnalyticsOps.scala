@@ -330,7 +330,7 @@ object AnalyticsOps {
     * PK-keyed replica. The per-key NET event wins (latest commit; an
     * update's postimage insert beats its preimage delete within the same
     * commit), then the net set folds through [[applyChanges]] — deletes
-    * anti-join the replica's affected partitions, inserts/updates land
+    * mask the replica's rows with a deletion vector, inserts/updates land
     * through one PK upsert. The O(window delta) sibling of the
     * [[snapshotDiff]] loop: on an append/MoR-maintained source the
     * consumer reads ONLY the window's files and DV entries, never either
@@ -389,46 +389,20 @@ object AnalyticsOps {
     * replication primitive that completes the CDC loop: `snapshotDiff`
     * extracts row-level changes from the source's snapshots, this folds
     * them into a replica that was seeded from an earlier snapshot.
-    * Deletes rewrite only the affected partitions (unpartitioned replicas
-    * rewrite the file set, as all engine deletes do); inserts and updates
+    * Deletes mask the replica rows holding a deleted key with one
+    * deletion vector, as every engine delete does; inserts and updates
     * land through the PK upsert path in one batch.
     *
     * Scale shape: the change set is the ONLY data moved — source and
-    * replica never join corpus-to-corpus, deletes anti-join the replica
-    * against just the deleted keys, and the upsert reuses the engine's
-    * affected-partition merge. Replica lag is bounded by change volume,
-    * not table size. */
+    * replica never join corpus-to-corpus, deletes semi-join the replica
+    * against just the deleted keys, and no replica file is rewritten.
+    * Replica lag is bounded by change volume, not table size. */
   def applyChanges(lake: graft.catalog.GraftLake, table: String,
       changes: DataFrame, pks: Seq[String], compareCols: Seq[String]): Unit = {
     val dels = changes.filter(col("change_type") === "delete")
       .select(pks.map(col): _*)
-    if (!dels.isEmpty) {
-      val replica = lake.read(table)
-      val partCols = lake.readMeta(table).partitionExprs.map(_.outputName)
-      if (partCols.isEmpty)
-        lake.replaceScoped(table, replica.join(dels, pks, "left_anti"), Nil,
-          clearDvs = true) // full file-set replace: every DV entry is inert
-      else {
-        // scope the rewrite to partitions that actually hold deleted keys:
-        // survivors of those
-        // partitions replace them; the rest of the table is untouched.
-        // read() drops the derived __p_* columns, so recompute them the
-        // way every write path does
-        val replicaP = lake.withPartitionCols(replica,
-          lake.readMeta(table))
-        val hit = replicaP.join(dels, pks, "left_semi")
-        val parts = hit.select(partCols.map(c =>
-          col(graft.catalog.GraftLake.quoted(c))): _*).distinct().collect()
-        if (parts.nonEmpty) {
-          val scoped = replicaP.filter(
-            graft.catalog.GraftLake.partitionScope(partCols, parts))
-          // dirs via the lake's DV-free scan: input_file_name over a
-          // DV-masked read plan has two file sources and is rejected
-          val dirs = lake.partitionDirsFor(table, partCols, parts)
-          lake.replaceScoped(table, scoped.join(dels, pks, "left_anti"), dirs)
-        }
-      }
-    }
+    // a deletion vector over the replica rows holding a deleted key
+    if (!dels.isEmpty) lake.dmlWhere(table, _.join(dels, pks, "left_semi"))
     val ups = changes.filter(col("change_type").isin("insert", "update"))
       .select(pks.map(col) ++
         compareCols.map(c => col(s"__n_$c").as(c)): _*)
@@ -1439,7 +1413,7 @@ object AnalyticsOps {
       val before = l.read("li").inputFiles.toSet
       // ~1 % of rows: scale-proportional but comfortably under the DV
       // entry budget at every SF the harness runs (past the budget the
-      // engine would — correctly — fold copy-on-write instead)
+      // engine would — correctly — fold the DV into the files)
       val n = l.updateWhere("li", col("l_orderkey") % 100 === 7,
         Map("l_quantity" -> (col("l_quantity") + 100)))
       require(n > 0, "update must match rows")
@@ -1527,7 +1501,7 @@ object AnalyticsOps {
         .select(col("o_orderkey"), col("o_totalprice")).repartition(2))
       // ~1% slice: scale-proportional, comfortably under the DV entry
       // budget at every SF the harness runs (the q135 sizing rule — a
-      // fixed-selectivity 10% predicate would fold copy-on-write at
+      // fixed-selectivity 10% predicate would fold its DV at
       // sf10+ and break the liveDvs contract below)
       l.deleteWhere("src", col("o_orderkey") % 100 === 0)
       require(l.liveDvs("src").nonEmpty, "the delete must be merge-on-read")

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 
 /** SQL `DELETE FROM` over a graft table: [[GraftLake.deleteWhere]], which
-  * drops provable files metadata-only, masks a partial hit set with a
-  * deletion vector, and folds an oversized one copy-on-write. A condition
-  * carrying a subquery (IN/EXISTS/scalar) rewrites copy-on-write instead
-  * ([[GraftLake.rewriteWhere]]), over the engine's scan re-bound to the
+  * drops provable files metadata-only and otherwise masks the hit set with
+  * a deletion vector ([[GraftLake.writeRowLevel]]). A condition carrying a
+  * subquery (IN/EXISTS/scalar) takes the same deletion-vector write
+  * ([[GraftLake.dmlWhere]]) over the engine's scan re-bound to the
   * target's attribute ids: `byNameColumn` only retargets top-level
   * attribute references, so a resolved subquery would carry stale
   * attribute ids into the engine scan's re-resolution. */
@@ -29,8 +29,8 @@ final case class GraftDeleteCommand(
     val cond = shielded.expr
     val lake = new GraftLake(spark, warehouse)
     if (GraftDml.hasSubquery(Seq(cond)))
-      lake.rewriteWhere(table, GraftDml.hit(Some(cond)), Map.empty,
-        PlanBridge.rebind(target.output, _))
+      lake.dmlWhere(table, _.filter(GraftDml.hit(Some(cond))),
+        bind = PlanBridge.rebind(target.output, _))
     else lake.deleteWhere(table, PlanBridge.byNameColumn(cond))
     Seq.empty
   }
@@ -38,10 +38,10 @@ final case class GraftDeleteCommand(
 
 /** SQL `UPDATE` over a graft table: [[GraftLake.updateWhere]], which masks
   * the old rows with a deletion vector and appends the updated ones in one
-  * commit, or folds an oversized hit set copy-on-write. All assignment
-  * right-hand sides evaluate against the OLD row (simultaneous-assignment
-  * semantics). A subquery in the condition or an assignment rewrites
-  * copy-on-write, as for DELETE above. */
+  * commit. All assignment right-hand sides evaluate against the OLD row
+  * (simultaneous-assignment semantics). A subquery in the condition or an
+  * assignment takes the same write over the re-bound scan, as for DELETE
+  * above. */
 final case class GraftUpdateCommand(
     warehouse: String,
     table: String,
@@ -64,7 +64,7 @@ final case class GraftUpdateCommand(
         s"UPDATE with nested-field assignment '${k.sql}' is not supported")
     }.toMap
     if (GraftDml.hasSubquery(cond.toSeq ++ assignments.map(_.value)))
-      lake.rewriteWhere(table, GraftDml.hit(cond), byName(PlanBridge.column),
+      lake.dmlWhere(table, _.filter(GraftDml.hit(cond)), byName(PlanBridge.column),
         PlanBridge.rebind(target.output, _))
     else lake.updateWhere(table,
       cond.map(PlanBridge.byNameColumn).getOrElse(lit(true)),

@@ -5,7 +5,7 @@ import graft.catalog.{GraftCatalog, GraftLake, TableMeta}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.FullOuter
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -23,14 +23,16 @@ import org.apache.spark.sql.types.{DataType, TimestampType}
   * Spark's own row-level MERGE rewrite (`SupportsRowLevelOperations`) is a
   * group-based copy-on-write: the table scan defines replacement groups and
   * the whole scanned set is rewritten. Routing through the engine instead
-  * keeps the *upsert-shaped* merge — the only form the reference emits, and
-  * the overwhelmingly common form at ingest — on [[GraftLake.upsert]]'s
-  * partition-pruned path (affected-partition discovery via a column-pruned
-  * PK probe, staged rewrite of only those partitions). That is strictly
-  * less I/O at 100 TB than a COW over the full scan. General-form merges
-  * (extra conditions, DELETE actions, NOT MATCHED BY SOURCE, partial
-  * update column lists) fall back to an explicit whole-table staged
-  * rewrite, with ANSI multi-match detection.
+  * keeps every MERGE merge-on-read. The *upsert-shaped* merge — the only
+  * form the reference emits, and the overwhelmingly common form at ingest —
+  * runs [[GraftLake.upsert]]'s batch-bounded path (a PK probe of only the
+  * files that can hold a batch key, one deletion vector, the batch's rows).
+  * General-form merges (extra conditions, DELETE actions, NOT MATCHED BY
+  * SOURCE, partial update column lists) take the engine's one row-level
+  * write ([[GraftLake.writeRowLevel]]): a deletion vector over the target
+  * rows an action updates or deletes plus the updated and inserted rows,
+  * in one commit, with ANSI multi-match detection. Neither rewrites a data
+  * file.
   */
 object RewriteGraftMerge extends Rule[LogicalPlan] {
 
@@ -255,37 +257,30 @@ final case class GraftMergeCommand(
     Seq.empty
   }
 
-  private def hasDuplicatePks(src: org.apache.spark.sql.DataFrame,
-      pks: Seq[String]): Boolean =
-    src.groupBy(pks.map(n => col(GraftLake.quoted(n))): _*)
-      .count().filter(col("count") > 1).limit(1).count() > 0
-
   /** Opt-in strict-PK enforcement (`spark.graft.merge.strictPks=true`):
     * PKs are ADVISORY on the general merge path — ANSI semantics insert
     * every unmatched source row, duplicate key or not (README "Capability
     * determinations"). Under the flag, a statement that would persist
     * duplicate primary-key rows fails HERE, before any file is staged, so
-    * the table is left untouched. `future` is the statement's output for
-    * the slice of the table it rewrites; `rest` is the untouched remainder
-    * (None when `future` IS the whole post-merge table). The price is one
-    * extra execution of the merge plan plus PK-pruned probe scans — paid
-    * only when the flag is on. */
+    * the table is left untouched: its new `rows` must hold no key twice
+    * and no key of a live row it leaves in place (`kept`). The price is
+    * one extra execution of the merge plan plus a probe of the live rows
+    * — paid only when the flag is on. */
   private def assertUniquePks(spark: SparkSession, meta: TableMeta,
-      future: org.apache.spark.sql.DataFrame,
-      rest: Option[org.apache.spark.sql.DataFrame]): Unit = {
+      rows: org.apache.spark.sql.DataFrame,
+      kept: org.apache.spark.sql.DataFrame): Unit = {
     if (meta.pks.isEmpty ||
       !spark.conf.get("spark.graft.merge.strictPks", "false").toBoolean) return
-    def fail(): Nothing = throw new IllegalStateException(
-      s"MERGE into '$table': strict-pk mode (spark.graft.merge.strictPks) — " +
-        s"the statement would persist duplicate primary-key rows on " +
-        s"(${meta.pks.mkString(", ")}). Without the flag, PKs are advisory " +
-        "on the general merge path and the duplicates would be inserted.")
-    if (hasDuplicatePks(future, meta.pks)) fail()
     val pkCols = meta.pks.map(n => col(GraftLake.quoted(n)))
-    rest.foreach { r =>
-      if (!future.select(pkCols: _*)
-        .join(r.select(pkCols: _*), meta.pks).isEmpty) fail()
-    }
+    val duplicated = !rows.groupBy(pkCols: _*).count()
+      .filter(col("count") > 1).limit(1).isEmpty
+    if (duplicated || !rows.select(pkCols: _*)
+        .join(kept.select(pkCols: _*), meta.pks).isEmpty)
+      throw new IllegalStateException(
+        s"MERGE into '$table': strict-pk mode (spark.graft.merge.strictPks) — " +
+          s"the statement would persist duplicate primary-key rows on " +
+          s"(${meta.pks.mkString(", ")}). Without the flag, PKs are advisory " +
+          "on the general merge path and the duplicates would be inserted.")
   }
 
   // ---- upsert-shaped fast path ----
@@ -368,259 +363,81 @@ final case class GraftMergeCommand(
     Some(Project(aliases, source))
   }
 
-  // ---- general path: staged copy-on-write rewrite ----
+  // ---- general path: one row-level write ----
 
-  /** Full MERGE semantics in one full-outer join + projection:
-    * matched pairs take the first holding matched action (UPDATE assigns /
-    * DELETE drops / none keeps the target row), source-only rows take the
-    * first holding NOT MATCHED insert (else vanish), target-only rows take
-    * the first holding NOT MATCHED BY SOURCE action (else pass through).
+  /** Full MERGE semantics in one full-outer join of the table's live rows
+    * (the keyed scan of [[GraftLake.writeRowLevel]], re-bound to the
+    * target's attributes) with the source. Each joined row takes the class
+    * of its first applicable action: matched pairs by the WHEN MATCHED
+    * actions, source-only rows by the NOT MATCHED inserts, target-only rows
+    * by the NOT MATCHED BY SOURCE actions. A target row an UPDATE or DELETE
+    * fires on is a hit, masked by the statement's one deletion vector; the
+    * updated rows and the kept inserts are its new rows, in the same
+    * commit. A target row no action fires on is neither rewritten nor
+    * masked, so no data file is rewritten on any layout (mid-REBUCKET
+    * included), and a target row that several source rows match while no
+    * matched action exists emits nothing, so it cannot fan out.
     * `_inserted_at` is preserved on update and stamped on insert unless
     * explicitly assigned. ANSI cardinality: with matched actions present,
-    * >1 source match per target row is an error (pre-join aggregate
-    * check); with NO matched actions the rewrite switches to semi/anti
-    * joins so a multiply-matched target row passes through exactly once
-    * instead of fanning out.
-    *
-    * Scope (100 TB): when the table is partitioned and there is no NOT
-    * MATCHED BY SOURCE clause, only the partitions holding matched target
-    * rows plus the partitions the inserts land in are rewritten —
-    * untouched partitions keep their files. NOT MATCHED BY SOURCE can
-    * touch every target row, so that form (and unpartitioned tables)
-    * rewrites the whole table, as does a table whose files are not all
-    * in its current layout (mid-REBUCKET or partition evolution): a
-    * directory of the old layout holds rows of several current
-    * partitions, so a partition-value scope would drop the rows it does
-    * not name. */
+    * >1 source match per target row is an error, checked on the row's DV
+    * key and position before anything is staged. The rows an action fires
+    * on are cached for the statement, so the join runs once. */
   private def generalMerge(spark: SparkSession, lake: GraftLake, meta: TableMeta): Unit = {
-    if (matched.isEmpty) { noMatchedActionsMerge(spark, lake, meta); return }
-
-    val partCols = meta.partitionExprs.map(_.outputName)
-    def q(n: String) = GraftLake.quoted(n)
-    // (scoped target plan, affected dirs, untouched remainder) —
-    // None = whole-table rewrite
-    val scoping: Option[(LogicalPlan, Seq[String], org.apache.spark.sql.DataFrame)] =
-      if (partCols.isEmpty || notMatchedBySource.nonEmpty ||
-          !lake.latestVersion(table).forall(lake.liveSetConforms(table, _))) None
-      else {
-        val tdf = PlanBridge.ofRows(spark, target)
-        val sdf = PlanBridge.ofRows(spark, source)
-        val condCol = PlanBridge.column(cond)
-        val matchedParts = tdf.join(sdf, condCol, "left_semi")
-          .select(partCols.map(c => col(q(c))): _*).distinct()
-        // partitions the kept insert rows will land in
-        val keptInserts = sdf.join(tdf, condCol, "left_anti")
-          .filter(PlanBridge.column(
-            EqualNullSafe(keepOf(notMatched, default = false), Literal(true))))
-          .select(GraftLake.logicalSchema(meta.schema).fields.toSeq.map(f => PlanBridge.column(
-            valueOf(notMatched, f.name, f.dataType, Literal(null, f.dataType),
-              insertPath = true)).as(f.name)): _*)
-        val insertParts = lake.withPartitionCols(keptInserts, meta)
-          .select(partCols.map(c => col(q(c))): _*).distinct()
-        val parts = matchedParts.union(insertParts).distinct().collect()
-        if (parts.isEmpty) return // nothing matched, nothing inserts: no-op
-        val scope = GraftLake.partitionScope(partCols, parts)
-        val scoped = tdf.filter(scope)
-        // dirs via the lake's DV-free scan (input_file_name over a
-        // DV-masked target plan has two file sources and is rejected)
-        Some((PlanBridge.planOf(scoped),
-          lake.partitionDirsFor(table, partCols, parts),
-          tdf.filter(!scope)))
-      }
-    val scopedTarget = scoping.map(_._1).getOrElse(target)
-
-    locally {
-      val tid = Alias(MonotonicallyIncreasingID(), "__graft_tid")()
-      val innerJ = Join(Project(scopedTarget.output :+ tid, scopedTarget), source,
-        Inner, Some(cond), JoinHint.NONE)
-      val dups = PlanBridge.ofRows(spark, innerJ)
-        .groupBy(col("__graft_tid")).count()
-        .filter(col("count") > 1).limit(1).count()
-      if (dups > 0) throw new IllegalStateException(
-        s"MERGE into '$table': a target row matched more than one source row " +
-          "(ON condition must identify at most one source row per target row)")
+    val fields = GraftLake.logicalSchema(meta.schema).fields.toSeq
+    val keyNames = Seq(GraftLake.DvKeyCol, GraftLake.DvPosCol)
+    val keyCols = keyNames.map(n => col(GraftLake.quoted(n)))
+    var acted: Option[org.apache.spark.sql.DataFrame] = None
+    try lake.writeRowLevel(table, "merge", PlanBridge.rebind(target.output, _)) { live =>
+      val tgt = PlanBridge.planOf(live)
+      def tAttr(n: String): Attribute = tgt.output.find(_.name.equalsIgnoreCase(n))
+        .getOrElse(throw new IllegalStateException(s"target output missing column $n"))
+      val tProj = Project(tgt.output :+ Alias(Literal(true), "__graft_t_present")(), tgt)
+      val sProj = Project(source.output :+ Alias(Literal(true), "__graft_s_present")(), source)
+      val joined = Join(tProj, sProj, FullOuter, Some(cond), JoinHint.NONE)
+      val matchedP = And(IsNotNull(tProj.output.last), IsNotNull(sProj.output.last))
+      val sourceOnly = IsNull(tProj.output.last)
+      def byAction(f: Seq[MergeAction] => Expression): Expression =
+        CaseWhen(Seq(matchedP -> f(matched), sourceOnly -> f(notMatched)),
+          Some(f(notMatchedBySource)))
+      val planned = PlanBridge.ofRows(spark, Project(
+        keyNames.map(tAttr) ++
+          fields.map(f => Alias(tAttr(f.name), s"__graft_old_${f.name}")()) ++
+          fields.map(f => Alias(CaseWhen(Seq(
+            matchedP -> valueOf(matched, f.name, f.dataType, tAttr(f.name), insertPath = false),
+            sourceOnly -> valueOf(notMatched, f.name, f.dataType,
+              Literal(null, f.dataType), insertPath = true)),
+            Some(valueOf(notMatchedBySource, f.name, f.dataType, tAttr(f.name),
+              insertPath = false))), s"__graft_new_${f.name}")()) :+
+          Alias(byAction(classOf), "__graft_cls")() :+ Alias(matchedP, "__graft_matched")(),
+        joined))
+      val cls = col("__graft_cls")
+      // the joined rows an action fires on, plus every matched pair when
+      // the cardinality check needs them: cached for the statement, so its
+      // check, DV stage, row write and change write run the join once
+      val a = planned.filter(cls =!= "none" ||
+        (lit(matched.nonEmpty) && col("__graft_matched"))).cache()
+      acted = Some(a)
+      if (matched.nonEmpty && !a.filter(col("__graft_matched")).groupBy(keyCols: _*)
+          .count().filter(col("count") > 1).limit(1).isEmpty)
+        throw new IllegalStateException(
+          s"MERGE into '$table': a target row matched more than one source row " +
+            "(ON condition must identify at most one source row per target row)")
+      def image(rows: String, side: String) = a.filter(cls === rows)
+        .select(fields.map(f => col(GraftLake.quoted(s"__graft_${side}_${f.name}")).as(f.name)): _*)
+      val hits = a.filter(cls.isin("update", "delete"))
+      val rows = image("update", "new").unionByName(image("insert", "new"))
+      assertUniquePks(spark, meta, rows,
+        live.join(hits.select(keyCols: _*), keyNames, "left_anti"))
+      // change capture: update rows explode into preimage/postimage pairs,
+      // delete rows carry their old values, insert rows their new ones
+      val ct = GraftLake.ChangeTypeCol
+      GraftLake.RowLevel(hits, rows = _ => Some(rows), changes = _ => Some(
+        image("update", "old").withColumn(ct, lit("update_preimage"))
+          .unionByName(image("update", "new").withColumn(ct, lit("update_postimage")))
+          .unionByName(image("delete", "old").withColumn(ct, lit("delete")))
+          .unionByName(image("insert", "new").withColumn(ct, lit("insert")))))
     }
-
-    val tPresent = Alias(Literal(true), "__graft_t_present")()
-    val sPresent = Alias(Literal(true), "__graft_s_present")()
-    val tProj = Project(scopedTarget.output :+ tPresent, scopedTarget)
-    val sProj = Project(source.output :+ sPresent, source)
-    val tp = tProj.output.last
-    val sp = sProj.output.last
-    val joined = Join(tProj, sProj, FullOuter, Some(cond), JoinHint.NONE)
-
-    val matchedP = And(IsNotNull(tp), IsNotNull(sp))
-    val sourceOnly = IsNull(tp)
-
-    val tAttrByName = scopedTarget.output.map(a => a.name.toLowerCase -> a).toMap
-    val outCols = GraftLake.logicalSchema(meta.schema).fields.toSeq.map { f =>
-      val tAttr = tAttrByName.getOrElse(f.name.toLowerCase,
-        throw new IllegalStateException(s"target output missing column ${f.name}"))
-      val expr = CaseWhen(Seq(
-        matchedP -> valueOf(matched, f.name, f.dataType, tAttr, insertPath = false),
-        sourceOnly -> valueOf(notMatched, f.name, f.dataType,
-          Literal(null, f.dataType), insertPath = true)),
-        Some(valueOf(notMatchedBySource, f.name, f.dataType, tAttr, insertPath = false)))
-      Alias(expr, f.name)()
-    }
-    val keep = CaseWhen(Seq(
-      matchedP -> keepOf(matched, default = true),
-      sourceOnly -> keepOf(notMatched, default = false)),
-      Some(keepOf(notMatchedBySource, default = true)))
-
-    val outPlan = Project(outCols, Filter(EqualNullSafe(keep, Literal(true)), joined))
-    val result = PlanBridge.ofRows(spark, outPlan)
-    assertUniquePks(spark, meta, result, scoping.map(_._3))
-    // write-time change capture (CDF-enabled tables): the SAME full-outer
-    // join classifies every row by its first applicable action — update
-    // rows explode into preimage/postimage pairs (old side = target
-    // attributes, null-padded on the insert side by the join itself),
-    // delete rows carry their old values, insert rows their new ones.
-    // One change-sized write; rows no action fires on emit nothing.
-    val changes: Option[org.apache.spark.sql.DataFrame] =
-      if (!meta.cdfEnabled) None
-      else {
-        def clsOf(actions: Seq[MergeAction]): Expression = {
-          val branches = actions.map {
-            case d: DeleteAction => condOf(d) -> Literal("delete")
-            case u: UpdateAction => condOf(u) -> Literal("update")
-            case i: InsertAction => condOf(i) -> Literal("insert")
-            case a => throw new UnsupportedOperationException(
-              s"MERGE into '$table': unsupported action $a")
-          }
-          if (branches.isEmpty) Literal("none")
-          else CaseWhen(branches, Some(Literal("none")))
-        }
-        val cls = CaseWhen(Seq(
-          matchedP -> clsOf(matched),
-          sourceOnly -> clsOf(notMatched)),
-          Some(clsOf(notMatchedBySource)))
-        val fields = GraftLake.logicalSchema(meta.schema).fields.toSeq
-        def tAttrOf(f: org.apache.spark.sql.types.StructField): Attribute =
-          tAttrByName.getOrElse(f.name.toLowerCase,
-            throw new IllegalStateException(
-              s"target output missing column ${f.name}"))
-        val chgProj = Project(
-          fields.map(f =>
-            Alias(tAttrOf(f), s"__graft_old_${f.name}")()) ++
-          fields.map { f =>
-            val expr = CaseWhen(Seq(
-              matchedP -> valueOf(matched, f.name, f.dataType, tAttrOf(f),
-                insertPath = false),
-              sourceOnly -> valueOf(notMatched, f.name, f.dataType,
-                Literal(null, f.dataType), insertPath = true)),
-              Some(valueOf(notMatchedBySource, f.name, f.dataType, tAttrOf(f),
-                insertPath = false)))
-            Alias(expr, s"__graft_new_${f.name}")()
-          } :+ Alias(cls, "__graft_cls")(), joined)
-        val cdf = PlanBridge.ofRows(spark, chgProj)
-        val ctCol = GraftLake.ChangeTypeCol
-        def proj(prefix: String) = fields.map(f =>
-          col(GraftLake.quoted(s"__graft_${prefix}_${f.name}")).as(f.name))
-        val clsC = col("__graft_cls")
-        val pre = cdf.filter(clsC === "update").select(proj("old"): _*)
-          .withColumn(ctCol, lit("update_preimage"))
-        val post = cdf.filter(clsC === "update").select(proj("new"): _*)
-          .withColumn(ctCol, lit("update_postimage"))
-        val del = cdf.filter(clsC === "delete").select(proj("old"): _*)
-          .withColumn(ctCol, lit("delete"))
-        val ins = cdf.filter(clsC === "insert").select(proj("new"): _*)
-          .withColumn(ctCol, lit("insert"))
-        Some(pre.unionByName(post).unionByName(del).unionByName(ins))
-      }
-    scoping match {
-      case Some((_, dirs, _)) =>
-        lake.replaceScoped(table, result, dirs, changes = changes)
-      case None => lake.overwriteContents(table, result, changes = changes)
-    }
-  }
-
-  /** MERGE with no WHEN MATCHED clauses: matched target rows pass through
-    * unchanged, and they must do so exactly ONCE even when several source
-    * rows match (a full-outer fanout would duplicate them, and the ANSI
-    * cardinality error does not apply when no matched action fires).
-    *
-    * Without NOT MATCHED BY SOURCE the statement is insert-only — no
-    * target row changes at all, so it lands as a plain APPEND of the
-    * unmatched source rows (no rewrite of any existing file, the cheapest
-    * possible plan at scale). With NOT MATCHED BY SOURCE the target side
-    * is rewritten via semi/anti joins. */
-  private def noMatchedActionsMerge(spark: SparkSession, lake: GraftLake,
-      meta: TableMeta): Unit = {
-    val sourceOnlyS = Join(source, target, LeftAnti, Some(cond), JoinHint.NONE)
-    val inserts = Project(
-      GraftLake.logicalSchema(meta.schema).fields.toSeq.map(f => Alias(valueOf(notMatched, f.name,
-        f.dataType, Literal(null, f.dataType), insertPath = true), f.name)()),
-      Filter(EqualNullSafe(keepOf(notMatched, default = false),
-        Literal(true)), sourceOnlyS))
-
-    if (notMatchedBySource.isEmpty) {
-      val df = PlanBridge.ofRows(spark, inserts)
-      if (!df.isEmpty) {
-        // insert-only append: the rest of the table is the WHOLE table
-        assertUniquePks(spark, meta, df, Some(lake.read(table)))
-        lake.appendPrepared(table, df)
-      }
-      return
-    }
-
-    val matchedT = Join(target, source, LeftSemi, Some(cond), JoinHint.NONE)
-    val unmatchedT = Join(target, source, LeftAnti, Some(cond), JoinHint.NONE)
-
-    val tAttrByName = target.output.map(a => a.name.toLowerCase -> a).toMap
-    def tAttr(f: org.apache.spark.sql.types.StructField): Attribute =
-      tAttrByName.getOrElse(f.name.toLowerCase,
-        throw new IllegalStateException(s"target output missing column ${f.name}"))
-
-    val passThrough = Project(
-      GraftLake.logicalSchema(meta.schema).fields.toSeq.map(f => Alias(tAttr(f), f.name)()), matchedT)
-    val nmbsApplied = Project(
-      GraftLake.logicalSchema(meta.schema).fields.toSeq.map(f => Alias(valueOf(notMatchedBySource,
-        f.name, f.dataType, tAttr(f), insertPath = false), f.name)()),
-      Filter(EqualNullSafe(keepOf(notMatchedBySource, default = true),
-        Literal(true)), unmatchedT))
-
-    val union = Union(Seq(passThrough, nmbsApplied, inserts))
-    val result = PlanBridge.ofRows(spark, union)
-    assertUniquePks(spark, meta, result, None)
-    // write-time change capture: unmatched-by-source rows classify by
-    // their first applicable NMBS action; kept inserts are the third leg
-    val changes: Option[org.apache.spark.sql.DataFrame] =
-      if (!meta.cdfEnabled) None
-      else {
-        val fields = GraftLake.logicalSchema(meta.schema).fields.toSeq
-        val cls = {
-          val branches = notMatchedBySource.map {
-            case d: DeleteAction => condOf(d) -> Literal("delete")
-            case u: UpdateAction => condOf(u) -> Literal("update")
-            case a => throw new UnsupportedOperationException(
-              s"MERGE into '$table': unsupported NMBS action $a")
-          }
-          if (branches.isEmpty) Literal("none")
-          else CaseWhen(branches, Some(Literal("none")))
-        }
-        val chgProj = Project(
-          fields.map(f => Alias(tAttr(f), s"__graft_old_${f.name}")()) ++
-          fields.map(f => Alias(valueOf(notMatchedBySource, f.name,
-            f.dataType, tAttr(f), insertPath = false),
-            s"__graft_new_${f.name}")()) :+
-          Alias(cls, "__graft_cls")(), unmatchedT)
-        val cdf = PlanBridge.ofRows(spark, chgProj)
-        val ctCol = GraftLake.ChangeTypeCol
-        def proj(prefix: String) = fields.map(f =>
-          col(GraftLake.quoted(s"__graft_${prefix}_${f.name}")).as(f.name))
-        val clsC = col("__graft_cls")
-        val pre = cdf.filter(clsC === "update").select(proj("old"): _*)
-          .withColumn(ctCol, lit("update_preimage"))
-        val post = cdf.filter(clsC === "update").select(proj("new"): _*)
-          .withColumn(ctCol, lit("update_postimage"))
-        val del = cdf.filter(clsC === "delete").select(proj("old"): _*)
-          .withColumn(ctCol, lit("delete"))
-        val ins = PlanBridge.ofRows(spark, inserts)
-          .withColumn(ctCol, lit("insert"))
-        Some(pre.unionByName(post).unionByName(del).unionByName(ins))
-      }
-    lake.overwriteContents(table, result, changes = changes)
+    finally acted.foreach(_.unpersist())
   }
 
   // ---- shared action application ----
@@ -628,14 +445,18 @@ final case class GraftMergeCommand(
   private def condOf(a: MergeAction): Expression =
     a.condition.getOrElse(Literal.TrueLiteral)
 
-  /** Whether the row survives the first applicable action (DELETE drops). */
-  private def keepOf(actions: Seq[MergeAction], default: Boolean): Expression = {
+  /** The class of the first applicable action — `update`, `delete` or
+    * `insert` — or `none` when no action fires. */
+  private def classOf(actions: Seq[MergeAction]): Expression = {
     val branches = actions.map {
-      case d: DeleteAction => condOf(d) -> Literal(false)
-      case a => condOf(a) -> Literal(true)
+      case d: DeleteAction => condOf(d) -> Literal("delete")
+      case u: UpdateAction => condOf(u) -> Literal("update")
+      case i: InsertAction => condOf(i) -> Literal("insert")
+      case a => throw new UnsupportedOperationException(
+        s"MERGE into '$table': unsupported action $a")
     }
-    if (branches.isEmpty) Literal(default)
-    else CaseWhen(branches, Some(Literal(default)))
+    if (branches.isEmpty) Literal("none")
+    else CaseWhen(branches, Some(Literal("none")))
   }
 
   private def assigned(as: Seq[Assignment], name: String): Option[Expression] =

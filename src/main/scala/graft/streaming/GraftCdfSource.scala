@@ -34,7 +34,7 @@ import graft.catalog.GraftLake
   *    'update_postimage' and `_commit_version`. Append commits stream
   *    inserts, MoR deletes their preimages, MoR updates pre/post pairs —
   *    all derived from commit metadata. Upserts with matches and
-  *    rewrite-class commits (general MERGE, copy-on-write UPDATE/DELETE)
+  *    rewrite-class commits (general MERGE with matches, overwrite)
   *    stream EXACTLY when the table
   *    has change capture on (`ALTER TABLE t SET TBLPROPERTIES
   *    ('graft.enableChangeDataFeed'='true')` — such commits then write

@@ -234,22 +234,29 @@ class ChangeFeedSpec extends AnyFunSuite {
       (2, "b", "delete", v1)), "one attribution per key, no fan-out")
   }
 
-  test("change capture: COW UPDATE/DELETE fallbacks attribute through replaceScoped") {
+  // an UPDATE or DELETE past spark.graft.dv.maxEntries commits its DV and
+  // change files, then folds the DV in a feed-transparent materialize
+  test("change capture: an oversized DML attributes at its own commit") {
     val lake = newLake()
     lake.write("p", (0 until 40).map(i => (i, i % 2, s"v$i"))
       .toDF("id", "seg", "v"), partitions = Seq("seg"), pks = Seq("id"))
     lake.setTableProperty("p", TableMeta.CdfEnabledKey, "true")
     val v0 = lake.versions("p").last
-    // dv.maxEntries=0 forces BOTH engine DML paths onto their
-    // copy-on-write fallbacks (the rewrite-class commits under test)
+    def dmlVersion(op: String): Long = {
+      val ops = lake.history("p").select("version", "operation").as[(Long, String)]
+        .collect().sortBy(_._1).toSeq
+      assert(ops.takeRight(2).map(_._2) === Seq(op, "materialize"), ops)
+      ops.init.last._1
+    }
     spark.conf.set("spark.graft.dv.maxEntries", "0")
     try {
       assert(lake.updateWhere("p", col("id") === 7,
         Map("v" -> lit("U7"))) === 1L)
-      val vUpd = lake.versions("p").last
+      val vUpd = dmlVersion("update")
       assert(lake.deleteWhere("p", col("id") === 8) === 1L)
-      val vDel = lake.versions("p").last
-      val feed = lake.tableChanges("p", v0, vDel)
+      val vDel = dmlVersion("delete")
+      assert(lake.liveDvs("p").isEmpty, "the fold leaves no DV")
+      val feed = lake.tableChanges("p", v0, lake.versions("p").last)
       assert(feedRows(feed) === Set(
         (7, "v7", "update_preimage", vUpd),
         (7, "U7", "update_postimage", vUpd),

@@ -142,6 +142,41 @@ class DeletionVectorSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.dv.maxEntries")
   }
 
+  // The fold runs exactly when the live DV entries exceed
+  // spark.graft.dv.maxEntries, so it must not force a broadcast of them:
+  // past the bound its mask is the anti-join adaptive execution picks, and
+  // with size-based broadcasts off (an oversized set) that plan holds no
+  // broadcast exchange.
+  test("the DV fold past a lowered entry bound plans no broadcast of the DV set") {
+    val lake = newLake()
+    lake.write("p", (1 to 100).map(i => (i, if (i <= 50) "x" else "y"))
+      .toDF("id", "seg"), partitions = Seq("seg"))
+    assert(lake.deleteWhere("p", col("id") % 10 === 0) === 10)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.conf.set("spark.graft.dv.maxEntries", "5")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.listenerManager.register(listener)
+    try org.apache.spark.sql.graft.JobTimeline.record(spark.sparkContext)(
+      lake.materializeDeletes("p"))
+    finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.unset("spark.graft.dv.maxEntries")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+    import scala.jdk.CollectionConverters._
+    val folds = plans.asScala.filter(_.contains("LeftAnti")).toSeq
+    assert(folds.nonEmpty, plans.asScala.mkString("\n"))
+    assert(!folds.exists(_.contains("BroadcastExchange")), folds.mkString("\n"))
+    assert(lake.liveDvs("p").isEmpty)
+    assert(lake.read("p").count() === 90)
+  }
+
   test("expireSnapshots vacuums DV sidecars no kept snapshot references") {
     val lake = newLake()
     lake.write("t", (1 to 20).map(i => (i, i)).toDF("id", "n"))
@@ -273,14 +308,15 @@ class DeletionVectorSpec extends AnyFunSuite {
       assert(spark.sql(
         "SELECT id FROM dvw.u WHERE id IN (SELECT id FROM dvw.t) ORDER BY id")
         .collect().map(_.getInt(0)).toSeq === Seq(3))
-      // a DELETE whose condition carries a subquery rewrites copy-on-write
-      // (byName retargeting can't carry a resolved subquery), same results
+      // a DELETE whose condition carries a subquery masks its hits over the
+      // re-bound scan (byName retargeting can't carry a resolved subquery),
+      // same results
       spark.sql("DELETE FROM dvw.u WHERE id IN (SELECT id FROM dvw.t)")
       assert(spark.sql("SELECT id FROM dvw.u ORDER BY id").collect()
         .map(_.getInt(0)).toSeq === Seq(2, 4))
-      // copy-on-write SQL DELETE (the fold, forced by a zero DV budget) is
-      // a full file-set replace on an unpartitioned table: it must CLEAR
-      // the now-inert DV entries, restoring the plain pruned DSv2 scan
+      // the fold of a SQL DELETE's DV (forced by a zero DV budget) is a
+      // full file-set replace on an unpartitioned table: it must CLEAR the
+      // now-inert DV entries, restoring the plain pruned DSv2 scan
       spark.conf.set("spark.graft.dv.maxEntries", "0")
       try spark.sql("DELETE FROM dvw.t WHERE id = 9")
       finally spark.conf.unset("spark.graft.dv.maxEntries")
@@ -493,8 +529,9 @@ class DeletionVectorSpec extends AnyFunSuite {
       assert(lake.liveDvs("t").nonEmpty)
       assert(rows(lake.read("t"), "id", "n") ===
         Set(Seq(1, 10), Seq(2, 40), Seq(3, 60)))
-      // subquery condition → COW fallback, still correct
+      // subquery condition → the same DV write over the re-bound scan
       spark.sql("UPDATE dvu.t SET n = 0 WHERE id IN (SELECT 1)")
+      assert(files.subsetOf(lake.dataFiles("t").toSet), "subquery update: no rewrite")
       assert(rows(lake.read("t"), "id", "n") ===
         Set(Seq(1, 0), Seq(2, 40), Seq(3, 60)))
     } finally {

@@ -192,24 +192,23 @@ class MetadataDeleteSpec extends AnyFunSuite {
 
   test("truncate clears stranded inert DV sidecars under a feed-transparent op") {
     GraftLake.invalidateCaches()
-    val cat = "mdcat3"
     val wh = Files.createTempDirectory("graft-mdstrand").toString
-    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     val lake = new GraftLake(spark, wh)
     lake.write("p", (1 to 10).map(i => (i, i % 2)).toDF("id", "seg")
       .repartition(1), partitions = Seq("seg"))
     assert(lake.deleteWhere("p", col("id") === 3) === 1L) // a live DV
-    // partition-scoped COW DELETE of everything (the fold, forced by a
-    // zero DV budget): % is unprovable (no metadata drop) and the
-    // partitioned COW path keeps clearDvs=false, leaving the table
-    // file-less with the sidecar STRANDED live
-    spark.conf.set("spark.graft.dv.maxEntries", "0")
-    try spark.sql(s"DELETE FROM $cat.p WHERE id % 1 = 0")
-    finally spark.conf.unset("spark.graft.dv.maxEntries")
+    // a file-less snapshot with the sidecar STRANDED live: the state the
+    // partition-scoped copy-on-write DELETE of earlier engine versions
+    // left behind (its rewrite kept the DVs), committed here as that
+    // engine wrote it
+    val next = lake.versions("p").last + 1
+    Files.writeString(java.nio.file.Paths.get(wh, "p", "_versions", s"v$next.json"),
+      GraftLake.renderManifest(next, lake.readMeta("p"), Nil, op = "replace-scoped",
+        dvs = lake.liveDvs("p")))
+    GraftLake.invalidateCaches()
     assert(lake.dataFiles("p").isEmpty)
     assert(lake.liveDvs("p").nonEmpty,
-      "scenario setup: the partition-scoped rewrite strands the inert DV")
+      "scenario setup: a file-less snapshot with a live DV")
     lake.truncate("p")
     assert(lake.liveDvs("p").isEmpty, "truncate reaps the stranded sidecar")
     assert(lake.history("p").collect().last.getString(2) === "dv-clear",
@@ -232,10 +231,8 @@ class MetadataDeleteSpec extends AnyFunSuite {
     lake.write("p", (1 to 8).map(i => (i, i % 2, i * 10)).toDF("id", "seg", "n")
       .repartition(1), partitions = Seq("seg"))
     assert(lake.deleteWhere("p", col("id") === 2) === 1L) // live DV
-    // a subquery condition takes the SQL COW rewrite over the DV-masked
-    // target plan; the partition-dir resolution must come from a DV-FREE
-    // scan: input_file_name over the DV-masked target plan (two file
-    // sources) used to throw MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION here
+    // a subquery condition takes the row-level write over the DV-masked
+    // target plan, re-bound to the statement's attributes
     spark.sql(s"UPDATE $cat.p SET n = n + 1 WHERE id % 2 = 1 AND " +
       "id IN (SELECT id FROM range(1, 9))")
     val rows = spark.sql(s"SELECT id, n FROM $cat.p ORDER BY id").collect()

@@ -164,9 +164,9 @@ class RebucketSpec extends AnyFunSuite {
 
   test("MID-SPLIT copy-on-write DML keeps the rows its hits share a directory with") {
     // an unmigrated bucket(8) directory holds rows of TWO bucket(16)
-    // partitions; a copy-on-write DELETE/UPDATE whose hits all fall in
-    // one of them rewrites that directory whole, so the rows of the other
-    // partition must survive (engine folds, a SQL subquery rewrite and
+    // partitions; the fold of a DELETE/UPDATE whose hits all fall in one
+    // of them rewrites that directory whole, so the rows of the other
+    // partition must survive (engine DML, SQL subquery DML and
     // materializeDeletes), and so must the rows appended since the flip
     // into the directories the rewritten rows move to
     val lake = newLake()

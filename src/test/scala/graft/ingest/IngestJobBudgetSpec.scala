@@ -163,6 +163,59 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     jsonTopics.foreach(t => assert(p.lake.read(t).count() === 15, t))
   }
 
+  // A started stream hands its trigger frames over on its own clone of the
+  // session, so the trigger confs go on that session too, and only for the
+  // trigger: every SQL execution of a streamed flush runs without
+  // whole-stage codegen, and a repeated streamed flush compiles nothing.
+  // (A job of the stream's own root execution, such as an RDD action,
+  // carries the confs that execution propagated when the trigger began.)
+  test("a started stream's triggers run under the trigger confs on the stream's session") {
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    val key = "spark.sql.codegen.wholeStage"
+    val p = pipeline(wh => IngestConfig(wh, triggerMs = 100L, dlqTable = None))
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[(String, Int, Long, Array[Byte])]
+    def add(n: Int): Unit = mem.addData((0 until 5).map { i =>
+      val id = 5 * n + i
+      ("bs", 0, id.toLong, json(s"""{"id":$id,"name":"s$id"}"""))
+    })
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        // the jobs of the SQL executions a trigger starts: the confs they
+        // carry are their session's at the time they ran
+        Option(e.properties).filter(p => p.getProperty("spark.sql.execution.id") !=
+            p.getProperty("spark.sql.execution.root.id"))
+          .foreach(p => seen.add(String.valueOf(p.getProperty(key))))
+    }
+    val before = spark.conf.getOption(key)
+    val q = p.start(mem.toDF().toDF("topic", "partition", "offset", "value"),
+      Files.createTempDirectory("graft-budget-ckpt").toString)
+    spark.sparkContext.addSparkListener(listener)
+    var streamSession: org.apache.spark.sql.SparkSession = null
+    val compiles = try {
+      add(0)
+      JobTimeline.record(spark.sparkContext)(q.processAllAvailable())
+      // the session the stream cloned from this one at start
+      streamSession = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.sparkSession
+      add(1)
+      JobTimeline.record(spark.sparkContext)(q.processAllAvailable())
+      add(2)
+      compilesOf(JobTimeline.record(spark.sparkContext)(q.processAllAvailable()))
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    info(s"${seen.size} jobs of nested executions, $compiles classes compiled in the third trigger")
+    assert(seen.size > 0 && seen.asScala.forall(_ == "false"), seen)
+    assert(compiles === 0)
+    assert(spark.conf.getOption(key) === before)
+    assert(!(streamSession eq spark), "the stream plans on a session of its own")
+    assert(streamSession.conf.getOption(key) === before)
+    assert(p.lake.read("bs").count() === 15)
+  }
+
   test("a second identical upsert-plus-dedup flush compiles no class") {
     val p = pipeline(wh => IngestConfig(wh,
       pks = Map("bu" -> Seq("id")), partitions = Map("bu" -> Seq("bucket(8, id)")),
@@ -306,6 +359,81 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     assert(groups.size === 7)
     assert(sqlLake.read("cust").count() === 40 + 7)
     assert(sqlLake.read("cust").filter("c_mktsegment = 'MOVED'").count() === 10)
+  }
+
+  /** Runs the row-level statement `body` in job group `group`, and checks
+    * that its commits remove no live data file and add one deletion
+    * vector. Returns its jobs' call sites. */
+  private def rowLevelJobs(lake: GraftLake, t: String, group: String)(body: => Unit): Seq[String] = {
+    val files = lake.dataFiles(t).toSet
+    val dvs = lake.liveDvs(t).toSet
+    spark.sparkContext.setJobGroup(group, "row-level job budget")
+    val jobs = try JobTimeline.record(spark.sparkContext)(body)._2
+      finally spark.sparkContext.clearJobGroup()
+    info(s"${jobs.size} jobs: ${jobs.map(_.site).mkString("; ")}")
+    assert(jobs.forall(_.group.contains(group)), jobs.map(_.group))
+    assert(files.subsetOf(lake.dataFiles(t).toSet), "the statement removed a data file")
+    assert((lake.liveDvs(t).toSet -- dvs).size === 1, "one DV per statement")
+    jobs.map(_.site)
+  }
+
+  private def orders(keys: Seq[Int]): DataFrame =
+    keys.map(k => (k.toLong, if (k % 3 == 0) "F" else "O", k * 1000.0))
+      .toDF("o_orderkey", "o_orderstatus", "o_totalprice")
+
+  // The general MERGE masks the target rows its actions update or delete
+  // with one DV and appends the updated and inserted rows in the same
+  // commit. The full-outer join runs once, into a cache of the rows an
+  // action fires on: the cardinality check over it (5 jobs under adaptive
+  // execution), then the DV stage (2) and the rows' write (1) from it.
+  test("a general SQL MERGE (q60 shape) runs 8 jobs and rewrites no data file") {
+    sqlLake.write("ord_gm", orders(1 to 60))
+    orders((2 to 120 by 2)).createOrReplaceTempView("budget_gm_src")
+    val sites = rowLevelJobs(sqlLake, "ord_gm", "budget-general-merge") {
+      spark.sql(
+        """MERGE INTO gjb.ord_gm t USING budget_gm_src s
+          |ON t.o_orderkey = s.o_orderkey
+          |WHEN MATCHED AND s.o_totalprice > 40000 THEN UPDATE SET o_orderstatus = 'B'
+          |WHEN MATCHED AND s.o_totalprice < 10000 THEN DELETE
+          |WHEN NOT MATCHED AND s.o_totalprice > 100000 THEN
+          |  INSERT (o_orderkey, o_orderstatus, o_totalprice) VALUES (s.o_orderkey, 'N', s.o_totalprice)
+          |WHEN NOT MATCHED BY SOURCE AND t.o_totalprice < 5000 THEN DELETE""".stripMargin)
+    }
+    assert(sites.size === 8)
+    val rows = sqlLake.read("ord_gm")
+    // 60 rows, 4 matched deletes, 2 NMBS deletes, 10 inserts
+    assert(rows.count() === 60 - 4 - 2 + 10)
+    assert(rows.filter("o_orderstatus = 'B'").count() === 10)
+  }
+
+  // A subquery condition takes the same DV write over the re-bound scan:
+  // its DV stage is the whole statement
+  test("a SQL DELETE with a subquery condition runs 3 jobs and rewrites no data file") {
+    sqlLake.write("ord_sq", orders(1 to 60), partitions = Seq("o_orderstatus"))
+    (1 to 60 by 7).toDF("k").createOrReplaceTempView("budget_sq_keys")
+    val sites = rowLevelJobs(sqlLake, "ord_sq", "budget-subquery-delete") {
+      spark.sql("DELETE FROM gjb.ord_sq WHERE o_orderkey IN (SELECT k FROM budget_sq_keys)")
+    }
+    assert(sites.size === 3)
+    assert(sqlLake.read("ord_sq").count() === 60 - 9)
+  }
+
+  // CDC apply: the deleted keys mask the replica rows that hold them with
+  // one DV (its stage, 3 jobs); the inserts land through the upsert, which
+  // matches nothing (6: its key collect, the broadcast of the new DV set,
+  // its empty DV stage and its rows' write)
+  test("a CDC applyChanges with deletes runs 9 jobs and rewrites no data file") {
+    sqlLake.write("rep", orders(1 to 60), partitions = Seq("bucket(4, o_orderkey)"),
+      pks = Seq("o_orderkey"))
+    val changes = (Seq(3, 17, 40).map(k => (k.toLong, 0.0, "delete")) ++
+      Seq(61, 62).map(k => (k.toLong, k * 1000.0, "insert")))
+      .toDF("o_orderkey", "__n_o_totalprice", "change_type")
+    val sites = rowLevelJobs(sqlLake, "rep", "budget-apply-changes") {
+      graft.operators.AnalyticsOps.applyChanges(sqlLake, "rep", changes,
+        Seq("o_orderkey"), Seq("o_totalprice"))
+    }
+    assert(sites.size === 9)
+    assert(sqlLake.read("rep").count() === 60 - 3 + 2)
   }
 
   private def mergeCustomers(table: String, src: String): DataFrame = spark.sql(
