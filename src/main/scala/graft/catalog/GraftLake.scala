@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -74,10 +74,11 @@ final class GraftLake(private[graft] val spark: SparkSession,
   /** Warehouse root this lake is bound to. */
   def warehouseDir: String = warehouse
 
-  /** Run `f` with the lake's write-side session confs applied, restoring
-    * the caller's settings after. Every Parquet file the lake writes (data
-    * files, DV and bloom sidecars, change files) is written inside this
-    * scope, and the application's own parquet output never is. Three confs:
+  /** A writer of `df` into a staging directory, planned on the lake's
+    * WRITE SESSION: a clone of the lake's session with three confs set
+    * ([[GraftLake.writeSession]]). Every Parquet file the lake writes (data
+    * files, DV and bloom sidecars, change files) is written this way, and
+    * no session the application holds is changed. The three confs:
     *  - parquet timestamps forced to INT64 TIMESTAMP_MICROS: Spark's
     *    legacy INT96 default carries no usable column statistics, which
     *    would leave `_inserted_at` — the dominant pruning predicate of a
@@ -89,15 +90,17 @@ final class GraftLake(private[graft] val spark: SparkSession,
     *  - the compression codec forced to zstd at Parquet's default level:
     *    snappy barely compresses document text, and a zstd file of it is
     *    about half the size.
-    * Only the codec is also a DataFrameWriter option; it stays a scoped
-    * conf so that this one place covers every write site.
-    *
-    * The confs go on the session of `df`, the frame `f` writes: a write
-    * plans under its frame's session, and a frame from a streaming
-    * trigger carries the stream's own clone of the session, where confs
-    * set on the lake's session never reach it. */
-  private def withLakeWriteConfs[T](df: DataFrame)(f: => T): T =
-    GraftLake.lakeWriteConfs(df.sparkSession)(f)
+    * `df`'s analyzed plan is re-bound, not re-analyzed; it optimizes and
+    * runs under the write session. */
+  private def lakeWriter(df: DataFrame): DataFrameWriter[Row] = {
+    val ws = GraftLake.writeSession(spark)
+    heldWriteSession = ws
+    org.apache.spark.sql.graft.PlanBridge.rebound(ws, df).write.mode(SaveMode.Overwrite)
+  }
+
+  /** The write session last used, held so that the session cache (which
+    * holds it weakly) keeps it while this lake lives. */
+  @volatile private var heldWriteSession: SparkSession = _
 
   /** Write-side DISTRIBUTION for staged data writes (the Iceberg
     * hash `distribution-mode` analog; optimization guide §6: small
@@ -1360,9 +1363,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val dest = new Path(bloomDir(name), field.name)
     val f = fs(stage)
     try {
-      withLakeWriteConfs(blooms) {
-        blooms.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      }
+      lakeWriter(blooms).parquet(stage.toString)
       org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
       f.mkdirs(bloomDir(name))
       val old = new Path(s"${tableDir(name)}/.bloomold-${UUID.randomUUID()}")
@@ -1419,9 +1420,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
             col("__v"), expected, fpp).as("bloom"))
         val stage = new Path(s"${tableDir(name)}/.bloomstage-${UUID.randomUUID()}")
         try {
-          withLakeWriteConfs(blooms) {
-            blooms.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-          }
+          lakeWriter(blooms).parquet(stage.toString)
           org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
           f.listStatus(stage).toSeq
             .filter(_.getPath.getName.endsWith(".parquet"))
@@ -2884,9 +2883,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
       else if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
         hits.hint("rebalance")
       else hits
-    withLakeWriteConfs(staged) {
-      staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    }
+    lakeWriter(staged).parquet(stage.toString)
     val stats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
     val files = fs(stage).listStatus(stage).toSeq.map(_.getPath.getName)
       .filter(_.endsWith(".parquet"))
@@ -2925,13 +2922,12 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
     try {
       val arranged = if (distribute) distributeForWrite(out, meta) else out
-      val writer = arranged.write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", maxRecordsPerFile)
+      val writer = lakeWriter(arranged).option("maxRecordsPerFile", maxRecordsPerFile)
       val parted =
         if (meta.partitions.nonEmpty)
           writer.partitionBy(meta.partitionExprs.map(_.outputName): _*)
         else writer
-      withLakeWriteConfs(arranged) { parted.parquet(stage.toString) }
+      parted.parquet(stage.toString)
       val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
       (mergeStageInto(stage, new Path(dataDir(name))), writeStats)
     } finally fs(stage).delete(stage, true)
@@ -3069,12 +3065,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
     val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
     val f = fs(stage)
     try {
-      val writer = distributeForWrite(out, outPartCols).write.mode(SaveMode.Overwrite)
+      val writer = lakeWriter(distributeForWrite(out, outPartCols))
         .option("maxRecordsPerFile", maxRecordsPerFile)
-      withLakeWriteConfs(out) {
-        (if (outPartCols.nonEmpty) writer.partitionBy(outPartCols: _*)
-         else writer).parquet(stage.toString)
-      }
+      (if (outPartCols.nonEmpty) writer.partitionBy(outPartCols: _*)
+       else writer).parquet(stage.toString)
       val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
       // layout rebuild: flip the registry in the same locked breath as
       // the commit (the crash-inconsistent window is this flip + the
@@ -3320,13 +3314,10 @@ final class GraftLake(private[graft] val spark: SparkSession,
         // partition key); AQE-off sessions get the counted repartition
         rebalanced(projected)
       }
-    val writer = arranged
-      .write.mode(SaveMode.Overwrite)
+    val writer = lakeWriter(arranged)
       .option("maxRecordsPerFile", targetRecordsPerFile)
-    withLakeWriteConfs(arranged) {
-      (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-        .parquet(stage.toString)
-    }
+    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
+      .parquet(stage.toString)
     val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
     compactBeforeCommitHook()
     // COMMIT section — the only part under the table lock (microseconds
@@ -3601,11 +3592,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
         val out = withPartitionCols(projected, newMeta)
         val arranged = out.repartition(partCols.map(c => col(quoted(c))): _*)
         val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
-        val writer = arranged.write.mode(SaveMode.Overwrite)
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-        withLakeWriteConfs(arranged) {
-          writer.partitionBy(partCols: _*).parquet(stage.toString)
-        }
+        lakeWriter(arranged).option("maxRecordsPerFile", maxRecordsPerFile)
+          .partitionBy(partCols: _*).parquet(stage.toString)
         val writeStats =
           org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
         writeLock(name) {
@@ -3840,11 +3828,8 @@ final class GraftLake(private[graft] val spark: SparkSession,
     // (new n / old k) child directories, each as one right-sized file
     val arranged = out.repartition(partCols.map(c => col(quoted(c))): _*)
     val stage = new Path(s"${tableDir(name)}/.stage-${UUID.randomUUID()}")
-    val writer = arranged.write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-    withLakeWriteConfs(arranged) {
-      writer.partitionBy(partCols: _*).parquet(stage.toString)
-    }
+    lakeWriter(arranged).option("maxRecordsPerFile", maxRecordsPerFile)
+      .partitionBy(partCols: _*).parquet(stage.toString)
     val writeStats = org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
     rebucketBeforeCommitHook()
     writeLock(name) {
@@ -5031,9 +5016,7 @@ final class GraftLake(private[graft] val spark: SparkSession,
         if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
           out.hint("rebalance")
         else out
-      withLakeWriteConfs(staged) {
-        staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      }
+      lakeWriter(staged).parquet(stage.toString)
       org.apache.spark.sql.graft.StatsCommitProtocol.drain(stage)
       val cd = changesDir(name)
       f.mkdirs(cd)
@@ -6052,16 +6035,39 @@ object GraftLake {
   private val metaCache = new ConcurrentHashMap[String, TableMeta]()
   private val tableLocks = new ConcurrentHashMap[String, Object]()
 
-  /** The lake's write-side session confs (see [[withLakeWriteConfs]]):
-    * the timestamp type, the stats-collecting commit protocol and the
-    * zstd codec, whatever the session sets. Scoped per session by
-    * reference count: lake writes legitimately run concurrently
-    * (multi-table writers, the parallel LSH-index admission). */
-  private val lakeWriteConfs = new graft.ConfScope(Seq(
-    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
-    "spark.sql.sources.commitProtocolClass" ->
-      org.apache.spark.sql.graft.StatsCommitProtocol.className,
-    "spark.sql.parquet.compression.codec" -> "zstd"))
+  /** The lake's write session for `spark` (see [[lakeWriter]]): the
+    * timestamp type, the stats-collecting commit protocol and the zstd
+    * codec set on a session derived from `spark`. */
+  private[graft] def writeSession(spark: SparkSession): SparkSession =
+    derivedSession(spark, Seq(
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      "spark.sql.sources.commitProtocolClass" ->
+        org.apache.spark.sql.graft.StatsCommitProtocol.className,
+      "spark.sql.parquet.compression.codec" -> "zstd"))
+
+  /** Sessions derived from a source session, per overlay: the source's
+    * explicit confs at derivation, and the derived session. The source is
+    * keyed weakly, and the derived session (which references its source)
+    * is held weakly too; its users hold it while they live. */
+  private val derived = new java.util.WeakHashMap[SparkSession, java.util.HashMap[
+    Seq[(String, String)], (Map[String, String], java.lang.ref.WeakReference[SparkSession])]]()
+
+  /** A clone of `spark` with `overlay` set, derived once per state of
+    * `spark`'s explicit confs: a later conf change on `spark` derives a
+    * new session, and `spark` itself is never changed. */
+  private[graft] def derivedSession(spark: SparkSession,
+      overlay: Seq[(String, String)]): SparkSession = {
+    val confs = spark.conf.getAll
+    derived.synchronized {
+      val byOverlay = derived.computeIfAbsent(spark, _ => new java.util.HashMap())
+      Option(byOverlay.get(overlay)).filter(_._1 == confs).flatMap(e => Option(e._2.get))
+        .getOrElse {
+          val s = org.apache.spark.sql.graft.PlanBridge.derive(spark, overlay)
+          byOverlay.put(overlay, (confs, new java.lang.ref.WeakReference(s)))
+          s
+        }
+    }
+  }
 
   /** Snapshot-side caches: last committed version and its resolved live
     * file set + delta-chain depth, so the hot commit path reads nothing.

@@ -24,11 +24,6 @@ final class DvSet private (
     val arr = byFile.get(key)
     arr != null && java.util.Arrays.binarySearch(arr, pos) >= 0
   }
-  def entryCount: Long = {
-    var n = 0L
-    byFile.values.forEach(a => n += a.length)
-    n
-  }
 }
 
 object DvSet {

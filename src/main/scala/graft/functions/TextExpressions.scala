@@ -208,10 +208,4 @@ object TextExpressions {
     SparkSession.getActiveSession.foreach(register)
     call_function("graft_casefold", c)
   }
-
-  /** Count of tokens present in the given constant word list. */
-  def countIn(tokens: Column, wordList: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function("graft_count_in", tokens, array(wordList.map(lit): _*))
-  }
 }

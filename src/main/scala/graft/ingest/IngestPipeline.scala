@@ -468,16 +468,15 @@ object IngestPipeline {
   private final case class TriageVerdict(seed: StructType, kept: Long,
     schema: Either[String, Option[StructType]])
 
-  /** The trigger-side session confs, applied around every `processBatch`
-    * by a reference-counted [[graft.ConfScope]] (concurrent pipelines on
-    * one session share the overlay).
+  /** The pipeline's trigger session for `spark`: a session derived from
+    * it (see [[GraftLake.derivedSession]]) with the trigger confs set.
     *
     * What it sets, and why: a micro-batch trigger runs ~a dozen small
     * actions over BOUNDED data (`maxOffsetsPerTrigger`), where wall time
     * is per-stage scheduling + AQE replanning latency, not compute — so
-    * inside `processBatch` adaptive execution is off and the shuffle
-    * fan-out small (measured on the ingest+dedup path: ~25% trigger
-    * latency cut at identical results).
+    * a trigger plans with adaptive execution off and a small shuffle
+    * fan-out (measured on the ingest+dedup path: ~25% trigger latency cut
+    * at identical results).
     *
     * For the same reason the trigger runs INTERPRETED: no whole-stage
     * codegen, and every projection, predicate and ordering built by the
@@ -489,29 +488,13 @@ object IngestPipeline {
     * repeated flush compiles no class (`IngestJobBudgetSpec`), and on
     * the ingest bench (seed 1, 4-core host, 10 interleaved pairs) an
     * `upsert_curation` drain spends 35 % less CPU per record
-    * (`json_append`: 13 %). Statements outside a trigger keep codegen.
-    *
-    * The scope goes on two sessions: the pipeline's own, on which the
-    * engine's writes and probes plan, and the session of the trigger
-    * frame. A DataFrame plans under the session it was created on, and a
-    * started stream hands `foreachBatch` frames created on the stream's
-    * own clone of the session it was started from, so an overlay on the
-    * pipeline's session alone never reaches them. The scope is keyed per
-    * session, so for a direct `processBatch` call, whose frame carries
-    * the pipeline's session, the second entry only nests.
-    *
-    * SHARED-SESSION caveat: session confs are session-global, so an
-    * ad-hoc query submitted on the pipeline's session WHILE a trigger is
-    * in flight also plans with AQE off, the small fan-out and no codegen.
-    * In deployments that mix interactive work and ingest on one
-    * application, build the pipeline on its own `spark.newSession()`
-    * (separate conf, shared catalog + context) — the overlay then never
-    * touches the interactive session. */
-  private[graft] val triggerConfs = new graft.ConfScope(Seq(
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.shuffle.partitions" -> "8",
-    "spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    * (`json_append`: 13 %). Statements outside a trigger keep codegen. */
+  private[graft] def triggerSession(spark: SparkSession): SparkSession =
+    GraftLake.derivedSession(spark, Seq(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
 
   /** Native codegen'd wire-format sniff of payload `v` (same contract as
     * ArrowIpc.looksLikeIpc): the 0xFFFFFFFF continuation marker in the
@@ -626,11 +609,31 @@ object IngestPipeline {
   * `maxOffsetsPerTrigger` bounding batch size (B1/B2); buffering/spill/
   * memory-pressure handling (B3-B6) is delegated to Spark's own micro-batch
   * and memory machinery by design.
+  *
+  * Sessions: [[lake]] plans on the caller's session. The engine's
+  * landing, probes and DLQ replays plan on the trigger session derived
+  * from it ([[IngestPipeline.triggerSession]]), and the lake writes every
+  * Parquet file on a write session derived from that one. A stream
+  * started with [[start]] runs on the caller's session, so its listeners
+  * and `spark.streams` see it; each trigger re-binds its frame into the
+  * trigger session. The caller's session is never modified.
   */
 final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
   IngestConfig.validate(config)
 
+  /** The application's lake: it plans on the caller's session. */
   val lake = new GraftLake(spark, config.warehouse)
+
+  /** The lake the engine lands, probes and replays through: on the
+    * pipeline's trigger session ([[IngestPipeline.triggerSession]]),
+    * which follows the caller's confs as they change. */
+  private def engine: GraftLake = {
+    val s = IngestPipeline.triggerSession(spark)
+    val held = engineLake
+    if (held != null && (held.spark eq s)) held
+    else { val l = new GraftLake(s, config.warehouse); engineLake = l; l }
+  }
+  @volatile private var engineLake: GraftLake = _
   val schemaCache = new SchemaCache
 
   /** Batch id of the micro-batch currently landing (foreachBatch
@@ -690,12 +693,10 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * first failure) only after every topic has finished, so no write of
     * this batch commits after it returns; a failed batch writes no dead
     * letters (its redelivery parks them). */
-  def processBatch(batch: DataFrame, batchId: Long): Unit =
-    // a started stream's trigger frames plan on the stream's own clone of
-    // the session, so the scope goes on that session as well
-    IngestPipeline.triggerConfs(spark) {
-      IngestPipeline.triggerConfs(batch.sparkSession)(landBatch(batch, batchId))
-    }
+  def processBatch(batch: DataFrame, batchId: Long): Unit = {
+    val session = engine.spark
+    PlanBridge.within(session)(landBatch(PlanBridge.rebound(session, batch), batchId))
+  }
 
   private def landBatch(batch: DataFrame, batchId: Long): Unit = {
     // foreachBatch serializes batches per query; the landing code reads
@@ -731,7 +732,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // tagged once for the whole batch — Avro-configured topics just
     // ignore the column
     val cached = spread.withColumn("__ipc", IngestPipeline.ipcSniff(col("value"))).cache()
-    val dead = new IngestPipeline.DeadLetters(spark)
+    val dead = new IngestPipeline.DeadLetters(engine.spark)
     try {
       val profiled = profileBatch(cached)
       val records = profiled.valuesIterator.flatMap(_.valuesIterator).map(_._1).sum
@@ -746,7 +747,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
           processTopic(topic, table, records, profiles, dead)
         } }
       org.apache.spark.sql.graft.CapturedTasks.runAll(
-        spark, spark.sparkContext.defaultParallelism)(tasks)
+        engine.spark, spark.sparkContext.defaultParallelism)(tasks)
       landDeadLetters(dead, records)
     } finally {
       dead.release()
@@ -794,7 +795,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       val n = if (dead.proven > 0) nRecords
         else parked.coalesce(spark.sparkContext.defaultParallelism).count()
       if (n > 0)
-        lake.appendCounted(dlq, parked.coalesce(IngestPipeline.slicesFor(n)),
+        engine.appendCounted(dlq, parked.coalesce(IngestPipeline.slicesFor(n)),
             txnWatermark(dlq)) match {
           case Some(rows) => GraftMetrics.dlqRecords.add(rows)
           case None => GraftMetrics.op("txnSkippedBatches").record(0L)
@@ -903,7 +904,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       }
     val withOffset = StructType(
       sparkSchema.fields.toSeq :+ StructField("__offset", LongType))
-    writeToLake(table, spark.createDataFrame(rows, withOffset), dead)
+    writeToLake(table, engine.spark.createDataFrame(rows, withOffset), dead)
   }
 
   // ---- JSON path (S3/C2/C3) ----
@@ -960,7 +961,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // table never diverge on an in-process flush failure
     val (flag, admit) = GraftMetrics.time(GraftMetrics.IngestDedup) {
       graft.operators.DedupOps.incrementalNearDupsStaged(
-        lake, s"${table}_lshidx", probe, dc.idCol, dc.textCol,
+        engine, s"${table}_lshidx", probe, dc.idCol, dc.textCol,
         dc.threshold, dc.shingleK, dc.bands, dc.rowsPerBand,
         parallelAdmit = true, hintBroadcast = hinted,
         admitSlices = admitSlices, driverVerify = driverVerify)
@@ -1007,7 +1008,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     }
     val df = applyConstraintGate(table, deduped, dead)
     val pks = config.pks.getOrElse(table, Nil)
-    val preExisted = lake.tableExists(table)
+    val preExisted = engine.tableExists(table)
     val upsertPath = preExisted && pks.nonEmpty
     val op = if (upsertPath) GraftMetrics.UpsertWithMergeInto
       else GraftMetrics.SimpleInsert
@@ -1017,13 +1018,13 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         case Some((appId, ver)) if !upsertPath =>
           // exactly-once append: the watermark commits WITH the data, so
           // a redelivered batch (or replay) no-ops (IngestConfig.txnAppId)
-          val applied = lake.appendIdempotent(table,
+          val applied = engine.appendIdempotent(table,
             df.drop((if (hasOffset) Seq("__offset") else Nil): _*),
             appId, ver,
             partitions = config.partitions.getOrElse(table, Nil), pks = pks)
           if (!applied) GraftMetrics.op("txnSkippedBatches").record(0L)
         case _ =>
-          lake.write(table, df,
+          engine.write(table, df,
             partitions = config.partitions.getOrElse(table, Nil),
             pks = pks,
             ordering = if (hasOffset) Seq(col("__offset")) else Nil,
@@ -1050,10 +1051,10 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         // thread-local); the admission task is quiesced before any
         // rollback — compensating a member while its append is mid-flight
         // would race
-        lake.transactOwned(Seq(table,
+        engine.transactOwned(Seq(table,
             s"${table}_lshidx_docs", s"${table}_lshidx_bands")) {
           import org.apache.spark.sql.graft.CapturedTasks
-          val fAdmit = CapturedTasks.submit(spark)(admit())
+          val fAdmit = CapturedTasks.submit(engine.spark)(admit())
           try { land(); CapturedTasks.await(fAdmit) }
           catch {
             case e: Throwable =>
@@ -1066,9 +1067,9 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // post-flush auto-compaction: the trigger check is O(1) against the
     // commit cache, so polling it every micro-batch costs nothing
     config.autoCompact.get(table).foreach { cc =>
-      if (lake.liveFileCount(table) >= cc.minFiles)
+      if (engine.liveFileCount(table) >= cc.minFiles)
         GraftMetrics.time(GraftMetrics.AutoCompact) {
-          lake.compact(table, cc.targetRecordsPerFile, clusterBy = cc.clusterBy)
+          engine.compact(table, cc.targetRecordsPerFile, clusterBy = cc.clusterBy)
         }
     }
     // post-flush auto-rebucket: metadata-only mean-bucket-size probe;
@@ -1078,7 +1079,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // ingest stream — the next flush resumes the migration anyway (the
     // flip no-ops, remaining foreign buckets retry)
     config.autoRebucket.get(table).foreach { rc =>
-      try lake.maybeAutoRebucket(table, rc.targetRowsPerBucket, rc.maxBuckets,
+      try engine.maybeAutoRebucket(table, rc.targetRowsPerBucket, rc.maxBuckets,
         rc.maxGroupsPerFlush)
       catch {
         case scala.util.control.NonFatal(e) =>
@@ -1091,18 +1092,18 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     // (the versions listing is bounded by keepLast + slack precisely
     // because this keeps pruning it); expireSnapshots meters itself
     config.retention.get(table).foreach { rc =>
-      if (lake.versions(table).size >= rc.keepLast + rc.slack)
-        lake.expireSnapshots(table, rc.keepLast)
+      if (engine.versions(table).size >= rc.keepLast + rc.slack)
+        engine.expireSnapshots(table, rc.keepLast)
     }
     // post-flush bloom maintenance: blooms ONLY the files this (and any
     // missed) flush added — O(new files), so the probe index never decays
     if (config.bloomRefresh.contains(table))
-      GraftMetrics.time("bloomRefresh") { lake.refreshBloomIndexes(table) }
+      GraftMetrics.time("bloomRefresh") { engine.refreshBloomIndexes(table) }
     // standing graft.policy.* table properties, CONFIG-FIRST: kinds this
     // IngestConfig already handled above are excluded, so a table can
     // carry a warehouse-wide standing policy while a pipeline override
     // stays authoritative for its own stream
-    lake.runStandingPolicies(table, exclude =
+    engine.runStandingPolicies(table, exclude =
       (if (config.autoCompact.contains(table)) Set("autoCompact")
        else Set.empty[String]) ++
       (if (config.autoRebucket.contains(table)) Set("autoRebucket")
@@ -1160,7 +1161,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
   private def triageEvolution(table: String, values: DataFrame,
       cause: Exception, dead: IngestPipeline.DeadLetters): Unit = {
     if (config.dlqTable.isEmpty) throw cause
-    val tableSchema = StructType(lake.readMeta(table).schema
+    val tableSchema = StructType(engine.readMeta(table).schema
       .filterNot(_.name == lake.InsertedAtCol).toSeq)
     val tableHolder = new IngestPipeline.SeedHolder(tableSchema.json)
     val errorDetail = udf { (v: String) =>
@@ -1325,8 +1326,8 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
     * path's enforcement aborts loudly. */
   private def applyConstraintGate(table: String, df: DataFrame,
       dead: IngestPipeline.DeadLetters): DataFrame = {
-    if (config.dlqTable.isEmpty || !lake.tableExists(table)) return df
-    val cs = lake.constraints(table)
+    if (config.dlqTable.isEmpty || !engine.tableExists(table)) return df
+    val cs = engine.constraints(table)
     if (cs.isEmpty) return df
     val checks = cs.map { case (n, text) =>
       n -> coalesce(expr(text), lit(true))
@@ -1399,7 +1400,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       }
     }
     val withOffset = StructType(unified.fields.toSeq :+ StructField("__offset", LongType))
-    writeToLake(table, spark.createDataFrame(rows, withOffset), dead)
+    writeToLake(table, engine.spark.createDataFrame(rows, withOffset), dead)
   }
 
   // ---- streaming assembly ----
@@ -1452,16 +1453,16 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
   def replayDlq(topic: String, fromTable: Option[String] = None): (Long, Long) = {
     val dlq = config.dlqTable.getOrElse(throw new IllegalStateException(
       "replayDlq requires a configured dlqTable"))
-    if (!lake.tableExists(dlq)) return (0L, 0L)
+    if (!engine.tableExists(dlq)) return (0L, 0L)
     val parkedAs = fromTable.getOrElse(config.tableFor(topic))
-    val head = lake.versions(dlq).lastOption.getOrElse(return (0L, 0L))
+    val head = engine.versions(dlq).lastOption.getOrElse(return (0L, 0L))
     // a replay of these rows that crashed between appending its fresh
     // failures and the DLQ rewrite left that append at the head, keyed
     // with the snapshot it read: resume from that snapshot, so its
     // landings no-op and its fresh failures count as this run's
-    val pre = (for (app <- config.txnAppId; (key, read) <- lake.commitTxn(dlq, head)
+    val pre = (for (app <- config.txnAppId; (key, read) <- engine.commitTxn(dlq, head)
       if key == replayKey(app, dlq, parkedAs)) yield read).getOrElse(head)
-    val all = lake.readVersion(dlq, pre)
+    val all = engine.readVersion(dlq, pre)
     val mine = all.filter(col("target_table") === parkedAs).cache()
     try {
       // the parked payloads back on the wire. Arrow triage parked its
@@ -1490,7 +1491,7 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
       // too: `pre` is then the crashed run's snapshot, see above).
       IngestPipeline.replayTxn.set(IngestPipeline.Replay(pre, parkedAs))
       // fresh failures land before the post-replay version is read below
-      val dead = new IngestPipeline.DeadLetters(spark)
+      val dead = new IngestPipeline.DeadLetters(engine.spark)
       try {
         processTopic(topic, config.tableFor(topic), tagged, profiles, dead)
         landDeadLetters(dead, n)
@@ -1498,10 +1499,10 @@ final class IngestPipeline(spark: SparkSession, config: IngestConfig) {
         IngestPipeline.replayTxn.remove()
         dead.release()
       }
-      val post = lake.versions(dlq).last
-      val fresh = lake.readAppendsBetween(dlq, pre, post)
+      val post = engine.versions(dlq).last
+      val fresh = engine.readAppendsBetween(dlq, pre, post)
       val still = fresh.count()
-      lake.overwriteContents(dlq,
+      engine.overwriteContents(dlq,
         all.filter(col("target_table") =!= parkedAs).unionByName(fresh))
       (n, still)
     } finally mine.unpersist()

@@ -475,13 +475,15 @@ object Perf {
   /** The JSON landing at each row count: generated records of about 20
     * fields (the ingest benchmark's shape), cached over every core, parsed
     * with `from_json` and appended, coalesced to 1, 2 and all cores' tasks,
-    * under the trigger confs. `reps` interleaved rounds after one warm-up
-    * round; prints the median wall per task count. The row count at which
-    * one task stops beating the spread bounds a landing task's rows. */
+    * through a lake on the pipeline's trigger session. `reps` interleaved
+    * rounds after one warm-up round; prints the median wall per task count.
+    * The row count at which one task stops beating the spread bounds a
+    * landing task's rows. */
   private def landing(spark: SparkSession, args: IndexedSeq[String]): Unit = {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val cores = spark.sparkContext.defaultParallelism
-    val lake = new GraftLake(spark, Files.createTempDirectory("graft-landing").toString)
+    val trigger = graft.ingest.IngestPipeline.triggerSession(spark)
+    val lake = new GraftLake(trigger, Files.createTempDirectory("graft-landing").toString)
     val id = col("id")
     def word(salt: String) = concat(lit(salt), pmod(hash(id, lit(salt)), lit(9973)).cast("string"))
     val record = struct(id.as("seq"), word("kind").as("kind"), pmod(hash(id), lit(100000)).as("user_id"),
@@ -496,7 +498,7 @@ object Perf {
       (pmod(hash(id, lit("p")), lit(9000)) / 100.0).as("price"), word("cur").as("currency"),
       concat_ws(" ", word("n1"), word("n2"), word("n3")).as("note"))
     args(0).split(',').map(_.toLong).foreach { n =>
-      val values = spark.range(0, n, 1, cores).select(to_json(record).as("v")).cache()
+      val values = trigger.range(0, n, 1, cores).select(to_json(record).as("v")).cache()
       values.count()
       val schema = graft.schema.SchemaInference.inferFromJson(values.head().getString(0)).get
       val parseSchema = StructType(schema.fields.toSeq :+ StructField("_corrupt", StringType))
@@ -505,12 +507,10 @@ object Perf {
         .filter(col("p._corrupt").isNull).select(schema.fieldNames.map(f => col(s"p.`$f`")): _*)
       val tasks = Seq(1, 2, cores).distinct
       val walls = mutable.Map.empty[Int, Seq[Double]].withDefaultValue(Nil)
-      graft.ingest.IngestPipeline.triggerConfs(spark) {
-        for (round <- 0 to reps; k <- tasks) {
-          val t0 = System.nanoTime()
-          lake.append(s"landing_$n", parsed.coalesce(k))
-          if (round > 0) walls(k) = walls(k) :+ (System.nanoTime() - t0) / 1e6
-        }
+      for (round <- 0 to reps; k <- tasks) {
+        val t0 = System.nanoTime()
+        lake.append(s"landing_$n", parsed.coalesce(k))
+        if (round > 0) walls(k) = walls(k) :+ (System.nanoTime() - t0) / 1e6
       }
       println(s"[landing] rows=$n " + tasks.map(k =>
         f"tasks=$k%d med=${walls(k).sorted.apply(walls(k).size / 2)}%.0f ms").mkString(" "))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the reference leaves to downstream engines (SURVEY §2.10: no
   * watermarks/event-time windows/session state in the reference; late data
   * is simply upserted by PK). Built on Structured Streaming: watermarked
-  * tumbling/sliding windows and gap-based sessionization with custom state.
+  * tumbling windows and gap-based sessionization with custom state.
   *
   * Scale: windowed aggregation state is keyed by (window, group) and
   * bounded by the watermark — state store size ∝ active windows, not stream
@@ -27,14 +27,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("window.start").as("hour"), col("event_type"),
         col("n"), col("total_value"))
-
-  /** Sliding-window rates (5-minute windows every minute). */
-  def slidingRates(events: DataFrame, lateness: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), "5 minutes", "1 minute"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("n"))
 
   /** Streaming exact dedup for ingest pipelines: drops records whose key
     * columns repeat within the watermark horizon. State is bounded — a

@@ -29,6 +29,28 @@ object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `df`'s analyzed plan as a DataFrame of `spark`: it optimizes, plans
+    * and runs under `spark`'s confs. The analyzed plan is reused as is. */
+  def rebound(spark: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq spark) df else ofRows(spark, planOf(df))
+
+  /** A clone of `spark` (its confs, temporary views and functions as they
+    * are now) with `overlay` set on the clone; `spark` is left as it is. */
+  def derive(spark: SparkSession, overlay: Seq[(String, String)]): SparkSession = {
+    val s = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    overlay.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** Run `body` with `spark` as the thread's active session and its SQL
+    * confs as the thread's local properties, so that a job `body` starts
+    * outside a SQL execution of its own (an RDD action) carries `spark`'s
+    * confs too, not those of an enclosing execution. */
+  def within[T](spark: SparkSession)(body: => T): T = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.withActive(org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(s)(body))
+  }
+
   /** Wrap a Catalyst expression as a user-facing Column. */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 

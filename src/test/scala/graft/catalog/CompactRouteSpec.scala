@@ -39,14 +39,14 @@ class CompactRouteSpec extends AnyFunSuite {
   private def contents(lake: GraftLake, t: String): Seq[String] =
     lake.read(t).drop("_inserted_at").collect().map(_.toString).sorted.toSeq
 
-  /** Compacts `t` toward `target`-row files under `confs`; returns the
-    * shuffle bytes its jobs wrote and its job count. */
+  /** Compacts `t` toward `target`-row files through a lake on a session
+    * derived from `lake`'s with `confs` set; returns the shuffle bytes
+    * its jobs wrote and its job count. */
   private def compact(lake: GraftLake, t: String, target: Long,
       confs: Seq[(String, String)]): (Long, Int) = {
-    val scope = new graft.ConfScope(confs)
-    val (_, jobs) = scope(spark) {
-      JobTimeline.record(spark.sparkContext)(lake.compact(t, targetRecordsPerFile = target))
-    }
+    val derived = new GraftLake(GraftLake.derivedSession(lake.spark, confs), lake.warehouseDir)
+    val (_, jobs) =
+      JobTimeline.record(spark.sparkContext)(derived.compact(t, targetRecordsPerFile = target))
     (jobs.map(_.shuffleWriteBytes).sum, jobs.size)
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import graft.SparkTestSession
+import graft.{PauseGate, SparkTestSession}
 import graft.ingest.{DedupConfig, IngestConfig, IngestPipeline}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -14,6 +14,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CapturedTasks
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every Parquet file the lake writes — data files, deletion-vector,
@@ -27,6 +28,7 @@ class LakeCodecSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val CodecKey = "spark.sql.parquet.compression.codec"
+  private val TimestampKey = "spark.sql.parquet.outputTimestampType"
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
@@ -37,11 +39,11 @@ class LakeCodecSpec extends AnyFunSuite {
     finally r.close()
   }
 
-  /** The physical types of the `_inserted_at` column at `file`, if any. */
-  private def timestampTypes(file: Path): Set[String] = {
+  /** The physical types of the `column` column at `file`, if any. */
+  private def timestampTypes(file: Path, column: String = "_inserted_at"): Set[String] = {
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     try r.getFooter.getFileMetaData.getSchema.getColumns.asScala
-      .filter(_.getPath.toSeq == Seq("_inserted_at"))
+      .filter(_.getPath.toSeq == Seq(column))
       .map(_.getPrimitiveType.getPrimitiveTypeName.name).toSet
     finally r.close()
   }
@@ -108,7 +110,7 @@ class LakeCodecSpec extends AnyFunSuite {
     assert(contents(lake.read("t")) === want)
 
     // an ingest flush that parks a dead letter and admits an LSH index,
-    // run by a stream: its trigger frames plan on the stream's own session
+    // run by a stream
     val p = new IngestPipeline(spark, IngestConfig(wh, triggerMs = 100L,
       dedup = Map("d" -> DedupConfig("doc_id", "text"))))
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -127,16 +129,31 @@ class LakeCodecSpec extends AnyFunSuite {
       assert(files.exists(_._1.contains(s"$wh/$dir/")), s"no Parquet file under $dir")
     val other = files.filter(_._2 != Set("ZSTD"))
     assert(other.isEmpty, other.mkString("\n"))
-    // the same scope lands every stamp as INT64 TIMESTAMP_MICROS
+    // the write session lands every stamp as INT64 TIMESTAMP_MICROS
     val stamps = files.map(f => timestampTypes(new Path(f._1))).filter(_.nonEmpty)
     assert(stamps.nonEmpty && stamps.forall(_ == Set("INT64")), stamps)
 
     assert(spark.conf.getOption(CodecKey) === sessionCodec)
     assert(spark.conf.get(CodecKey) === "snappy")
+    assert(spark.conf.get(TimestampKey) === "INT96")
+    // the application's own write runs while a lake write is paused
+    // mid-job, and keeps the caller's codec and timestamp type
+    val gate = new PauseGate
+    val paused = CapturedTasks.submit(spark)(
+      lake.append("paused", rows(0 until 10, "p").filter(gate.open)))
     val app = s"${Files.createTempDirectory("graft-codec-app")}/out"
-    rows(0 until 10, "x").write.parquet(app)
+    try {
+      assert(gate.awaitEntered(), "the lake write never reached the gate")
+      rows(0 until 10, "x").withColumn("ts", current_timestamp()).write.parquet(app)
+    } finally gate.release()
+    CapturedTasks.await(paused)
     val appFiles = parquetFiles(app)
     assert(appFiles.nonEmpty && appFiles.forall(_._2 == Set("SNAPPY")), appFiles.mkString("\n"))
+    val appStamps = appFiles.map(f => timestampTypes(new Path(f._1), "ts"))
+    assert(appStamps.forall(_ == Set("INT96")), appStamps)
+    val pausedFiles = parquetFiles(s"$wh/paused/data")
+    assert(pausedFiles.nonEmpty && pausedFiles.forall(_._2 == Set("ZSTD")), pausedFiles.mkString("\n"))
+    assert(lake.read("paused").count() === 10)
   }
 
   test("a table with snappy data files from before zstd reads, upserts and compacts to the same rows") {

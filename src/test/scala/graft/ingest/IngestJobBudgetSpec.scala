@@ -164,12 +164,12 @@ class IngestJobBudgetSpec extends AnyFunSuite {
   }
 
   // A started stream hands its trigger frames over on its own clone of the
-  // session, so the trigger confs go on that session too, and only for the
-  // trigger: every SQL execution of a streamed flush runs without
-  // whole-stage codegen, and a repeated streamed flush compiles nothing.
-  // (A job of the stream's own root execution, such as an RDD action,
-  // carries the confs that execution propagated when the trigger began.)
-  test("a started stream's triggers run under the trigger confs on the stream's session") {
+  // caller's session; each trigger re-binds its frame into the pipeline's
+  // trigger session and runs inside it. Every job of a streamed flush, the
+  // RDD actions of the stream's own execution included, carries the trigger
+  // confs, a repeated streamed flush compiles nothing, and the caller's
+  // session keeps its confs.
+  test("a started stream's triggers run every job under the trigger confs") {
     import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
     val key = "spark.sql.codegen.wholeStage"
     val p = pipeline(wh => IngestConfig(wh, triggerMs = 100L, dlqTable = None))
@@ -182,13 +182,9 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        // the jobs of the SQL executions a trigger starts: the confs they
-        // carry are their session's at the time they ran
-        Option(e.properties).filter(p => p.getProperty("spark.sql.execution.id") !=
-            p.getProperty("spark.sql.execution.root.id"))
-          .foreach(p => seen.add(String.valueOf(p.getProperty(key))))
+        seen.add(String.valueOf(Option(e.properties).map(_.getProperty(key)).orNull))
     }
-    val before = spark.conf.getOption(key)
+    val before = spark.conf.getAll
     val q = p.start(mem.toDF().toDF("topic", "partition", "offset", "value"),
       Files.createTempDirectory("graft-budget-ckpt").toString)
     spark.sparkContext.addSparkListener(listener)
@@ -206,13 +202,11 @@ class IngestJobBudgetSpec extends AnyFunSuite {
       q.stop()
       spark.sparkContext.removeSparkListener(listener)
     }
-    import scala.jdk.CollectionConverters._
-    info(s"${seen.size} jobs of nested executions, $compiles classes compiled in the third trigger")
+    info(s"${seen.size} jobs, $compiles classes compiled in the third trigger")
     assert(seen.size > 0 && seen.asScala.forall(_ == "false"), seen)
     assert(compiles === 0)
-    assert(spark.conf.getOption(key) === before)
     assert(!(streamSession eq spark), "the stream plans on a session of its own")
-    assert(streamSession.conf.getOption(key) === before)
+    assert(spark.conf.getAll === before)
     assert(p.lake.read("bs").count() === 15)
   }
 
@@ -562,9 +556,9 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     // shuffle of their own
     val batch = spark.range(0L, 7000L, 100L, 4).union(spark.range(20000L, 20030L, 1L, 2))
       .selectExpr("id", "-1L AS v")
-    val (_, jobs) = IngestPipeline.triggerConfs(spark) {
-      JobTimeline.record(spark.sparkContext)(lake.upsert("acct", batch))
-    }
+    // landed as a trigger lands it: through a lake on the trigger session
+    val trigger = new GraftLake(IngestPipeline.triggerSession(spark), lake.warehouseDir)
+    val (_, jobs) = JobTimeline.record(spark.sparkContext)(trigger.upsert("acct", batch))
     val writes = jobs.filter(_.site.contains("stageRowsLocked"))
     info(jobs.map(j => s"${j.site} shuffle=${j.shuffleWriteBytes}").mkString("; "))
     assert(writes.nonEmpty, jobs.map(_.site))
@@ -591,9 +585,8 @@ class IngestJobBudgetSpec extends AnyFunSuite {
     assert(rows.size === 600)
     assert(lake.dataFiles("acct").size > 8)
     lake.setTableProperty("acct", "graft.policy.autoCompact.minFiles", "2")
-    val (_, jobs) = IngestPipeline.triggerConfs(spark) {
-      JobTimeline.record(spark.sparkContext)(lake.runStandingPolicies("acct"))
-    }
+    val trigger = new GraftLake(IngestPipeline.triggerSession(spark), lake.warehouseDir)
+    val (_, jobs) = JobTimeline.record(spark.sparkContext)(trigger.runStandingPolicies("acct"))
     info(jobs.map(j => s"${j.site} shuffle=${j.shuffleWriteBytes}").mkString("; "))
     assert(lake.history("acct").collect().map(_.getString(2)).count(_ == "compact") === 1)
     assert(jobs.size === 1 && jobs.head.site.contains("compactAttempt"), jobs.map(_.site))
